@@ -155,7 +155,8 @@ def _seq_norm(A: np.ndarray) -> np.ndarray:
 def _scalar_cosine(a: np.ndarray | None, b: np.ndarray | None) -> float | None:
     """Slow-path single-pair cosine with zip_with null-padding semantics:
     null vector or unequal lengths -> null (Python floats ARE IEEE doubles,
-    so the sequential fold is bit-identical to the vectorized path)."""
+    so the sequential fold is bit-identical to the vectorized path).  A
+    zero-norm side yields NaN, as the vectorized path's 0/0 does."""
     if a is None or b is None or len(a) != len(b):
         return None
     s = 0.0
@@ -166,7 +167,15 @@ def _scalar_cosine(a: np.ndarray | None, b: np.ndarray | None) -> float | None:
         na = na + float(a[d]) * float(a[d])
         nb = nb + float(b[d]) * float(b[d])
     denom = (na ** 0.5) * (nb ** 0.5)
-    return s / denom
+    return s / denom if denom else float("nan")
+
+
+def _pair_batch(ia, ib, raw) -> pa.RecordBatch:
+    """The (id_a long, id_b long, raw double) batch every pair kernel emits."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ia, pa.int64()), pa.array(ib, pa.int64()), pa.array(raw, pa.float64())],
+        ["id_a", "id_b", "raw"],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -271,6 +280,8 @@ def packed_pair_scores(
                 ia = np.asarray(pair_struct.field("a"))
                 ib = np.asarray(pair_struct.field("b"))
                 sids = np.asarray(src_struct.field("id"))
+                if not len(sids):  # every candidate drops, like the inner joins
+                    continue
                 V = _f64_matrix(src_struct.field("vec"))
                 if V is None:  # malformed vectors: per-pair scalar fallback
                     rows = _rows(src_struct.field("vec"))
@@ -282,14 +293,7 @@ def packed_pair_scores(
                         for x, y in zip(ia, ib)
                     ]
                     keep = [i for i, v in enumerate(raws) if v is not False]
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(ia[keep], pa.int64()),
-                            pa.array(ib[keep], pa.int64()),
-                            pa.array([raws[i] for i in keep], pa.float64()),
-                        ],
-                        ["id_a", "id_b", "raw"],
-                    )
+                    yield _pair_batch(ia[keep], ib[keep], [raws[i] for i in keep])
                     continue
                 order = np.argsort(sids, kind="stable")
                 sids_sorted = sids[order]
@@ -297,24 +301,13 @@ def packed_pair_scores(
                 norms = _seq_norm(Vs)
                 pa_idx = np.searchsorted(sids_sorted, ia)
                 pb_idx = np.searchsorted(sids_sorted, ib)
-                pa_idx = np.clip(pa_idx, 0, max(len(sids_sorted) - 1, 0))
-                pb_idx = np.clip(pb_idx, 0, max(len(sids_sorted) - 1, 0))
-                ok = (
-                    (len(sids_sorted) > 0)
-                    & (sids_sorted[pa_idx] == ia)
-                    & (sids_sorted[pb_idx] == ib)
-                )
+                pa_idx = np.clip(pa_idx, 0, len(sids_sorted) - 1)
+                pb_idx = np.clip(pb_idx, 0, len(sids_sorted) - 1)
+                ok = (sids_sorted[pa_idx] == ia) & (sids_sorted[pb_idx] == ib)
                 pa_i, pb_i = pa_idx[ok], pb_idx[ok]
                 A, B = Vs[pa_i], Vs[pb_i]
                 raw = _seq_dot(A, B) / (norms[pa_i] * norms[pb_i])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ia[ok], pa.int64()),
-                        pa.array(ib[ok], pa.int64()),
-                        pa.array(raw, pa.float64()),
-                    ],
-                    ["id_a", "id_b", "raw"],
-                )
+                yield _pair_batch(ia[ok], ib[ok], raw)
 
     out = grouped.crossJoin(F.broadcast(packed)).mapInArrow(
         fn, "id_a long, id_b long, raw double"
@@ -341,8 +334,11 @@ def _pairs_from_packed(
     PRE-filter only: callers re-apply the exact ``round(raw, 6) >= thr`` in
     Spark, and ``margin = thr - 1e-6`` can never exclude a pair the exact
     filter would keep (HALF_UP rounding moves a value by at most 5e-7).
-    NaN raw (zero-norm vector) fails the >= margin comparison exactly as the
-    rounded NaN fails the Spark filter.
+
+    A NaN score (zero-norm vector) is never emitted as a pair: it fails
+    ``>= margin`` on both paths.  This is the kernels' own rule, not a
+    replay of Spark: ``round(NaN, 6) >= thr`` is TRUE there (NaN sorts above
+    every number) and the HOF ``cosine`` raises DIVIDE_BY_ZERO under ANSI.
     """
     gid = np.asarray(left_struct.field("id"))
     gv = _f64_matrix(left_struct.field("vec"))
@@ -423,11 +419,7 @@ def allpairs_scores(
                 ia, ib, raw = _pairs_from_packed(
                     ga[r].values, ca[r].values, margin, strict_lower=False
                 )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ia, pa.int64()), pa.array(ib, pa.int64()),
-                     pa.array(raw, pa.float64())],
-                    ["id_a", "id_b", "raw"],
-                )
+                yield _pair_batch(ia, ib, raw)
 
     return grouped.crossJoin(F.broadcast(packed)).mapInArrow(
         fn, "id_a long, id_b long, raw double"
@@ -442,8 +434,8 @@ def cellpairs_scores(
     threshold: float,
 ) -> DataFrame:
     """Within-cell all-pairs cosine (id_a > id_b per the SemDeDup pair
-    orientation) with raw >= threshold-1e-6; callers apply the exact
-    round+threshold.
+    orientation) with raw >= threshold-1e-6, as (cell, id_a, id_b, raw) rows
+    under ``cell_col``; callers apply the exact round+threshold.
 
     One groupBy(cell) pack shuffle replaces the within-cell self-JOIN: the
     sum(|cell|^2) scoring work runs as one NumPy block per cell instead of
@@ -461,17 +453,19 @@ def cellpairs_scores(
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
+            cells = _combined(b.column(cell_col))
             ca = _combined(b.column("cell"))
             for r in range(b.num_rows):
                 cell = ca[r].values
                 ia, ib, raw = _pairs_from_packed(cell, cell, margin, strict_lower=True)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ia, pa.int64()), pa.array(ib, pa.int64()),
-                     pa.array(raw, pa.float64())],
-                    ["id_a", "id_b", "raw"],
+                yield _pair_batch(ia, ib, raw).add_column(
+                    0, cell_col, pa.repeat(cells[r], len(ia))
                 )
 
-    return packed.select("cell").mapInArrow(fn, "id_a long, id_b long, raw double")
+    cell_type = packed.schema[cell_col].dataType.simpleString()
+    return packed.mapInArrow(
+        fn, f"`{cell_col}` {cell_type}, id_a long, id_b long, raw double"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -489,12 +483,12 @@ def band_sigs_udf(dim: int, nbits: int, bands: int):
     and every candidate set — is unchanged.  Out-of-range/short vectors
     follow ``F.get`` null-padding: any missing component nulls the
     projection, and ``when(null > 0, ...)`` falls to the 0 branch — so a
-    null/short/NaN-poisoned vector signs to **0 in every band**, never to a
-    null.  This kernel reproduces that exactly: null or short rows emit
-    ``[0] * bands``; NaN components flow through the float pass, where
-    ``NaN > 0`` is False — 0 bits, same as the fold.  Vectors LONGER than
-    ``dim`` read components 0..dim-1, matching the fused fold (and its
-    documented divergence from the pre-r11 zip_with form).
+    null/short vector signs to **0 in every band**, never to a null; this
+    kernel emits ``[0] * bands`` for those rows.  A NaN projection sets its
+    bit, because Spark orders NaN above every number (``NaN > 0`` is TRUE),
+    so a NaN-poisoned vector signs to all ones, same as the fold.  Vectors
+    LONGER than ``dim`` read components 0..dim-1, matching the fused fold
+    (and its documented divergence from the pre-r11 zip_with form).
     """
     from .similarity import _plane_values
 
@@ -527,7 +521,7 @@ def band_sigs_udf(dim: int, nbits: int, bands: int):
             for d in range(dim):
                 np.multiply(AT[d][:, None], PT[d][None, :], out=tmp)
                 np.add(P, tmp, out=P)
-            contrib = (P > 0) * powers[None, :]
+            contrib = ((P > 0) | np.isnan(P)) * powers[None, :]
             sigs = (
                 contrib.reshape(A.shape[0], bands, nbits).sum(axis=2).astype(np.int32)
             )

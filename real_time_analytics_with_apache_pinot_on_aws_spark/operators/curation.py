@@ -653,11 +653,6 @@ def lm_nll_scores(
     )
 
 
-# dsir_scores' single cached per-doc relation (size-1: each call releases
-# the previous call's blocks — see the lifecycle note inside the function)
-_DSIR_CACHE: list = []
-
-
 def dsir_scores(
     docs: DataFrame,
     is_target: Column,
@@ -696,7 +691,7 @@ def dsir_scores(
     ``log_w``/``sel_key`` round to 6 dp so FP summation order cannot leak
     into value hashes.
     """
-    from .dedup import _spread
+    from .dedup import _spread, lifecycle_cache
 
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
@@ -735,24 +730,13 @@ def dsir_scores(
     # the tokenize/gram/hash pass over the corpus text runs exactly once
     # (the r5 advisory's second full text read is gone).  At cluster scale
     # this is a persist to MEMORY_AND_DISK of ints-only rows, orders of
-    # magnitude smaller than the text it summarizes.  Lifecycle: a builder
-    # cannot unpersist its own cache (the consumer materializes later), so
-    # each call releases the PREVIOUS call's relation — the leak is bounded
-    # at one cached relation per session instead of growing with every call
-    # (round-6 review); a caller still holding an old un-materialized result
-    # just recomputes (lineage is intact — cache() not checkpoint — so
-    # correctness and executor-loss recovery are unaffected).
-    per_doc = (
-        exploded.groupBy(id_col, "__tgt", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .cache()
+    # magnitude smaller than the text it summarizes.  Lifecycle: see
+    # ``dedup.lifecycle_cache`` — each call releases the previous call's
+    # relation.
+    per_doc = lifecycle_cache(
+        exploded.groupBy(id_col, "__tgt", "b").agg(F.count(F.lit(1)).alias("c")),
+        "curation.dsir.per_doc",
     )
-    while _DSIR_CACHE:
-        try:
-            _DSIR_CACHE.pop().unpersist()
-        except Exception:
-            pass
-    _DSIR_CACHE.append(per_doc)
     fit = per_doc.groupBy("b").agg(
         F.sum(F.when(F.col("__tgt"), F.col("c")).otherwise(0)).alias("ct"),
         F.sum(F.when(~F.col("__tgt"), F.col("c")).otherwise(0)).alias("cr"),

@@ -713,12 +713,14 @@ def dedup_representatives(
     ).unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     # Materialize the edge list ONCE before the loop: every round joins
     # against ``edges``, and without this cut each round re-evaluates the
-    # caller's whole pair-emitter pipeline (for semantic dedup that is the
-    # within-cell pairwise-cosine self-join — max_iter full re-runs of the
-    # most expensive stage in the query; round-11 measurement: c23 ~51 s ->
-    # ~6 s).  The edge list is (src, dst) longs — tiny next to the corpus —
-    # and the loop below is already eager via the per-round checkpoint, so
-    # this adds no new eagerness.
+    # caller's whole pair-emitter pipeline (max_iter full re-runs of its most
+    # expensive stage).  The edge list is (src, dst) longs — tiny next to the
+    # corpus — and the loop below is already eager via the per-round
+    # checkpoint, so this adds no new eagerness.  Each round still pays a few
+    # Spark jobs of fixed driver latency (~2.6 s per call at sf0.1 for
+    # semantic dedup's 8 cells), so a caller whose edges never cross known
+    # blocks resolves them per block instead, as ``similarity.semantic_dedup``
+    # does.
     edges = edges.checkpoint() if reliable else edges.localCheckpoint()
     lbl = (
         vertices.select(F.col(id_col).alias("id"))

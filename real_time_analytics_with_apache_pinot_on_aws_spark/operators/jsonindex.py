@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 # 11): a builder cannot unpersist its own caches (consumers materialize
 # later), so each build releases the PREVIOUS build's relations — the leak
 # is bounded at one build's worth per session instead of growing with every
-# call.  Same pattern as curation._DSIR_CACHE; lineage stays intact (cache,
+# call.  Same pattern as dedup.lifecycle_cache; lineage stays intact (cache,
 # not checkpoint), so a caller holding an old result just recomputes.
 _LEVEL_CACHE: list = []
 

@@ -384,7 +384,8 @@ def text_match(
 
 
 # bm25_scores' cached per-doc (dl, tf...) relation — size-1 lifecycle, each
-# call releases the previous call's blocks (same pattern as _DSIR_CACHE).
+# call releases the previous call's blocks (same pattern as
+# dedup.lifecycle_cache).
 _BM25_CACHE: list = []
 
 

@@ -5745,12 +5745,10 @@ def c27_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The scored relation feeds BOTH the top-k selection and the join-back
     # that marks winners, so it is cached (round 11) — uncached, the whole
     # fit + ratio-broadcast + scoring pipeline ran twice.  One narrow row
-    # per candidate doc; registered in the dsir cache-lifecycle list so the
-    # next dsir call releases it like the operator's own per-doc relation.
+    # per candidate doc, released by the next build like every lifecycle key.
     scored = _dedup.lifecycle_cache(
         _cur.dsir_scores(docs, F.col("source") == "src0"), "q.dsir.scored"
     )
-    _cur._DSIR_CACHE.append(scored)
     topk = (
         scored.orderBy(F.desc("sel_key"), "doc_id")
         .limit(40)

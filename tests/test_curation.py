@@ -350,6 +350,16 @@ def test_dsir_gram_strings_never_cross_an_exchange(docs):
     assert plan.count("InMemoryTableScan") >= 2
 
 
+def test_dsir_rebuild_keeps_the_per_doc_cache(docs):
+    """Rebuilding the same DSIR plan must keep the single text pass.  Cache
+    entries match by plan, so releasing the previous build's relation AFTER
+    caching the new one would drop the new one's entry too."""
+    for _ in range(2):
+        out = C.dsir_scores(docs, F.col("source") == "src0")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("InMemoryTableScan") >= 2
+
+
 # -- C28: Gopher rule-based quality filter -----------------------------------
 
 

@@ -1506,8 +1506,8 @@ def test_semantic_dedup_hoisted_norm_score_is_bit_equal_to_cosine(spark):
 
 def test_dedup_representatives_checkpoints_edges_once(spark):
     """Round 11: the component loop must NOT re-evaluate the caller's pair
-    pipeline every round (for semantic dedup that pipeline is the quadratic
-    pairwise-cosine stage).  Pin via an accumulator-counting pair source:
+    pipeline every round (often the query's most expensive stage).  Pin via
+    an accumulator-counting pair source:
     the edge materialization happens exactly once regardless of max_iter."""
     from real_time_analytics_with_apache_pinot_on_aws_spark.operators import dedup
     from pyspark.sql import functions as F
@@ -1556,6 +1556,39 @@ def test_semantic_dedup_chain_collapses_to_one_representative(spark):
     assert not res[3]["kept"] and res[3]["dup_of"] == 1
     # dup_score is the strongest direct edge, not the rep's cosine
     assert res[3]["dup_score"] >= 0.95
+
+
+def test_semantic_dedup_builder_runs_no_spark_jobs(spark):
+    """Components are resolved per cell inside the plan, so building the c23
+    query must run no Spark job at all (the former corpus-wide label loop
+    ran ~31 localCheckpoint/isEmpty jobs at build time)."""
+    from real_time_analytics_with_apache_pinot_on_aws_spark import queries as Q
+
+    builder = Q.all_queries()["c23_semantic_dedup"].builder
+    builder(spark, "/root/testdata/sf0.001")  # registers the views once
+    sc = spark.sparkContext
+    sc.setJobGroup("c23-build", "c23 build", False)
+    try:
+        df = builder(spark, "/root/testdata/sf0.001")
+        jobs = sc.statusTracker().getJobIdsForGroup("c23-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert df.collect()[0]["planted_dropped_ok"]
+
+
+def test_semantic_dedup_plan_has_no_checkpoint_scan(spark):
+    """No localCheckpoint cut survives in the executed plan: components come
+    from one grouped Arrow pass over each cell's edges."""
+    from real_time_analytics_with_apache_pinot_on_aws_spark.operators import similarity as S
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    plan = (
+        S.semantic_dedup(emb, threshold=0.95, n_cells=8)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "ExistingRDD" not in plan
+    assert "FlatMapGroupsInArrow" in plan
 
 
 # -- line-level dedup (C24, CCNet/RefinedWeb boilerplate removal) ----------
@@ -2105,6 +2138,47 @@ def test_packed_pair_scores_match_reattach_join(spark):
     assert len(got) == 3  # the two candidates with unknown ids dropped
 
 
+def test_packed_pair_scores_empty_source_emits_no_rows(spark):
+    """Candidates against an EMPTY packed source drop, like the inner
+    re-attach joins did — no IndexError from gathering into zero rows."""
+    cand = spark.createDataFrame([(0, 1), (2, 3)], "id_a long, id_b long")
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    assert arrowkernels.packed_pair_scores(cand, empty, "vec_id", "embedding").count() == 0
+
+
+def test_pair_kernels_zero_norm_rule_is_path_independent(spark):
+    """A zero vector scores NaN, and a NaN score is never emitted as a pair.
+    The fast NumPy path (clean input) and the slow scalar path (forced by a
+    ragged row) must agree bit-for-bit on every pair and neither may emit a
+    pair touching the zero vector."""
+    rows = [
+        (1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 0.0]),
+        (4, [-0.3, 0.9]), (5, [0.8, -0.2]),
+    ]
+    clean = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ragged = spark.createDataFrame(
+        rows + [(9, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+
+    def cell_pairs(df):
+        assigned = df.withColumn("cell_id", F.lit(0))
+        out = arrowkernels.cellpairs_scores(assigned, "cell_id", "vec_id", "embedding", -1.0)
+        return {(r.id_a, r.id_b): _bits(r.raw) for r in out.collect()}
+
+    def all_pairs(df):
+        out = arrowkernels.allpairs_scores(df, "vec_id", "embedding", -1.0, groups=2)
+        return {(r.id_a, r.id_b): _bits(r.raw) for r in out.collect()}
+
+    for kernel in (cell_pairs, all_pairs):
+        fast, slow = kernel(clean), kernel(ragged)
+        assert fast == slow, kernel.__name__
+        # every pair of the four non-zero vectors survives (threshold -1)
+        assert len(fast) == 6, kernel.__name__
+        assert not any(3 in k or 9 in k for k in fast)
+    # the scalar fold yields NaN, not ZeroDivisionError
+    assert math.isnan(arrowkernels._scalar_cosine([0.0, 0.0], [1.0, 1.0]))
+
+
 def test_band_sigs_udf_matches_hof_signatures(spark):
     """The Arrow signature kernel reproduces lsh_band_signatures bit-for-bit
     over the fixture corpus (every band, every row), and mirrors the fold's
@@ -2134,6 +2208,23 @@ def test_band_sigs_udf_matches_hof_signatures(spark):
     ).collect()
     for h, k in zip(ehof, ekern):
         assert [x["sig"] for x in h.s] == list(k.s) == [0] * bands
+
+
+def test_band_sigs_udf_signs_nan_projection_like_spark(spark):
+    """A NaN component poisons every projection, and Spark orders NaN above
+    every number (``NaN > 0`` is TRUE): the fold sets every bit, so the
+    kernel must too."""
+    dim, nbits, bands = 64, 4, 3
+    df = spark.createDataFrame(
+        [(1, [float("nan")] + [1.0] * (dim - 1))], "vec_id long, embedding array<double>"
+    )
+    hof = df.select(
+        similarity.lsh_band_signatures(F.col("embedding"), dim, nbits, bands).alias("s")
+    ).collect()[0]
+    kern = df.select(
+        arrowkernels.band_sigs_udf(dim, nbits, bands)(F.col("embedding")).alias("s")
+    ).collect()[0]
+    assert [x["sig"] for x in hof.s] == list(kern.s) == [2**nbits - 1] * bands
 
 
 def test_band_sigs_kernel_survives_repeated_builds(spark):

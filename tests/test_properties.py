@@ -188,6 +188,82 @@ def test_dedup_representatives_match_union_find(spark):
         assert got == want, name
 
 
+# 2-D vectors at whole-degree angles: cos >= 0.95 holds for gaps <= 18°, so
+# random angles form chains and cliques; radius varies the norms
+vecs_st = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=400),  # id
+        st.integers(min_value=0, max_value=359),  # angle (degrees)
+        st.integers(min_value=1, max_value=3),    # radius
+    ),
+    min_size=2,
+    max_size=30,
+    unique_by=lambda t: t[0],
+)
+# planted 12-chains at 15° steps (two steps apart = 30°, below threshold):
+# ids descending along the chain, then shuffled against it
+_CHAIN_DESC = [(100 - i, 15 * i, 1 + i % 3) for i in range(12)]
+_CHAIN_MIXED = [((i * 7) % 12 + 50, 15 * i, 2) for i in range(12)]
+
+
+@given(vecs=vecs_st)
+@example(vecs=_CHAIN_DESC)
+@example(vecs=_CHAIN_MIXED + [(7, 200, 1), (8, 205, 3)])
+@settings(**SETTINGS)
+def test_semantic_dedup_matches_union_find_over_cell_pairs(spark, vecs):
+    """semantic_dedup's kept/dup_of/dup_score must equal a Python union-find
+    over the thresholded WITHIN-cell pairs (scored independently by the
+    cell-keyed self-join + HOF cosine): min-id representative per component,
+    dup_score = strongest direct edge, rows without an edge kept."""
+    import math
+
+    from real_time_analytics_with_apache_pinot_on_aws_spark.operators import similarity as S
+
+    thr, n_cells = 0.95, 3
+    df = spark.createDataFrame(
+        [
+            (i, [r * math.cos(math.radians(a)), r * math.sin(math.radians(a))])
+            for i, a, r in vecs
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    got = {
+        r["id"]: (r["kept"], r["dup_of"], r["dup_score"])
+        for r in S.semantic_dedup(df, threshold=thr, n_cells=n_cells).collect()
+    }
+    _, assigned = S.ivf_assign(df, n_cells=n_cells)
+    a = assigned.select("cell_id", F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"))
+    b = assigned.select("cell_id", F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"))
+    edges = (
+        a.join(b, "cell_id")
+        .filter(F.col("id_a") > F.col("id_b"))
+        .select("id_a", "id_b", F.round(S.cosine(F.col("v_a"), F.col("v_b")), 6).alias("s"))
+        .filter(F.col("s") >= thr)
+        .collect()
+    )
+    parent = {i: i for i, _, _ in vecs}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    best: dict[int, float] = {}
+    for e in edges:
+        parent[find(e.id_a)] = find(e.id_b)
+        for v in (e.id_a, e.id_b):
+            best[v] = max(best.get(v, -1.0), e.s)
+    rep: dict[int, int] = {}
+    for i in parent:
+        rep[find(i)] = min(rep.get(find(i), i), i)
+    want = {}
+    for i in parent:
+        m = rep[find(i)]
+        want[i] = (True, None, None) if m == i else (False, m, best[i])
+    assert got == want
+
+
 @given(
     points=st.lists(
         st.tuples(st.integers(min_value=0, max_value=30), st.integers(-5, 5)),
