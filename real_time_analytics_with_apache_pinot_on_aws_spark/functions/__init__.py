@@ -9,9 +9,10 @@ Two layers:
   hand-written builtins.  This is the engine's ``/query/sql`` parity layer.
 - ``helpers`` — Python Column builders for functions whose *arguments* are
   plan-time literals that need parsing (DATETIMECONVERT format specs,
-  JSONEXTRACTSCALAR result types).  These also compile to pure builtins.
+  JSON_MATCH predicates).  These also compile to pure builtins.
 - ``aggs`` — Pinot aggregation-function names as Column aggregate builders
-  (MINMAXRANGE, DISTINCTCOUNTHLL, FIRSTWITHTIME, PERCENTILETDIGEST, ...).
+  (DISTINCTCOUNTHLL, PERCENTILETDIGEST, ARG_MIN, ...).  The SQL-text
+  rewrites in ``aggsql`` are the single definition of the rest.
 """
 
 from __future__ import annotations

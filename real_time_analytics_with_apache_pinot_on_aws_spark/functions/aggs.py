@@ -12,11 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def minmaxrange(col: Column) -> Column:
-    """MINMAXRANGE(col) = max - min in one pass (B18)."""
-    return F.max(col) - F.min(col)
-
-
 def distinctcount(col: Column) -> Column:
     """DISTINCTCOUNT(col) exact (B19)."""
     return F.countDistinct(col)
@@ -27,44 +22,14 @@ def distinctcounthll(col: Column, rsd: float = 0.05) -> Column:
     return F.approx_count_distinct(col, rsd)
 
 
-def distinctcountbitmap(col: Column) -> Column:
-    """DISTINCTCOUNTBITMAP: exact distinct — Spark needs no bitmap trick (B21)."""
-    return F.countDistinct(col)
-
-
-def percentile_exact(col: Column, p: float) -> Column:
-    """PERCENTILE(col, p) exact with linear interpolation (B22). p in [0,100]."""
-    return F.percentile(col, F.lit(p / 100.0))
-
-
 def percentile_approx(col: Column, p: float, accuracy: int = 10_000) -> Column:
     """PERCENTILEEST / PERCENTILETDIGEST / PERCENTILEKLL analog (B22)."""
     return F.percentile_approx(col, F.lit(p / 100.0), F.lit(accuracy))
 
 
-def distinctsum(col: Column) -> Column:
-    """DISTINCTSUM(col) = sum over distinct values (B23)."""
-    return F.sum_distinct(col)
-
-
-def distinctavg(col: Column) -> Column:
-    """DISTINCTAVG(col) (B23)."""
-    return F.try_divide(F.sum_distinct(col), F.count_distinct(col))
-
-
 def mode(col: Column) -> Column:
     """MODE(col) most frequent value (B24)."""
     return F.mode(col)
-
-
-def firstwithtime(col: Column, ts: Column) -> Column:
-    """FIRSTWITHTIME(col, ts): value at earliest time (B26) -> min_by."""
-    return F.min_by(col, ts)
-
-
-def lastwithtime(col: Column, ts: Column) -> Column:
-    """LASTWITHTIME(col, ts): value at latest time (B26) -> max_by."""
-    return F.max_by(col, ts)
 
 
 def arg_min(value: Column, by: Column) -> Column:
@@ -75,15 +40,3 @@ def arg_min(value: Column, by: Column) -> Column:
 def arg_max(value: Column, by: Column) -> Column:
     """ARG_MAX (B27)."""
     return F.max_by(value, by)
-
-
-def sumprecision(col: Column, precision: int = 38, scale: int = 18) -> Column:
-    """SUMPRECISION(col): exact BigDecimal sum (B28)."""
-    return F.sum(col.cast(f"decimal({precision},{scale})"))
-
-
-def agg_filter(agg: Column, predicate: Column) -> Column:
-    """FILTER (WHERE p) clause on any aggregate (B29): Spark native."""
-    # Spark SQL supports FILTER syntax directly; the DataFrame spelling is
-    # agg over `when(p, col)` — callers use F.when at the argument site.
-    raise NotImplementedError("use F.<agg>(F.when(pred, col)) or SQL FILTER (WHERE ...)")

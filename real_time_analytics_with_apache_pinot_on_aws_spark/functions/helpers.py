@@ -70,33 +70,9 @@ def datetimeconvert(col: Column, input_format: str, output_format: str, granular
     raise ValueError(f"unsupported output format kind {kind!r}")
 
 
-def timeconvert(col: Column, from_unit: str, to_unit: str) -> Column:
-    """Pinot TIMECONVERT(col, fromUnit, toUnit) on epoch values."""
-    ratio_num = _UNIT_MILLIS[from_unit.upper()]
-    ratio_den = _UNIT_MILLIS[to_unit.upper()]
-    return F.floor(col.cast("long") * F.lit(ratio_num) / F.lit(ratio_den)).cast("long")
-
-
 # ---------------------------------------------------------------------------
-# JSONEXTRACTSCALAR(col, jsonPath, resultType[, default])  [B52]
+# JSON_MATCH(col, '"$.path" op val')  [B14]
 # ---------------------------------------------------------------------------
-
-_JSON_CASTS = {
-    "INT": "int",
-    "LONG": "bigint",
-    "FLOAT": "float",
-    "DOUBLE": "double",
-    "BOOLEAN": "boolean",
-    "STRING": "string",
-}
-
-
-def jsonextractscalar(col: Column, json_path: str, result_type: str, default=None) -> Column:
-    """Pinot JSONEXTRACTSCALAR -> get_json_object + cast (+ default fill)."""
-    extracted = F.get_json_object(col, json_path).cast(_JSON_CASTS[result_type.upper()])
-    if default is not None:
-        extracted = F.coalesce(extracted, F.lit(default))
-    return extracted
 
 
 def json_match(col: Column, json_path: str, op: str, value) -> Column:
@@ -124,9 +100,3 @@ def json_match(col: Column, json_path: str, op: str, value) -> Column:
 
 def money_sum(col: Column, scale: int = 2) -> Column:
     return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
-
-
-def money_avg(col: Column, scale: int = 6) -> Column:
-    # Cast the exact sum to double BEFORE dividing (decimal division rounding
-    # differs across engines; double division of equal inputs is deterministic).
-    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double") / F.count(col)

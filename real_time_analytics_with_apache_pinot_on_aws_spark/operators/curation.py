@@ -678,87 +678,82 @@ def dsir_scores(
     ``-ln(-ln(u))`` with ``u = (md5_u32(id)+0.5)/2^32``, so both engines
     and every rerun agree.
 
-    Spark shape (100 TB posture): tokenize/gram/hash is ONE map-side pass
-    per doc (higher-order fns, no Python, gram strings never cross an
-    exchange — only int bucket ids explode), reduced to cached per-doc
-    bucket counts (<= ``n_buckets`` int rows per doc) that feed BOTH the
-    fit and the scoring join, so the corpus text is read exactly once;
-    fitting is one aggregate of at-most-``n_buckets`` rows per partition
-    after map-side combine; the ratio table is ``n_buckets`` rows and
-    broadcast back; scoring is one doc-keyed aggregate over the cached
-    counts.  Selection composes as ``orderBy(sel_key
-    desc).limit(k)`` = TakeOrderedAndProject, never a global window.
-    ``log_w``/``sel_key`` round to 6 dp so FP summation order cannot leak
-    into value hashes.
+    Spark shape (100 TB posture): every document stays ONE row from its
+    text to its score.  Tokenize/gram/hash is one map-side higher-order pass
+    (no Python, gram strings never cross an exchange) that keeps the doc's
+    bucket ids as an int array, cached so the corpus text is read once.  The
+    fit explodes those arrays into ONE aggregate of <= ``n_buckets`` rows
+    per partition after map-side combine; one single-partition step folds
+    it into a dense log-ratio array indexed by bucket, broadcast to a narrow
+    projection that sums each doc's ratios in gram order (no doc-keyed
+    exchange).  A candidate with no gram (empty, null or punctuation-only
+    text) or a null target flag gets no row.  Selection composes as
+    ``orderBy(sel_key desc).limit(k)`` = TakeOrderedAndProject, never a
+    global window.  ``log_w``/``sel_key`` round to 6 dp so FP summation
+    order cannot leak into value hashes.
     """
-    from .dedup import _spread, lifecycle_cache
+    from .dedup import _spread, lifecycle_cache, normalized_tokens
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
-        lambda x: x != F.lit(""),
-    )
     # Spread first (round 11, gated): tokenize + gram + per-gram md5 is the
     # dominant per-row compute and a small corpus scan is one partition.
     base = _spread(docs).select(
-        F.col(id_col), is_target.alias("__tgt"), toks.alias("__t")
+        F.col(id_col),
+        is_target.alias("__tgt"),
+        normalized_tokens(F.col(text_col)).alias("__t"),
     )
-    bigrams = F.when(
-        F.size("__t") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("__t") - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(F.col("__t"), i), F.element_at(F.col("__t"), i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = F.concat(F.col("__t"), bigrams)
+    bigrams = F.transform(
+        F.slice("__t", 2, F.size("__t")),
+        lambda w, i: F.concat_ws(" ", F.col("__t")[i], w),
+    )
     # 8-hex-char md5 prefix % n_buckets: the same deterministic hash family
     # as hash_split/_md5_u32, DuckDB-replayable bit-for-bit
     buckets = F.transform(
-        grams,
+        F.concat(F.col("__t"), bigrams),
         lambda g: F.pmod(
             F.conv(F.substring(F.md5(g), 1, 8), 16, 10).cast("long"),
             F.lit(n_buckets),
         ),
     )
-    exploded = base.select(
-        id_col, "__tgt", F.explode(buckets).alias("b")
-    )
-    # Single text pass: reduce the exploded grams to per-doc bucket COUNTS
-    # (<= n_buckets int rows per doc, map-side combined) and cache that
-    # narrow relation — it feeds BOTH the p/q fit and the scoring join, so
-    # the tokenize/gram/hash pass over the corpus text runs exactly once
-    # (the r5 advisory's second full text read is gone).  At cluster scale
-    # this is a persist to MEMORY_AND_DISK of ints-only rows, orders of
-    # magnitude smaller than the text it summarizes.  Lifecycle: see
-    # ``dedup.lifecycle_cache`` — each call releases the previous call's
-    # relation.
+    # Single text pass: the cached int arrays, one row per doc, feed both
+    # the fit and the scoring.  Lifecycle: see ``dedup.lifecycle_cache``.
     per_doc = lifecycle_cache(
-        exploded.groupBy(id_col, "__tgt", "b").agg(F.count(F.lit(1)).alias("c")),
+        base.select(id_col, "__tgt", buckets.alias("__b")),
         "curation.dsir.per_doc",
     )
-    fit = per_doc.groupBy("b").agg(
-        F.sum(F.when(F.col("__tgt"), F.col("c")).otherwise(0)).alias("ct"),
-        F.sum(F.when(~F.col("__tgt"), F.col("c")).otherwise(0)).alias("cr"),
-    )
-    totals = fit.agg(
-        F.sum("ct").alias("nt"), F.sum("cr").alias("nr")
-    )
-    # 1-row scalar join (documented pattern) then the closed-form log-ratio
-    ratio = fit.crossJoin(F.broadcast(totals)).select(
-        "b",
-        (
-            F.log((F.col("ct") + alpha) / (F.col("nt") + alpha * n_buckets))
-            - F.log((F.col("cr") + alpha) / (F.col("nr") + alpha * n_buckets))
-        ).alias("logr"),
-    )
-    scored = (
-        per_doc.where(~F.col("__tgt"))
-        .join(F.broadcast(ratio), "b")
-        .groupBy(id_col)
+    fit = (
+        per_doc.select("__tgt", F.explode("__b").alias("b"))
+        .groupBy("b")
         .agg(
-            F.sum("c").alias("n_grams"),
-            F.round(F.sum(F.col("c") * F.col("logr")), 6).alias("log_w"),
+            F.count_if(F.col("__tgt")).alias("ct"),
+            F.count_if(~F.col("__tgt")).alias("cr"),
+        )
+    )
+
+    def log_p(count: Column, total: str) -> Column:
+        return F.log((count + alpha) / (F.col(total) + alpha * n_buckets))
+
+    # Totals and the Laplace log-ratio in one row, dense by bucket id (the
+    # slot of a bucket no gram hashes to is null and never read)
+    entries = F.collect_list(F.struct("b", F.struct("ct", "cr")))
+    ratio = fit.agg(
+        F.map_from_entries(entries).alias("m"),
+        F.sum("ct").alias("nt"),
+        F.sum("cr").alias("nr"),
+    ).select(
+        F.transform(
+            F.sequence(F.lit(0).cast("long"), F.lit(n_buckets - 1).cast("long")),
+            lambda b: log_p(F.col("m")[b]["ct"], "nt")
+            - log_p(F.col("m")[b]["cr"], "nr"),
+        ).alias("__logr")
+    )
+    log_w = F.aggregate("__b", F.lit(0.0), lambda acc, b: acc + F.col("__logr")[b])
+    scored = (
+        per_doc.where(~F.col("__tgt") & (F.size("__b") > 0))
+        .crossJoin(F.broadcast(ratio))
+        .select(
+            id_col,
+            F.size("__b").cast("bigint").alias("n_grams"),
+            F.round(log_w, 6).alias("log_w"),
         )
     )
     u = (_md5_u32(id_col) + F.lit(0.5)) / F.lit(4294967296.0)

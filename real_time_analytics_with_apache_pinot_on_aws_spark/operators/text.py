@@ -30,11 +30,6 @@ def _hits_from_tokens(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
 
 
-def lang_hits(text_col: Column, lang: str) -> Column:
-    """Number of tokens that are stopwords of ``lang``."""
-    return _hits_from_tokens(normalized_tokens(text_col), lang)
-
-
 def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, predicted_lang, confidence): stopword-ratio argmax, ties broken by
     language code order (deterministic).

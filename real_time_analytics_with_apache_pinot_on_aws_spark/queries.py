@@ -5730,11 +5730,13 @@ def c26_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per-occurrence log p/q, and selection is Gumbel top-k on log_w + "
         "Gumbel(md5(id)) — k=40 without replacement ∝ weight, fully "
         "deterministic.  Spark shape (operators/curation.py dsir_scores): "
-        "gram hashing is one map-side higher-order pass (gram strings never "
-        "cross an exchange — only int bucket ids explode), the fit is a "
-        "1024-row aggregate, the ratio table broadcasts back, scoring is "
-        "one doc-keyed aggregate, and top-k is TakeOrderedAndProject — no "
-        "global window touches the corpus; the boolean join back marks "
+        "gram hashing is one map-side higher-order pass that keeps each "
+        "doc's int bucket ids as one array row (gram strings never cross an "
+        "exchange), the fit is one 1024-row aggregate, one single-partition "
+        "step turns it into a dense log-ratio array that broadcasts back, "
+        "scoring is a narrow per-doc sum over that array (no doc-keyed "
+        "exchange), and top-k is TakeOrderedAndProject — no global window "
+        "touches the corpus; the boolean join back marks "
         "selected rows from a broadcast 40-row set.  The oracle refits and "
         "rescores everything in SQL (row_number replays the same total "
         "order).",

@@ -360,6 +360,89 @@ def test_dsir_rebuild_keeps_the_per_doc_cache(docs):
     assert plan.count("InMemoryTableScan") >= 2
 
 
+def test_dsir_edge_inputs_get_no_row(spark):
+    """Candidates with no gram (empty, null, punctuation-only text) or a
+    null target flag get no row — never ``(id, 0, 0.0)`` or nulls — and a
+    one-token candidate scores one gram.  The surviving values are the ones
+    the per-(doc, bucket) count shape produced on this frame."""
+    rows = [
+        (1, "", False),
+        (2, None, False),
+        (3, "!!! ???", False),
+        (4, "clinical trial dose", None),
+        (5, "Therapy!", False),
+        (6, "clinical trial outcome", False),
+        (7, "football match, goal", False),
+        (10, "patient dose clinical trial", True),
+        (11, "clinical therapy dose", True),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, tgt boolean")
+    out = sorted(tuple(r) for r in C.dsir_scores(df, F.col("tgt")).collect())
+    assert out == [
+        (5, 1, -0.000966, 2.187399),
+        (6, 5, -0.985658, -1.87473),
+        (7, 5, -3.470564, -2.928871),
+    ]
+
+
+def _final_shuffle_partitionings(df) -> list[str]:
+    """Output partitioning of every shuffle in ``df``'s executed (AQE final)
+    plan, each cached sub-plan walked once; a reused exchange is not a
+    second shuffle."""
+    out, seen = [], set()
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if cls == "InMemoryTableScanExec":
+            cached = node.relation().cachedPlan()
+            if cached.hashCode() not in seen:
+                seen.add(cached.hashCode())
+                walk(cached)
+            return
+        if cls == "ReusedExchangeExec":
+            return
+        if cls == "ShuffleExchangeExec":
+            out.append(node.outputPartitioning().toString())
+        it = node.children().iterator()
+        while it.hasNext():
+            walk(it.next())
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_dsir_plan_has_one_fit_exchange_and_no_doc_shuffle(docs):
+    """Every doc stays one row from text to score: no shuffle is keyed on
+    the id column, and the <= n_buckets fit aggregate is planned once (its
+    totals come from the same single-partition step, not a re-aggregate)."""
+    out = C.dsir_scores(docs, F.col("source") == "src0")
+    out.collect()
+    parts = _final_shuffle_partitionings(out)
+    assert not [p for p in parts if p.startswith("hashpartitioning(doc_id")]
+    assert sum(p.startswith("hashpartitioning(b#") for p in parts) == 1
+
+
+def test_c27_collect_runs_at_most_12_jobs(spark):
+    """Building and collecting the c27 selection runs <= 12 Spark jobs (the
+    per-(doc, bucket) count shape ran 17)."""
+    from real_time_analytics_with_apache_pinot_on_aws_spark import queries as Q
+
+    builder = Q.all_queries()["c27_dsir_selection"].builder
+    builder(spark, SF_DIR).collect()  # registers the views once
+    sc = spark.sparkContext
+    sc.setJobGroup("c27-collect", "c27 collect", False)
+    try:
+        builder(spark, SF_DIR).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("c27-collect")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(jobs) <= 12
+
+
 # -- C28: Gopher rule-based quality filter -----------------------------------
 
 

@@ -389,6 +389,82 @@ def test_decontaminate_matches_set_reference(spark, corpus, evals):
         assert got[i] == len(grams(t) & eval_grams), (i, t)
 
 
+def _dsir_reference(docs, n_buckets: int, alpha: float = 1.0):
+    """DSIR in plain Python: md5 8-hex-char prefix mod ``n_buckets`` per
+    unigram/bigram, the Laplace p/q fit, a per-doc sum of log-ratios
+    rounded to 6 dp, and the md5-Gumbel selection key.
+    ``docs`` = [(id, text, is_target)] -> {id: (n_grams, log_w, sel_key)}."""
+    import hashlib
+    import math
+    import re as _re
+    from collections import Counter
+
+    def u32(s: str) -> int:
+        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+    buckets = {}
+    for i, text, _ in docs:
+        t = [w for w in _re.split(r"[^a-z0-9]+", text.lower()) if w]
+        grams = t + [f"{a} {b}" for a, b in zip(t, t[1:])]
+        buckets[i] = [u32(g) % n_buckets for g in grams]
+    ct, cr = Counter(), Counter()
+    for i, _, tgt in docs:
+        (ct if tgt else cr).update(buckets[i])
+    nt, nr = sum(ct.values()), sum(cr.values())
+
+    def logr(b: int) -> float:
+        return math.log((ct[b] + alpha) / (nt + alpha * n_buckets)) - math.log(
+            (cr[b] + alpha) / (nr + alpha * n_buckets)
+        )
+
+    out = {}
+    for i, _, tgt in docs:
+        if tgt or not buckets[i]:
+            continue
+        log_w = round(sum(logr(b) for b in buckets[i]), 6)
+        u = (u32(str(i)) + 0.5) / 2**32
+        out[i] = (len(buckets[i]), log_w, round(log_w - math.log(-math.log(u)), 6))
+    return out
+
+
+dsir_docs_st = st.lists(
+    st.tuples(
+        st.booleans(),  # target flag
+        st.lists(st.sampled_from(["alpha", "Beta", "g4mma", "x", "?!"]), max_size=5),
+        st.sampled_from([" ", ", ", "!! ", "\n"]),
+    ).map(lambda d: (d[2].join(d[1]), d[0])),
+    min_size=1,
+    max_size=10,
+)
+
+
+@given(docs=dsir_docs_st, n_buckets=st.sampled_from([4, 1024]))
+@example(
+    docs=[("alpha beta", True), ("", False), ("alpha", False), ("beta g4mma", False)],
+    n_buckets=1024,
+)
+@example(docs=[("alpha Beta", False)], n_buckets=4)  # pins the bigram word order
+@settings(**SETTINGS)
+def test_dsir_scores_match_python_reference(spark, docs, n_buckets):
+    """For ANY small corpus (0-, 1- and 2-token docs, punctuation-only
+    text, bucket collisions at 4 buckets), DSIR scores equal the plain-Python
+    replay: n_grams exactly, log_w and sel_key within the 6-dp rounding."""
+    from real_time_analytics_with_apache_pinot_on_aws_spark.operators import curation
+
+    rows = [(i, text, tgt) for i, (text, tgt) in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, tgt boolean")
+    got = {
+        r["doc_id"]: (r["n_grams"], r["log_w"], r["sel_key"])
+        for r in curation.dsir_scores(df, F.col("tgt"), n_buckets=n_buckets).collect()
+    }
+    want = _dsir_reference(rows, n_buckets)
+    assert set(got) == set(want)
+    for i, (n, log_w, sel_key) in want.items():
+        assert got[i][0] == n, (i, rows[i])
+        assert abs(got[i][1] - log_w) <= 1e-6 + 1e-12, (i, got[i], log_w)
+        assert abs(got[i][2] - sel_key) <= 1e-6 + 1e-12, (i, got[i], sel_key)
+
+
 # -- round 6: exact-substring dedup vs a brute-force reference ---------------
 
 corpus_st = st.lists(
