@@ -35,6 +35,7 @@ from . import functions as pfn
 from .functions import aggsql
 from .schema import TableSchema, parse_schema
 from .streaming.ingest import IngestPipeline, RawRecordSource
+from .operators.dedup import cache_scope, lifecycle_cache
 from .operators.clp import (
     clp_column_names as _clp_column_names,
     clp_encode as _clp_encode,
@@ -908,17 +909,18 @@ class Engine:
         ]
         if not move:
             return {"table": name, "moved_days": [], "rows_moved": 0}
-        rows = pipeline.table().where(F.col("ingest_date").isin(move)).cache()
         # upload_segment re-derives ingest_date / derived columns and
         # appends the offline star-tree cells + coverage manifest rows —
-        # the moved days become first-class OFFLINE segments.  cache()
+        # the moved days become first-class OFFLINE segments.  The cache
         # keeps the count + write (+ per-spec cell rollups) at ONE read of
         # the moved partitions instead of one scan per consumer.
-        try:
+        with cache_scope():
+            rows = lifecycle_cache(
+                pipeline.table().where(F.col("ingest_date").isin(move)),
+                "engine.realtime_to_offline.rows",
+            )
             n = rows.count()
             self.upload_segment(name, rows.drop("ingest_date"))
-        finally:
-            rows.unpersist()
         roots = [pipeline.table_path] + [
             path for spec, path in pipeline._rollups if "ingest_date" in spec.dims
         ]
@@ -3572,8 +3574,10 @@ class Engine:
 
     def query_json(self, sql: str) -> list[str]:
         """JSON result rows (broker response analog).  Small results only —
-        this collects to the driver like the broker gather stage."""
-        return self.query(sql).toJSON().collect()
+        this collects to the driver like the broker gather stage.  The
+        request owns its operator caches (released on return)."""
+        with cache_scope():
+            return self.query(sql).toJSON().collect()
 
     def query_broker_response(self, sql: str) -> dict:
         """Pinot broker-response-shaped result **[P1.2]**: the JSON envelope
@@ -3587,6 +3591,9 @@ class Engine:
         (exact, like Pinot's BigDecimal serialization), BYTES as hex
         strings, arrays element-wise.  ``json.dumps`` on the returned dict
         is guaranteed to succeed (pinned by test_broker_response_json).
+        Each request owns the operator caches its build opens
+        (:func:`~.operators.dedup.cache_scope`), released on return, so
+        concurrent requests never evict each other's.
         """
         import time as _time
         import uuid as _uuid
@@ -3622,74 +3629,75 @@ class Engine:
         done = threading.Event()
         watchdog = None
         sc = self.spark.sparkContext
-        try:
-            # the job group and watchdog must cover query() itself, not
-            # just the collect: planning can run Spark jobs too (hybrid
-            # time-boundary collect, TEXT_MATCH/JSON_MATCH postings
-            # builds, rewrite analysis probes) and a request slow THERE
-            # must still be cancellable at the deadline (round-6 ADVICE)
-            if timeout_ms is not None and timeout_ms > 0:
-                group = f"broker-{_uuid.uuid4().hex[:12]}"
-                sc.setJobGroup(group, f"timeoutMs={timeout_ms}", True)
+        with cache_scope():
+            try:
+                # the job group and watchdog must cover query() itself, not
+                # just the collect: planning can run Spark jobs too (hybrid
+                # time-boundary collect, TEXT_MATCH/JSON_MATCH postings
+                # builds, rewrite analysis probes) and a request slow THERE
+                # must still be cancellable at the deadline (round-6 ADVICE)
+                if timeout_ms is not None and timeout_ms > 0:
+                    group = f"broker-{_uuid.uuid4().hex[:12]}"
+                    sc.setJobGroup(group, f"timeoutMs={timeout_ms}", True)
 
-                def _watchdog() -> None:
-                    # keep cancelling until the collect returns:
-                    # cancelJobGroup only kills jobs RUNNING at call time,
-                    # so a single shot fired while the driver is still
-                    # planning would miss the job submitted a moment later
-                    done.wait(timeout_ms / 1000.0)
-                    while not done.is_set():
-                        if not timed_out:
-                            timed_out.append(True)
-                        sc.cancelJobGroup(group)
-                        done.wait(0.25)
+                    def _watchdog() -> None:
+                        # keep cancelling until the collect returns:
+                        # cancelJobGroup only kills jobs RUNNING at call time,
+                        # so a single shot fired while the driver is still
+                        # planning would miss the job submitted a moment later
+                        done.wait(timeout_ms / 1000.0)
+                        while not done.is_set():
+                            if not timed_out:
+                                timed_out.append(True)
+                            sc.cancelJobGroup(group)
+                            done.wait(0.25)
 
-                watchdog = threading.Thread(target=_watchdog, daemon=True)
-                watchdog.start()
-            df = self.query(sql)
-            if groups_limit is not None:
-                rows = df.limit(groups_limit + 1).collect()
-                groups_trimmed = len(rows) > groups_limit
-                rows = rows[:groups_limit]
-            else:
-                rows = df.collect()
-                groups_trimmed = False
-        except Exception as e:
-            # Pinot brokers never raise through /query/sql: failures come
-            # back as a structured envelope with ``exceptions: [{errorCode,
-            # message}]`` **[P1.2]**.  Codes follow Pinot's QueryException
-            # taxonomy: 150 SQL parsing, 700 query validation (unknown
-            # column/table), 200 execution, 250 execution timeout.
-            ms = int((_time.monotonic() - t0) * 1000)
-            if timed_out:
+                    watchdog = threading.Thread(target=_watchdog, daemon=True)
+                    watchdog.start()
+                df = self.query(sql)
+                if groups_limit is not None:
+                    rows = df.limit(groups_limit + 1).collect()
+                    groups_trimmed = len(rows) > groups_limit
+                    rows = rows[:groups_limit]
+                else:
+                    rows = df.collect()
+                    groups_trimmed = False
+            except Exception as e:
+                # Pinot brokers never raise through /query/sql: failures come
+                # back as a structured envelope with ``exceptions: [{errorCode,
+                # message}]`` **[P1.2]**.  Codes follow Pinot's QueryException
+                # taxonomy: 150 SQL parsing, 700 query validation (unknown
+                # column/table), 200 execution, 250 execution timeout.
+                ms = int((_time.monotonic() - t0) * 1000)
+                if timed_out:
+                    return {
+                        "numRowsResultSet": 0,
+                        "timeUsedMs": ms,
+                        "exceptions": [
+                            {
+                                "errorCode": 250,
+                                "message": (
+                                    f"query exceeded timeoutMs={timeout_ms} "
+                                    "and was cancelled"
+                                ),
+                            }
+                        ],
+                    }
                 return {
                     "numRowsResultSet": 0,
                     "timeUsedMs": ms,
                     "exceptions": [
                         {
-                            "errorCode": 250,
-                            "message": (
-                                f"query exceeded timeoutMs={timeout_ms} "
-                                "and was cancelled"
-                            ),
+                            "errorCode": self._broker_error_code(e),
+                            "message": f"{type(e).__name__}: {e}"[:4096],
                         }
                     ],
                 }
-            return {
-                "numRowsResultSet": 0,
-                "timeUsedMs": ms,
-                "exceptions": [
-                    {
-                        "errorCode": self._broker_error_code(e),
-                        "message": f"{type(e).__name__}: {e}"[:4096],
-                    }
-                ],
-            }
-        finally:
-            done.set()
-            if watchdog is not None:
-                watchdog.join(timeout=2)
-                sc.setLocalProperty("spark.jobGroup.id", None)
+            finally:
+                done.set()
+                if watchdog is not None:
+                    watchdog.join(timeout=2)
+                    sc.setLocalProperty("spark.jobGroup.id", None)
         ms = int((_time.monotonic() - t0) * 1000)
         return {
             "resultTable": {

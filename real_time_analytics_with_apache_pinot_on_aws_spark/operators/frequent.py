@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .dedup import lifecycle_cache
+
 
 def segment_counts(df: DataFrame, seg_col: str, item_col: str) -> DataFrame:
     """Exact per-(segment, item) counts — the operator's ONLY full-data
@@ -47,12 +49,6 @@ def segment_counts(df: DataFrame, seg_col: str, item_col: str) -> DataFrame:
         df.groupBy(F.col(seg_col).alias("seg"), F.col(item_col).alias("item"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-# The cached per-segment summary relations (size-1 lifecycle, same pattern
-# as similarity._CAND_CACHE): each frequent_summaries call releases the
-# previous call's blocks.
-_SUMMARY_CACHE: list = []
 
 
 def frequent_summaries(counts: DataFrame, k: int = 8) -> tuple[DataFrame, DataFrame]:
@@ -79,13 +75,9 @@ def frequent_summaries(counts: DataFrame, k: int = 8) -> tuple[DataFrame, DataFr
     rn = F.row_number().over(
         W.partitionBy("seg").orderBy(F.col("cnt").desc(), F.col("item"))
     )
-    summary = counts.withColumn("rn", rn).filter(F.col("rn") <= k + 1).cache()
-    while _SUMMARY_CACHE:
-        try:
-            _SUMMARY_CACHE.pop().unpersist()
-        except Exception:
-            pass
-    _SUMMARY_CACHE.append(summary)
+    summary = lifecycle_cache(
+        counts.withColumn("rn", rn).filter(F.col("rn") <= k + 1), "frequent.summary"
+    )
     kept = summary.filter(F.col("rn") <= k).drop("rn")
     eps = summary.groupBy("seg").agg(
         F.coalesce(

@@ -17,13 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Bounded cache lifecycle for the inline flatten's per-level caches (round
-# 11): a builder cannot unpersist its own caches (consumers materialize
-# later), so each build releases the PREVIOUS build's relations — the leak
-# is bounded at one build's worth per session instead of growing with every
-# call.  Same pattern as dedup.lifecycle_cache; lineage stays intact (cache,
-# not checkpoint), so a caller holding an old result just recomputes.
-_LEVEL_CACHE: list = []
+from .dedup import lifecycle_cache
 
 
 def build_json_postings(
@@ -42,14 +36,11 @@ def build_json_postings(
         F.parse_json(F.col(json_col)).alias("v"),
         F.lit("$").alias("path"),
     )
-    while _LEVEL_CACHE:
-        try:
-            _LEVEL_CACHE.pop().unpersist()
-        except Exception:
-            pass
     leaves: DataFrame | None = None
     for depth in range(max_depth):
-        frontier.createOrReplaceTempView("_json_frontier")
+        # DataFrame argument, not a named temp view: concurrent builds share
+        # the session catalog, and a fixed view name would let one build
+        # explode another's frontier.
         exploded = spark.sql(
             """
             SELECT id,
@@ -57,8 +48,9 @@ def build_json_postings(
                                      ELSE concat('[', pos, ']') END) AS path,
                    e.value AS v,
                    schema_of_variant(e.value) AS _sch
-            FROM _json_frontier, LATERAL variant_explode(v) AS e
-            """
+            FROM {frontier}, LATERAL variant_explode(v) AS e
+            """,
+            frontier=frontier,
         )
         # Each level's explode output feeds TWO consumers (this level's
         # leaves + the next level's frontier), and the leaves of level k
@@ -69,8 +61,7 @@ def build_json_postings(
         # index scale the flatten is paid once at ingest
         # (:func:`persist_json_index`); this bounds the inline path.
         if depth < max_depth - 1:
-            exploded = exploded.cache()
-            _LEVEL_CACHE.append(exploded)
+            exploded = lifecycle_cache(exploded, f"jsonindex.level{depth}")
         is_nested = F.col("_sch").startswith("OBJECT<") | F.col("_sch").startswith("ARRAY<")
         level_leaves = exploded.filter(~is_nested).select(
             "id", "path", F.col("v").cast("string").alias("value")
@@ -175,9 +166,10 @@ def json_match(
 
     ``postings`` (round 11): a caller evaluating SEVERAL predicates against
     the same documents can pass one shared (id, path, value) relation —
-    typically ``build_json_postings(...).cache()`` — so the flatten is paid
-    once instead of once per predicate (the probe side of the semi-join
-    prunes the JSON column, so the index build is the whole per-call cost).
+    typically ``lifecycle_cache(build_json_postings(...), key)`` — so the
+    flatten is paid once instead of once per predicate (the probe side of
+    the semi-join prunes the JSON column, so the index build is the whole
+    per-call cost).
     The caller owns persistence; the contract is the exact output of
     :func:`build_json_postings` on the same (df, id_col, json_col).
     """

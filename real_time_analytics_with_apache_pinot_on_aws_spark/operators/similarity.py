@@ -271,41 +271,6 @@ def lsh_band_signatures(vec: Column, dim: int, nbits: int, bands: int) -> Column
     )
 
 
-# LSH candidate-id relations cached per call (size-1 lifecycle: each call
-# releases the previous call's blocks — same pattern as dedup.lifecycle_cache).
-# Why cache at all (round 11): the candidate build embeds the corpus-wide
-# band-signature pass, the most expensive map stage in the module.  Left
-# uncached, every plan position that re-evaluates the candidate subtree pays
-# that pass again — and under a generous autoBroadcastJoinThreshold the
-# re-evaluations run CONCURRENTLY as broadcast-exchange futures (each a full
-# 32-task job), oversubscribing the cores ~5x; the transient dim-sized arrays
-# those tasks allocate then turn into a GC storm (measured on the dim-768
-# query: 270 CPU-seconds of GC in one broadcast stage, end-to-end swinging
-# 6.6-180 s run to run).  Materializing the ids-only candidate list once
-# collapses every downstream consumer — including broadcast builds — to a
-# cheap cache read: one signature pass per query, sequential, full
-# parallelism.  The cached relation is ids only (16 bytes/row), orders of
-# magnitude smaller than the corpus it indexes.
-# Constraint (round-12 ADVICE doc): ONE live plan per module — the next call
-# unpersists this call's relation at BUILD time, so composing two LSH
-# DataFrames before executing the first reverts the first to uncached
-# re-evaluation (correct via recompute, just slower).  Not thread-safe.
-# Same contract as dedup.lifecycle_cache, kept as a separate list because
-# tests pin this module attribute.
-_CAND_CACHE: list = []
-
-
-def _cache_candidates(cand: DataFrame) -> DataFrame:
-    while _CAND_CACHE:
-        try:
-            _CAND_CACHE.pop().unpersist()
-        except Exception:
-            pass
-    cand = cand.cache()
-    _CAND_CACHE.append(cand)
-    return cand
-
-
 def embedding_near_dup_pairs(
     corpus: DataFrame,
     threshold: float = 0.4,
@@ -368,7 +333,7 @@ def embedding_near_dup_pairs(
             # multi-band collisions duplicate a pair; dedup on bare ids and
             # cache the id list (it feeds the packed scorer and, under a
             # generous broadcast threshold, concurrent exchange futures)
-            cand = _cache_candidates(cand.distinct())
+            cand = lifecycle_cache(cand.distinct(), "similarity.near_dup.cand")
         # Exact verification WITHOUT re-attaching vectors per pair
         # (guide §8): the packed scorer moves candidate IDS plus one packed
         # corpus copy per group — the former id->vector joins shipped
@@ -765,7 +730,7 @@ def cosine_topk_lsh(
     probe touches ``bands`` partitions.
     """
     from .arrowkernels import band_sigs_udf, score_pairs
-    from .dedup import _spread
+    from .dedup import _spread, lifecycle_cache
 
     # Spread the corpus over the session's parallelism before the signature
     # projection (round 11): the kernel's parallelism is the input
@@ -801,11 +766,16 @@ def cosine_topk_lsh(
     # move payloads once).
     ce = c.select("neighbor_id", F.posexplode("sigs").alias("band", "sig"))
     qe = q.select("query_id", F.posexplode("sigs").alias("band", "sig"))
-    cand = _cache_candidates(
+    # The ids-only candidates are cached: uncached, every consumer re-runs
+    # the corpus signature pass, and under a generous broadcast threshold
+    # those re-runs execute concurrently as broadcast-exchange futures
+    # (measured at dim 768: a GC storm, 6.6-180 s end to end).
+    cand = lifecycle_cache(
         ce.join(F.broadcast(qe), ["band", "sig"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
-        .distinct()
+        .distinct(),
+        "similarity.lsh_topk.cand",
     )
     scored = score_pairs(
         cand.join(c.select("neighbor_id", "c_vec"), "neighbor_id").join(

@@ -47,7 +47,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import normalized_tokens
+from .dedup import lifecycle_cache, normalized_tokens
 
 # Lucene's classic English stop set (EnglishAnalyzer.ENGLISH_STOP_WORDS_SET)
 ENGLISH_STOPWORDS = frozenset(
@@ -383,12 +383,6 @@ def text_match(
     return _verify_phrase(out, text_col, query, analyzer)
 
 
-# bm25_scores' cached per-doc (dl, tf...) relation — size-1 lifecycle, each
-# call releases the previous call's blocks (same pattern as
-# dedup.lifecycle_cache).
-_BM25_CACHE: list = []
-
-
 def bm25_scores(
     df: DataFrame,
     id_col: str,
@@ -421,7 +415,7 @@ def bm25_scores(
     (dl, per-term tf) per doc — the token array is built once per ROW and
     the term counts are ``size(filter(toks, = term))`` over it, no explode
     of the corpus token stream at all — and that ints-only relation is
-    cached (size-1 lifecycle, as similarity._CAND_CACHE).  Values are
+    cached (:func:`dedup.lifecycle_cache`).  Values are
     unchanged: per-(id, dl, token) counts, document frequencies, and the
     sorted-token score fold are the same integers and the same double
     arithmetic as the exploded shape (oracle replays the formula exactly).
@@ -451,15 +445,10 @@ def bm25_scores(
             ],
         )
 
-    perdoc = df.select(
-        F.col(id_col).alias("id"), let_bound(toks, _features).alias("_f")
-    ).cache()
-    while _BM25_CACHE:
-        try:
-            _BM25_CACHE.pop().unpersist()
-        except Exception:
-            pass
-    _BM25_CACHE.append(perdoc)
+    perdoc = lifecycle_cache(
+        df.select(F.col(id_col).alias("id"), let_bound(toks, _features).alias("_f")),
+        "textmatch.bm25.per_doc",
+    )
     base = perdoc.select(
         "id",
         F.col("_f.dl").alias("dl"),

@@ -2129,7 +2129,7 @@ def c2_cosine_topk_lsh_dim768(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline inside a broadcast-exchange FUTURE (its output is tiny, so a
     # generous autoBroadcastJoinThreshold elects it), concurrently with the
     # other legs' futures — the GC-storm mode documented at
-    # similarity._CAND_CACHE.  Cached: 50 id rows.
+    # similarity.cosine_topk_lsh's candidate cache.  Cached: 50 id rows.
     lsh = _dedup.lifecycle_cache(
         _sim.cosine_topk_lsh(
             big, q, dim=768, k=10, nbits=4, bands=8, spread=False

@@ -333,20 +333,86 @@ def test_lsh_candidate_cache_single_lifecycle(spark):
     """Round 11: the LSH candidate-id relation is cached (so broadcast
     builds and repeated consumers reuse ONE corpus signature pass) with a
     size-1 lifecycle — each operator call releases the previous call's
-    blocks, bounding the leak at one ids-only relation per session."""
+    blocks, bounding the leak at one ids-only relation per key."""
+    owner = dedup._PROCESS_CACHES
+    key = "similarity.lsh_topk.cand"
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = df.filter(F.col("vec_id") < 3)
     out1 = similarity.cosine_topk_lsh(df, q, dim=64, k=5, nbits=4, bands=2)
-    assert len(similarity._CAND_CACHE) == 1
-    first = similarity._CAND_CACHE[0]
+    first = owner[key]
     assert first.is_cached
+    n_keys = len(owner)
     out2 = similarity.cosine_topk_lsh(df, q, dim=64, k=5, nbits=4, bands=2)
-    assert len(similarity._CAND_CACHE) == 1
-    assert similarity._CAND_CACHE[0] is not first
+    # replaced, not appended: same keys, a new relation, the old one released
+    assert len(owner) == n_keys
+    assert owner[key] is not first and owner[key].is_cached
+    assert not first.is_cached
     assert out2.count() == out1.count()
     blocked = similarity.embedding_near_dup_pairs(df, threshold=0.3, dim=64, nbits=4, bands=2)
-    assert len(similarity._CAND_CACHE) == 1
+    assert owner["similarity.near_dup.cand"].is_cached
     assert blocked.count() >= 0
+
+
+def test_lsh_candidate_keys_do_not_evict_each_other(spark):
+    """The top-k and near-dup candidate relations have one key each: building
+    both before executing either keeps both in Spark's cache manager."""
+    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    q = df.filter(F.col("vec_id") < 3)
+    topk = similarity.cosine_topk_lsh(df, q, dim=64, k=5, nbits=4, bands=2)
+    topk_cand = dedup._PROCESS_CACHES["similarity.lsh_topk.cand"]
+    pairs = similarity.embedding_near_dup_pairs(df, threshold=0.3, dim=64, nbits=4, bands=2)
+    near_cand = dedup._PROCESS_CACHES["similarity.near_dup.cand"]
+    for cand in (topk_cand, near_cand):
+        assert cand.is_cached and cand.storageLevel.useMemory
+    assert topk.count() > 0 and pairs.count() >= 0
+
+
+def test_lifecycle_cache_is_the_only_cache_call():
+    """Every cached relation in the package goes through one owner: the only
+    ``.cache()`` / ``.persist()`` call is the one inside ``lifecycle_cache``."""
+    import ast
+    from pathlib import Path
+
+    import real_time_analytics_with_apache_pinot_on_aws_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    found = []
+
+    def walk(node, fn, rel):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("cache", "persist")
+        ):
+            found.append((rel, fn))
+        for child in ast.iter_child_nodes(node):
+            walk(child, fn, rel)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        walk(ast.parse(path.read_text(), filename=str(path)), None, rel)
+    assert found == [("operators/dedup.py", "lifecycle_cache")]
+
+
+def test_cache_scope_owns_and_releases_its_relations(spark):
+    """Inside ``cache_scope`` the scope owns the relation (size-1 per key)
+    and the process owner is untouched; on exit every relation is released,
+    and a result built inside still computes (recompute from lineage)."""
+    df = spark.range(10)
+    with dedup.cache_scope() as owner:
+        a = dedup.lifecycle_cache(df.filter("id > 2"), "t.scope")
+        b = dedup.lifecycle_cache(df.filter("id > 5"), "t.scope")
+        assert list(owner) == ["t.scope"] and owner["t.scope"] is b
+        assert b.is_cached and not a.is_cached
+        with dedup.cache_scope() as inner:
+            c = dedup.lifecycle_cache(df.filter("id > 7"), "t.scope")
+            assert inner["t.scope"] is c and owner["t.scope"] is b
+        assert not c.is_cached and b.is_cached
+    assert not b.is_cached and not b.storageLevel.useMemory
+    assert "t.scope" not in dedup._PROCESS_CACHES
+    assert b.count() == 4
 
 
 def test_frequent_eps_from_rank_k_plus_1_matches_max_over_dropped(spark):
@@ -900,10 +966,10 @@ def test_json_match_extended_ops(spark):
 def test_json_postings_level_cache_bounded_across_builds(spark):
     """Round 11: the inline flatten caches each level's variant_explode
     output (so the leaves union is not O(depth^2) re-evaluations), and the
-    module-level lifecycle releases the PREVIOUS build's caches at the next
-    build — the registry never accumulates more than one build's worth.
-    Lineage stays intact, so a result from an earlier build still computes
-    correctly after its caches were released (it just recomputes)."""
+    lifecycle releases the PREVIOUS build's caches at the next build — the
+    owner never holds more than one build's worth.  Lineage stays intact,
+    so a result from an earlier build still computes correctly after its
+    caches were released (it just recomputes)."""
     df = spark.createDataFrame(
         [(1, '{"a": 1, "b": {"c": [10, {"d": true}], "e": "x"}}')], "id long, j string"
     )
@@ -913,15 +979,33 @@ def test_json_postings_level_cache_bounded_across_builds(spark):
         ("$.b.c[1].d", "true"),
         ("$.b.e", "x"),
     }
+    owner = dedup._PROCESS_CACHES
     p1 = jsonindex.build_json_postings(df, "id", "j")
-    per_build = len(jsonindex._LEVEL_CACHE)
-    assert per_build == 3  # max_depth=4 caches every level but the last
+    levels = sorted(k for k in owner if k.startswith("jsonindex.level"))
+    # max_depth=4 caches every level but the last
+    assert levels == ["jsonindex.level0", "jsonindex.level1", "jsonindex.level2"]
+    first = [owner[k] for k in levels]
+    n_keys = len(owner)
     p2 = jsonindex.build_json_postings(df, "id", "j")
     # bounded: the second build replaced (not appended to) the first's caches
-    assert len(jsonindex._LEVEL_CACHE) == per_build
+    assert len(owner) == n_keys
+    for k, old in zip(levels, first):
+        assert owner[k] is not old and owner[k].is_cached and not old.is_cached
     assert {(r["path"], r["value"]) for r in p2.collect()} == expected
     # the first build's result survives its caches being unpersisted
     assert {(r["path"], r["value"]) for r in p1.collect()} == expected
+
+
+def test_json_postings_build_leaves_no_session_view(spark):
+    """The flatten passes each level's frontier to ``spark.sql`` as a
+    DataFrame argument: no fixed-name view is left in the session catalog
+    for a concurrent build to resolve against."""
+    df = spark.createDataFrame([(1, '{"a": {"b": [1, 2]}}')], "id long, j string")
+    out = jsonindex.build_json_postings(df, "id", "j")
+    assert {(r["path"], r["value"]) for r in out.collect()} == {
+        ("$.a.b[0]", "1"), ("$.a.b[1]", "2"),
+    }
+    assert "_json_frontier" not in {t.name for t in spark.catalog.listTables()}
 
 
 def test_persisted_json_index_serves_predicates(spark):

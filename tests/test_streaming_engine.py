@@ -3500,11 +3500,9 @@ def test_text_match_sql_form(spark, tmp_path):
         pipe.stop()
 
 
-def test_json_match_sql_form(spark, tmp_path):
-    """The SQL form of the JSON index predicate **[P1.2]**:
-    ``WHERE JSON_MATCH(col, '"$.path" op value [AND ...]') [AND residual]``
-    parses Pinot's filter string (quoted paths, '' escapes, IN lists,
-    IS [NOT] NULL) into the postings conjunction; OR anywhere is loud."""
+def _json_table(spark, tmp_path):
+    """A 12-row ``jsonTable`` (primary key userID) whose ``payload`` JSON is
+    NULL for u0 and u6; returns ``(engine, pipe)`` with the stream started."""
     src_dir = tmp_path / "stream_in"
     src_dir.mkdir(parents=True)
     with open(src_dir / "a.json", "w") as fh:
@@ -3526,6 +3524,15 @@ def test_json_match_sql_form(spark, tmp_path):
     pipe = engine.add_table(CLICKSTREAM_SCHEMA, config,
                             RawRecordSource(kind="files", path=str(src_dir)),
                             available_now=True)
+    return engine, pipe
+
+
+def test_json_match_sql_form(spark, tmp_path):
+    """The SQL form of the JSON index predicate **[P1.2]**:
+    ``WHERE JSON_MATCH(col, '"$.path" op value [AND ...]') [AND residual]``
+    parses Pinot's filter string (quoted paths, '' escapes, IN lists,
+    IS [NOT] NULL) into the postings conjunction; OR anywhere is loud."""
+    engine, pipe = _json_table(spark, tmp_path)
     try:
         pipe.process_available()
         engine.register_view("jsonTable")
@@ -3568,6 +3575,43 @@ def test_json_match_sql_form(spark, tmp_path):
         )
         assert resp["exceptions"] == []
         assert resp["numRowsResultSet"] == len(want)
+    finally:
+        pipe.stop()
+
+
+def test_concurrent_broker_json_match_requests_own_their_caches(spark, tmp_path):
+    """Concurrent broker requests share one SparkSession: each JSON_MATCH
+    answer must come from its own postings build (no shared session view),
+    and every operator cache a request opened is gone once it returns."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    engine, pipe = _json_table(spark, tmp_path)
+    cases = {
+        "\"$.k\" = 0": lambda i: i % 4 == 0,
+        "\"$.k\" = 1": lambda i: i % 4 == 1,
+        "\"$.k\" >= 2": lambda i: i % 4 >= 2,
+        "\"$.name.first\" = ''n0''": lambda i: i % 3 == 0,
+        "\"$.name.first\" = ''n2''": lambda i: i % 3 == 2,
+        "\"$.tags[*]\" = ''t0''": lambda i: i % 2 == 0,
+        "\"$.tags[*]\" IN (''t1'')": lambda i: i % 2 == 1,
+    }
+    try:
+        pipe.process_available()
+        engine.register_view("jsonTable")
+        spark.catalog.clearCache()
+
+        def run(expr):
+            return engine.query_broker_response(
+                f"SELECT userID FROM jsonTable WHERE JSON_MATCH(payload, '{expr}')"
+            )
+
+        with ThreadPoolExecutor(len(cases)) as pool:
+            resps = list(pool.map(run, cases))
+        for (expr, pred), resp in zip(cases.items(), resps):
+            assert resp["exceptions"] == [], expr
+            got = {row[0] for row in resp["resultTable"]["rows"]}
+            assert got == {f"u{i}" for i in range(12) if i % 6 and pred(i)}, expr
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     finally:
         pipe.stop()
 
