@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from . import fs as _fs
 from . import functions as pfn
-from .functions import aggsql
+from .functions import aggsql, sqltext
 from .schema import TableSchema, parse_schema
 from .streaming.ingest import IngestPipeline, RawRecordSource
 from .operators.dedup import cache_scope, lifecycle_cache
@@ -1698,7 +1698,7 @@ class Engine:
             return self.query(orig), "sql"
         aggs: dict = {}
         sel_dims: list = []
-        for item in self._split_top_level_commas(m.group("items")):
+        for item in sqltext.split(m.group("items")):
             im = self._AGG_ITEM_RE.match(item.strip())
             if not im:
                 return self.query(orig), "sql"
@@ -1739,83 +1739,27 @@ class Engine:
             pass
         return out, route
 
-    @staticmethod
-    def _parse_in_values(raw: str) -> tuple | None:
-        """Tokenize an IN-list respecting single quotes.
+    # one IN-list value: a quote-free single-quoted string or a bare token
+    _IN_VALUE = r"\s*(?:'([^']*)'|([\w.+-]+))\s*"
+    _IN_LIST_RE = re.compile(rf"{_IN_VALUE}(?:,{_IN_VALUE})*")
+
+    @classmethod
+    def _parse_in_values(cls, raw: str) -> tuple | None:
+        """Parse a Pinot IN-list of values.
 
         ``'a,b', 'c'`` must parse to two values, not three — a bare
         ``split(',')`` silently mangles quoted commas into a WRONG answer
-        (round-4 ADVICE).  Anything ambiguous (unbalanced quotes, doubled
-        ``''`` escapes, stray text around a quoted value) returns None so
-        the caller falls back to full Spark SQL instead of mis-routing.
+        (round-4 ADVICE).  Anything else (unbalanced quotes, doubled
+        ``''`` escapes, stray text around a quoted value, an empty item)
+        returns None so the caller falls back to full Spark SQL instead
+        of mis-routing.
         """
-        items, cur, in_q = [], [], False
-        for ch in raw:
-            if ch == "'":
-                in_q = not in_q
-                cur.append(ch)
-            elif ch == "," and not in_q:
-                items.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-        if in_q:
+        if cls._IN_LIST_RE.fullmatch(raw) is None:
             return None
-        items.append("".join(cur).strip())
-        vals: list[str] = []
-        for it in items:
-            if re.fullmatch(r"'[^']*'", it):
-                vals.append(it[1:-1])
-            elif re.fullmatch(r"[\w.+-]+", it):
-                vals.append(it)
-            else:
-                return None
-        return tuple(vals)
-
-    @staticmethod
-    def _skip_literal(s: str, i: int) -> int:
-        """``s[i]`` is an opening ``'`` or ``"``; return the index one past
-        the closing quote.  Honors backslash escapes (Spark's default
-        literal syntax) and doubled-quote escapes; an unterminated literal
-        consumes to end-of-string (the SQL parser will complain, not us)."""
-        q, j, n = s[i], i + 1, len(s)
-        while j < n:
-            ch = s[j]
-            if ch == "\\":
-                j += 2
-                continue
-            if ch == q:
-                if j + 1 < n and s[j + 1] == q:
-                    j += 2
-                    continue
-                return j + 1
-            j += 1
-        return n
-
-    @staticmethod
-    def _split_top_level_commas(items: str) -> list[str]:
-        # literal spans ('...' and "...", escapes included) are opaque
-        parts, depth, cur, i, n = [], 0, [], 0, len(items)
-        while i < n:
-            ch = items[i]
-            if ch in ("'", '"'):
-                j = Engine._skip_literal(items, i)
-                cur.append(items[i:j])
-                i = j
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-            i += 1
-        if cur:
-            parts.append("".join(cur))
-        return parts
+        return tuple(
+            q if b == "" else b
+            for q, b in re.findall(cls._IN_VALUE, raw)
+        )
 
     def query_agg(self, name: str, request) -> tuple[DataFrame, str]:
         """Star-tree-aware aggregation **[P1.2]**: route an AggRequest
@@ -2099,7 +2043,7 @@ class Engine:
         # matching left "FROM a, b"'s second engine table unresolved)
         edits = []
         for start, end, head, tname, alias_text, aname in (
-            self._iter_table_refs(sql, self._literal_spans(sql))
+            self._iter_table_refs(sql)
         ):
             if tname not in known:
                 continue
@@ -2182,7 +2126,7 @@ class Engine:
         )
         residual = m.group("residual")
         if residual:
-            if self._find_top_level_keyword(residual, "OR") != -1:
+            if sqltext.search("OR", residual, top_level=True):
                 raise ValueError(
                     "VECTOR_SIMILARITY with a top-level OR in the residual "
                     "predicate is not supported: SQL precedence would let "
@@ -2190,7 +2134,7 @@ class Engine:
                     "the disjunction (AND (a OR b)) or restructure the query"
                 )
             out = out.where(F.expr(residual))
-        items = [i.strip() for i in self._split_top_level_commas(m.group("items"))]
+        items = [i.strip() for i in sqltext.split(m.group("items"))]
         if items == ["*"]:
             return out
         return out.selectExpr(*items)
@@ -2226,7 +2170,7 @@ class Engine:
         )
         residual = m.group("residual")
         if residual:
-            if self._find_top_level_keyword(residual, "OR") != -1:
+            if sqltext.search("OR", residual, top_level=True):
                 raise ValueError(
                     "TEXT_MATCH with a top-level OR in the residual "
                     "predicate is not supported: SQL precedence would let "
@@ -2234,7 +2178,7 @@ class Engine:
                     "the disjunction (AND (a OR b)) or restructure the query"
                 )
             out = out.where(F.expr(residual))
-        items = [i.strip() for i in self._split_top_level_commas(m.group("items"))]
+        items = [i.strip() for i in sqltext.split(m.group("items"))]
         if items == ["*"]:
             return out
         return out.selectExpr(*items)
@@ -2253,65 +2197,6 @@ class Engine:
         re.IGNORECASE | re.DOTALL,
     )
 
-    @staticmethod
-    def _split_top_level_and(expr: str) -> list[str]:
-        """Split a Pinot JSON_MATCH filter expression on top-level ANDs
-        (quote- and paren-aware)."""
-        parts, depth, start = [], 0, 0
-        i, n = 0, len(expr)
-        while i < n:
-            ch = expr[i]
-            if ch in ("'", '"'):
-                # both literal kinds are opaque: JSON paths are
-                # double-quoted and may contain ' and ' / '_and_'
-                # (round-6 review)
-                i = Engine._skip_literal(expr, i)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and expr[i : i + 3].upper() == "AND"
-                and (i == 0 or not expr[i - 1].isalnum())
-                and (i + 3 >= n or not expr[i + 3].isalnum())
-            ):
-                parts.append(expr[start:i])
-                i += 3
-                start = i
-                continue
-            i += 1
-        parts.append(expr[start:])
-        return [p.strip() for p in parts if p.strip()]
-
-    @staticmethod
-    def _has_top_level_group_by(sql: str) -> bool:
-        """True when the STATEMENT itself is a group-by (GROUP BY at paren
-        depth 0, outside literals) — a GROUP BY buried in a subquery must
-        not make numGroupsLimit truncate the outer result (round-6
-        review)."""
-        depth, i, n = 0, 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in ("'", '"'):
-                i = Engine._skip_literal(sql, i)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and sql[i : i + 5].upper() == "GROUP"
-                and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-            ):
-                m = re.match(r"GROUP\s+BY\b", sql[i:], re.IGNORECASE)
-                if m:
-                    return True
-            i += 1
-        return False
-
     @classmethod
     def _parse_json_match_expr(cls, expr: str) -> list[tuple]:
         """Pinot's JSON_MATCH filter string **[P1.2]** -> [(path, op,
@@ -2322,14 +2207,15 @@ class Engine:
         form cannot express it — same contract as json_match_all)."""
 
         def unq(v: str) -> str:
-            v = v.strip()
-            if v.startswith("'") and v.endswith("'") and len(v) >= 2:
-                return v[1:-1].replace("''", "'")
-            return v
+            lit = sqltext.string_value(v)
+            return v.strip() if lit is None else lit
 
         preds: list[tuple] = []
-        for part in cls._split_top_level_and(expr):
-            if cls._find_top_level_keyword(part, "OR") != -1:
+        for part in sqltext.split(expr, "AND"):
+            part = part.strip()
+            if not part:
+                continue
+            if sqltext.search("OR", part, top_level=True):
                 raise ValueError(
                     "JSON_MATCH with OR is not supported — the postings "
                     "evaluation is a conjunction (split the query or use "
@@ -2352,10 +2238,10 @@ class Engine:
             elif op == "IN":
                 if not (val.startswith("(") and val.endswith(")")):
                     raise ValueError(f"IN needs a parenthesized list: {val!r}")
-                items = [
-                    unq(x)
-                    for x in cls._split_top_level_commas(val[1:-1])
-                ]
+                items = sqltext.split(val[1:-1])
+                if not all(x.strip() for x in items):
+                    raise ValueError(f"empty item in IN list: {val!r}")
+                items = [unq(x) for x in items]
                 preds.append((m.group("path"), "IN", items))
             else:
                 if op == "!=":
@@ -2393,14 +2279,14 @@ class Engine:
         )
         residual = m.group("residual")
         if residual:
-            if self._find_top_level_keyword(residual, "OR") != -1:
+            if sqltext.search("OR", residual, top_level=True):
                 raise ValueError(
                     "JSON_MATCH with a top-level OR in the residual "
                     "predicate is not supported — parenthesize the "
                     "disjunction (AND (a OR b)) or restructure the query"
                 )
             out = out.where(F.expr(residual))
-        items = [i.strip() for i in self._split_top_level_commas(m.group("items"))]
+        items = [i.strip() for i in sqltext.split(m.group("items"))]
         if items == ["*"]:
             return out
         return out.selectExpr(*items)
@@ -2425,11 +2311,20 @@ class Engine:
     )
 
     def _strip_query_options(self, sql: str) -> tuple[str, dict]:
+        # comments before a SET prefix or after an OPTION suffix are not
+        # part of the statement, and an OPTION suffix inside a comment is
+        # no option (an option value may itself hold "--")
         opts: dict = {}
-        while (m := self._SET_RE.match(sql)) is not None:
+        while True:
+            rest = sql[sqltext.skip_space(sql):]
+            m = self._SET_RE.match(rest)
+            if m is None:
+                break
             opts[m.group("key")] = m.group("val").strip("'\"")
-            sql = sql[m.end():]
-        m = self._OPTION_SUFFIX_RE.search(sql)
+            sql = rest[m.end():]
+        m = sqltext.search(self._OPTION_SUFFIX_RE, sql) or sqltext.search(
+            self._OPTION_SUFFIX_RE, sql[: sqltext.code_end(sql)]
+        )
         if m:
             for pair in m.group("body").split(","):
                 k, _, v = pair.partition("=")
@@ -2448,52 +2343,19 @@ class Engine:
     _IDENT_RE = re.compile(r"'(\w+)'\s*$")
 
     def _rewrite_lookup_calls(self, sql: str) -> str:
-        """Replace every top-level LOOKUP(...) call with its subquery form.
-
-        The scan is quote-aware for BOTH literal forms ('...' and "..." —
-        LOOKUP inside either is data, not a call) and word-boundary-checked
-        (MY_LOOKUP() is untouched).
-        """
-        out: list[str] = []
-        i, n = 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch in ("'", '"'):
-                j = self._skip_literal(sql, i)
-                out.append(sql[i:j])
-                i = j
-                continue
-            m = self._LOOKUP_RE.match(sql, i)
-            if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                args, end = self._scan_balanced(sql, m.end() - 1)
-                out.append(self._lookup_subquery(args))
-                i = end
-                continue
-            out.append(ch)
-            i += 1
-        return "".join(out)
-
-    @staticmethod
-    def _scan_balanced(sql: str, open_idx: int) -> tuple[str, int]:
-        """From '(' at open_idx: (inner content, index past ')').  Literal
-        spans ('...' and "...", escapes included) are opaque."""
-        depth, j, n = 0, open_idx, len(sql)
-        while j < n:
-            ch = sql[j]
-            if ch in ("'", '"'):
-                j = Engine._skip_literal(sql, j)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return sql[open_idx + 1 : j], j + 1
-            j += 1
-        raise ValueError("unbalanced parentheses in function call")
+        """Replace every LOOKUP(...) call outside literals and comments
+        with its subquery form (MY_LOOKUP() is untouched); calls nested
+        in a LOOKUP's arguments rewrite with their argument."""
+        out, pos = [], 0
+        for name, start, open_idx in sqltext.calls(sql):
+            if start >= pos and name.upper() == "LOOKUP":
+                args, end = sqltext.balanced(sql, open_idx)
+                out += [sql[pos:start], self._lookup_subquery(args)]
+                pos = end
+        return "".join(out) + sql[pos:]
 
     def _lookup_subquery(self, args_str: str) -> str:
-        parts = [p.strip() for p in self._split_top_level_commas(args_str)]
+        parts = [p.strip() for p in sqltext.split(args_str)]
         if len(parts) < 4 or len(parts) % 2 != 0:
             raise ValueError(
                 "LOOKUP takes ('dimTable','valueColumn', 'pkColumn', factExpr"
@@ -2555,45 +2417,6 @@ class Engine:
         r"^(\d+):(SECONDS|MINUTES|HOURS|DAYS)$", re.IGNORECASE
     )
 
-    @staticmethod
-    def _find_top_level_keyword(s: str, word: str, start: int = 0) -> int:
-        """Index of the first depth-0, unquoted ('...' or "..."),
-        word-boundary match of ``word`` in ``s`` at or after ``start``;
-        -1 if absent."""
-        depth, i, n, w = 0, start, len(s), len(word)
-        while i < n:
-            ch = s[i]
-            if ch in ("'", '"'):
-                i = Engine._skip_literal(s, i)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and s[i : i + w].upper() == word.upper():
-                before_ok = i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")
-                after = s[i + w : i + w + 1]
-                after_ok = after == "" or not (after.isalnum() or after == "_")
-                if before_ok and after_ok:
-                    return i
-            i += 1
-        return -1
-
-    @staticmethod
-    def _search_unquoted(pattern: "re.Pattern", s: str) -> "re.Match | None":
-        """First match of ``pattern`` outside '...' / "..." literal spans."""
-        i, n = 0, len(s)
-        while i < n:
-            ch = s[i]
-            if ch in ("'", '"'):
-                i = Engine._skip_literal(s, i)
-                continue
-            m = pattern.match(s, i)
-            if m:
-                return m
-            i += 1
-        return None
-
     def _gapfill_time_bound(self, literal: str, out_fmt: str):
         """A GAPFILL start/end literal -> a timestamp Column.  Pinot writes
         them in the declared output format: epoch numbers for ``EPOCH``
@@ -2638,7 +2461,7 @@ class Engine:
 
     def _try_query_gapfill(self, sql: str) -> DataFrame | None:
         """Detect and serve the Pinot SQL gapfill forms; None = not gapfill."""
-        m = self._search_unquoted(self._GAPFILL_RE, sql)
+        m = sqltext.search(self._GAPFILL_RE, sql)
         if m is None:
             return None
         import uuid
@@ -2658,7 +2481,7 @@ class Engine:
         while k >= 0 and sql[k].isspace():
             k -= 1
         if k >= 0 and sql[k] == "(":
-            inner, after = self._scan_balanced(sql, k)
+            inner, after = sqltext.balanced(sql, k)
             # splice back as a parenthesized SELECT so every enclosing
             # context stays valid SQL (FROM (...) t, WITH x AS (...), ...)
             outer = sql[:k] + f"(SELECT * FROM {view})" + sql[after:]
@@ -2667,25 +2490,26 @@ class Engine:
 
         # -- parse: SELECT GAPFILL(args) AS alias [, items] FROM src
         #           [WHERE cond] [ORDER BY ... / LIMIT ...]
-        gm = self._search_unquoted(self._GAPFILL_RE, inner)
-        args_str, pos = self._scan_balanced(inner, gm.end() - 1)
+        gm = sqltext.search(self._GAPFILL_RE, inner)
+        args_str, pos = sqltext.balanced(inner, gm.end() - 1)
         am = re.match(r"\s*AS\s+(\w+)\s*", inner[pos:], re.IGNORECASE)
         if not am:
             raise ValueError("GAPFILL(...) must be aliased: GAPFILL(...) AS <name>")
         alias = am.group(1)
         pos += am.end()
-        from_idx = self._find_top_level_keyword(inner, "FROM", pos)
-        if from_idx < 0:
+        fm = sqltext.search("FROM", inner, pos, top_level=True)
+        if fm is None:
             raise ValueError("GAPFILL select: missing FROM clause")
+        from_idx = fm.start()
         rest = inner[pos:from_idx].strip()
         items = (
-            [s.strip() for s in self._split_top_level_commas(rest.lstrip(","))]
+            [s.strip() for s in sqltext.split(rest.lstrip(","))]
             if rest.lstrip(",").strip()
             else []
         )
         src = inner[from_idx + 4 :].strip()
         if src.startswith("("):
-            sub, sub_end = self._scan_balanced(src, 0)
+            sub, sub_end = sqltext.balanced(src, 0)
             src_df = self.spark.sql(sub)
             tail = src[sub_end:]
         else:
@@ -2698,12 +2522,12 @@ class Engine:
         # semantics); ORDER BY / LIMIT apply to the FILLED result.  Anything
         # else trailing the source is an error, never silently dropped.
         where, post = None, ""
-        w_idx = self._find_top_level_keyword(tail, "WHERE")
-        post_idx = -1
-        for kw in ("ORDER", "LIMIT"):
-            p = self._find_top_level_keyword(tail, kw)
-            if p >= 0 and (post_idx < 0 or p < post_idx):
-                post_idx = p
+        wm = sqltext.search("WHERE", tail, top_level=True)
+        w_idx = -1 if wm is None else wm.start()
+        pm = sqltext.search(
+            sqltext.keyword("ORDER", "LIMIT"), tail, top_level=True
+        )
+        post_idx = -1 if pm is None else pm.start()
         if w_idx >= 0:
             cond_end = post_idx if post_idx > w_idx else len(tail)
             where = tail[w_idx + 5 : cond_end].strip()
@@ -2720,7 +2544,7 @@ class Engine:
             src_df = src_df.where(where)
 
         # -- GAPFILL arguments
-        args = [a.strip() for a in self._split_top_level_commas(args_str)]
+        args = [a.strip() for a in sqltext.split(args_str)]
         if len(args) < 5:
             raise ValueError(
                 "GAPFILL takes (timeExpr, 'outputFormat', 'start', 'end', "
@@ -2742,7 +2566,7 @@ class Engine:
             fm = re.match(r"FILL\s*\(", extra, re.IGNORECASE)
             tm2 = re.match(r"TIMESERIESON\s*\(", extra, re.IGNORECASE)
             if fm:
-                body, _ = self._scan_balanced(extra, fm.end() - 1)
+                body, _ = sqltext.balanced(extra, fm.end() - 1)
                 col, _, mode = (p.strip() for p in body.partition(","))
                 mode = mode.strip().strip("'").upper()
                 if mode == "FILL_PREVIOUS_VALUE":
@@ -2754,7 +2578,7 @@ class Engine:
                 else:
                     raise ValueError(f"GAPFILL FILL mode {mode!r} unknown")
             elif tm2:
-                body, _ = self._scan_balanced(extra, tm2.end() - 1)
+                body, _ = sqltext.balanced(extra, tm2.end() - 1)
                 group_cols = [
                     d.strip() for d in body.split(",") if d.strip()
                 ]
@@ -3033,7 +2857,7 @@ class Engine:
             return gf
         if has_lookup:
             return self._sql_without_union_pushdown(sql)
-        if self._search_unquoted(self._VIRTUAL_COL_RE, sql):
+        if sqltext.search(self._VIRTUAL_COL_RE, sql):
             return self._query_virtual_columns(sql)
         vm = self._VECSIM_RE.match(sql)
         if vm:
@@ -3075,7 +2899,7 @@ class Engine:
                 declared[c.lower()] = c
         if not declared:
             return sql
-        spans = self._literal_spans(sql)
+        spans = sqltext.spans(sql)
 
         def repl(m: "re.Match") -> str:
             if any(s <= m.start() < e for s, e in spans):
@@ -3095,12 +2919,13 @@ class Engine:
         (Pinot's standard way to audit what upsert resolution hides).
 
         FROM/JOIN-position references to a pure-realtime upsert/dedup table
-        rewrite to its ``<name>_raw`` view; the rewrite is literal-span
-        aware, gated to SELECT/WITH statements, and must analyze cleanly or
-        the original SQL stands (same fallback contract as the TIMESTAMP
-        index rewrite).  Hybrid tables are deliberately NOT rewritten: their
-        view is the offline/realtime boundary merge, and skipping resolution
-        there would require a raw-side merge no Pinot option defines.
+        rewrite to its ``<name>_raw`` view; the rewrite skips literals and
+        comments, is gated to SELECT/WITH statements, and must analyze
+        cleanly or the original SQL stands (same fallback contract as the
+        TIMESTAMP index rewrite).  Hybrid tables are deliberately NOT
+        rewritten: their view is the offline/realtime boundary merge, and
+        skipping resolution there would require a raw-side merge no Pinot
+        option defines.
         """
         targets = {
             n.lower(): f"{n}_raw"
@@ -3110,6 +2935,14 @@ class Engine:
             and n in self.pipelines
         }
         return self._rewrite_table_refs(sql, targets)
+
+    # a WITH-prefixed COMMAND (CTE + INSERT/CREATE/...) would pass the
+    # SELECT/WITH gate of the text rewrites and their analysis probe would
+    # EXECUTE it; a command keyword anywhere in code stops the rewrite
+    _COMMAND_RE = sqltext.keyword(
+        "INSERT", "CREATE", "REPLACE", "DELETE", "UPDATE", "MERGE", "DROP",
+        "ALTER",
+    )
 
     # keywords that can follow a FROM/JOIN table reference and must never be
     # mistaken for its alias by the table-ref rewrite
@@ -3165,7 +2998,7 @@ class Engine:
         re.IGNORECASE,
     )
 
-    def _iter_table_refs(self, sql: str, spans) -> list:
+    def _iter_table_refs(self, sql: str) -> list:
         """Every FROM/JOIN table reference AND the comma-continued
         references of FROM lists, as ``(start, end, head, tname,
         alias_text, aname)`` tuples in statement order.  ``head`` is the
@@ -3173,12 +3006,10 @@ class Engine:
         ``, ``).  The alias group's keyword lookahead guarantees a
         clause keyword is never consumed as an alias, so ``FROM a JOIN
         b`` yields both refs and a FROM list's continuation scan stops
-        at the first non-comma token.  References inside string literals
-        are skipped."""
+        at the first non-comma token.  References inside literals or
+        comments are skipped."""
         refs = []
-        for m in self._TABLE_REF_RE.finditer(sql):
-            if any(s <= m.start() < e for s, e in spans):
-                continue
+        for m in sqltext.finditer(self._TABLE_REF_RE, sql):
             refs.append(
                 (
                     m.start(),
@@ -3193,10 +3024,10 @@ class Engine:
                 continue  # JOIN never heads a comma list
             pos = m.end()
             while True:
+                # a match starting in code is words and spaces only, so
+                # it ends in code too: the continuation starts in code
                 cm = self._TABLE_REF_CONT_RE.match(sql, pos)
-                if cm is None or any(
-                    s <= cm.start() < e for s, e in spans
-                ):
+                if cm is None:
                     break
                 refs.append(
                     (
@@ -3221,12 +3052,12 @@ class Engine:
         replacements that must carry the alias themselves (inline
         subselects).  Contract, identical for every user: gated to
         SELECT/WITH statements; a command keyword anywhere outside a
-        literal aborts (a WITH-prefixed INSERT must never ride through the
-        analysis probe); references inside string literals never rewrite;
-        a user alias after the table name is preserved (``FROM t x`` — the
-        alias regex refuses clause keywords so ``FROM t WHERE`` cannot
-        misparse); and the rewritten statement must ANALYZE cleanly or the
-        original stands.
+        literal or comment aborts (a WITH-prefixed INSERT must never ride
+        through the analysis probe); references inside literals or
+        comments never rewrite; a user alias after the table name is
+        preserved (``FROM t x`` — the alias regex refuses clause keywords
+        so ``FROM t WHERE`` cannot misparse); and the rewritten statement
+        must ANALYZE cleanly or the original stands.
         """
         if not targets:
             return sql
@@ -3236,14 +3067,8 @@ class Engine:
         targets = {k: v for k, v in targets.items() if k in low}
         if not targets:
             return sql
-        spans = self._literal_spans(sql)
-        for m in re.finditer(
-            r"\b(INSERT|CREATE|REPLACE|DELETE|UPDATE|MERGE|DROP|ALTER)\b",
-            sql,
-            re.IGNORECASE,
-        ):
-            if not any(s <= m.start() < e for s, e in spans):
-                return sql
+        if sqltext.search(self._COMMAND_RE, sql):
+            return sql
 
         def ref_repl(
             head: str, tname: str, alias_text: str, aname: str
@@ -3266,7 +3091,7 @@ class Engine:
 
         edits = []
         for start, end, head, tname, alias_text, aname in (
-            self._iter_table_refs(sql, spans)
+            self._iter_table_refs(sql)
         ):
             r = ref_repl(head, tname, alias_text, aname)
             if r is not None:
@@ -3323,7 +3148,7 @@ class Engine:
         views, which serve the same storage — rewrite to an inline
         subselect aliased to the reference (user aliases preserved); no
         temp views, so nothing leaks and concurrent broker threads never
-        race a view name.  Guards (literal spans, command keywords,
+        race a view name.  Guards (literals and comments, command keywords,
         analyze-or-fall-back) live in :meth:`_rewrite_table_refs`, shared
         with the skipUpsert rewrite.  Engine default is null-native
         (inverse of Pinot's option default, documented in the config
@@ -3446,22 +3271,6 @@ class Engine:
             out.pop(key, None)
         return out
 
-    @staticmethod
-    def _literal_spans(sql: str) -> list[tuple[int, int]]:
-        """[start, end) spans of every quoted literal, via _skip_literal —
-        the same scanner the LOOKUP rewriter trusts (both quote forms,
-        backslash and doubled-quote escapes)."""
-        spans: list[tuple[int, int]] = []
-        i, n = 0, len(sql)
-        while i < n:
-            if sql[i] in ("'", '"'):
-                j = Engine._skip_literal(sql, i)
-                spans.append((i, j))
-                i = j
-            else:
-                i += 1
-        return spans
-
     def _apply_ts_index_rewrite(self, sql: str) -> str:
         """Pinot TIMESTAMP index query rewrite **[P1.2]**: replace
         ``dateTrunc('GRAN', col)`` / ``date_trunc('GRAN', col)`` over a
@@ -3481,25 +3290,14 @@ class Engine:
         mapping = self._timestamp_index_rewrites()
         if not mapping:
             return sql
-        spans = self._literal_spans(sql)
-        # a WITH-prefixed COMMAND (CTE + INSERT/CREATE/...) would pass the
-        # prefix gate and the probe would EXECUTE it; reject when a command
-        # keyword appears outside every string literal
-        for m in re.finditer(
-            r"\b(INSERT|CREATE|REPLACE|DELETE|UPDATE|MERGE|DROP|ALTER)\b",
-            sql,
-            re.IGNORECASE,
-        ):
-            if not any(s <= m.start() < e for s, e in spans):
-                return sql
+        if sqltext.search(self._COMMAND_RE, sql):
+            return sql
         pieces: list[str] = []
         last = 0
-        for m in self._DATETRUNC_RE.finditer(sql):
-            # the granularity literal inside the call is expected; what must
-            # not match is a call-shaped substring inside an OUTER literal —
-            # i.e. a match that STARTS inside any quoted span
-            if any(s <= m.start() < e for s, e in spans):
-                continue
+        # the granularity literal inside the call is expected; what must
+        # not match is a call-shaped substring inside an outer literal or
+        # a comment, i.e. a match that STARTS there
+        for m in sqltext.finditer(self._DATETRUNC_RE, sql):
             derived = mapping.get((m.group(2).lower(), m.group(1).upper()))
             if derived is None:
                 continue
@@ -3621,7 +3419,9 @@ class Engine:
         try:
             if "numGroupsLimit" in _opts:
                 gl = int(_opts["numGroupsLimit"])
-                if gl > 0 and self._has_top_level_group_by(sql):
+                if gl > 0 and sqltext.search(
+                    "GROUP BY", sql, top_level=True
+                ):
                     groups_limit = gl
         except (TypeError, ValueError):
             groups_limit = None

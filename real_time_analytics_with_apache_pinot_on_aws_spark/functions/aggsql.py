@@ -12,9 +12,10 @@ dashboard actually sends to ``POST /query/sql`` — ``DISTINCTCOUNTHLL``,
 ``FIRSTWITHTIME``, ``PERCENTILE(x, 90)``, the ``*MV`` family — cannot be
 served the way the scalar surface (functions/sqlfns.py) is.  This module
 rewrites those call sites into the equivalent Spark aggregate
-EXPRESSIONS at the SQL-text level: quote-aware, balanced-paren argument
-extraction, word-boundary matched, case-insensitive, nested-subquery
-safe (arguments are rewritten recursively).  ``Engine.query`` applies it
+EXPRESSIONS at the SQL-text level: literal- and comment-aware (one
+lexer, functions/sqltext.py), balanced-paren argument extraction,
+word-boundary matched, case-insensitive, nested-subquery safe
+(arguments are rewritten recursively).  ``Engine.query`` applies it
 to every statement, so the broker accepts Pinot dashboard SQL verbatim.
 
 Every target is a built-in Spark aggregate (codegen'd, partial-merge) —
@@ -51,6 +52,8 @@ from __future__ import annotations
 
 import contextvars
 import re
+
+from . import sqltext
 
 # the keep-native predicate active for the CURRENT rewrite pass — set by
 # rewrite_pinot_aggregates so builders that rewrite NESTED SQL text
@@ -251,12 +254,12 @@ def _in_subquery(name: str):
             )
         # find the close paren of ID_SET(...), quote/paren aware
         try:
-            id_args_text, i = _scan_balanced(inner, m.end() - 1)
+            id_args_text, i = sqltext.balanced(inner, m.end() - 1)
         except ValueError:
             raise ValueError(
                 f"{name}: unbalanced ID_SET( in subquery"
             ) from None
-        id_args = _split_top_level_commas(id_args_text)
+        id_args = sqltext.split(id_args_text)
         if not id_args[0].strip():
             raise ValueError(
                 f"{name}: ID_SET needs a column argument, got ID_SET()"
@@ -299,13 +302,13 @@ _UNIT_MS = {
 
 
 def _unquote_literal(a: str, what: str) -> str:
-    a = a.strip()
-    if len(a) >= 2 and a[0] == "'" and a[-1] == "'":
-        return a[1:-1].replace("''", "'")
-    raise ValueError(
-        f"{what} must be a quoted string literal (Pinot queries always "
-        f"write it literally), got: {a!r}"
-    )
+    v = sqltext.string_value(a)
+    if v is None:
+        raise ValueError(
+            f"{what} must be a quoted string literal (Pinot queries "
+            f"always write it literally), got: {a.strip()!r}"
+        )
+    return v
 
 
 def _dtc_fmt(fmt: str, what: str) -> tuple:
@@ -451,12 +454,7 @@ def _parse_step_duration_args(args: list[str]) -> tuple:
     # spelled 'durationFunctions=...', so position-agnostic is safe
     rest, fns, spaced = [], None, False
     for a in args[3:]:
-        s = a.strip()
-        lit = (
-            s[1:-1].replace("''", "'")
-            if len(s) >= 2 and s[0] == "'" and s[-1] == "'"
-            else None
-        )
+        lit = sqltext.string_value(a)
         m = _DURFNS_RE.match(lit) if lit is not None else None
         if m is None:
             if lit is not None and _DURFNS_SPACED_RE.match(lit):
@@ -712,7 +710,7 @@ def _parse_funnelcount_clauses(args: list[str]) -> tuple:
                 f"FUNNELCOUNT clause must be STEPS(...)/CORRELATE_BY(...)"
                 f"/SETTINGS(...), got: {a.strip()!r}"
             )
-        inner, end = _scan_balanced(a, m.end() - 1)
+        inner, end = sqltext.balanced(a, m.end() - 1)
         name = m.group(1).upper()
         if name not in ("STEPS", "CORRELATE_BY", "SETTINGS"):
             raise ValueError(f"FUNNELCOUNT: unknown clause {name}")
@@ -728,7 +726,7 @@ def _parse_funnelcount_clauses(args: list[str]) -> tuple:
         raise ValueError(
             "FUNNELCOUNT requires both STEPS(...) and CORRELATE_BY(...)"
         )
-    steps = [s.strip() for s in _split_top_level_commas(clauses["STEPS"])]
+    steps = [s.strip() for s in sqltext.split(clauses["STEPS"])]
     if not steps or not all(steps):
         raise ValueError("FUNNELCOUNT: STEPS(...) needs >= 1 predicate")
     corr = clauses["CORRELATE_BY"].strip()
@@ -893,11 +891,8 @@ def _arrayagg(args: list[str]) -> str:
         # bare true/false, or a properly quoted 'true'/'false' literal —
         # NOT a blanket quote-strip, which would silently accept
         # mismatched/malformed quotes (round-8 review)
-        lit = (
-            _unquote_literal(raw, "ARRAYAGG isDistinct")
-            if raw.startswith("'")
-            else raw
-        ).lower()
+        lit = sqltext.string_value(raw)
+        lit = (raw if lit is None else lit).lower()
         if lit not in ("true", "false"):
             raise ValueError(
                 "ARRAYAGG isDistinct must be a true/false literal "
@@ -1478,82 +1473,6 @@ _REWRITES.update(
 )
 
 
-def _skip_literal(sql: str, i: int) -> int:
-    """Index past the string literal starting at sql[i] (quote char);
-    handles doubled-quote AND backslash escapes (Spark's default literal
-    syntax — Engine._skip_literal agrees; round-6 review: ignoring \\'
-    let the rewrite corrupt literal content)."""
-    q = sql[i]
-    j = i + 1
-    n = len(sql)
-    while j < n:
-        if sql[j] == "\\" and j + 1 < n:
-            j += 2
-            continue
-        if sql[j] == q:
-            if j + 1 < n and sql[j + 1] == q:  # '' escape
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
-def _skip_comment(sql: str, i: int):
-    """Index past the SQL comment starting at ``sql[i]`` (``--`` to end
-    of line; ``/* */`` span, unterminated runs to EOF like Spark's
-    lexer), or ``None`` when no comment starts there.  Round-10 (r9
-    ADVICE): the CTE reference scanner treats comment content as opaque
-    — a ``FROM name`` inside a comment is neither a reference site nor
-    a count bump, so commented statements keep their bounded routes."""
-    if sql.startswith("--", i):
-        j = sql.find("\n", i + 2)
-        return len(sql) if j < 0 else j + 1
-    if sql.startswith("/*", i):
-        j = sql.find("*/", i + 2)
-        return len(sql) if j < 0 else j + 2
-    return None
-
-
-def _scan_balanced(sql: str, open_idx: int) -> tuple[str, int]:
-    """From '(' at open_idx: (inner content, index past ')'). Literals
-    are opaque."""
-    depth, j, n = 0, open_idx, len(sql)
-    while j < n:
-        ch = sql[j]
-        if ch in ("'", '"'):
-            j = _skip_literal(sql, j)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return sql[open_idx + 1 : j], j + 1
-        j += 1
-    raise ValueError("unbalanced parentheses in aggregate call")
-
-
-def _split_top_level_commas(s: str) -> list[str]:
-    parts, depth, start = [], 0, 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(s, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-        i += 1
-    parts.append(s[start:])
-    return [p for p in parts]
-
-
 # Spark builtins whose underscore-stripped form collides with a table
 # entry — they keep their native resolution (audited against the Spark
 # 4.1 catalog: the stats family plus BOOL_AND/BOOL_OR, whose stripped
@@ -1576,7 +1495,7 @@ def _is_cte_definition(sql: str, open_idx: int) -> bool:
     funnel_count (step, cnt) AS ...``) was treated as a call site
     (round-8 review — pre-existing in the old matcher too)."""
     try:
-        _, after = _scan_balanced(sql, open_idx)
+        _, after = sqltext.balanced(sql, open_idx)
     except ValueError:
         return False
     return re.match(r"\s*AS\s*\(", sql[after:], re.IGNORECASE) is not None
@@ -1599,40 +1518,20 @@ def canonicalize_pinot_spellings(sql: str, keep_native=None) -> str:
     (c) accepted by ``keep_native`` — the engine passes a live-catalog
     predicate so a runtime-registered UDF named e.g. ``fast_hll`` keeps
     resolving to the user's function, never silently shadowed."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            j = _skip_literal(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        m = _IDENT_CALL_RE.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            name = m.group(0)
-            u = name.upper()
-            k = m.end()
-            while k < n and sql[k] in " \t\r\n":
-                k += 1
-            if (
-                "_" in u
-                and k < n
-                and sql[k] == "("
-                and u not in _REWRITES
-                and u.replace("_", "") in _REWRITES
-                and u not in _UNDERSCORE_KEEP_NATIVE
-                and not _is_cte_definition(sql, k)
-                and not (keep_native is not None and keep_native(name))
-            ):
-                out.append(u.replace("_", ""))
-            else:
-                out.append(name)
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    out, pos = [], 0
+    for name, start, open_idx in sqltext.calls(sql):
+        u = name.upper()
+        if (
+            "_" in u
+            and u not in _REWRITES
+            and u.replace("_", "") in _REWRITES
+            and u not in _UNDERSCORE_KEEP_NATIVE
+            and not _is_cte_definition(sql, open_idx)
+            and not (keep_native is not None and keep_native(name))
+        ):
+            out += [sql[pos:start], u.replace("_", "")]
+            pos = start + len(name)
+    return "".join(out) + sql[pos:]
 
 
 def rewrite_pinot_aggregates(sql: str, keep_native=None) -> str:
@@ -1660,56 +1559,36 @@ def rewrite_pinot_aggregates(sql: str, keep_native=None) -> str:
 
 def _rewrite_pinot_aggregates_inner(sql: str, keep_native) -> str:
     sql = canonicalize_pinot_spellings(sql, keep_native)
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            j = _skip_literal(sql, i)
-            out.append(sql[i:j])
-            i = j
+    out, pos = [], 0
+    for name, start, open_idx in sqltext.calls(sql):
+        u = name.upper()
+        build = _REWRITES.get(u)
+        if (
+            start < pos  # inside a call already rewritten with its args
+            or build is None
+            or _is_cte_definition(sql, open_idx)
+        ):
             continue
-        m = _IDENT_CALL_RE.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            name = m.group(0)
-            u = name.upper()
-            build = _REWRITES.get(u)
-            # require an immediately following '(' (whitespace allowed)
-            k = m.end()
-            while k < n and sql[k] in " \t\r\n":
-                k += 1
-            if (
-                build is not None
-                and k < n
-                and sql[k] == "("
-                and not _is_cte_definition(sql, k)
-            ):
-                inner, end = _scan_balanced(sql, k)
-                args = (
-                    []
-                    if not inner.strip()
-                    else [
-                        rewrite_pinot_aggregates(a, keep_native).strip()
-                        for a in _split_top_level_commas(inner)
-                    ]
-                )
-                try:
-                    if not args and u not in _ZERO_ARG_OK:
-                        raise IndexError  # zero-arg: same loud path
-                    out.append(build(args))
-                except IndexError:
-                    raise ValueError(
-                        f"{name} called with {len(args)} argument(s) — "
-                        "unsupported arity for this Pinot aggregate"
-                    ) from None
-                i = end
-                continue
-            out.append(name)
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+        inner, end = sqltext.balanced(sql, open_idx)
+        args = (
+            []
+            if not inner.strip()
+            else [
+                rewrite_pinot_aggregates(a, keep_native).strip()
+                for a in sqltext.split(inner)
+            ]
+        )
+        try:
+            if not args and u not in _ZERO_ARG_OK:
+                raise IndexError  # zero-arg: same loud path
+            out += [sql[pos:start], build(args)]
+        except IndexError:
+            raise ValueError(
+                f"{name} called with {len(args)} argument(s) — "
+                "unsupported arity for this Pinot aggregate"
+            ) from None
+        pos = end
+    return "".join(out) + sql[pos:]
 
 
 # ---------------------------------------------------------------------------
@@ -1879,11 +1758,10 @@ _MV_GATE_RE = re.compile(
     re.IGNORECASE,
 )
 
-_MV_STMT_TOPKW_RE = re.compile(
-    r"\b(FROM|WHERE|GROUP|HAVING|ORDER|LIMIT|JOIN|UNION|EXCEPT|"
-    r"INTERSECT|MINUS|LATERAL|VALUES|SELECT|DISTRIBUTE|CLUSTER|SORT|"
-    r"WINDOW|QUALIFY|TABLESAMPLE|PIVOT|UNPIVOT|OFFSET)\b",
-    re.IGNORECASE,
+_MV_STMT_TOPKW_RE = sqltext.keyword(
+    *"""FROM WHERE GROUP HAVING ORDER LIMIT JOIN UNION EXCEPT INTERSECT
+    MINUS LATERAL VALUES SELECT DISTRIBUTE CLUSTER SORT WINDOW QUALIFY
+    TABLESAMPLE PIVOT UNPIVOT OFFSET""".split()
 )
 
 _MV_ANYDEPTH_BAIL_RE = re.compile(
@@ -1899,8 +1777,8 @@ _MV_ANYDEPTH_BAIL_RE = re.compile(
 # to keep the fold, whose evaluation order the user already observes.
 # the lookbehind word-boundaries the match on the LEFT (VERDICT r9
 # hygiene task: an identifier ENDING in a listed name — `my$rand(` —
-# must not trip the bail; _search_unquoted_re already rejects alnum/_
-# predecessors, the lookbehind closes the $ case at the regex itself).
+# must not trip the bail; the lookbehind refuses alnum, _ and $
+# predecessors).
 # A '.'-qualified spelling (`builtin.rand(`) still matches — bailing on
 # a qualified nondeterministic call is the safe direction.
 _NONDETERMINISTIC_FN_RE = re.compile(
@@ -1928,7 +1806,7 @@ def _parse_trailing_filter(sql: str, end: int):
     if fm is None:
         return None, end
     try:
-        finner, fend = _scan_balanced(sql, end + fm.end() - 1)
+        finner, fend = sqltext.balanced(sql, end + fm.end() - 1)
     except ValueError:
         return None
     wm = re.match(r"\s*WHERE\b", finner, re.IGNORECASE)
@@ -1981,124 +1859,32 @@ _RESERVED_NON_CALLS = frozenset(
 
 def _scan_call_sites(sql: str) -> list:
     """(name, start, open_paren_idx, inner, end_past_close) for every
-    ``ident(`` site at EVERY nesting depth; literal content is opaque.
-    Reserved non-call words (``_RESERVED_NON_CALLS``) are skipped."""
-    sites = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(sql, i)
-            continue
-        m = _IDENT_CALL_RE.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            k = m.end()
-            while k < n and sql[k] in " \t\r\n":
-                k += 1
-            if (
-                k < n
-                and sql[k] == "("
-                and m.group(0).upper() not in _RESERVED_NON_CALLS
-            ):
-                inner, end = _scan_balanced(sql, k)
-                sites.append((m.group(0), i, k, inner, end))
-            i = m.end()
-            continue
-        i += 1
-    return sites
+    ``ident(`` site at EVERY nesting depth; literal and comment content
+    is opaque.  Reserved non-call words (``_RESERVED_NON_CALLS``) are
+    skipped."""
+    return [
+        (name, start, open_idx, *sqltext.balanced(sql, open_idx))
+        for name, start, open_idx in sqltext.calls(sql)
+        if name.upper() not in _RESERVED_NON_CALLS
+    ]
 
 
 def _top_level_keywords(sql: str) -> list:
     """(KEYWORD_UPPER, start, end) for clause keywords at paren depth 0
-    outside literals."""
-    hits = []
-    depth, i, n = 0, 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(sql, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _MV_STMT_TOPKW_RE.match(sql, i)
-            # a '.' predecessor means a QUALIFIED IDENTIFIER part
-            # (`d.limit`, a keyword-named column), never a clause
-            # keyword — without this, the relation boundary truncated
-            # at the fake keyword and the routes spliced garbled SQL
-            # (post-review, confirmed against live Spark: `limit` is
-            # non-reserved and valid as a column name)
-            if m and (
-                i == 0
-                or not (sql[i - 1].isalnum() or sql[i - 1] in "_.")
-            ):
-                hits.append((m.group(0).upper(), i, m.end()))
-                i = m.end()
-                continue
-        i += 1
-    return hits
-
-
-def _search_unquoted_re(pattern: "re.Pattern", sql: str) -> bool:
-    i, n = 0, len(sql)
-    while i < n:
-        if sql[i] in ("'", '"'):
-            i = _skip_literal(sql, i)
-            continue
-        m = pattern.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            return True
-        i += 1
-    return False
-
-
-def _subquery_spans(sql: str) -> list:
-    """(start, end) spans of parenthesized subqueries — ``(`` groups whose
-    first token is SELECT — OUTERMOST only, literals opaque.  Scalar
-    subqueries, ``IN (SELECT ...)`` and ``EXISTS (SELECT ...)`` all take
-    this form; a derived table ``FROM (SELECT ...)`` does too, and since
-    the round-8 session the routes ADMIT that shape — its recorded span
-    is what scope-excludes the derived table's own call sites from the
-    outer duplication classification."""
-    spans = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(sql, i)
-            continue
-        if ch == "(":
-            j = i + 1
-            while j < n and sql[j] in " \t\r\n":
-                j += 1
-            if re.match(r"SELECT\b", sql[j:], re.IGNORECASE):
-                _, end = _scan_balanced(sql, i)
-                spans.append((i, end))
-                i = end
-                continue
-        i += 1
-    return spans
+    outside literals and comments."""
+    return [
+        (m.group(0).upper(), m.start(), m.end())
+        for m in sqltext.finditer(_MV_STMT_TOPKW_RE, sql, top_level=True)
+    ]
 
 
 def _all_selects_inside(sql: str, start: int, spans: list) -> bool:
     """True when every ``SELECT`` token at/after ``start`` (outside
-    literals) lies inside one of ``spans``."""
-    pat = re.compile(r"SELECT\b", re.IGNORECASE)
-    i, n = start, len(sql)
-    while i < n:
-        if sql[i] in ("'", '"'):
-            i = _skip_literal(sql, i)
-            continue
-        m = pat.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            if not any(s < i < e for s, e in spans):
-                return False
-            i = m.end()
-            continue
-        i += 1
-    return True
+    literals and comments) lies inside one of ``spans``."""
+    return all(
+        any(s < m.start() < e for s, e in spans)
+        for m in sqltext.finditer("SELECT", sql, start)
+    )
 
 
 _ROUTE_BAD_TOPKWS = (
@@ -2134,6 +1920,13 @@ _CTE_FROM_END_KWS = frozenset(
 )
 
 
+# one bracket, or one word not preceded by an identifier character, '.'
+# or '$' (a qualified or '$'-prefixed word is never a keyword or a ref)
+_CTE_TOKEN_RE = re.compile(
+    r"(?P<open>[(\[])|(?P<close>[)\]])|(?<![\w.$])[A-Za-z_]\w*"
+)
+
+
 def _cte_table_refs(text: str, name: str):
     """Scan ``text`` (literal and comment content opaque) for
     whole-word, unquoted occurrences of CTE ``name``.  Returns ``None``
@@ -2162,62 +1955,34 @@ def _cte_table_refs(text: str, name: str):
     comma after ``LATERAL VIEW ... AS a, b`` separates generator
     aliases, not relations); a comma-preceded occurrence anywhere else
     (select list, GROUP BY, ...) still bails the whole inline."""
-    pat = re.compile(re.escape(name) + r"\b", re.IGNORECASE)
     refs = []
-    # one flag per open paren group: True = the group's first token is
+    # one flag per open bracket group: True = the group's first token is
     # SELECT (a subquery — relation position exists inside it)
     group_is_select = []
     # parallel FROM-region flags; entry 0 is the top level
     in_from = [False]
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in ("'", '"'):
-            i = _skip_literal(text, i)
-            continue
-        c = _skip_comment(text, i)
-        if c is not None:
-            i = c
-            continue
-        if ch == "(":
-            j = i + 1
-            while j < n and text[j] in " \t\r\n":
-                j += 1
+    for m in sqltext.finditer(_CTE_TOKEN_RE, text):
+        word, i, end = m.group().upper(), m.start(), m.end()
+        if m.group("open"):
             group_is_select.append(
-                re.match(r"SELECT\b", text[j:], re.IGNORECASE)
+                re.match(r"\s*SELECT\b", text[end:], re.IGNORECASE)
                 is not None
             )
             in_from.append(False)
-            i += 1
             continue
-        if ch == ")":
+        if m.group("close"):
             if group_is_select:
                 group_is_select.pop()
             if len(in_from) > 1:
                 in_from.pop()
-            i += 1
             continue
-        boundary = not (
-            i > 0 and (text[i - 1].isalnum() or text[i - 1] in "_.$")
-        )
-        m = pat.match(text, i) if boundary else None
-        if m is None:
-            if boundary and (ch.isalpha() or ch == "_"):
-                j = i
-                while j < n and (text[j].isalnum() or text[j] == "_"):
-                    j += 1
-                w = text[i:j].upper()
-                if w == "FROM":
-                    in_from[-1] = True
-                elif w in _CTE_FROM_END_KWS:
-                    in_from[-1] = False
-                i = j
-                continue
-            i += 1
+        if word != name.upper():
+            if word == "FROM":
+                in_from[-1] = True
+            elif word in _CTE_FROM_END_KWS:
+                in_from[-1] = False
             continue
-        end = m.end()
-        if end < n and text[end] in ".(":
-            i = end
+        if text[end : end + 1] in (".", "("):
             continue
         # the previous word must be FROM or JOIN — or the previous
         # character a relation-separating comma inside a FROM region —
@@ -2247,7 +2012,6 @@ def _cte_table_refs(text: str, name: str):
             or am.group(2).upper() not in _CTE_ALIAS_STOP_KWS
         )
         refs.append((i, end, has_alias))
-        i = end
     return refs
 
 
@@ -2300,7 +2064,7 @@ def inline_route_ctes(sql: str):
         if am is None:
             return None  # `name (cols) AS (...)` renames: keep the fold
         try:
-            body, after = _scan_balanced(sql, pos + am.end() - 1)
+            body, after = sqltext.balanced(sql, pos + am.end() - 1)
         except ValueError:
             return None
         if not re.match(r"\s*SELECT\b", body, re.IGNORECASE):
@@ -2324,7 +2088,7 @@ def inline_route_ctes(sql: str):
         refs = _cte_table_refs(text, name)
         if refs is None or not refs:
             return None
-        if len(refs) > 1 and _search_unquoted_re(
+        if len(refs) > 1 and sqltext.search(
             _NONDETERMINISTIC_FN_RE, body
         ):
             return None  # per-site re-evaluation would draw twice: fold
@@ -2389,7 +2153,7 @@ def _chain_operand_end(
         ):
             return None
         try:
-            _, after = _scan_balanced(sql, start + m.end() - 1)
+            _, after = sqltext.balanced(sql, start + m.end() - 1)
         except ValueError:
             return None
         return after if after <= bound else None
@@ -2425,13 +2189,13 @@ def _parse_routable_statement(
         return None
     if re.match(r"\s*SELECT\s+DISTINCT\b", sql, re.IGNORECASE):
         return None
-    if _search_unquoted_re(_MV_ANYDEPTH_BAIL_RE, sql):
+    if sqltext.search(_MV_ANYDEPTH_BAIL_RE, sql):
         return None
     kws = _top_level_keywords(sql)
     names = [k[0] for k in kws]
     if names.count("SELECT") != 1:
         return None
-    subq_spans = _subquery_spans(sql) if allow_subqueries else []
+    subq_spans = sqltext.subquery_spans(sql) if allow_subqueries else []
     # every nested SELECT must sit inside an admitted subquery span; with
     # allow_subqueries=False that means NO nested SELECT at all
     if not _all_selects_inside(sql, kws[0][2], subq_spans):
@@ -2473,7 +2237,7 @@ def _parse_routable_statement(
             re.IGNORECASE,
         ) if op_end is not None else None
         if fm is None or len(
-            _split_top_level_commas(shape.from_text)
+            sqltext.split(shape.from_text)
         ) != 1:
             return None
         # cond-less CROSS/NATURAL flavors (round 11): the capture holds
@@ -2513,7 +2277,7 @@ def _parse_routable_statement(
                 re.IGNORECASE | re.DOTALL,
             ) if op_end is not None else None
             if sm is None or len(
-                _split_top_level_commas(join_text)
+                sqltext.split(join_text)
             ) != 1:
                 return None
             condless = (not final) and bool(sm.group("condless"))
@@ -2524,7 +2288,7 @@ def _parse_routable_statement(
                 # insertion point)
                 shape.insert_at = join_end + len(join_text.rstrip())
                 shape.rel_next = join_next  # ONE relation-end derivation
-    elif len(_split_top_level_commas(shape.from_text)) > 1:
+    elif len(sqltext.split(shape.from_text)) > 1:
         # a TOP-LEVEL COMMA LIST — the pre-ANSI implicit cross join
         # `FROM a, b WHERE a.k = b.k` (round 11, VERDICT r10 item 6,
         # upgraded from the documented boundary to an admission): every
@@ -2542,7 +2306,7 @@ def _parse_routable_statement(
         # chain branch above (`a, b JOIN c` nests the join under the
         # cross product — a precedence subtlety not worth modeling).
         pos = shape.from_end
-        for piece in _split_top_level_commas(shape.from_text):
+        for piece in sqltext.split(shape.from_text):
             bound = pos + len(piece)
             op_end = _chain_operand_end(
                 sql, pos, bound, allow_subqueries
@@ -2570,9 +2334,10 @@ def _parse_routable_statement(
         # apply to the group's CONTENT (select lists have commas); the
         # balanced scan finds the group's end and the residue may only
         # be an optional alias.  The group's first token must be SELECT
-        # — the shape _subquery_spans records — or the scope-exclusion
-        # invariant above would be FALSE for it ((VALUES ...) /
-        # parenthesized-join relations bail; post-review).
+        # — the shape sqltext.subquery_spans records — or the
+        # scope-exclusion invariant above would be FALSE for it
+        # ((VALUES ...) / parenthesized-join relations bail;
+        # post-review).
         if not allow_subqueries:
             return None
         if not re.match(
@@ -2583,7 +2348,7 @@ def _parse_routable_statement(
             len(shape.from_text) - len(shape.from_text.lstrip())
         )
         try:
-            _, after = _scan_balanced(sql, open_idx)
+            _, after = sqltext.balanced(sql, open_idx)
         except ValueError:
             return None
         am = re.fullmatch(
@@ -2632,7 +2397,7 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
     silent-inflation class before they were classified)."""
     if not _MV_GATE_RE.search(sql):
         return None
-    if _search_unquoted_re(_NONDETERMINISTIC_FN_RE, sql):
+    if sqltext.search(_NONDETERMINISTIC_FN_RE, sql):
         return None  # per-copy re-evaluation would skew sampling: fold
     # subqueries are allowed IF every nested SELECT sits inside a
     # parenthesized (SELECT ...) group (round 8 — scalar subqueries /
@@ -2687,7 +2452,7 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
     mv_parsed = []
     for name, st, op, inner, end in mv_sites:
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in sqltext.split(inner)]
             if inner.strip()
             else []
         )
@@ -2744,7 +2509,7 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
         edits.append((st, end, repl))
     for name, st, op, inner, end in wrap_sites:
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in sqltext.split(inner)]
             if inner.strip()
             else []
         )
@@ -2904,7 +2669,7 @@ def _theta_set_ast(e: str, nflags: int):
             f"SET_INTERSECT / SET_DIFF(...), got: {e!r}"
         )
     op = m.group(1).upper()
-    parts = _split_top_level_commas(m.group(2))
+    parts = sqltext.split(m.group(2))
     parts = [p for p in parts if p.strip()]
     if op == "SET_DIFF" and len(parts) != 2:
         raise ValueError("SET_DIFF takes exactly 2 set arguments")
@@ -2990,7 +2755,7 @@ def _parse_route_clauses(sql: str, shape, guard: str = "__rg"):
         if gm is None:
             return None
         base = group_sp[1] + gm.end()
-        parts = _split_top_level_commas(gtext[gm.end():])
+        parts = sqltext.split(gtext[gm.end():])
         sel_items = None  # lazily split for ordinal resolution
         off = 0
         k = 0
@@ -3014,7 +2779,7 @@ def _parse_route_clauses(sql: str, shape, guard: str = "__rg"):
                 # ending in an identifier, so their whole text stays and
                 # the probe folds any mis-read.
                 if sel_items is None:
-                    sel_items = _split_top_level_commas(
+                    sel_items = sqltext.split(
                         sql[kws[0][2] : from_sp[0]]
                     )
                 idx = int(t)
@@ -3036,7 +2801,7 @@ def _parse_route_clauses(sql: str, shape, guard: str = "__rg"):
                 re.search(r"\bSELECT\b", t, re.IGNORECASE)
                 or _MV_AGG_IN_ARG_RE.search(t)  # group by aggregate:
                 or guard in t                   # the original's error
-                or t[0] in "'\""
+                or sqltext.skip(t, 0) > 0  # a literal or comment
             ):
                 return None
             alias = f"{guard}g{k}"
@@ -3093,10 +2858,9 @@ def _bind_group_expr_edits(
     hence every word operator joins the DIV exclusion, low-precedence
     AND/OR/NOT that bind INTO the match and comparison keywords
     IN/IS/LIKE/BETWEEN... whose left operand a boolean item's tail
-    could be mistaken for, e.g. ``a OR b IN (...)``).  Comments are
-    opaque to the scan exactly like _cte_table_refs (round-11 ADVICE:
-    an unbalanced quote inside ``--``/``/* */`` desynced
-    _skip_literal).  Matching is exact-byte with identifier-boundary checks
+    could be mistaken for, e.g. ``a OR b IN (...)``).  Literal and
+    comment content is opaque (functions/sqltext.py).  Matching is
+    exact-byte with identifier-boundary checks
     — any occurrence this skips or misses stays an unbound raw
     reference and the analysis probe sends the statement to the
     fallback (the original's answer OR its loud error), never a silent
@@ -3118,7 +2882,7 @@ def _bind_group_expr_edits(
     # would serve an answer where an ambiguous original errors loudly.
     sel_spans = []
     pos = shape.kws[0][2]
-    for item in _split_top_level_commas(sql[pos : from_sp[0]]):
+    for item in sqltext.split(sql[pos : from_sp[0]]):
         sel_spans.append(
             (
                 pos + (len(item) - len(item.lstrip())),
@@ -3166,42 +2930,39 @@ def _bind_group_expr_edits(
         )
         if site:  # ordinal items keep their clause text verbatim
             edits.append((site[0], site[1], alias))
+        # every occurrence, overlapping ones included, that starts in
+        # code: comment content is opaque too, so an unbalanced quote
+        # inside a comment cannot desync the scan
+        occurrence = re.compile(f"(?=({re.escape(text)}))")
         for rs, rend in regions:
-            i = rs
-            while i < rend:
-                c = _skip_comment(sql, i)
-                if c is not None:  # comment content is opaque — and an
-                    i = c          # unbalanced quote inside one must
-                    continue       # not desync the literal skipper
-                if sql.startswith(text, i) and i + len(text) <= rend:
-                    pre = sql[i - 1] if i > 0 else ""
-                    nxt = i + len(text)
-                    post = sql[nxt] if nxt < len(sql) else ""
-                    # NB: `"" in "_$"` is True (empty substring) — the
-                    # boundary checks must treat an empty neighbor as
-                    # a boundary, hence the explicit truthiness guard
-                    if (
-                        not (pre and (pre.isalnum() or pre in "_$."))
-                        and not (post and (post.isalnum() or post in "_$"))
-                        and not skipped(i, nxt)
-                        and standalone(i - 1, forward=False)
-                        and standalone(nxt, forward=True)
-                    ):
-                        edits.append(
-                            (
-                                i,
-                                nxt,
-                                f"{alias} AS {out_name}"
-                                if out_name and (i, nxt) in sel_spans
-                                else alias,
-                            )
+            resume = rs
+            for m in sqltext.finditer(occurrence, sql, rs):
+                i, nxt = m.span(1)
+                if nxt > rend:
+                    break
+                pre = sql[i - 1] if i > 0 else ""
+                post = sql[nxt] if nxt < len(sql) else ""
+                # NB: `"" in "_$"` is True (empty substring) — the
+                # boundary checks must treat an empty neighbor as
+                # a boundary, hence the explicit truthiness guard
+                if (
+                    i >= resume
+                    and not (pre and (pre.isalnum() or pre in "_$."))
+                    and not (post and (post.isalnum() or post in "_$"))
+                    and not skipped(i, nxt)
+                    and standalone(i - 1, forward=False)
+                    and standalone(nxt, forward=True)
+                ):
+                    edits.append(
+                        (
+                            i,
+                            nxt,
+                            f"{alias} AS {out_name}"
+                            if out_name and (i, nxt) in sel_spans
+                            else alias,
                         )
-                        i = nxt
-                        continue
-                if sql[i] in ("'", '"'):
-                    i = _skip_literal(sql, i)
-                    continue
-                i += 1
+                    )
+                    resume = nxt
 
 
 def _collect_decomposable_co_sites(
@@ -3258,7 +3019,7 @@ def _collect_decomposable_co_sites(
             pred, end = parsed_f  # end swallows the clause when present
             if re.match(r"\s*DISTINCT\b", inner, re.IGNORECASE):
                 return None
-            nargs = len(_split_top_level_commas(inner))
+            nargs = len(sqltext.split(inner))
             if u == "COUNT":
                 if nargs != 1 and inner.strip() != "*" and (
                     not count_multiarg_ok or pred is not None
@@ -3442,7 +3203,7 @@ def rewrite_keyed_agg_statement(sql: str, is_aggregate=None):
     for name, st, op, inner, end, fpred in target_sites:
         u = name.upper()
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in sqltext.split(inner)]
             if inner.strip()
             else []
         )
@@ -3728,7 +3489,7 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
     for name, st, end, inner, pred in targets:
         kind = name.upper()[6:]  # MAXSTEP / MATCHSTEP / STEPDURATIONSTATS
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in sqltext.split(inner)]
             if inner.strip()
             else []
         )
@@ -3922,7 +3683,7 @@ def rewrite_sumarray_statement(sql: str, is_aggregate=None):
     unsupported (section comment above has the full contract)."""
     if not _SUMARRAY_GATE_RE.search(sql):
         return None
-    if _search_unquoted_re(_NONDETERMINISTIC_FN_RE, sql):
+    if sqltext.search(_NONDETERMINISTIC_FN_RE, sql):
         return None  # per-copy re-evaluation would skew sampling: fold
     shape = _parse_routable_statement(
         sql, "__sa", allow_subqueries=True, allow_join=True
@@ -3981,7 +3742,7 @@ def rewrite_sumarray_statement(sql: str, is_aggregate=None):
     parsed = []  # (NAME, start, end)
     for name, st, op, inner, end, fpred in target_sites:
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in sqltext.split(inner)]
             if inner.strip()
             else []
         )
@@ -4103,7 +3864,7 @@ def rewrite_mode_avg_statement(sql: str, is_aggregate=None):
         if name.upper() != "MODE":
             continue
         args = (
-            [a.strip() for a in _split_top_level_commas(inner)]
+            [a.strip() for a in sqltext.split(inner)]
             if inner.strip()
             else []
         )

@@ -1,0 +1,205 @@
+"""One lexer for SQL text: which characters of a statement are code.
+
+Every text-level pass over a statement asks the same question before it
+reads a character: is this code, or is it inside a literal or a comment?
+The passes are the Pinot call-site rewrites and the statement routes
+(functions/aggsql.py), and the engine's option, LOOKUP, GAPFILL,
+JSON_MATCH, table-reference and group-by scans.  This module is the only
+place that answers the question.  The rules:
+
+- ``'...'`` and ``"..."`` are string literals.  This is Spark's default
+  dialect, where a double quote delimits a string, not an identifier.  A
+  backslash escapes the next character, and a doubled quote stands for
+  one quote.  An unterminated literal runs to the end of the text.
+- ``--`` starts a comment that runs to the end of its line.  ``/*``
+  starts one that runs to the next ``*/``; these do not nest.  An
+  unterminated comment runs to the end of the text.
+- Literals and comments are opaque.  Nothing inside one is a keyword, a
+  call, a table reference, a separator or a bracket.
+- ``(`` and ``[`` open a nesting level; ``)`` and ``]`` close one.  "Top
+  level" means depth 0.
+
+Comments must be opaque for the same reason literals are: Spark drops
+them before it parses, so a scan that reads them as code answers a
+question about a different statement.  A comment is free text.  Read as
+code, the apostrophe in ``-- it's grouped`` opens a "literal" that
+swallows the rest of the statement, so a GROUP BY, a FROM or a Pinot
+call after it is never seen.  A ``FROM t`` inside a comment would be
+taken for a table reference, and a comma for a separator.
+
+The primitives: :func:`skip` steps over one opaque span, :func:`spans`
+lists them, :func:`balanced` reads a bracket group, :func:`split` cuts at
+top-level separators, :func:`search`/:func:`finditer` find patterns that
+start in code (optionally at depth 0), :func:`calls` lists ``name(``
+call sites, :func:`subquery_spans` lists ``(SELECT ...)`` groups, and
+:func:`skip_space`/:func:`code_end` trim leading and trailing comments.
+"""
+
+from __future__ import annotations
+
+import re
+from functools import lru_cache
+from typing import Iterator
+
+_SQ = r"'(?:[^'\\]|\\.|'')*(?:'|\\?\Z)"
+_DQ = r'"(?:[^"\\]|\\.|"")*(?:"|\\?\Z)'
+_COMMENT = r"--[^\n]*(?:\n|\Z)|/\*.*?(?:\*/|\Z)"
+
+# one literal or comment; the group tells which
+_OPAQUE_RE = re.compile(
+    rf"(?P<literal>{_SQ}|{_DQ})|(?P<comment>{_COMMENT})", re.DOTALL
+)
+# the same, or one bracket
+_TOKEN_RE = re.compile(
+    rf"{_SQ}|{_DQ}|{_COMMENT}|(?P<open>[(\[])|(?P<close>[)\]])", re.DOTALL
+)
+_TRIVIA_RE = re.compile(rf"(?:\s+|{_COMMENT})*", re.DOTALL)
+_STRING_RE = re.compile(r"'(?:[^'\\]|\\.|'')*'", re.DOTALL)
+_COMMA_RE = re.compile(",")
+_CALL_RE = re.compile(r"(?<!\w)([A-Za-z_][A-Za-z0-9_]*)[ \t\r\n]*\(")
+_SUBQUERY_RE = re.compile(r"\([ \t\r\n]*SELECT\b", re.IGNORECASE)
+
+
+def skip(sql: str, i: int) -> int:
+    """Index past the literal or comment that starts at ``sql[i]``; ``i``
+    itself when none starts there."""
+    m = _OPAQUE_RE.match(sql, i)
+    return i if m is None else m.end()
+
+
+def spans(sql: str) -> list[tuple[int, int]]:
+    """``[start, end)`` of every literal and comment, in order."""
+    return [m.span() for m in _OPAQUE_RE.finditer(sql)]
+
+
+def skip_space(sql: str, i: int = 0) -> int:
+    """Index of the first character at or after ``i`` that is neither
+    whitespace nor part of a comment."""
+    return _TRIVIA_RE.match(sql, i).end()
+
+
+def code_end(sql: str) -> int:
+    """Index past the last character that is neither whitespace nor part
+    of a comment (0 for a statement that holds nothing else)."""
+    end = pos = 0
+    for m in _OPAQUE_RE.finditer(sql):
+        if sql[pos : m.start()].strip():
+            end = pos + len(sql[pos : m.start()].rstrip())
+        if m.group("literal") is not None:
+            end = m.end()
+        pos = m.end()
+    if sql[pos:].strip():
+        end = pos + len(sql[pos:].rstrip())
+    return end
+
+
+def string_value(text: str) -> str | None:
+    """The value of ``text`` when it is exactly one single-quoted literal
+    (surrounding whitespace allowed, doubled quotes unescaped), else
+    None."""
+    t = text.strip()
+    return t[1:-1].replace("''", "'") if _STRING_RE.fullmatch(t) else None
+
+
+def balanced(sql: str, open_idx: int) -> tuple[str, int]:
+    """From the bracket at ``open_idx``: (the text inside the group, the
+    index past its closing bracket).  Raises ValueError when the group
+    never closes."""
+    depth, i = 0, open_idx
+    while (m := _TOKEN_RE.search(sql, i)) is not None:
+        if m.group("open"):
+            depth += 1
+        elif m.group("close"):
+            depth -= 1
+            if depth == 0:
+                return sql[open_idx + 1 : m.start()], m.end()
+        i = m.end()
+    raise ValueError("unbalanced parentheses in SQL text")
+
+
+def _code_runs(sql: str, start: int, top_level: bool):
+    """``(s, e)`` runs of code from ``start``: between opaque spans, and
+    with ``top_level`` only the depth-0 runs between brackets."""
+    token = _TOKEN_RE if top_level else _OPAQUE_RE
+    depth, i, n = 0, start, len(sql)
+    while i < n:
+        m = token.search(sql, i)
+        j = n if m is None else m.start()
+        if j > i and depth == 0:
+            yield i, j
+        if m is None:
+            return
+        if top_level and m.group("open"):
+            depth += 1
+        elif top_level and m.group("close"):
+            depth -= 1
+        i = m.end()
+
+
+@lru_cache(maxsize=64)
+def keyword(*words: str) -> re.Pattern:
+    """Case-insensitive pattern matching any of ``words`` as a whole word;
+    a word may be a phrase (``"GROUP BY"``, any whitespace between).  A
+    word right after ``.`` is a qualified name part (``d.limit``), never
+    a keyword."""
+    alts = "|".join(r"\s+".join(map(re.escape, w.split())) for w in words)
+    return re.compile(rf"(?<![\w.])(?:{alts})(?!\w)", re.IGNORECASE)
+
+
+def finditer(
+    pattern: "re.Pattern | str", sql: str, start: int = 0,
+    top_level: bool = False,
+) -> Iterator[re.Match]:
+    """Every match of ``pattern`` that starts in code at or after
+    ``start`` (at depth 0 with ``top_level``), left to right and not
+    overlapping.  A str pattern is a :func:`keyword`."""
+    if isinstance(pattern, str):
+        pattern = keyword(pattern)
+    pos = start
+    for s, e in _code_runs(sql, start, top_level):
+        pos = max(pos, s)
+        while pos < e:
+            m = pattern.search(sql, pos)
+            if m is None:
+                return
+            if m.start() >= e:
+                break
+            yield m
+            pos = max(m.end(), m.start() + 1)
+
+
+def search(
+    pattern: "re.Pattern | str", sql: str, start: int = 0,
+    top_level: bool = False,
+) -> re.Match | None:
+    """The first match :func:`finditer` yields, or None."""
+    return next(finditer(pattern, sql, start, top_level), None)
+
+
+def split(sql: str, sep: str = ",") -> list[str]:
+    """The pieces of ``sql`` between its top-level ``sep`` separators:
+    ``","`` or a keyword such as ``"AND"``.  Every piece is kept, empty
+    ones (a trailing comma's) included."""
+    parts, last = [], 0
+    for m in finditer(_COMMA_RE if sep == "," else sep, sql, top_level=True):
+        parts.append(sql[last : m.start()])
+        last = m.end()
+    parts.append(sql[last:])
+    return parts
+
+
+def calls(sql: str) -> Iterator[tuple[str, int, int]]:
+    """``(name, start, open_idx)`` for every ``name(`` call site at every
+    depth, left to right (whitespace may sit before the bracket)."""
+    for m in finditer(_CALL_RE, sql):
+        yield m.group(1), m.start(), m.end() - 1
+
+
+def subquery_spans(sql: str) -> list[tuple[int, int]]:
+    """``(start, end)`` of every outermost bracket group whose first token
+    is SELECT."""
+    out: list[tuple[int, int]] = []
+    for m in finditer(_SUBQUERY_RE, sql):
+        if not out or m.start() >= out[-1][1]:
+            out.append((m.start(), balanced(sql, m.start())[1]))
+    return out

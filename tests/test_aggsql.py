@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from real_time_analytics_with_apache_pinot_on_aws_spark.engine import Engine
+from real_time_analytics_with_apache_pinot_on_aws_spark.functions import sqltext
 from real_time_analytics_with_apache_pinot_on_aws_spark.functions.aggsql import (
     rewrite_pinot_aggregates as R,
 )
@@ -236,9 +237,9 @@ def test_round6_review_fixes():
         ("$.click_and_view", "=", "1")
     ]
     # numGroupsLimit only fires on a TOP-LEVEL group-by
-    assert Engine._has_top_level_group_by("SELECT g FROM t GROUP BY g")
-    assert not Engine._has_top_level_group_by(
-        "SELECT * FROM (SELECT g FROM t GROUP BY g) x"
+    assert sqltext.search("GROUP BY", "SELECT g FROM t GROUP BY g", top_level=True)
+    assert not sqltext.search(
+        "GROUP BY", "SELECT * FROM (SELECT g FROM t GROUP BY g) x", top_level=True
     )
 
 
@@ -4665,7 +4666,9 @@ def test_nondeterminism_bail_is_word_bounded():
     registered UDF named e.g. `my$rand` lost its bounded route)."""
     from real_time_analytics_with_apache_pinot_on_aws_spark.functions.aggsql import (
         _NONDETERMINISTIC_FN_RE,
-        _search_unquoted_re,
+    )
+    from real_time_analytics_with_apache_pinot_on_aws_spark.functions.sqltext import (
+        search as _search_unquoted_re,
     )
 
     assert _search_unquoted_re(
@@ -5101,3 +5104,77 @@ def test_group_expr_rebinding_word_operators(mv_engine):
         ).collect()
     }
     assert got == want and (False, False, True, True) in got
+
+
+# -- one SQL-text lexer (functions/sqltext.py) ----------------------------------
+
+
+def test_sqltext_is_the_only_quote_and_comment_scanner():
+    """Every decision "is this character code?" is made in one module: no
+    function outside ``functions/sqltext.py`` compares a character against
+    a quote character, or looks for the ``--`` / ``/*`` comment markers."""
+    import ast
+    from pathlib import Path
+
+    import real_time_analytics_with_apache_pinot_on_aws_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    markers = ("--", "/*", "*/")
+
+    def lexer_const(node) -> bool:
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            v = node.value
+            return v in markers or (0 < len(v) <= 3 and ("'" in v or '"' in v))
+        if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+            return any(lexer_const(e) for e in node.elts)
+        return False
+
+    found = []
+
+    def walk(node, fn, rel):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Compare) and any(
+            lexer_const(x) for x in (node.left, *node.comparators)
+        ):
+            found.append((rel, fn, ast.unparse(node)))
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("startswith", "endswith", "find", "index")
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value in markers
+        ):
+            found.append((rel, fn, ast.unparse(node)))
+        for child in ast.iter_child_nodes(node):
+            walk(child, fn, rel)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel != "functions/sqltext.py":
+            walk(ast.parse(path.read_text(), filename=str(path)), None, rel)
+    assert found == []
+
+
+def test_quote_in_comment_does_not_hide_pinot_calls(agg_engine):
+    """An apostrophe inside a comment is comment text, not the start of a
+    literal: the Pinot calls after it are still rewritten, and the
+    commented statement answers exactly as the uncommented one."""
+    comment = "-- it's p90\n "
+    commented = (
+        "SELECT u, DISTINCTCOUNTHLL(t) AS a, " + comment
+        + "PERCENTILE(v, 90) AS p FROM aggsrc GROUP BY u"
+    )
+    plain = commented.replace(comment, "")
+    assert R(commented).replace(comment, "") == R(plain)
+    assert "PERCENTILE(" not in R(commented)
+
+    def rows(sql):
+        return sorted(tuple(r) for r in agg_engine.query(sql).collect())
+
+    assert rows(commented) == rows(plain)
+    # comment content is never rewritten: it is not code
+    assert R("SELECT 1 /* DISTINCTCOUNT(u) */") == (
+        "SELECT 1 /* DISTINCTCOUNT(u) */"
+    )

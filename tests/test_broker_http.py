@@ -260,6 +260,10 @@ def test_enable_null_handling_option_over_broker(spark, tmp_path):
         assert resp["resultTable"]["rows"] == [["null", -(2**31)]]
         resp = _post(srv.url(), {"sql": q, "queryOptions": "enableNullHandling=false"})
         assert resp["resultTable"]["rows"] == [["null", -(2**31)]]
+        # a quote inside a comment does not hide the FROM after it
+        cq = q.replace(" FROM", " -- it's the sentinel view\nFROM")
+        resp = _post(srv.url(), {"sql": f"SET enableNullHandling=false; {cq}"})
+        assert resp["resultTable"]["rows"] == [["null", -(2**31)]]
         resp = _post(srv.url(), {"sql": q})       # default: real nulls
         assert resp["resultTable"]["rows"] == [[None, None]]
     finally:
@@ -281,6 +285,13 @@ def test_num_groups_limit_option(broker):
     resp = _post(broker.url(), {"sql": f"SET numGroupsLimit=10; {q}"})
     assert resp["numRowsResultSet"] == 3
     assert resp["numGroupsLimitReached"] is False
+    # a quote inside a comment does not hide the GROUP BY after it
+    commented = (
+        "SELECT g, count(*) AS n FROM broker_src -- it's grouped\nGROUP BY g"
+    )
+    resp = _post(broker.url(), {"sql": f"SET numGroupsLimit=2; {commented}"})
+    assert resp["numRowsResultSet"] == 2
+    assert resp["numGroupsLimitReached"] is True
     # selection (no GROUP BY): option is a no-op, like Pinot
     resp = _post(
         broker.url(),

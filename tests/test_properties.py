@@ -837,6 +837,13 @@ def test_url_filter_score_and_keep_replay(spark, rows):
 # emitted expression uses only names outside the rewrite table).
 # ---------------------------------------------------------------------------
 
+# comments that hold quotes, parens, FROM and Pinot calls: all opaque, so
+# none of it is rewritten and no quote in them opens a literal
+_SQL_COMMENT_FRAGS = (
+    "-- it's DISTINCTCOUNT(u) FROM t (\n",
+    "/* PERCENTILE(v, 90) ) 'x FROM t */",
+)
+
 _sql_frag_st = st.lists(
     st.one_of(
         st.sampled_from([
@@ -846,6 +853,7 @@ _sql_frag_st = st.lists(
             # its trailing type literal, which the literal-survival
             # property below would flag)
             "SUMMV(arr)", "count(*)", " AS a", ", ", "t.col",
+            *_SQL_COMMENT_FRAGS,
         ]),
         st.text(
             alphabet=st.characters(codec="utf-8", categories=("L", "N", "P", "Zs")),
@@ -861,8 +869,10 @@ _sql_frag_st = st.lists(
 @settings(max_examples=50, deadline=None)
 def test_agg_rewrite_idempotent_and_literal_safe(sql):
     from real_time_analytics_with_apache_pinot_on_aws_spark.functions.aggsql import (
-        _skip_literal,
         rewrite_pinot_aggregates as R,
+    )
+    from real_time_analytics_with_apache_pinot_on_aws_spark.functions.sqltext import (
+        spans,
     )
 
     try:
@@ -870,15 +880,15 @@ def test_agg_rewrite_idempotent_and_literal_safe(sql):
     except ValueError:
         return  # loud arity errors are fine; nothing must be silent
     assert R(once) == once  # idempotent: outputs use non-table names only
-    # every literal span of the input survives verbatim in the output
-    i = 0
-    while i < len(sql):
-        if sql[i] == "'":
-            j = _skip_literal(sql, i)
-            assert sql[i:j] in once, sql[i:j]
-            i = j
-            continue
-        i += 1
+    # every literal and comment span of the input survives verbatim
+    for i, j in spans(sql):
+        assert sql[i:j] in once, sql[i:j]
+    # each comment fragment is a comment wherever it lands — unless a
+    # backslash in a literal fragment escaped its closing quote and the
+    # literal ran on into the comment (Spark's escape rule)
+    if "\\" not in sql:
+        for c in _SQL_COMMENT_FRAGS:
+            assert once.count(c) == sql.count(c), c
 
 
 # ---------------------------------------------------------------------------

@@ -284,6 +284,10 @@ def test_skip_upsert_option_and_table_type_suffix(spark, tmp_path):
         "SET skipUpsert=true; SELECT 'FROM skipDemo' AS s, count(*) AS n FROM skipDemo"
     ).collect()[0]
     assert lit["s"] == "FROM skipDemo" and lit["n"] == 3
+    # a quote inside a comment does not hide the FROM after it
+    assert engine.query(
+        "SET skipUpsert=true; SELECT count(*) AS n -- it's raw\nFROM skipDemo"
+    ).collect()[0]["n"] == 3
 
     # Pinot-cased suffix addressing binds — and to the RESOLVED view
     assert engine.query(
@@ -2112,6 +2116,16 @@ def test_legacy_option_suffix_parse_and_strip(spark, tmp_path):
     )
     assert stripped.strip() == "SELECT 1"
     assert opts == {"useMultistageEngine": "true", "timeoutMs": "250"}
+    # a comment before SET or after OPTION(...) hides no option
+    for commented in (
+        "-- dash\nSET timeoutMs=100; SELECT 1",
+        "SELECT 1 OPTION(timeoutMs=100) -- x",
+    ):
+        stripped, opts = engine._strip_query_options(commented)
+        assert stripped.strip() == "SELECT 1"
+        assert opts == {"timeoutMs": "100"}
+    out = engine.query("SELECT 3 + 4 AS seven OPTION(timeoutMs=1000) -- x")
+    assert out.collect()[0]["seven"] == 7
     # OPTION inside a trailing string literal is untouched
     lit = engine.query("SELECT 'ends with OPTION(a=1)' AS s").collect()[0]["s"]
     assert lit == "ends with OPTION(a=1)"
