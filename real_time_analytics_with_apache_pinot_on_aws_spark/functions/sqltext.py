@@ -11,11 +11,17 @@ place that answers the question.  The rules:
   dialect, where a double quote delimits a string, not an identifier.  A
   backslash escapes the next character, and a doubled quote stands for
   one quote.  An unterminated literal runs to the end of the text.
+- `` `...` `` is a quoted identifier.  A doubled backtick stands for one
+  backtick; a backslash escapes nothing.  An unterminated one runs to
+  the end of the text.
 - ``--`` starts a comment that runs to the end of its line.  ``/*``
-  starts one that runs to the next ``*/``; these do not nest.  An
-  unterminated comment runs to the end of the text.
-- Literals and comments are opaque.  Nothing inside one is a keyword, a
-  call, a table reference, a separator or a bracket.
+  starts one that runs to the ``*/`` that closes it; these nest, as in
+  Spark, so ``/* a /* b */ c */`` is one comment.  An unterminated
+  comment runs to the end of the text.
+- Literals, quoted identifiers and comments are opaque.  Nothing inside
+  one is a keyword, a call, a table reference, a separator or a bracket.
+  A pattern that starts in code may still run into one, so a
+  table-reference pattern matches ``FROM `my table` ``.
 - ``(`` and ``[`` open a nesting level; ``)`` and ``]`` close one.  "Top
   level" means depth 0.
 
@@ -25,7 +31,9 @@ question about a different statement.  A comment is free text.  Read as
 code, the apostrophe in ``-- it's grouped`` opens a "literal" that
 swallows the rest of the statement, so a GROUP BY, a FROM or a Pinot
 call after it is never seen.  A ``FROM t`` inside a comment would be
-taken for a table reference, and a comma for a separator.
+taken for a table reference, and a comma for a separator.  A quoted
+identifier is a name, and its text is free too: the apostrophe in
+``AS `it's` `` is part of the name.
 
 The primitives: :func:`skip` steps over one opaque span, :func:`spans`
 lists them, :func:`balanced` reads a bracket group, :func:`split` cuts at
@@ -43,51 +51,82 @@ from typing import Iterator
 
 _SQ = r"'(?:[^'\\]|\\.|'')*(?:'|\\?\Z)"
 _DQ = r'"(?:[^"\\]|\\.|"")*(?:"|\\?\Z)'
-_COMMENT = r"--[^\n]*(?:\n|\Z)|/\*.*?(?:\*/|\Z)"
+_BQ = r"`(?:[^`]|``)*(?:`|\Z)"
+# a ``/*`` comment is matched by its opener alone: where it ends is a
+# nesting count (_end), which no regex can do
+_COMMENT = r"--[^\n]*(?:\n|\Z)|(?P<block>/\*)"
 
-# one literal or comment; the group tells which
+# one literal, quoted identifier or comment; the group tells which
 _OPAQUE_RE = re.compile(
-    rf"(?P<literal>{_SQ}|{_DQ})|(?P<comment>{_COMMENT})", re.DOTALL
+    rf"(?P<quoted>{_SQ}|{_DQ}|{_BQ})|(?P<comment>{_COMMENT})", re.DOTALL
 )
 # the same, or one bracket
 _TOKEN_RE = re.compile(
-    rf"{_SQ}|{_DQ}|{_COMMENT}|(?P<open>[(\[])|(?P<close>[)\]])", re.DOTALL
+    rf"{_SQ}|{_DQ}|{_BQ}|{_COMMENT}|(?P<open>[(\[])|(?P<close>[)\]])", re.DOTALL
 )
-_TRIVIA_RE = re.compile(rf"(?:\s+|{_COMMENT})*", re.DOTALL)
+_BLOCK_RE = re.compile(r"/\*|\*/")
+_SPACE_RE = re.compile(r"\s*")
 _STRING_RE = re.compile(r"'(?:[^'\\]|\\.|'')*'", re.DOTALL)
 _COMMA_RE = re.compile(",")
 _CALL_RE = re.compile(r"(?<!\w)([A-Za-z_][A-Za-z0-9_]*)[ \t\r\n]*\(")
 _SUBQUERY_RE = re.compile(r"\([ \t\r\n]*SELECT\b", re.IGNORECASE)
 
 
+def _end(sql: str, m: re.Match) -> int:
+    """Index past the token ``m`` starts: a ``/*`` comment runs to the
+    ``*/`` that closes it, counting nested ``/*`` (or to the end)."""
+    if m.group("block") is None:
+        return m.end()
+    depth = 0
+    for b in _BLOCK_RE.finditer(sql, m.start()):
+        depth += 1 if b.group() == "/*" else -1
+        if depth == 0:
+            return b.end()
+    return len(sql)
+
+
+def _tokens(token: re.Pattern, sql: str, i: int = 0):
+    """``(match, end)`` for every ``token`` from ``i``, left to right, each
+    search resuming past the previous token's whole span."""
+    while (m := token.search(sql, i)) is not None:
+        i = _end(sql, m)
+        yield m, i
+
+
 def skip(sql: str, i: int) -> int:
-    """Index past the literal or comment that starts at ``sql[i]``; ``i``
-    itself when none starts there."""
+    """Index past the literal, quoted identifier or comment that starts at
+    ``sql[i]``; ``i`` itself when none starts there."""
     m = _OPAQUE_RE.match(sql, i)
-    return i if m is None else m.end()
+    return i if m is None else _end(sql, m)
 
 
 def spans(sql: str) -> list[tuple[int, int]]:
-    """``[start, end)`` of every literal and comment, in order."""
-    return [m.span() for m in _OPAQUE_RE.finditer(sql)]
+    """``[start, end)`` of every literal, quoted identifier and comment, in
+    order."""
+    return [(m.start(), e) for m, e in _tokens(_OPAQUE_RE, sql)]
 
 
 def skip_space(sql: str, i: int = 0) -> int:
     """Index of the first character at or after ``i`` that is neither
     whitespace nor part of a comment."""
-    return _TRIVIA_RE.match(sql, i).end()
+    while True:
+        i = _SPACE_RE.match(sql, i).end()
+        m = _OPAQUE_RE.match(sql, i)
+        if m is None or m.group("comment") is None:
+            return i
+        i = _end(sql, m)
 
 
 def code_end(sql: str) -> int:
     """Index past the last character that is neither whitespace nor part
     of a comment (0 for a statement that holds nothing else)."""
     end = pos = 0
-    for m in _OPAQUE_RE.finditer(sql):
+    for m, e in _tokens(_OPAQUE_RE, sql):
         if sql[pos : m.start()].strip():
             end = pos + len(sql[pos : m.start()].rstrip())
-        if m.group("literal") is not None:
-            end = m.end()
-        pos = m.end()
+        if m.group("quoted") is not None:
+            end = e
+        pos = e
     if sql[pos:].strip():
         end = pos + len(sql[pos:].rstrip())
     return end
@@ -105,15 +144,14 @@ def balanced(sql: str, open_idx: int) -> tuple[str, int]:
     """From the bracket at ``open_idx``: (the text inside the group, the
     index past its closing bracket).  Raises ValueError when the group
     never closes."""
-    depth, i = 0, open_idx
-    while (m := _TOKEN_RE.search(sql, i)) is not None:
+    depth = 0
+    for m, e in _tokens(_TOKEN_RE, sql, open_idx):
         if m.group("open"):
             depth += 1
         elif m.group("close"):
             depth -= 1
             if depth == 0:
-                return sql[open_idx + 1 : m.start()], m.end()
-        i = m.end()
+                return sql[open_idx + 1 : m.start()], e
     raise ValueError("unbalanced parentheses in SQL text")
 
 
@@ -121,19 +159,17 @@ def _code_runs(sql: str, start: int, top_level: bool):
     """``(s, e)`` runs of code from ``start``: between opaque spans, and
     with ``top_level`` only the depth-0 runs between brackets."""
     token = _TOKEN_RE if top_level else _OPAQUE_RE
-    depth, i, n = 0, start, len(sql)
-    while i < n:
-        m = token.search(sql, i)
-        j = n if m is None else m.start()
-        if j > i and depth == 0:
-            yield i, j
-        if m is None:
-            return
+    depth, i = 0, start
+    for m, e in _tokens(token, sql, start):
+        if m.start() > i and depth == 0:
+            yield i, m.start()
         if top_level and m.group("open"):
             depth += 1
         elif top_level and m.group("close"):
             depth -= 1
-        i = m.end()
+        i = e
+    if len(sql) > i and depth == 0:
+        yield i, len(sql)
 
 
 @lru_cache(maxsize=64)

@@ -11,6 +11,13 @@ executors) and degrade gracefully to local[N] test mode:
   timestamps (SURVEY §5).
 - Arrow enabled for the Pandas-UDF slow path (vectorized batches, never
   row-at-a-time pickling).
+- Streaming checkpoints go through Hadoop ``FileSystem``, not the default
+  ``FileContext`` manager, which forks a ``readlink`` for every offsets and
+  commits rename on a local FS without the native library.  This manager
+  checks ``exists`` and then renames, so two writers sharing one checkpoint
+  could race; that cannot happen here: the engine refuses a second live
+  consumer on one table (``TableAlreadyExistsError``) and Spark refuses two
+  active runs of one query id.
 """
 
 from __future__ import annotations
@@ -47,6 +54,11 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # events.ts is parquet TIMESTAMP(NANOS): read as long, catalog converts
         # to a micros TimestampType column (exact integer division, no doubles).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

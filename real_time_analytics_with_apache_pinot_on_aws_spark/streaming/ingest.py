@@ -24,7 +24,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .. import fs as _fs
+from ..operators.dedup import cache_scope, lifecycle_cache
 from ..schema import TableSchema, decoded_frame, time_parse_expr
+from .rollup import rollup_batch
 
 
 #: Pinot's built-in virtual columns **[P1.2]** — present on every table
@@ -271,6 +273,13 @@ class IngestPipeline:
             # (kinesisTableConfigFile.json:19,22) with dupes only possible on
             # mid-batch crash.
             #
+            # One write task per day, not one per input file: rebalancing on
+            # the day column lets AQE merge the source's small partitions
+            # into one writer (one sealed file) per day, and still split a
+            # large batch at the advisory partition size.  A fixed
+            # coalesce(1) would funnel a 150 MB flush into one task.
+            days = ["ingest_date"] if "ingest_date" in batch_df.columns else []
+            batch_df = batch_df.hint("rebalance", *days)
             # (__ingest_epoch, __ingest_seq) is a stable arrival-order
             # tiebreaker: epoch orders batches, the monotonic id is unique
             # within a batch.  Upsert resolution (engine.register_view) uses
@@ -285,37 +294,42 @@ class IngestPipeline:
                 # disjoint — range predicates then skip row groups (the
                 # sorted/range-index behavior).  sortWithinPartitions: no
                 # extra shuffle, the sort rides the write tasks.
-                part_keys = (
-                    ["ingest_date"] if "ingest_date" in batch_df.columns else []
+                batch_df = batch_df.sortWithinPartitions(*days, sorted_column)
+            with cache_scope():
+                if rollups:
+                    # star-tree tables read the batch twice (raw write, then
+                    # cells); foreachBatch hands over an uncached frame, so
+                    # cache it and the source is read and decoded once
+                    batch_df = lifecycle_cache(batch_df, "streaming.ingest.batch")
+                # no _SUCCESS marker: nothing reads it (table() decides
+                # emptiness from day partitions and parquet files)
+                writer = batch_df.write.mode("append").option(
+                    "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
                 )
-                batch_df = batch_df.sortWithinPartitions(*part_keys, sorted_column)
-            writer = batch_df.write.mode("append")
-            if "ingest_date" in batch_df.columns:
-                writer = writer.partitionBy("ingest_date")
-            for col_name in bloom_filter_columns:
-                # Pinot bloomFilterColumns analog: parquet split-block bloom
-                # per column chunk; point lookups skip whole row groups.
-                # parquet-mr omits the bloom when a chunk stays fully
-                # dictionary-encoded (the dictionary page already filters
-                # row groups exactly) — same storage-index effect.
-                writer = writer.option(
-                    f"parquet.bloom.filter.enabled#{col_name}", "true"
-                )
-            writer.parquet(table_path)
-            for spec_i, path_i in rollups:
-                # segment-local pre-aggregation, star-tree style: the batch is
-                # in the cluster cache right now, so the extra pass is cheap
-                from .rollup import rollup_batch
-
-                cells = rollup_batch(batch_df, spec_i).write.mode("append")
-                if "ingest_date" in spec_i.dims:
-                    # day-partition the cell log so retention expires rollup
-                    # cells together with the raw partitions (Pinot star-trees
-                    # are per-segment, so they expire with the segment; a
-                    # rollup WITHOUT the day dimension cannot expire per day —
-                    # see run_retention)
-                    cells = cells.partitionBy("ingest_date")
-                cells.parquet(path_i)
+                if days:
+                    writer = writer.partitionBy(*days)
+                for col_name in bloom_filter_columns:
+                    # Pinot bloomFilterColumns analog: parquet split-block
+                    # bloom per column chunk; point lookups skip whole row
+                    # groups.  parquet-mr omits the bloom when a chunk stays
+                    # fully dictionary-encoded (the dictionary page already
+                    # filters row groups exactly) — same storage-index effect.
+                    writer = writer.option(
+                        f"parquet.bloom.filter.enabled#{col_name}", "true"
+                    )
+                writer.parquet(table_path)
+                for spec_i, path_i in rollups:
+                    # segment-local pre-aggregation, star-tree style
+                    cells = rollup_batch(batch_df, spec_i).write.mode("append")
+                    if "ingest_date" in spec_i.dims:
+                        # day-partition the cell log so retention expires
+                        # rollup cells together with the raw partitions
+                        # (Pinot star-trees are per-segment, so they expire
+                        # with the segment; a rollup WITHOUT the day
+                        # dimension cannot expire per day — see
+                        # run_retention)
+                        cells = cells.partitionBy("ingest_date")
+                    cells.parquet(path_i)
 
         writer = (
             self.decoded()
@@ -384,8 +398,9 @@ class IngestPipeline:
         frame (the decode schema) instead of failing parquet inference —
         same posture as Engine._offline_frame on a segment-less table.
         """
-        # emptiness = no day partitions and no root parquet files — marker
-        # files (_SUCCESS) survive a full partition drop (e.g. after
+        # emptiness = no day partitions and no root parquet files — stray
+        # files (the _SUCCESS markers tables written before the batch commit
+        # dropped them still hold) survive a full partition drop (e.g. after
         # RealtimeToOffline moved every sealed day) and must not trick the
         # reader into schema inference over zero parquet footers
         if not _fs.glob_status(

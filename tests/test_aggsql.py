@@ -5157,6 +5157,28 @@ def test_sqltext_is_the_only_quote_and_comment_scanner():
     assert found == []
 
 
+def test_sqltext_backticks_and_nested_comments_are_opaque():
+    """A backtick-quoted identifier is one opaque span (a doubled backtick
+    escapes one), and ``/* */`` comments nest, as Spark lexes both."""
+    import re
+
+    quoted = "SELECT g AS `it's`, count(*) AS n FROM t GROUP BY g"
+    assert sqltext.search("GROUP BY", quoted, top_level=True)
+    assert sqltext.spans("a `x``y` b") == [(2, 8)]
+    assert not sqltext.search("FROM", "SELECT `FROM t` AS x")
+    # a pattern that starts in code still runs into a backticked name
+    ref = re.compile(r"\bFROM\s+(`(?:[^`]|``)*`|\w+)", re.IGNORECASE)
+    assert sqltext.search(ref, "SELECT 1 FROM `my table`").group(1) == (
+        "`my table`"
+    )
+    nested = "SELECT 1 /* a /* b */ c, d */ AS x"
+    assert sqltext.spans(nested) == [(9, 29)]
+    assert sqltext.split(nested) == [nested]
+    assert sqltext.skip_space("/* a /* b */ c */ SELECT") == 18
+    assert sqltext.code_end("SELECT 1 /* a /* b */ c */ ") == 8
+    assert sqltext.balanced("(a /* ) /* ( */ ) */)", 0)[1] == 21
+    assert sqltext.spans("SELECT /* a /* b */") == [(7, 19)]  # unterminated
+
 def test_quote_in_comment_does_not_hide_pinot_calls(agg_engine):
     """An apostrophe inside a comment is comment text, not the start of a
     literal: the Pinot calls after it are still rewritten, and the
@@ -5177,4 +5199,8 @@ def test_quote_in_comment_does_not_hide_pinot_calls(agg_engine):
     # comment content is never rewritten: it is not code
     assert R("SELECT 1 /* DISTINCTCOUNT(u) */") == (
         "SELECT 1 /* DISTINCTCOUNT(u) */"
+    )
+    # bracketed comments nest, as in Spark: the call is still inside one
+    assert R("SELECT 1 /* a /* b */ DISTINCTCOUNT(u) */ AS x") == (
+        "SELECT 1 /* a /* b */ DISTINCTCOUNT(u) */ AS x"
     )

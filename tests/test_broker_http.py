@@ -292,6 +292,12 @@ def test_num_groups_limit_option(broker):
     resp = _post(broker.url(), {"sql": f"SET numGroupsLimit=2; {commented}"})
     assert resp["numRowsResultSet"] == 2
     assert resp["numGroupsLimitReached"] is True
+    # nor does a quote inside a backtick-quoted identifier
+    quoted = "SELECT g AS `it's`, count(*) AS n FROM broker_src GROUP BY g"
+    resp = _post(broker.url(), {"sql": f"SET numGroupsLimit=2; {quoted}"})
+    assert resp["numRowsResultSet"] == 2
+    assert resp["numGroupsLimitReached"] is True
+    assert resp["resultTable"]["dataSchema"]["columnNames"] == ["it's", "n"]
     # selection (no GROUP BY): option is a no-op, like Pinot
     resp = _post(
         broker.url(),

@@ -130,6 +130,131 @@ def test_retention_partition_drop(spark, tmp_path):
     pipeline.stop()
 
 
+def _committed(table_path: str) -> tuple[list[str], list[str]]:
+    """(parquet files, _SUCCESS markers) under a table, relative paths."""
+    root = Path(table_path)
+    parquet = sorted(str(p.relative_to(root)) for p in root.rglob("*.parquet"))
+    markers = sorted(str(p.relative_to(root)) for p in root.rglob("_SUCCESS"))
+    return parquet, markers
+
+
+def _drain_once(spark, tmp_path, files: dict[str, tuple[int, str]], config=None):
+    """Write ``files`` ({name: (rows, day)}) before the pipeline starts, so
+    one availableNow micro-batch commits them all; return the pipeline."""
+    src_dir = tmp_path / "stream_in"
+    start = 0
+    for name, (n, day) in files.items():
+        _write_events(src_dir / name, n, day, start=start)
+        start += n
+    engine = Engine(spark, str(tmp_path / "warehouse"))
+    pipe = engine.add_table(
+        CLICKSTREAM_SCHEMA, config or TABLE_CONFIG,
+        RawRecordSource(kind="files", path=str(src_dir)), available_now=True,
+    )
+    pipe.process_available()
+    return pipe
+
+
+def test_batch_commits_one_file_per_day_and_no_marker(spark, tmp_path):
+    """A micro-batch of four input files seals ONE parquet file (one write
+    task per day, not one per input file) and writes no _SUCCESS marker."""
+    pipe = _drain_once(spark, tmp_path, {
+        f"b{k}.json": (50, "2024-06-01") for k in range(4)
+    })
+    parquet, markers = _committed(pipe.table_path)
+    assert len(parquet) == 1 and parquet[0].startswith("ingest_date=2024-06-01/")
+    assert markers == []
+    assert pipe.table().count() == 200
+    pipe.stop()
+
+
+def test_batch_spanning_two_days_commits_one_file_per_day(spark, tmp_path):
+    pipe = _drain_once(spark, tmp_path, {
+        "a.json": (30, "2024-06-01"), "b.json": (30, "2024-06-02"),
+        "c.json": (30, "2024-06-01"), "d.json": (30, "2024-06-02"),
+    })
+    parquet, markers = _committed(pipe.table_path)
+    assert [p.split("/")[0] for p in parquet] == [
+        "ingest_date=2024-06-01", "ingest_date=2024-06-02",
+    ]
+    assert markers == []
+    assert {r["count"] for r in pipe.table().groupBy("ingest_date").count().collect()} == {60}
+    pipe.stop()
+
+
+def test_large_batch_is_split_across_write_tasks(spark, tmp_path):
+    """The day rebalance never funnels a batch into one task: a batch larger
+    than the advisory partition size is split across several writers (here
+    the size is made tiny instead of the batch huge)."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        pipe = _drain_once(spark, tmp_path, {
+            f"b{k}.json": (500, "2024-06-01") for k in range(4)
+        })
+    finally:
+        spark.conf.set(key, old)
+    parquet, _ = _committed(pipe.table_path)
+    assert len(parquet) > 1
+    assert pipe.table().count() == 2000
+    pipe.stop()
+
+
+def test_build_session_checkpoints_through_filesystem(spark):
+    """The session (built by ``build_session``) writes streaming checkpoints
+    through Hadoop FileSystem, which forks no ``readlink`` per rename on a
+    local FS; restart from such a checkpoint is covered by
+    test_pause_resume_consumption_exactly_once."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def _stage_input_records(spark) -> dict[tuple[int, int], int]:
+    """``inputRecords`` of every stage attempt in the status store, once the
+    listener bus has delivered every event."""
+    sc, gw = spark.sparkContext._jsc.sc(), spark.sparkContext._gateway
+    sc.listenerBus().waitUntilEmpty()
+    it = sc.statusStore().stageList(
+        None, False, False, gw.new_array(gw.jvm.double, 0), None
+    ).iterator()
+    out = {}
+    while it.hasNext():
+        s = it.next()
+        out[(s.stageId(), s.attemptId())] = s.inputRecords()
+    return out
+
+
+def test_star_tree_batch_reads_its_source_once(spark, tmp_path):
+    """A star-tree table reads each micro-batch twice (raw write, then the
+    cells), so the commit caches the batch: the source is read and decoded
+    once per row.  A cached re-read counts one input record per cached
+    column batch, not per row, hence the small allowance."""
+    config = dict(TABLE_CONFIG)
+    config["tableIndexConfig"] = {
+        "streamConfigs": {"realtime.segment.flush.threshold.time": "2m"},
+        "starTreeIndexConfigs": [{
+            "dimensionsSplitOrder": ["campaign", "ingest_date"],
+            "functionColumnPairs": ["SUM__price"],
+        }],
+    }
+    before = _stage_input_records(spark)
+    pipe = _drain_once(spark, tmp_path, {
+        f"b{k}.json": (250, "2024-06-01") for k in range(4)
+    }, config)
+    read = sum(
+        v for k, v in _stage_input_records(spark).items() if k not in before
+    )
+    assert 1000 <= read < 1100
+    assert pipe.table().count() == 1000
+    assert pipe.rollup_table().agg({"sum__price": "sum"}).collect()[0][0] == (
+        pipe.table().agg({"price": "sum"}).collect()[0][0]
+    )
+    pipe.stop()
+
+
 def test_ingest_with_rollup_and_partition_pruning(spark, tmp_path):
     """Streaming ingest maintains the star-tree rollup per micro-batch; the
     rollup served result equals direct aggregation over the raw table, and a
