@@ -1625,12 +1625,6 @@ class Engine:
 
     # -- query plane (B2, B4) --------------------------------------------
 
-    _AGG_SQL_RE = re.compile(
-        r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<table>\w+)"
-        r"(?:\s+WHERE\s+(?P<where>.+?))?"
-        r"\s+GROUP\s+BY\s+(?P<groups>[\w\s,]+?)\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
     _AGG_ITEM_RE = re.compile(
         r"^(?:(?P<fn>sum|count|min|max|avg|distinctcounthll|"
         r"distinctcountrawhll)\s*\(\s*(?P<col>\w+)\s*\)"
@@ -1647,7 +1641,9 @@ class Engine:
         (``SELECT agg(col) AS a, dims FROM t [WHERE dim IN (...) [AND ...]]
         GROUP BY dims``) is parsed into an AggRequest and routed through
         :meth:`query_agg` — Pinot's broker applying the star-tree to plain
-        SQL.  ANYTHING the conservative parser does not recognize falls back
+        SQL.  The statement is read through :func:`sqltext.clauses`, so
+        comments and literals never change the shape.  ANYTHING the
+        conservative parser does not recognize falls back
         to full Spark SQL (route ``'sql'``), so routing can only change the
         scan, never correctness or the supported surface.
         """
@@ -1680,26 +1676,24 @@ class Engine:
             # fixed); always take the raw-scan path, query() applies the
             # null-disabled rewrite itself
             return self.query(orig), "sql"
-        m = self._AGG_SQL_RE.match(sql)
-        if not m:
+        c = sqltext.clauses(sql)
+        if c is None or "GROUP BY" not in c or set(c) - {
+            "SELECT", "FROM", "WHERE", "GROUP BY"
+        }:
             return self.query(orig), "sql"
-        table = m.group("table")
+        table = c["FROM"]
         config = self.configs.get(table)
         if table not in self.pipelines or config is None or not config.star_trees:
             return self.query(orig), "sql"
-        groups = tuple(g.strip() for g in m.group("groups").split(",") if g.strip())
-        # _AGG_SQL_RE's groups capture is greedy over [\w\s,] and will absorb
-        # a trailing ORDER BY / LIMIT / HAVING into the last "dim"; every
-        # group item must be a single bare identifier or the query is not the
-        # narrow routable shape — fall back to full SQL (never mis-route)
-        if not groups or any(not re.fullmatch(r"\w+", g) for g in groups) or any(
-            g.upper() in ("ORDER", "BY", "LIMIT", "HAVING", "OFFSET") for g in groups
-        ):
+        # every group item must be a single bare identifier or the query
+        # is not the narrow routable shape — fall back (never mis-route)
+        groups = tuple(sqltext.strip(g) for g in sqltext.split(c["GROUP BY"]))
+        if not all(re.fullmatch(r"\w+", g) for g in groups):
             return self.query(orig), "sql"
         aggs: dict = {}
         sel_dims: list = []
-        for item in sqltext.split(m.group("items")):
-            im = self._AGG_ITEM_RE.match(item.strip())
+        for item in sqltext.split(c["SELECT"]):
+            im = self._AGG_ITEM_RE.match(sqltext.strip(item))
             if not im:
                 return self.query(orig), "sql"
             if im.group("dim"):
@@ -1712,22 +1706,20 @@ class Engine:
         if not aggs or set(sel_dims) - set(groups):
             return self.query(orig), "sql"
         filters: dict = {}
-        where = m.group("where")
-        if where:
-            for conj in re.split(r"\s+AND\s+", where, flags=re.IGNORECASE):
-                conj = conj.strip()
-                fm = self._AGG_IN_RE.match(conj)
-                if fm:
-                    vals = self._parse_in_values(fm.group("vals"))
-                    if vals is None:
-                        return self.query(orig), "sql"
-                    filters[fm.group("col")] = vals
-                    continue
-                em = self._AGG_EQ_RE.match(conj)
-                if em:
-                    filters[em.group("col")] = (em.group("val").strip("'"),)
-                    continue
-                return self.query(orig), "sql"
+        for conj in sqltext.split(c["WHERE"], "AND") if "WHERE" in c else ():
+            conj = sqltext.strip(conj)
+            fm = self._AGG_IN_RE.match(conj)
+            if fm:
+                vals = self._parse_in_values(fm.group("vals"))
+                if vals is None:
+                    return self.query(orig), "sql"
+                filters[fm.group("col")] = vals
+                continue
+            em = self._AGG_EQ_RE.match(conj)
+            if em:
+                filters[em.group("col")] = (em.group("val").strip("'"),)
+                continue
+            return self.query(orig), "sql"
         req = AggRequest(dims=groups, aggs=aggs, dim_filters=filters)
         out, route = self.query_agg(table, req)
         # present columns in the SELECT's order (dims first as written)
@@ -2025,7 +2017,7 @@ class Engine:
         exist only on ENGINE tables (Pinot serves them per segment); a
         reference to a plain temp view raises.
         """
-        if self._BARE_STAR_RE.search(sql):
+        if sqltext.search(self._BARE_STAR_RE, sql):
             raise ValueError(
                 "virtual columns ($docId/$segmentName/$hostName) cannot be "
                 "combined with SELECT * here: Pinot excludes them from * "
@@ -2051,9 +2043,12 @@ class Engine:
                 tname, f"__virt_{tname}_{_uuid.uuid4().hex[:10]}"
             )
             edits.append((start, end, f"{head}{v}{alias_text or ''}"))
-        from .functions.aggsql import apply_text_edits
-
-        rewritten = apply_text_edits(sql, edits)
+        # the $x tokens in code are backquoted for the Spark parser
+        edits += [
+            (m.start(), m.end(), f"`{m.group()}`")
+            for m in sqltext.finditer(self._VIRTUAL_COL_RE, sql)
+        ]
+        rewritten = aggsql.apply_text_edits(sql, edits)
         if rewritten is None:
             raise ValueError(
                 "virtual-column resolution could not model this FROM "
@@ -2066,7 +2061,6 @@ class Engine:
                 "only on engine tables (add_table/add_offline_table/"
                 "add_dim_table) — the statement references none"
             )
-        rewritten = self._VIRTUAL_COL_RE.sub(lambda m: f"`${m.group(1)}`", rewritten)
         try:
             for t, v in views.items():
                 self._resolved_frame(t, with_virtual=True).createOrReplaceTempView(v)
@@ -2077,118 +2071,122 @@ class Engine:
                 self.spark.catalog.dropTempView(v)
         return df
 
-    _VECSIM_RE = re.compile(
-        r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<table>\w+)\s+WHERE\s+"
-        r"VECTOR_SIMILARITY\(\s*(?P<col>\w+)\s*,\s*"
-        r"ARRAY\s*\[(?P<vals>[-+\deE.,\s]+)\]\s*,\s*(?P<k>\d+)\s*\)"
-        r"(?:\s+AND\s+(?P<residual>.+?))?\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL,
+    _INDEX_CALL_RE = re.compile(
+        r"(?<![\w.])(VECTOR_SIMILARITY|TEXT_MATCH|JSON_MATCH)\s*\(", re.IGNORECASE
     )
 
-    def _query_vector_similarity(self, m: "re.Match") -> DataFrame:
-        """The SQL form of Pinot 1.2's vector predicate **[P1.2]**:
-        ``SELECT ... FROM t WHERE VECTOR_SIMILARITY(col, ARRAY[...], k)
-        [AND <residual>]`` returns the k nearest rows — resolved as
-        :meth:`vector_similarity` top-k ids semi-joined back (broadcast: k
-        rows), then any residual conjuncts, then the SELECT projection.
-        Pinot 1.2 composes the vector predicate with ordinary filters the
-        same way: the index serves the top-k candidate set first and the
-        residual applies to it (so the result can be FEWER than k rows).
-        The table's first primaryKeyColumn is the join id, mirroring how
-        Pinot identifies rows for the index lookup.
+    def _query_index_predicate(self, sql: str) -> DataFrame | None:
+        """The SQL forms of Pinot's index-backed predicates **[P1.2]**:
+        ``SELECT items FROM t WHERE <predicate> [AND <residual>]`` with the
+        predicate one of
 
-        A top-level OR in the residual is REJECTED loudly: SQL precedence
-        makes ``VS(...) AND a=1 OR b=2`` mean ``(VS AND a=1) OR b=2`` —
-        rows outside the top-k would qualify, which this rewrite (apply the
-        residual to the candidate set) cannot express.  Parenthesized ORs
-        (``AND (a=1 OR b=2)``) are fine — they bind inside the conjunct.
+        - ``VECTOR_SIMILARITY(col, ARRAY[...], k)``: the k nearest rows
+          (:meth:`vector_similarity`);
+        - ``TEXT_MATCH(col, 'lucene query')``: :meth:`text_match`, which
+          honors the column's analyzer chain and serves from the
+          persisted postings index when built;
+        - ``JSON_MATCH(col, '"$.a"=1 AND "$.b" IS NOT NULL')``: the
+          filter string's conjunction (:meth:`_parse_json_match_expr`)
+          evaluated by operators/jsonindex.json_match_all.
+
+        The predicate selects the candidate rows first, keyed on the
+        table's first primaryKeyColumn (the id Pinot's index lookup
+        returns); the residual conjuncts then filter the candidates, and
+        the SELECT items project them.  Pinot 1.2 composes them the same
+        way, so a VECTOR_SIMILARITY result can be FEWER than k rows.
+
+        None when the statement is not this form: not the shape
+        :func:`sqltext.clauses` reads, a source that is not an engine
+        table, or a first top-level WHERE conjunct that is not exactly
+        one of the three calls.  Spark SQL then answers it.
+
+        A top-level OR in the WHERE is REJECTED loudly: SQL precedence
+        makes ``P AND a=1 OR b=2`` mean ``(P AND a=1) OR b=2``, so rows
+        outside the candidates would qualify, which this composition
+        cannot express.  A parenthesized OR (``AND (a=1 OR b=2)``) binds
+        inside its conjunct and is fine.  GROUP BY, ORDER BY, LIMIT and
+        OFFSET are rejected too.
         """
-        table, col = m.group("table"), m.group("col")
-        config = self.configs.get(table)
-        if config is None or not config.primary_key_columns:
-            raise ValueError(
-                f"VECTOR_SIMILARITY on {table!r}: the table must be "
-                "registered with primaryKeyColumns (the id the top-k "
-                "semi-join keys on)"
-            )
-        id_col = config.primary_key_columns[0]
-        vec = [float(v) for v in m.group("vals").split(",")]
-        topk = self.vector_similarity(
-            table, col, vec, top_k=int(m.group("k")), id_col=id_col
-        )
-        from pyspark.sql import functions as F
-
-        frame = self._resolved_frame(table)
-        out = frame.join(
-            F.broadcast(topk.select(F.col("neighbor_id").alias(id_col))),
-            id_col,
-            "left_semi",
-        )
-        residual = m.group("residual")
-        if residual:
-            if sqltext.search("OR", residual, top_level=True):
-                raise ValueError(
-                    "VECTOR_SIMILARITY with a top-level OR in the residual "
-                    "predicate is not supported: SQL precedence would let "
-                    "rows outside the vector top-k qualify — parenthesize "
-                    "the disjunction (AND (a OR b)) or restructure the query"
-                )
-            out = out.where(F.expr(residual))
-        items = [i.strip() for i in sqltext.split(m.group("items"))]
-        if items == ["*"]:
-            return out
-        return out.selectExpr(*items)
-
-    _TEXTMATCH_RE = re.compile(
-        r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<table>\w+)\s+WHERE\s+"
-        r"TEXT_MATCH\(\s*(?P<col>\w+)\s*,\s*'(?P<q>(?:[^']|'')*)'\s*\)"
-        r"(?:\s+AND\s+(?P<residual>.+?))?\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-
-    def _query_text_match(self, m: "re.Match") -> DataFrame:
-        """The SQL form of Pinot's text predicate **[P1.2]**:
-        ``SELECT ... FROM t WHERE TEXT_MATCH(col, 'lucene query')
-        [AND <residual>]`` — resolved through :meth:`text_match` (which
-        honors the column's declared analyzer chain and serves from the
-        persisted postings index when built), then any residual conjuncts,
-        then the SELECT projection.  Same composition rule and top-level-OR
-        guard as the VECTOR_SIMILARITY SQL form: the text predicate
-        selects the candidate rows first, the residual filters them.
-        """
-        table, col = m.group("table"), m.group("col")
+        c = sqltext.clauses(sql)
+        if c is None or "WHERE" not in c:
+            return None
+        table, where = c["FROM"], c["WHERE"]
         config = self.configs.get(table) or self.offline_configs.get(table)
-        if config is None or not config.primary_key_columns:
+        sep = sqltext.search(sqltext.keyword("AND", "OR"), where, top_level=True)
+        pred = sqltext.strip(where if sep is None else where[: sep.start()])
+        m = self._INDEX_CALL_RE.match(pred)
+        if config is None or m is None:
+            return None
+        inner, end = sqltext.balanced(pred, m.end() - 1)
+        if end != len(pred):
+            return None
+        name = m.group(1).upper()
+        extra = [k for k in c if k not in ("SELECT", "FROM", "WHERE")]
+        if extra:
             raise ValueError(
-                f"TEXT_MATCH on {table!r}: the table must be registered "
-                "with primaryKeyColumns (the id the postings semi-join "
-                "keys on)"
+                f"{name} SQL form: {extra[0]} is not supported — the form "
+                f"is SELECT items FROM table WHERE {name}(...) [AND ...]"
             )
-        id_col = config.primary_key_columns[0]
-        out = self.text_match(
-            table, col, m.group("q").replace("''", "'"), id_col
+        if sqltext.search("OR", where, top_level=True):
+            raise ValueError(
+                f"{name} with a top-level OR in the WHERE clause is not "
+                f"supported: SQL precedence would let rows outside the "
+                f"{name} candidates qualify — parenthesize the disjunction "
+                "(AND (a OR b)) or restructure the query"
+            )
+        if not config.primary_key_columns:
+            raise ValueError(
+                f"{name} on {table!r}: the table must be registered with "
+                "primaryKeyColumns (the id the candidate semi-join keys on)"
+            )
+        args = [sqltext.strip(a) for a in sqltext.split(inner)]
+        out = self._index_candidates(
+            name, table, config.primary_key_columns[0], args
         )
-        residual = m.group("residual")
-        if residual:
-            if sqltext.search("OR", residual, top_level=True):
-                raise ValueError(
-                    "TEXT_MATCH with a top-level OR in the residual "
-                    "predicate is not supported: SQL precedence would let "
-                    "rows outside the text match qualify — parenthesize "
-                    "the disjunction (AND (a OR b)) or restructure the query"
-                )
-            out = out.where(F.expr(residual))
-        items = [i.strip() for i in sqltext.split(m.group("items"))]
-        if items == ["*"]:
-            return out
-        return out.selectExpr(*items)
+        if sep is not None:
+            out = out.where(F.expr(where[sep.end() :]))
+        items = [sqltext.strip(i) for i in sqltext.split(c["SELECT"])]
+        return out if items == ["*"] else out.selectExpr(*items)
 
-    _JSONMATCH_RE = re.compile(
-        r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<table>\w+)\s+WHERE\s+"
-        r"JSON_MATCH\(\s*(?P<col>\w+)\s*,\s*'(?P<q>(?:[^']|'')*)'\s*\)"
-        r"(?:\s+AND\s+(?P<residual>.+?))?\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
+    def _index_candidates(
+        self, name: str, table: str, id_col: str, args: list
+    ) -> DataFrame:
+        """The rows of ``table`` that the index predicate ``name(*args)``
+        selects (``args``: the call's argument texts)."""
+        arity = 3 if name == "VECTOR_SIMILARITY" else 2
+        if len(args) != arity:
+            raise ValueError(f"{name} takes {arity} arguments, got {len(args)}")
+        col = args[0]
+        if name == "VECTOR_SIMILARITY":
+            am = re.fullmatch(r"ARRAY\s*\[(.*)\]", args[1], re.IGNORECASE | re.DOTALL)
+            if am is None:
+                raise ValueError(
+                    f"VECTOR_SIMILARITY: the query vector must be ARRAY[...], "
+                    f"got {args[1]!r}"
+                )
+            vec = [float(v) for v in am.group(1).split(",")]
+            topk = self.vector_similarity(
+                table, col, vec, top_k=int(args[2]), id_col=id_col
+            )
+            return self._resolved_frame(table).join(
+                F.broadcast(topk.select(F.col("neighbor_id").alias(id_col))),
+                id_col,
+                "left_semi",
+            )
+        query = sqltext.string_value(args[1])
+        if query is None:
+            raise ValueError(
+                f"{name}: the second argument must be one single-quoted "
+                f"string, got {args[1]!r}"
+            )
+        if name == "TEXT_MATCH":
+            return self.text_match(table, col, query, id_col)
+        from .operators import jsonindex as _ji
+
+        return _ji.json_match_all(
+            self._resolved_frame(table), id_col, col,
+            self._parse_json_match_expr(query),
+        )
 
     _JM_PRED_RE = re.compile(
         r"^\s*\"(?P<path>\$[^\"]*)\"\s*"
@@ -2250,46 +2248,6 @@ class Engine:
                     raise ValueError(f"missing comparison value in {part!r}")
                 preds.append((m.group("path"), op, unq(val)))
         return preds
-
-    def _query_json_match(self, m: "re.Match") -> DataFrame:
-        """The SQL form of Pinot's JSON index predicate **[P1.2]**:
-        ``SELECT ... FROM t WHERE JSON_MATCH(col, '"$.a"=1 AND "$.b" IS
-        NOT NULL') [AND <residual>]`` — the filter string parses into the
-        conjunction operators/jsonindex.json_match_all evaluates (one
-        postings build, id-keyed semi/anti-joins), then residual conjuncts,
-        then the projection.  Same composition and top-level-OR rules as
-        the TEXT_MATCH / VECTOR_SIMILARITY SQL forms.
-        """
-        from .operators import jsonindex as _ji
-
-        table, col = m.group("table"), m.group("col")
-        config = self.configs.get(table) or self.offline_configs.get(table)
-        if config is None or not config.primary_key_columns:
-            raise ValueError(
-                f"JSON_MATCH on {table!r}: the table must be registered "
-                "with primaryKeyColumns (the id the postings semi-join "
-                "keys on)"
-            )
-        id_col = config.primary_key_columns[0]
-        preds = self._parse_json_match_expr(
-            m.group("q").replace("''", "'")
-        )
-        out = _ji.json_match_all(
-            self._resolved_frame(table), id_col, col, preds
-        )
-        residual = m.group("residual")
-        if residual:
-            if sqltext.search("OR", residual, top_level=True):
-                raise ValueError(
-                    "JSON_MATCH with a top-level OR in the residual "
-                    "predicate is not supported — parenthesize the "
-                    "disjunction (AND (a OR b)) or restructure the query"
-                )
-            out = out.where(F.expr(residual))
-        items = [i.strip() for i in sqltext.split(m.group("items"))]
-        if items == ["*"]:
-            return out
-        return out.selectExpr(*items)
 
     # Pinot query options **[P1.2]**: clients (the JDBC driver, the query
     # console) prefix statements with `SET key=value;` — e.g. SET
@@ -2490,58 +2448,46 @@ class Engine:
 
         # -- parse: SELECT GAPFILL(args) AS alias [, items] FROM src
         #           [WHERE cond] [ORDER BY ... / LIMIT ...]
-        gm = sqltext.search(self._GAPFILL_RE, inner)
-        args_str, pos = sqltext.balanced(inner, gm.end() - 1)
-        am = re.match(r"\s*AS\s+(\w+)\s*", inner[pos:], re.IGNORECASE)
+        c = sqltext.clauses(inner)
+        first, *items = (
+            [sqltext.strip(s) for s in sqltext.split(c["SELECT"])] if c else [""]
+        )
+        gm = re.match(r"GAPFILL\s*\(", first, re.IGNORECASE)
+        if gm is None:
+            raise ValueError(
+                "GAPFILL select: expected SELECT GAPFILL(...) AS <name> "
+                "[, items] FROM <source> [WHERE ...] [ORDER BY ... / LIMIT ...]"
+            )
+        args_str, pos = sqltext.balanced(first, gm.end() - 1)
+        am = re.fullmatch(r"\s*AS\s+(\w+)", first[pos:], re.IGNORECASE)
         if not am:
             raise ValueError("GAPFILL(...) must be aliased: GAPFILL(...) AS <name>")
         alias = am.group(1)
-        pos += am.end()
-        fm = sqltext.search("FROM", inner, pos, top_level=True)
-        if fm is None:
-            raise ValueError("GAPFILL select: missing FROM clause")
-        from_idx = fm.start()
-        rest = inner[pos:from_idx].strip()
-        items = (
-            [s.strip() for s in sqltext.split(rest.lstrip(","))]
-            if rest.lstrip(",").strip()
-            else []
-        )
-        src = inner[from_idx + 4 :].strip()
+        src = c["FROM"]
         if src.startswith("("):
-            sub, sub_end = sqltext.balanced(src, 0)
+            sub, src_end = sqltext.balanced(src, 0)
             src_df = self.spark.sql(sub)
-            tail = src[sub_end:]
         else:
-            tm = re.match(r"(\w+)", src)
+            tm = re.match(r"\w+", src)
             if not tm:
                 raise ValueError(f"GAPFILL select: unreadable source {src!r}")
-            src_df = self.spark.table(tm.group(1))
-            tail = src[tm.end() :]
+            src_df = self.spark.table(tm.group())
+            src_end = tm.end()
         # WHERE filters the source BEFORE filling (Pinot's gapfill select
         # semantics); ORDER BY / LIMIT apply to the FILLED result.  Anything
-        # else trailing the source is an error, never silently dropped.
-        where, post = None, ""
-        wm = sqltext.search("WHERE", tail, top_level=True)
-        w_idx = -1 if wm is None else wm.start()
-        pm = sqltext.search(
-            sqltext.keyword("ORDER", "LIMIT"), tail, top_level=True
+        # else after the source is an error, never silently dropped.
+        leading = src[src_end:].strip() or (
+            f"GROUP BY {c['GROUP BY']}" if "GROUP BY" in c else ""
         )
-        post_idx = -1 if pm is None else pm.start()
-        if w_idx >= 0:
-            cond_end = post_idx if post_idx > w_idx else len(tail)
-            where = tail[w_idx + 5 : cond_end].strip()
-            leading = tail[:w_idx].strip()
-        else:
-            leading = tail[:post_idx].strip() if post_idx >= 0 else tail.strip()
-        if post_idx >= 0:
-            post = tail[post_idx:].strip()
         if leading:
             raise ValueError(
                 f"GAPFILL select: unsupported clause after the source: {leading!r}"
             )
-        if where:
-            src_df = src_df.where(where)
+        if "WHERE" in c:
+            src_df = src_df.where(c["WHERE"])
+        post = " ".join(
+            f"{k} {c[k]}" for k in ("ORDER BY", "LIMIT", "OFFSET") if k in c
+        )
 
         # -- GAPFILL arguments
         args = [a.strip() for a in sqltext.split(args_str)]
@@ -2683,9 +2629,14 @@ class Engine:
         ``EXPLAIN PLAN FOR <sql>`` is routed to :meth:`explain_plan`, same
         as the Pinot broker **[P1.2]** — the result is the operator tree as
         a table, so BI tools can introspect plans over the same endpoint.
-        ``WHERE VECTOR_SIMILARITY(col, ARRAY[...], k)`` (Pinot 1.2's vector
-        predicate, a function Spark SQL lacks) is resolved through
-        :meth:`_query_vector_similarity`.  Leading Pinot ``SET key=value;``
+        The index-backed predicates Spark SQL lacks, ``WHERE
+        VECTOR_SIMILARITY(col, ARRAY[...], k)``, ``WHERE TEXT_MATCH(col,
+        'query')`` and ``WHERE JSON_MATCH(col, 'filter')`` **[P1.2]**, each
+        optionally ``AND <residual>``, are served by one handler,
+        :meth:`_query_index_predicate`; it reads the statement through
+        the clause splitter :func:`sqltext.clauses` (comments and
+        literals opaque), which the star-tree route
+        (:meth:`query_routed`) and GAPFILL use too.  Leading Pinot ``SET key=value;``
         query options **[P1.2]** (what the Pinot JDBC driver and console
         prefix statements with) and the legacy trailing ``OPTION(k=v, ...)``
         form parse and strip; ``useStarTree=false`` disables star-tree
@@ -2859,21 +2810,10 @@ class Engine:
             return self._sql_without_union_pushdown(sql)
         if sqltext.search(self._VIRTUAL_COL_RE, sql):
             return self._query_virtual_columns(sql)
-        vm = self._VECSIM_RE.match(sql)
-        if vm:
-            return self._query_vector_similarity(vm)
-        tm = self._TEXTMATCH_RE.match(sql)
-        if tm and (
-            tm.group("table") in self.configs
-            or tm.group("table") in self.offline_configs
-        ):
-            return self._query_text_match(tm)
-        jm = self._JSONMATCH_RE.match(sql)
-        if jm and (
-            jm.group("table") in self.configs
-            or jm.group("table") in self.offline_configs
-        ):
-            return self._query_json_match(jm)
+        if self._INDEX_CALL_RE.search(sql):
+            df = self._query_index_predicate(sql)
+            if df is not None:
+                return df
         return self.spark.sql(self._apply_ts_index_rewrite(sql))
 
     _CLPDECODE_SUGAR_RE = re.compile(

@@ -1,6 +1,6 @@
 """Column builders for Pinot functions whose arguments are plan-time specs.
 
-These parse the Pinot-style literal arguments (format specs, result types) in
+These parse the Pinot-style literal arguments (format specs) in
 Python at plan-build time and emit pure built-in Catalyst expressions — the
 executed plan contains no Python.
 """
@@ -68,26 +68,6 @@ def datetimeconvert(col: Column, input_format: str, output_format: str, granular
     if kind == "TIMESTAMP":
         return F.timestamp_millis(truncated)
     raise ValueError(f"unsupported output format kind {kind!r}")
-
-
-# ---------------------------------------------------------------------------
-# JSON_MATCH(col, '"$.path" op val')  [B14]
-# ---------------------------------------------------------------------------
-
-
-def json_match(col: Column, json_path: str, op: str, value) -> Column:
-    """Pinot JSON_MATCH(col, '"$.path" op val') predicate analog (B14)."""
-    lhs = F.get_json_object(col, json_path)
-    ops = {
-        "=": lhs == value,
-        "!=": lhs != value,
-        "<>": lhs != value,
-        ">": lhs.cast("double") > value,
-        ">=": lhs.cast("double") >= value,
-        "<": lhs.cast("double") < value,
-        "<=": lhs.cast("double") <= value,
-    }
-    return ops[op]
 
 
 # ---------------------------------------------------------------------------

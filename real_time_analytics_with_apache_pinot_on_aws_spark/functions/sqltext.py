@@ -3,9 +3,11 @@
 Every text-level pass over a statement asks the same question before it
 reads a character: is this code, or is it inside a literal or a comment?
 The passes are the Pinot call-site rewrites and the statement routes
-(functions/aggsql.py), and the engine's option, LOOKUP, GAPFILL,
-JSON_MATCH, table-reference and group-by scans.  This module is the only
-place that answers the question.  The rules:
+(functions/aggsql.py), and the engine's option, LOOKUP, table-reference,
+virtual-column and group-by scans.  The engine's own SQL forms (the
+star-tree route, GAPFILL and the VECTOR_SIMILARITY / TEXT_MATCH /
+JSON_MATCH predicates) read their statement through :func:`clauses`.
+This module is the only place that answers the question.  The rules:
 
 - ``'...'`` and ``"..."`` are string literals.  This is Spark's default
   dialect, where a double quote delimits a string, not an identifier.  A
@@ -39,8 +41,10 @@ The primitives: :func:`skip` steps over one opaque span, :func:`spans`
 lists them, :func:`balanced` reads a bracket group, :func:`split` cuts at
 top-level separators, :func:`search`/:func:`finditer` find patterns that
 start in code (optionally at depth 0), :func:`calls` lists ``name(``
-call sites, :func:`subquery_spans` lists ``(SELECT ...)`` groups, and
-:func:`skip_space`/:func:`code_end` trim leading and trailing comments.
+call sites, :func:`subquery_spans` lists ``(SELECT ...)`` groups,
+:func:`skip_space`/:func:`code_end`/:func:`strip` trim leading and
+trailing comments, and :func:`clauses` splits a plain SELECT statement
+into its top-level clauses.
 """
 
 from __future__ import annotations
@@ -130,6 +134,12 @@ def code_end(sql: str) -> int:
     if sql[pos:].strip():
         end = pos + len(sql[pos:].rstrip())
     return end
+
+
+def strip(text: str) -> str:
+    """``text`` without the whitespace and comments that lead or trail
+    it."""
+    return text[skip_space(text) : code_end(text)]
 
 
 def string_value(text: str) -> str | None:
@@ -239,3 +249,39 @@ def subquery_spans(sql: str) -> list[tuple[int, int]]:
         if not out or m.start() >= out[-1][1]:
             out.append((m.start(), balanced(sql, m.start())[1]))
     return out
+
+
+# the clauses :func:`clauses` reads, in the order a statement holds them
+_CLAUSES = ("SELECT", "FROM", "WHERE", "GROUP BY", "ORDER BY", "LIMIT", "OFFSET")
+# ...the top-level keywords that make a statement some other shape, and
+# the operator ``IS [NOT] DISTINCT FROM``, whose FROM starts no clause
+_CLAUSE_RE = keyword(
+    *_CLAUSES, "HAVING", "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS",
+    "CLUSTER BY", "DISTRIBUTE BY", "SORT BY", "DISTINCT FROM",
+)
+
+
+def clauses(sql: str) -> dict[str, str] | None:
+    """The top-level clauses of ``SELECT items FROM source [WHERE cond]
+    [GROUP BY items] [ORDER BY ...] [LIMIT n] [OFFSET n]`` as ``{keyword:
+    text}`` in statement order: the keyword upper-cased with single
+    spaces, the text without its surrounding whitespace and comments.  A
+    trailing ``;`` and the comments around it are dropped.  None for any
+    other shape: a statement that does not start with SELECT, no FROM,
+    a clause that is empty, repeated or out of order, or another
+    top-level clause (HAVING, UNION, ...)."""
+    body = sql[: code_end(sql)]
+    if body.endswith(";"):
+        body = body[: code_end(body[:-1])]
+    start = skip_space(body)
+    marks = [
+        (name, m.start(), m.end())
+        for m in finditer(_CLAUSE_RE, body, start, top_level=True)
+        if (name := " ".join(m.group().upper().split())) != "DISTINCT FROM"
+    ]
+    ranks = [_CLAUSES.index(n) if n in _CLAUSES else -1 for n, _, _ in marks]
+    if ranks[:2] != [0, 1] or marks[0][1] != start or ranks != sorted(set(ranks)):
+        return None
+    ends = [s for _, s, _ in marks[1:]] + [len(body)]
+    out = {n: strip(body[e:end]) for (n, _, e), end in zip(marks, ends)}
+    return out if all(out.values()) else None

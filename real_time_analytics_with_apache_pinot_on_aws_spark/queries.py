@@ -28,7 +28,6 @@ from pyspark.sql import Window as W
 
 from . import catalog
 from . import functions as pfn
-from .functions import aggs as A
 from .functions import helpers as H
 
 Builder = Callable[[SparkSession, str], DataFrame]
@@ -321,8 +320,8 @@ def b20_distinctcounthll(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     ev = spark.table("events")
     agg = ev.groupBy("event_type").agg(
-        A.distinctcounthll(F.col("user_id")).alias("hll_users"),
-        A.distinctcount(F.col("user_id")).alias("exact_users"),
+        F.approx_count_distinct(F.col("user_id"), 0.05).alias("hll_users"),
+        F.countDistinct(F.col("user_id")).alias("exact_users"),
     )
     return agg.select(
         "event_type",
@@ -372,8 +371,12 @@ def b22_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     li = spark.table("lineitem").select("l_returnflag", "l_extendedprice")
     est = li.groupBy("l_returnflag").agg(
-        A.percentile_approx(F.col("l_extendedprice"), 50).alias("p50_est"),
-        A.percentile_approx(F.col("l_extendedprice"), 99).alias("p99_est"),
+        F.percentile_approx(
+            F.col("l_extendedprice"), F.lit(0.5), F.lit(10000)
+        ).alias("p50_est"),
+        F.percentile_approx(
+            F.col("l_extendedprice"), F.lit(0.99), F.lit(10000)
+        ).alias("p99_est"),
     )
     # Rank check: estimates broadcast back over the scan (group-count rows),
     # margin = 10x the sketch's n/accuracy bound + 1 for rank-rounding.

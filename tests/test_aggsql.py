@@ -5157,6 +5157,62 @@ def test_sqltext_is_the_only_quote_and_comment_scanner():
     assert found == []
 
 
+def test_engine_has_no_whole_statement_regex():
+    """The engine reads the shape of a statement through
+    ``sqltext.clauses``, never with a regex anchored on a whole
+    ``SELECT ... FROM`` statement, which reads comments and literals as
+    code."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import real_time_analytics_with_apache_pinot_on_aws_spark as pkg
+
+    path = Path(pkg.__file__).parent / "engine.py"
+    anchored = re.compile(r"\^\\s\*SELECT", re.IGNORECASE)
+    found = [
+        ast.unparse(node)
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and ast.unparse(node.func) == "re.compile"
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and isinstance(node.args[0].value, str)
+        and anchored.search(node.args[0].value)
+    ]
+    assert found == []
+
+
+def test_sqltext_clauses():
+    """The clause splitter reads one plain SELECT at depth 0, with
+    comments, literals and nested groups opaque, and rejects every other
+    top-level shape."""
+    assert sqltext.clauses(
+        "/* a */ SELECT a, 'FROM x' AS b FROM t -- it's t\n"
+        "WHERE k IN (SELECT k FROM u WHERE v) AND c = 'd' "
+        "GROUP BY a ORDER BY a LIMIT 3 ; -- done"
+    ) == {
+        "SELECT": "a, 'FROM x' AS b",
+        "FROM": "t",
+        "WHERE": "k IN (SELECT k FROM u WHERE v) AND c = 'd'",
+        "GROUP BY": "a",
+        "ORDER BY": "a",
+        "LIMIT": "3",
+    }
+    assert sqltext.clauses("SELECT a FROM t WHERE a IS NOT DISTINCT FROM b") == {
+        "SELECT": "a", "FROM": "t", "WHERE": "a IS NOT DISTINCT FROM b"
+    }
+    for other in (
+        "SELECT a FROM t GROUP BY a HAVING count(*) > 1",
+        "SELECT a FROM t UNION SELECT a FROM u",
+        "SELECT a FROM t GROUP BY a WHERE a > 1",
+        "SELECT a FROM t WHERE",
+        "WITH w AS (SELECT 1) SELECT * FROM w",
+        "SELECT 1",
+    ):
+        assert sqltext.clauses(other) is None, other
+
+
 def test_sqltext_backticks_and_nested_comments_are_opaque():
     """A backtick-quoted identifier is one opaque span (a doubled backtick
     escapes one), and ``/* */`` comments nest, as Spark lexes both."""

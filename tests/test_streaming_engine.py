@@ -1712,6 +1712,14 @@ def test_query_routed_parser_hardening(spark, tmp_path):
         "SELECT campaign, count(price) AS n FROM routeHard "
         "WHERE campaign IN ('it''s') GROUP BY campaign")
     assert route4 == "sql"
+
+    # 3) comments are not code: a commented statement keeps its route
+    commented = ("SELECT campaign, sum(price) AS t FROM routeHard /* it's */ "
+                 "GROUP BY campaign -- per campaign")
+    routed5, route5 = engine.query_routed(commented)
+    assert route5 == "rollup:startree"
+    assert sorted(map(tuple, routed5.select("campaign", "t").collect())) == \
+           sorted(map(tuple, engine.query(commented).collect()))
     pipe.stop()
 
 
@@ -1949,6 +1957,12 @@ def test_vector_similarity_sql_form(spark, tmp_path):
     )
     ids = {r["vec_id"] for r in out.collect()}
     assert len(ids) == 3 and 0 in ids  # vec 0 == the query direction
+    # comments around the clauses are not part of the form
+    commented = engine.query(
+        "SELECT vec_id, embedding FROM vecSql -- nearest three\n"
+        "WHERE VECTOR_SIMILARITY(embedding, ARRAY[1.0, 0.0, 1.0], 3) /* k */"
+    )
+    assert {r["vec_id"] for r in commented.collect()} == ids
 
     # through the broker envelope too (the wire path)
     resp = engine.query_broker_response(
@@ -2421,6 +2435,11 @@ def test_sql_gapfill_tail_clauses_and_literal_safety(spark, tmp_path):
     assert len(limited) == 3
     ordered = engine.query(base + " ORDER BY rev DESC LIMIT 1").collect()
     assert len(ordered) == 1 and ordered[0]["rev"] == 50
+    # a comment after the source is not a clause
+    commented = engine.query(
+        base + " /* top hour */ ORDER BY rev DESC LIMIT 1 -- one"
+    ).collect()
+    assert commented == ordered
     # a string literal containing the trigger text is untouched
     lit = engine.query("SELECT 'SELECT GAPFILL(x' AS s").collect()[0]["s"]
     assert lit == "SELECT GAPFILL(x"
@@ -3604,6 +3623,16 @@ def test_text_match_sql_form(spark, tmp_path):
             "WHERE TEXT_MATCH(campaign, 'blackfridays')"
         )
         assert out.count() == 10 and out.columns == ["userID", "price"]
+        # comments are not code: the commented forms give the same answer
+        for commented in (
+            "SELECT userID, price FROM textTable "
+            "WHERE TEXT_MATCH(campaign, 'blackfridays') -- c",
+            "SELECT userID, price FROM textTable /* c */ "
+            "WHERE TEXT_MATCH(campaign, 'blackfridays')",
+        ):
+            assert engine.query(commented).count() == 10
+            resp = engine.query_broker_response(commented)
+            assert resp["exceptions"] == [] and resp["numRowsResultSet"] == 10
         # residual conjunct applies AFTER the text match
         n = engine.query(
             "SELECT userID FROM textTable "
@@ -3621,6 +3650,12 @@ def test_text_match_sql_form(spark, tmp_path):
             engine.query(
                 "SELECT userID FROM textTable WHERE "
                 "TEXT_MATCH(campaign, 'blackfridays') AND price > 20 OR price < 5"
+            )
+        # a clause after the WHERE is named, not left to Spark's parser
+        with _pytest.raises(ValueError, match="LIMIT is not supported"):
+            engine.query(
+                "SELECT userID FROM textTable "
+                "WHERE TEXT_MATCH(campaign, 'blackfridays') LIMIT 3"
             )
         # broker envelope round trip
         resp = engine.query_broker_response(
@@ -3683,6 +3718,11 @@ def test_json_match_sql_form(spark, tmp_path):
         got = {r["userID"] for r in out.collect()}
         want = {f"u{i}" for i in range(12) if i % 6 and i % 3 == 1}
         assert got == want
+        commented = engine.query(
+            "SELECT userID FROM jsonTable "
+            "WHERE JSON_MATCH(payload, '\"$.name.first\" = ''n1''') -- it's n1"
+        )
+        assert {r["userID"] for r in commented.collect()} == want
         # conjunction + numeric range + residual conjunct
         n = engine.query(
             "SELECT userID FROM jsonTable WHERE JSON_MATCH(payload, "

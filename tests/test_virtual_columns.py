@@ -117,9 +117,27 @@ def test_select_star_with_virtual_rejected_and_unknown_table_rejected(
     engine = _engine_with_data(spark, tmp_path, n=10)
     with pytest.raises(ValueError, match="SELECT \\*"):
         engine.query("SELECT *, $docId FROM kinesisTable")
+    with pytest.raises(ValueError, match="SELECT \\*"):
+        engine.query("SELECT t.*, $docId FROM kinesisTable t")
     spark.range(3).createOrReplaceTempView("plainview")
     with pytest.raises(ValueError, match="engine tables"):
         engine.query("SELECT $docId FROM plainview")
+
+
+def test_virtual_columns_leave_literals_and_quoted_names_alone(spark, tmp_path):
+    """Only the ``$x`` tokens in code are virtual columns: a string literal
+    keeps its text, an already backticked name is not quoted twice, and a
+    ``*`` inside a literal is not a star projection."""
+    engine = _engine_with_data(spark, tmp_path, n=3)
+    row = engine.query(
+        "SELECT $docId AS d, 'cost $docId' AS s, `$docId` AS e "
+        "FROM kinesisTable LIMIT 1"
+    ).collect()[0]
+    assert row["s"] == "cost $docId" and row["e"] == row["d"]
+    row = engine.query(
+        "SELECT $docId AS d, 'a, *' AS s FROM kinesisTable LIMIT 1"
+    ).collect()[0]
+    assert row["s"] == "a, *"
 
 
 def test_virtual_columns_through_broker_envelope(spark, tmp_path):
