@@ -22,6 +22,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .functions import sqlfns
+
 DEFAULT_PORT = 10000
 
 
@@ -41,6 +43,10 @@ def start_thrift_server(spark: SparkSession, port: int = DEFAULT_PORT, metastore
             "javax.jdo.option.ConnectionURL",
             f"jdbc:derby:;databaseName={metastore_dir}/metastore_db;create=true",
         )
+    # a BI client's SQL reaches Spark without passing through the engine,
+    # so no statement registers the Pinot functions it calls: register all
+    # of them (a singleSession server shares them with its clients)
+    sqlfns.register_all(spark)
     jvm = spark._jvm
     return jvm.org.apache.spark.sql.hive.thriftserver.HiveThriftServer2.startWithContext(
         spark._jsparkSession.sqlContext()

@@ -27,12 +27,12 @@ import threading
 from dataclasses import dataclass
 from pathlib import Path
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs as _fs
-from . import functions as pfn
-from .functions import aggsql, sqltext
+from .functions import aggsql, sqlfns, sqltext
 from .schema import TableSchema, parse_schema
 from .streaming.ingest import IngestPipeline, RawRecordSource
 from .operators.dedup import cache_scope, lifecycle_cache
@@ -392,43 +392,29 @@ class Engine:
         # share one) — the null-semantics query rewrite reads field specs
         # (type/class/defaultNullValue) from here
         self.table_schemas: dict[str, TableSchema] = {}
-        # session-catalog function classNames (lazy, cached) — backs the
-        # statement routes' is_aggregate fail-safe (_is_catalog_aggregate
-        # below).
-        self._catalog_fn_classes: dict | None = None
-        pfn.register_all(spark)
+        # No catalog work here: each Pinot scalar (functions/sqlfns.py) is
+        # registered on the session the first time a statement names it
+        # (query() entry, and the text the engine's own rewrites emit).
 
     def _catalog_class(self, u: str) -> str | None:
-        """className of the catalog function named ``u`` (upper-cased),
-        or None when the catalog does not know it.  Unseen names refresh
-        the cache once; the refresh MERGES (round-8 review: replacing
-        the dict made two co-occurring unknown names re-enumerate the
-        catalog on every call, each rebuild discarding the other's
-        cached miss)."""
-        if (
-            self._catalog_fn_classes is None
-            or u not in self._catalog_fn_classes
-        ):
-            fresh = {
-                f.name.upper(): (f.className or "")
-                for f in self.spark.catalog.listFunctions()
-            }
-            if self._catalog_fn_classes:
-                for k, v in self._catalog_fn_classes.items():
-                    fresh.setdefault(k, v)
-            # cache the miss: one refresh per unseen name, not per call
-            fresh.setdefault(u, None)
-            self._catalog_fn_classes = fresh
-        return self._catalog_fn_classes.get(u)
+        """className of the catalog function named ``u``, or None when the
+        catalog does not know it.  A point lookup, never cached: a cached
+        answer would go stale when a function is registered or dropped
+        after it (a Pinot scalar is registered on first use)."""
+        sqlfns.register(self.spark, u)
+        try:
+            return self.spark.catalog.getFunction(u).className or ""
+        except AnalysisException:  # unknown or unparseable name
+            return None
 
     def _catalog_has_function(self, name: str) -> bool:
         """Live-catalog keep-native guard for the underscore
         canonicalization: a name the session catalog RESOLVES (builtin,
         macro, or runtime-registered UDF) keeps its native meaning —
         e.g. a user UDF ``fast_hll`` is never silently rewritten into
-        the FASTHLL estimate (round-8 review).  A POINT lookup, not the
-        miss cache: a stale cached miss would shadow a UDF registered
-        AFTER it (and a stale hit would outlive a DROP FUNCTION) — and
+        the FASTHLL estimate (round-8 review).  A POINT lookup, never
+        cached: a stale cached miss would shadow a UDF registered AFTER
+        it (and a stale hit would outlive a DROP FUNCTION) — and
         the canonicalizer only consults this for the rare underscored
         names whose stripped twin is a rewrite key (~6 ms each), so
         freshness costs nothing measurable."""
@@ -453,12 +439,9 @@ class Engine:
         are positively-known per-row expressions deliberately absent
         from the catalog — round-8 review: without this short-circuit
         the fail-safe bailed every routable statement that merely
-        mentioned one.  Unseen names refresh the cache once (functions
-        may be registered after the first query), then the MISS is
-        cached too (round-8 review: it previously re-enumerated the
-        whole catalog on every call) and fails safe to True — a UDF
-        registered after its miss was cached stays classified as an
-        aggregate, the safe direction."""
+        mentioned one.  Every call asks the live catalog
+        (:meth:`_catalog_class`), so a function registered after an
+        earlier miss is classified by what it is."""
         u = name.upper()
         if u in aggsql.SCALAR_REWRITE_NAMES:
             return False
@@ -1994,7 +1977,23 @@ class Engine:
         return out.withColumn("rank", F.row_number().over(w))
 
     _VIRTUAL_COL_RE = re.compile(r"\$(docId|segmentName|hostName)\b")
-    _BARE_STAR_RE = re.compile(r"(?:SELECT|,)\s*(?:\w+\s*\.\s*)?\*", re.IGNORECASE)
+    _STAR_ITEM_RE = re.compile(r"(?:\w+\s*\.\s*)?\*")
+    _SET_QUANTIFIER_RE = re.compile(r"(?:DISTINCT|ALL)\b", re.IGNORECASE)
+
+    @classmethod
+    def _selects_star(cls, sql: str) -> bool:
+        """Whether any SELECT list in ``sql``, at any depth, has a ``*`` or
+        ``t.*`` item.  Each list runs from its SELECT to the FROM at its
+        own depth, and the lexer cuts it, so comments hide nothing."""
+        for m in sqltext.finditer("SELECT", sql):
+            f = sqltext.search("FROM", sql, m.end(), top_level=True)
+            for item in sqltext.split(sql[m.end() : f.start() if f else None]):
+                text = sqltext.strip(item)
+                if q := cls._SET_QUANTIFIER_RE.match(text):
+                    text = sqltext.strip(text[q.end() :])
+                if cls._STAR_ITEM_RE.fullmatch(text):
+                    return True
+        return False
 
     def _query_virtual_columns(self, sql: str) -> DataFrame:
         """Pinot's built-in virtual columns **[P1.2]**: every table exposes
@@ -2017,7 +2016,7 @@ class Engine:
         exist only on ENGINE tables (Pinot serves them per segment); a
         reference to a plain temp view raises.
         """
-        if sqltext.search(self._BARE_STAR_RE, sql):
+        if self._selects_star(sql):
             raise ValueError(
                 "virtual columns ($docId/$segmentName/$hostName) cannot be "
                 "combined with SELECT * here: Pinot excludes them from * "
@@ -2104,8 +2103,8 @@ class Engine:
         makes ``P AND a=1 OR b=2`` mean ``(P AND a=1) OR b=2``, so rows
         outside the candidates would qualify, which this composition
         cannot express.  A parenthesized OR (``AND (a=1 OR b=2)``) binds
-        inside its conjunct and is fine.  GROUP BY, ORDER BY, LIMIT and
-        OFFSET are rejected too.
+        inside its conjunct and is fine.  ORDER BY, LIMIT and OFFSET apply
+        to the projected candidates; GROUP BY is rejected.
         """
         c = sqltext.clauses(sql)
         if c is None or "WHERE" not in c:
@@ -2121,11 +2120,11 @@ class Engine:
         if end != len(pred):
             return None
         name = m.group(1).upper()
-        extra = [k for k in c if k not in ("SELECT", "FROM", "WHERE")]
-        if extra:
+        if "GROUP BY" in c:
             raise ValueError(
-                f"{name} SQL form: {extra[0]} is not supported — the form "
-                f"is SELECT items FROM table WHERE {name}(...) [AND ...]"
+                f"{name} SQL form: GROUP BY is not supported — the form is "
+                f"SELECT items FROM table WHERE {name}(...) [AND ...] "
+                "[ORDER BY ...] [LIMIT n] [OFFSET m]"
             )
         if sqltext.search("OR", where, top_level=True):
             raise ValueError(
@@ -2140,13 +2139,24 @@ class Engine:
                 "primaryKeyColumns (the id the candidate semi-join keys on)"
             )
         args = [sqltext.strip(a) for a in sqltext.split(inner)]
-        out = self._index_candidates(
+        candidates = self._index_candidates(
             name, table, config.primary_key_columns[0], args
         )
+        # the rest of the statement runs over the candidates, under the
+        # table's name; analysis is eager, so the view can drop as soon as
+        # the frame is resolved
+        import uuid
+
+        view = f"__index_{uuid.uuid4().hex[:12]}"
+        rest = [f"SELECT {c['SELECT']}", f"FROM {view} {table}"]
         if sep is not None:
-            out = out.where(F.expr(where[sep.end() :]))
-        items = [sqltext.strip(i) for i in sqltext.split(c["SELECT"])]
-        return out if items == ["*"] else out.selectExpr(*items)
+            rest.append(f"WHERE {where[sep.end() :]}")
+        rest += [f"{k} {c[k]}" for k in ("ORDER BY", "LIMIT", "OFFSET") if k in c]
+        candidates.createOrReplaceTempView(view)
+        try:
+            return self.spark.sql("\n".join(rest))
+        finally:
+            self.spark.catalog.dropTempView(view)
 
     def _index_candidates(
         self, name: str, table: str, id_col: str, args: list
@@ -2675,6 +2685,9 @@ class Engine:
             return self.explain_plan(
                 inner, logical=m.group("logical") is not None
             )
+        # the Pinot scalars the statement calls are registered before any
+        # rewrite or route below consults the catalog
+        sqlfns.register_calls(self.spark, sql)
         if str(_opts.get("skipUpsert", "false")).lower() == "true":
             sql = self._apply_skip_upsert_rewrite(sql)
         if str(_opts.get("enableNullHandling", "true")).lower() == "false":
@@ -2711,6 +2724,16 @@ class Engine:
         sql = canonicalize_pinot_spellings(
             sql, keep_native=self._catalog_has_function
         )
+
+        def rewrite(text: str) -> str:
+            out = rewrite_pinot_aggregates(
+                text, keep_native=self._catalog_has_function
+            )
+            if out != text:
+                # a rewrite may emit a Pinot scalar the statement does not
+                # name (the 3-argument JSONPATHLONG reads JSONPATHSTRING)
+                sqlfns.register_calls(self.spark, out)
+            return out
 
         # FROM/JOIN-position WITH-CTEs inline to the derived-table
         # relation shape the routes admit (round 9 single-use, round 10
@@ -2773,17 +2796,13 @@ class Engine:
         if routed_mv is not None:
             # loud arity/shape ValueErrors from the rewrite must surface,
             # so only the ANALYSIS is inside the try
-            probed = rewrite_pinot_aggregates(
-                routed_mv, keep_native=self._catalog_has_function
-            )
+            probed = rewrite(routed_mv)
             try:
                 self.spark.sql(probed)  # analysis only, no execution
                 sql = probed  # reuse the probed text: one rewrite, not two
             except Exception as probe_exc:
                 try:
-                    sql = rewrite_pinot_aggregates(
-                        sql, keep_native=self._catalog_has_function
-                    )
+                    sql = rewrite(sql)
                 except ValueError as fallback_err:
                     # the fallback is an unconditional loud REJECT
                     # (sumarray / mode-avg): the statement's shape DID
@@ -2795,9 +2814,7 @@ class Engine:
                     # route engaged or what the manual recipe is)
                     raise probe_exc from fallback_err
         else:
-            sql = rewrite_pinot_aggregates(
-                sql, keep_native=self._catalog_has_function
-            )
+            sql = rewrite(sql)
         has_lookup = False
         if self._LOOKUP_RE.search(sql):
             rewritten = self._rewrite_lookup_calls(sql)
@@ -2851,7 +2868,10 @@ class Engine:
             lt, dv, ev = (f"{q}{c}" for c in _clp_column_names(col))
             return f"CLPDECODE({lt}, {dv}, {ev})"
 
-        return self._CLPDECODE_SUGAR_RE.sub(repl, sql)
+        out = self._CLPDECODE_SUGAR_RE.sub(repl, sql)
+        if out != sql:
+            sqlfns.register(self.spark, "CLPDECODE")
+        return out
 
     def _apply_skip_upsert_rewrite(self, sql: str) -> str:
         """Pinot ``skipUpsert=true`` **[P1.2]**: serve the raw append-only

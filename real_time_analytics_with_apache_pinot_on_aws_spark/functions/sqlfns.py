@@ -5,6 +5,12 @@ RETURNS <type> RETURN <body>``.  Spark 4 SQL UDFs are inlined by Catalyst at
 analysis time, so every one of these optimizes and codegens exactly like the
 built-in expression in its body — the Pinot spelling is free.
 
+A function is registered on first use, not up front: :func:`register_calls`
+registers the ones a SQL text calls, :func:`register` the ones named.  Each
+name is created at most once per session (a ``spark.newSession()`` has its
+own temporary-function catalog), under one lock; the functions its body
+calls are created first.  :func:`register_all` registers every one.
+
 Pinot semantics anchors are public Apache Pinot 1.2 docs (SURVEY §2 [P1.2]);
 the reference deployment pins that version at
 resources/bastion/bastionUserData.sh:7.
@@ -12,9 +18,13 @@ resources/bastion/bastionUserData.sh:7.
 
 from __future__ import annotations
 
+import threading
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 from ..operators.clp import CLPDECODE_SQL_BODY as _CLPDECODE_SQL_BODY
+from . import sqltext
 
 # dotted-quad IPv4 -> bigint, as a reusable SQL fragment
 IP2LONG = ("aggregate(split({0}, '\\\\.'), cast(0 as bigint), "
@@ -415,10 +425,6 @@ _FUNCTIONS: tuple[tuple[str, str, str, str], ...] = (
     # overloading SQL UDFs lack — out of scope.
     ("REGEXPREPLACE", "s STRING, p STRING, r STRING", "STRING",
      "regexp_replace(s, p, r)"),
-    ("ARRAYCONCATINT", "a ARRAY<INT>, b ARRAY<INT>", "ARRAY<INT>",
-     "concat(a, b)"),
-    ("ARRAYCONCATSTRING", "a ARRAY<STRING>, b ARRAY<STRING>", "ARRAY<STRING>",
-     "concat(a, b)"),
     ("TOJSONMAPSTR", "m MAP<STRING, STRING>", "STRING", "to_json(m)"),
     # ---- URL / misc (B56) -----------------------------------------------
     ("ENCODEURL", "s STRING", "STRING", "url_encode(s)"),
@@ -590,18 +596,62 @@ _FUNCTIONS: tuple[tuple[str, str, str, str], ...] = (
 )
 
 
+# name -> (signature, return type, body)
+_BY_NAME = {name: (sig, ret, body) for name, sig, ret, body in _FUNCTIONS}
+# the Pinot functions each body calls: CREATE FUNCTION resolves its body,
+# so they must exist first (a body calling its own name means the builtin)
+_DEPS = {
+    name: tuple(dict.fromkeys(
+        u for c, _, _ in sqltext.calls(body)
+        if (u := c.upper()) in _BY_NAME and u != name
+    ))
+    for name, (_, _, body) in _BY_NAME.items()
+}
+_LOCK = threading.Lock()
+
+
+def _create(spark: SparkSession, done: dict[str, bool], name: str) -> None:
+    """Create ``name`` (its body's Pinot functions first) unless ``done``
+    has it; record True, or False when Spark refuses to shadow a builtin
+    of that name.  Caller holds :data:`_LOCK`."""
+    if name in done:
+        return
+    for dep in _DEPS[name]:
+        _create(spark, done, dep)
+    sig, ret, body = _BY_NAME[name]
+    try:
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) RETURNS {ret} RETURN {body}"
+        )
+        done[name] = True
+    except AnalysisException as exc:  # builtin-shadowing refusal
+        if "CANNOT_REPLACE_NON_SQL_UDF" not in str(exc):
+            raise
+        done[name] = False
+
+
+def register(spark: SparkSession, *names: str) -> None:
+    """Register the Pinot functions among ``names`` (any case; other names
+    are ignored) on ``spark``, each at most once per session."""
+    done = getattr(spark, "_pinot_fns", {})
+    todo = [u for n in names if (u := n.upper()) in _BY_NAME and u not in done]
+    if not todo:
+        return
+    with _LOCK:
+        done = spark.__dict__.setdefault("_pinot_fns", {})
+        for name in todo:
+            _create(spark, done, name)
+
+
+def register_calls(spark: SparkSession, sql: str) -> None:
+    """Register the Pinot functions that ``sql`` calls (call sites in code:
+    literals and comments name nothing)."""
+    register(spark, *(name for name, _, _ in sqltext.calls(sql)))
+
+
 def register_all(spark: SparkSession) -> list[str]:
-    """Register all Pinot-named SQL UDFs; returns names skipped because Spark
-    already ships a builtin of that name (identical semantics by our audit)."""
-    skipped: list[str] = []
-    for name, sig, ret, body in _FUNCTIONS:
-        try:
-            spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) RETURNS {ret} RETURN {body}"
-            )
-        except Exception as exc:  # builtin-shadowing refusal
-            if "CANNOT_REPLACE_NON_SQL_UDF" in str(exc):
-                skipped.append(name)
-            else:
-                raise
-    return skipped
+    """Register every Pinot-named SQL UDF; returns the names skipped because
+    Spark already ships a builtin of that name (identical semantics by our
+    audit)."""
+    register(spark, *_BY_NAME)
+    return [n for n, ok in spark._pinot_fns.items() if not ok]

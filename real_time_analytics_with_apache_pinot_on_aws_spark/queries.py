@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from . import catalog
-from . import functions as pfn
 from .functions import helpers as H
+from .functions import sqlfns
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -53,14 +53,18 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[Builder]
 
 
 def _prep(spark: SparkSession, sf_dir: str) -> None:
-    """Register fixture views + the Pinot function surface on this session."""
-    if getattr(spark, "_rtap_fns_registered", False) is not True:
-        pfn.register_all(spark)
-        spark._rtap_fns_registered = True  # type: ignore[attr-defined]
+    """Register the fixture views on this session."""
     registered = getattr(spark, "_rtap_sf_dir", None)
     if registered != sf_dir:
         catalog.register_tables(spark, sf_dir)
         spark._rtap_sf_dir = sf_dir  # type: ignore[attr-defined]
+
+
+def _sql(spark: SparkSession, text: str) -> DataFrame:
+    """``spark.sql(text)`` once the Pinot functions ``text`` calls are
+    registered: every builder hands its SQL to Spark through here."""
+    sqlfns.register_calls(spark, text)
+    return spark.sql(text)
 
 
 def sql_query(name: str, spark_sql: str, oracle: str | None = None, doc: str = "") -> None:
@@ -69,7 +73,7 @@ def sql_query(name: str, spark_sql: str, oracle: str | None = None, doc: str = "
 
     def builder(spark: SparkSession, sf_dir: str) -> DataFrame:
         _prep(spark, sf_dir)
-        return spark.sql(spark_sql)
+        return _sql(spark, spark_sql)
 
     _REGISTRY[name] = Query(name=name, builder=builder, oracle=oracle or spark_sql, doc=doc)
 
@@ -6281,7 +6285,7 @@ def b16_b29_pinot_agg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     from .functions.aggsql import rewrite_pinot_aggregates
 
-    return spark.sql(rewrite_pinot_aggregates(
+    return _sql(spark, rewrite_pinot_aggregates(
         "SELECT event_type, "
         "DISTINCTCOUNT(user_id) AS d_users, "
         "round(MINMAXRANGE(value), 6) AS v_range, "
@@ -6335,7 +6339,7 @@ def b16_funnelcount_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     from .functions.aggsql import rewrite_pinot_aggregates
 
-    fc = spark.sql(rewrite_pinot_aggregates(
+    fc = _sql(spark, rewrite_pinot_aggregates(
         "SELECT FUNNELCOUNT(STEPS(event_type = 'view', "
         "event_type = 'click', event_type = 'purchase'), "
         "CORRELATE_BY(user_id), SETTINGS('bitmap')) AS fc FROM events"
@@ -6386,7 +6390,7 @@ def b17_mv_distinct_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_mv_distinct_statement(stmt)
     if routed is None:  # the route regressing to the fallback is a bug
         raise AssertionError("MV statement route refused a routable shape")
-    return spark.sql(rewrite_pinot_aggregates(routed))
+    return _sql(spark, rewrite_pinot_aggregates(routed))
 
 
 @register(
@@ -6442,7 +6446,7 @@ def b17_mv_agg_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_mv_distinct_statement(stmt)
     if routed is None:  # the route regressing to the fallback is a bug
         raise AssertionError("MV statement route refused a routable shape")
-    return spark.sql(rewrite_pinot_aggregates(routed))
+    return _sql(spark, rewrite_pinot_aggregates(routed))
 
 
 @register(
@@ -6510,7 +6514,7 @@ def b16_funnelcount_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the route regressing to the fallback is a bug
         raise AssertionError("keyed statement route refused a routable shape")
-    fc = spark.sql(rewrite_pinot_aggregates(routed))
+    fc = _sql(spark, rewrite_pinot_aggregates(routed))
     return fc.select(
         F.element_at("fc", 1).alias("step_view"),
         F.element_at("fc", 2).alias("step_click"),
@@ -6583,7 +6587,7 @@ def b16_funnelmaxstep_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             "ordered-funnel statement route refused a routable shape"
         )
-    return spark.sql(rewrite_pinot_aggregates(routed))
+    return _sql(spark, rewrite_pinot_aggregates(routed))
 
 
 @register(
@@ -6632,7 +6636,7 @@ def b70_tuple_value_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the route regressing to the fallback is a bug
         raise AssertionError("keyed statement route refused a routable shape")
-    return spark.sql(rewrite_pinot_aggregates(routed))
+    return _sql(spark, rewrite_pinot_aggregates(routed))
 
 
 @register(
@@ -6685,7 +6689,7 @@ def b27_exprminmax_arrayagg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     from .functions.aggsql import rewrite_pinot_aggregates
 
-    return spark.sql(rewrite_pinot_aggregates(
+    return _sql(spark, rewrite_pinot_aggregates(
         "SELECT event_type, "
         # EXPRMIN/EXPRMAX: projection first, measures lexicographic —
         # the REVERSE argument order of ARG_MIN (Pinot parser pair)
@@ -6747,7 +6751,7 @@ def b53_array_scalar_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     from .functions.aggsql import rewrite_pinot_aggregates
 
-    return spark.sql(rewrite_pinot_aggregates(
+    return _sql(spark, rewrite_pinot_aggregates(
         "WITH src AS ("
         "  SELECT event_id,"
         "         CAST(array(user_id % 5, user_id % 3, user_id % 7,"
@@ -6798,7 +6802,7 @@ def b42_in_subquery_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     from .functions.aggsql import rewrite_pinot_aggregates
 
-    return spark.sql(rewrite_pinot_aggregates(
+    return _sql(spark, rewrite_pinot_aggregates(
         "SELECT event_type, count(*) AS n "
         "FROM events "
         "WHERE IN_SUBQUERY(user_id, 'SELECT ID_SET(user_id) FROM events "
@@ -6835,7 +6839,7 @@ def b42_in_subquery_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def b50_string_tail_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
-    return spark.sql(
+    return _sql(spark,
         "SELECT event_id, "
         "REMOVE(event_type, 'e') AS removed, "
         "HAMMINGDISTANCE(event_type, reverse(event_type)) AS ham_rev, "
@@ -6883,7 +6887,7 @@ def b50_string_tail_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 def b66_vector_scalar_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     neg = "transform(cast(embedding as array<double>), x -> -x)"
-    return spark.sql(
+    return _sql(spark,
         "SELECT vec_id, "
         "VECTORDIMS(embedding) AS dims, "
         "round(INNERPRODUCT(embedding, embedding), 4) AS self_ip, "
@@ -6958,7 +6962,7 @@ def b21_theta_set_expression_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the route regressing to the fallback is a bug
         raise AssertionError("keyed statement route refused a routable shape")
-    return spark.sql(rewrite_pinot_aggregates(routed))
+    return _sql(spark, rewrite_pinot_aggregates(routed))
 
 
 @register(
@@ -6987,7 +6991,7 @@ def b16_histogram_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     from .functions.aggsql import rewrite_pinot_aggregates
 
-    df = spark.sql(rewrite_pinot_aggregates(
+    df = _sql(spark, rewrite_pinot_aggregates(
         "SELECT event_type, HISTOGRAM(value, 0, 1000, 4) AS h "
         "FROM events GROUP BY event_type ORDER BY event_type"
     ))
@@ -7046,7 +7050,7 @@ def b17_sumarray_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_sumarray_statement(stmt)
     if routed is None:  # the route regressing to the reject is a bug
         raise AssertionError("sumarray route refused a routable shape")
-    return spark.sql(routed)
+    return _sql(spark, routed)
 
 
 @register(
@@ -7105,7 +7109,7 @@ def b16_funnelcount_join_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the route regressing to the fold is a bug
         raise AssertionError("keyed route refused a routable join shape")
-    df = spark.sql(rewrite_pinot_aggregates(routed))
+    df = _sql(spark, rewrite_pinot_aggregates(routed))
     return df.select(
         "n_name",
         F.element_at("fc", 1).alias("step_view"),
@@ -7174,7 +7178,7 @@ def b16_funnelcount_join2_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the chain regressing to the fold is a bug
         raise AssertionError("keyed route refused a two-join chain")
-    df = spark.sql(rewrite_pinot_aggregates(routed))
+    df = _sql(spark, rewrite_pinot_aggregates(routed))
     return df.select(
         "r_name",
         "n_name",
@@ -7241,7 +7245,7 @@ def b16_funnelcount_timebucket_route(
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the route regressing to the fold is a bug
         raise AssertionError("keyed route refused an expression group")
-    df = spark.sql(rewrite_pinot_aggregates(routed))
+    df = _sql(spark, rewrite_pinot_aggregates(routed))
     return df.select(
         "day",
         F.element_at("fc", 1).alias("step_view"),
@@ -7292,7 +7296,7 @@ def b24_mode_avg_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_mode_avg_statement(stmt)
     if routed is None:  # the route regressing to the reject is a bug
         raise AssertionError("mode-avg route refused a routable shape")
-    return spark.sql(routed)
+    return _sql(spark, routed)
 
 
 @register(
@@ -7343,7 +7347,7 @@ def b24_bool_mode_reducers_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark, sf_dir)
     from .functions.aggsql import rewrite_pinot_aggregates
 
-    return spark.sql(rewrite_pinot_aggregates(
+    return _sql(spark, rewrite_pinot_aggregates(
         "SELECT event_type, "
         "MODE(user_id % 10) AS mode_dflt, "
         "MODE(user_id % 10, 'MIN') AS mode_min, "
@@ -7442,7 +7446,7 @@ def b16_funnel_duration_route(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ordered-funnel statement route refused a routable "
             "FUNNELSTEPDURATIONSTATS shape"
         )
-    df = spark.sql(rewrite_pinot_aggregates(routed))
+    df = _sql(spark, rewrite_pinot_aggregates(routed))
     return df.select(
         "user_id",
         F.round(F.element_at("ds", 1), 4).alias("dur_min"),
@@ -7505,7 +7509,7 @@ def b17_cte_inline_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_mv_distinct_statement(inlined)
     if routed is None:  # the route regressing to the fold is a bug
         raise AssertionError("MV statement route refused the inlined CTE")
-    return spark.sql(rewrite_pinot_aggregates(routed))
+    return _sql(spark, rewrite_pinot_aggregates(routed))
 
 
 @register(
@@ -7565,7 +7569,7 @@ def b17_cte_multiref_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = rewrite_mv_distinct_statement(inlined)
     if routed is None:  # the route regressing to the fold is a bug
         raise AssertionError("MV statement route refused the inlined CTE")
-    return spark.sql(rewrite_pinot_aggregates(routed))
+    return _sql(spark, rewrite_pinot_aggregates(routed))
 
 
 @register(
@@ -7633,7 +7637,7 @@ def b16_funnelcount_derived_join_route(
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the route regressing to the fold is a bug
         raise AssertionError("keyed route refused a derived join operand")
-    df = spark.sql(rewrite_pinot_aggregates(routed))
+    df = _sql(spark, rewrite_pinot_aggregates(routed))
     return df.select(
         "n_name",
         F.element_at("fc", 1).alias("step_view"),
@@ -7710,7 +7714,7 @@ def b16_funnelmaxstep_filter_route(
         raise AssertionError(
             "ordered-funnel route refused a FILTER'd target"
         )
-    return spark.sql(rewrite_pinot_aggregates(routed))
+    return _sql(spark, rewrite_pinot_aggregates(routed))
 
 
 @register(
@@ -7764,7 +7768,7 @@ def b24_mode_avg_filter_route(
     routed = rewrite_mode_avg_statement(stmt)
     if routed is None:  # the route regressing to the redirect is a bug
         raise AssertionError("mode-avg route refused a FILTER'd target")
-    return spark.sql(routed)
+    return _sql(spark, routed)
 
 
 @register(
@@ -7826,7 +7830,7 @@ def b16_funnelcount_filter_route(
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the route regressing is a bug
         raise AssertionError("keyed route refused a FILTER'd FUNNELCOUNT")
-    df = spark.sql(rewrite_pinot_aggregates(routed))
+    df = _sql(spark, rewrite_pinot_aggregates(routed))
     return df.select(
         "cohort",
         F.element_at("fc", 1).alias("step_view"),
@@ -7887,7 +7891,7 @@ def b17_sumarray_filter_route(
     routed = rewrite_sumarray_statement(stmt)
     if routed is None:  # the route regressing to the reject is a bug
         raise AssertionError("sumarray route refused a FILTER'd target")
-    return spark.sql(routed)
+    return _sql(spark, routed)
 
 
 @register(
@@ -7949,7 +7953,7 @@ def b16_funnelcount_comma_from_route(
     routed = rewrite_keyed_agg_statement(stmt)
     if routed is None:  # the comma admission regressing is a bug
         raise AssertionError("keyed route refused a comma-FROM relation")
-    df = spark.sql(rewrite_pinot_aggregates(routed))
+    df = _sql(spark, rewrite_pinot_aggregates(routed))
     if df.columns[0] != "n_name":  # the output-name fix regressing too
         raise AssertionError(f"qualified group item renamed: {df.columns}")
     return df.select(

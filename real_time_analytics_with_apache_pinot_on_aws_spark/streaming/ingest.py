@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .. import fs as _fs
+from ..functions import sqlfns
 from ..operators.dedup import cache_scope, lifecycle_cache
 from ..schema import TableSchema, decoded_frame, time_parse_expr
 from .rollup import rollup_batch
@@ -221,8 +222,10 @@ class IngestPipeline:
             # matching Pinot's flattening of absent nested collections)
             out = out.withColumn(field, F.explode_outer(F.col(field)))
         for col_name, fn in self.transform_configs:
+            sqlfns.register_calls(self.spark, fn)
             out = out.withColumn(col_name, F.expr(fn))
         if self.filter_function:
+            sqlfns.register_calls(self.spark, self.filter_function)
             # Pinot filterConfig semantics: matching rows are DROPPED
             out = out.filter(~F.expr(self.filter_function))
         tc = self.schema.time_column()

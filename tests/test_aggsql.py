@@ -2401,14 +2401,18 @@ def test_scalar_rewrite_names_do_not_bail_routes(mv_engine):
     assert RMV(src, is_aggregate=mv_engine._is_catalog_aggregate) is not None
 
 
-def test_catalog_predicate_caches_misses(mv_engine):
-    """Round-8 review: a catalog-absent name must trigger ONE refresh,
-    not one listFunctions round-trip per call."""
+def test_catalog_predicate_is_a_point_lookup(mv_engine, monkeypatch):
+    """The aggregate test asks the catalog for the one name: it never
+    enumerates the session's functions (listFunctions took seconds on a
+    session holding hundreds of them)."""
+    def enumerate_all(*a, **k):
+        raise AssertionError("listFunctions called")
+
+    monkeypatch.setattr(mv_engine.spark.catalog, "listFunctions", enumerate_all)
     assert mv_engine._is_catalog_aggregate("definitely_not_a_function")
-    cache = mv_engine._catalog_fn_classes
-    assert "DEFINITELY_NOT_A_FUNCTION" in cache  # miss recorded
-    mv_engine._is_catalog_aggregate("definitely_not_a_function")
-    assert mv_engine._catalog_fn_classes is cache  # no rebuild
+    assert mv_engine._is_catalog_aggregate("sum")
+    assert not mv_engine._is_catalog_aggregate("upper")
+    assert not mv_engine._is_catalog_aggregate("ARRAYMIN")  # Pinot macro
 
 
 def test_tuple_value_route_sums_at_native_type(spark, agg_engine):
@@ -2497,17 +2501,23 @@ def test_jsonextractindex_is_a_known_scalar_for_routes(mv_engine):
     assert RMV(src, is_aggregate=mv_engine._is_catalog_aggregate) is not None
 
 
-def test_catalog_miss_cache_survives_rebuilds(mv_engine):
-    """Second round-8 review pass: with TWO unknown names, each rebuild
-    replaced the dict and discarded the other's cached miss — the merge
-    keeps both."""
-    assert mv_engine._is_catalog_aggregate("unknown_name_one")
-    assert mv_engine._is_catalog_aggregate("unknown_name_two")
-    cache = mv_engine._catalog_fn_classes
-    assert "UNKNOWN_NAME_ONE" in cache and "UNKNOWN_NAME_TWO" in cache
-    mv_engine._is_catalog_aggregate("unknown_name_one")
-    mv_engine._is_catalog_aggregate("unknown_name_two")
-    assert mv_engine._catalog_fn_classes is cache  # no further rebuilds
+def test_catalog_predicate_sees_a_function_created_after_a_miss(
+    spark, mv_engine
+):
+    """No miss is cached: a SQL macro created after the name was first
+    looked up is classified as the scalar it is, not as the aggregate
+    the earlier miss would have made it."""
+    name = "late_scalar_fn"
+    assert mv_engine._is_catalog_aggregate(name)
+    spark.sql(
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(x INT) RETURNS INT "
+        "RETURN x + 1"
+    )
+    try:
+        assert not mv_engine._is_catalog_aggregate(name)
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
+    assert mv_engine._is_catalog_aggregate(name)
 
 
 # ---------------------------------------------------------------------------

@@ -3651,11 +3651,11 @@ def test_text_match_sql_form(spark, tmp_path):
                 "SELECT userID FROM textTable WHERE "
                 "TEXT_MATCH(campaign, 'blackfridays') AND price > 20 OR price < 5"
             )
-        # a clause after the WHERE is named, not left to Spark's parser
-        with _pytest.raises(ValueError, match="LIMIT is not supported"):
+        # GROUP BY after the WHERE is named, not left to Spark's parser
+        with _pytest.raises(ValueError, match="GROUP BY is not supported"):
             engine.query(
-                "SELECT userID FROM textTable "
-                "WHERE TEXT_MATCH(campaign, 'blackfridays') LIMIT 3"
+                "SELECT price, count(*) FROM textTable "
+                "WHERE TEXT_MATCH(campaign, 'blackfridays') GROUP BY price"
             )
         # broker envelope round trip
         resp = engine.query_broker_response(
@@ -3671,6 +3671,64 @@ def test_text_match_sql_form(spark, tmp_path):
         )
         assert resp["exceptions"] == [] and resp["numRowsResultSet"] == n
     finally:
+        pipe.stop()
+
+
+def test_index_predicate_sql_form_orders_limits_and_offsets(spark, tmp_path):
+    """``ORDER BY`` / ``LIMIT`` / ``OFFSET`` after an index predicate apply
+    to the projected candidates (Pinot clients send a LIMIT by default),
+    in process and over the HTTP broker; they may order by a column the
+    SELECT does not list, and they follow the residual conjuncts."""
+    from real_time_analytics_with_apache_pinot_on_aws_spark import broker_http
+    from tests.test_broker_http import _post
+
+    src_dir = tmp_path / "stream_in"
+    config = dict(TABLE_CONFIG)
+    config["tableName"] = "textTable"
+    config["primaryKeyColumns"] = ["userID"]
+    config["fieldConfigList"] = [
+        {"name": "campaign", "encodingType": "RAW", "indexType": "TEXT"}
+    ]
+    engine = Engine(spark, str(tmp_path / "warehouse"))
+    _write_events(src_dir / "b1.json", 30, "2024-05-01")
+    pipe = engine.add_table(CLICKSTREAM_SCHEMA, config,
+                            RawRecordSource(kind="files", path=str(src_dir)),
+                            available_now=True)
+    srv = broker_http.start_broker(engine, port=0)
+    try:
+        pipe.process_available()
+        engine.register_view("textTable")
+        # rows i % 3 == 0 of 30 match: userID str(i), price 10 + i
+        hits = sorted((10 + i, str(i)) for i in range(0, 30, 3))
+        head = "SELECT userID, price FROM textTable WHERE TEXT_MATCH(campaign, 'blackfriday')"
+        cases = {
+            f"{head} ORDER BY price DESC LIMIT 3": [
+                [u, p] for p, u in sorted(hits, reverse=True)[:3]
+            ],
+            f"{head} ORDER BY price LIMIT 4 OFFSET 2": [
+                [u, p] for p, u in hits[2:6]
+            ],
+            f"{head} AND price > 20 ORDER BY textTable.price LIMIT 2": [
+                [u, p] for p, u in hits if p > 20
+            ][:2],
+            f"{head} -- c\n ORDER BY price /* c */ LIMIT 1;": [
+                [hits[0][1], hits[0][0]]
+            ],
+        }
+        for sql, want in cases.items():
+            got = [[r["userID"], r["price"]] for r in engine.query(sql).collect()]
+            assert got == want, sql
+            resp = _post(srv.url(), {"sql": sql})
+            assert resp["exceptions"] == [], sql
+            assert resp["resultTable"]["rows"] == want, sql
+        # ordering by a column the SELECT leaves out
+        rows = engine.query(
+            "SELECT userID FROM textTable WHERE "
+            "TEXT_MATCH(campaign, 'blackfriday') ORDER BY price DESC LIMIT 2"
+        ).collect()
+        assert [r["userID"] for r in rows] == ["27", "24"]
+    finally:
+        srv.stop()
         pipe.stop()
 
 
@@ -3699,6 +3757,23 @@ def _json_table(spark, tmp_path):
                             RawRecordSource(kind="files", path=str(src_dir)),
                             available_now=True)
     return engine, pipe
+
+
+def test_json_match_sql_form_orders_and_limits(spark, tmp_path):
+    """The tail clauses serve every index predicate: ``ORDER BY`` and
+    ``LIMIT`` after a JSON_MATCH apply to its candidates."""
+    engine, pipe = _json_table(spark, tmp_path)
+    try:
+        pipe.process_available()
+        engine.register_view("jsonTable")
+        rows = engine.query(
+            "SELECT userID FROM jsonTable "
+            "WHERE JSON_MATCH(payload, '\"$.k\" = 1') ORDER BY price DESC LIMIT 2"
+        ).collect()
+        # k = i % 4 == 1 for u1, u5, u9 (price 10 + i)
+        assert [r["userID"] for r in rows] == ["u9", "u5"]
+    finally:
+        pipe.stop()
 
 
 def test_json_match_sql_form(spark, tmp_path):

@@ -124,6 +124,20 @@ def test_select_star_with_virtual_rejected_and_unknown_table_rejected(
         engine.query("SELECT $docId FROM plainview")
 
 
+def test_comment_does_not_hide_select_star(spark, tmp_path):
+    """The select items are cut by the lexer, so a comment before the
+    ``*`` does not hide it: the statement is rejected like ``SELECT *,
+    $docId``, not expanded over the virtual columns."""
+    engine = _engine_with_data(spark, tmp_path, n=3)
+    for hidden in (
+        "SELECT /* c */ *, $docId FROM kinesisTable",
+        "SELECT $docId, -- c\n * FROM kinesisTable",
+        "SELECT DISTINCT /* c */ *, $docId FROM kinesisTable",
+    ):
+        with pytest.raises(ValueError, match="SELECT \\*"):
+            engine.query(hidden)
+
+
 def test_virtual_columns_leave_literals_and_quoted_names_alone(spark, tmp_path):
     """Only the ``$x`` tokens in code are virtual columns: a string literal
     keeps its text, an already backticked name is not quoted twice, and a
