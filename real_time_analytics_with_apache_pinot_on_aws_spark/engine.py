@@ -2626,9 +2626,10 @@ class Engine:
     # both answer the PHYSICAL operator tree (implementation = what runs
     # — Spark's executedPlan); `EXPLAIN PLAN WITHOUT IMPLEMENTATION FOR`
     # answers the LOGICAL plan (Pinot's Calcite rel tree — Spark's
-    # Catalyst optimizedPlan), round 9.
+    # Catalyst optimizedPlan).  The head is matched after leading
+    # comments.
     _EXPLAIN_RE = re.compile(
-        r"^\s*EXPLAIN\s+(?:IMPLEMENTATION\s+PLAN"
+        r"EXPLAIN\s+(?:IMPLEMENTATION\s+PLAN"
         r"|PLAN(?P<logical>\s+WITHOUT\s+IMPLEMENTATION)?)\s+FOR\s+",
         re.IGNORECASE,
     )
@@ -2674,7 +2675,7 @@ class Engine:
         # statement route both require (round-6 review; round-7 review:
         # the post-aggsql EXPLAIN check consumed DISTINCTCOUNT*MV into
         # the fallback text, so EXPLAIN showed the unbounded plan).
-        m = self._EXPLAIN_RE.match(sql)
+        m = self._EXPLAIN_RE.match(sql, sqltext.skip_space(sql))
         if m:
             inner = sql[m.end():]
             if _opts:

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import contextvars
 import re
+from typing import NamedTuple
 
 from . import sqltext
 
@@ -222,7 +223,7 @@ def _jsonpath_default(name: str, sql_type: str):
     return build
 
 
-_IDSET_HEAD_RE = re.compile(r"^\s*SELECT\s+ID_?SET\s*\(", re.IGNORECASE)
+_IDSET_RE = re.compile(r"ID_?SET\s*\(", re.IGNORECASE)
 
 
 def _in_subquery(name: str):
@@ -246,8 +247,9 @@ def _in_subquery(name: str):
                 f"...'), got {len(args)} arguments"
             )
         inner = _unquote_literal(args[1], f"{name} subquery")
-        m = _IDSET_HEAD_RE.match(inner)
-        if m is None:
+        m = sqltext.keyword("SELECT").match(inner, sqltext.skip_space(inner))
+        m = m and _IDSET_RE.match(inner, sqltext.skip_space(inner, m.end()))
+        if not m:
             raise ValueError(
                 f"{name} subquery must start with SELECT ID_SET(col) "
                 f"(Pinot's IdSet contract), got: {inner[:80]!r}"
@@ -1598,39 +1600,33 @@ def _rewrite_pinot_aggregates_inner(sql: str, keep_native) -> str:
 # DISTINCTCOUNTHLLMV/DISTINCTCOUNTMV cannot be served by a bounded
 # CALL-SITE rewrite: counting distinct ELEMENTS of a multi-value column
 # per group needs either the exploded elements (a FROM-clause change) or
-# per-group set-of-arrays state (unbounded — the round-6 verdict's
-# executor-OOM shape).  So Engine.query routes whole statements: a
-# single-table SELECT grows one LATERAL VIEW OUTER POSEXPLODE per
-# distinct MV argument, the MV calls become hll_sketch_agg /
-# count(DISTINCT ...) over the exploded element (HLL state is the
-# bounded sketch the spelling's name promises), and every co-occurring
-# aggregate is kept duplication-correct: DUPLICATION-IMMUNE aggregates
-# (min/max/any distinct-based form/min_by/...) pass through, WRAPPABLE
-# ones (count/sum/avg/...) see only the pos-0 exploded copy of each row
-# via IF(first-copy, arg, NULL), and anything duplication-UNSAFE
-# (percentiles, stddev, collect_list, funnels ...) makes the route bail
-# to the normalized-set fallback expression above.  Round 8 widened the
-# routable FROM/WHERE space: a chain of `[INNER|LEFT|RIGHT|FULL] JOIN
-# ... ON` segments is allowed (one join in round 8, chains in round 10
-# — the LATERAL VIEW attaches AFTER the last join, exploding each
-# joined row — the very relation the original aggregates saw) and
-# parenthesized subqueries (scalar / IN / EXISTS) are allowed anywhere
-# (they evaluate in their OWN scope, so their call sites are excluded
-# from duplication classification), as are derived-table relations
-# `FROM (SELECT ...) alias`.  Round 9: Engine.query additionally
-# inlines FROM/JOIN-position WITH-CTEs to that derived-table shape
-# BEFORE the routes (inline_route_ctes; round 10 extends it to
-# multi-reference CTEs with deterministic bodies), so only recursive/
-# renamed/expression-referenced CTEs still reach the fold.  Round 10
-# also admits a CHAIN of `JOIN tbl ON cond` segments (the one-JOIN
-# restriction was pure conservatism — the relation re-emits verbatim
-# however many joins it carries); round 11 lets any chain operand be a
-# derived table `(SELECT ...) alias`, folds trailing FILTER clauses
-# into every route's masks, and admits comma-FROM — the pre-ANSI
-# implicit cross join `FROM a, b WHERE a.k = b.k` (VERDICT r10 item 6)
-# — as a list of bare-or-derived operands re-emitted verbatim (a comma
-# list MIXED with explicit JOIN still bails).  Shapes the route itself
-# cannot restructure (WITH/UNION/windows) bail.
+# per-group set-of-arrays state (unbounded — an executor-OOM shape).
+# So Engine.query routes whole statements: the SELECT grows one LATERAL
+# VIEW OUTER POSEXPLODE per distinct MV argument, the MV calls become
+# hll_sketch_agg / count(DISTINCT ...) over the exploded element (HLL
+# state is the bounded sketch the spelling's name promises), and every
+# co-occurring aggregate is kept duplication-correct:
+# DUPLICATION-IMMUNE aggregates (min/max/any distinct-based
+# form/min_by/...) pass through, WRAPPABLE ones (count/sum/avg/...) see
+# only the pos-0 exploded copy of each row via IF(first-copy, arg,
+# NULL), and anything duplication-UNSAFE (percentiles, stddev,
+# collect_list, funnels ...) makes the route bail to the normalized-set
+# fallback expression above.
+#
+# Every statement route reads its statement through one shape,
+# sqltext.statement (comments and literals opaque), admitted by
+# _route_shape: one SELECT over a table, a JOIN chain of any Spark
+# flavor or a comma list, each operand a name or a derived ``(SELECT
+# ...)`` table, re-emitted verbatim (the LATERAL VIEW attaches after the
+# whole relation, so it explodes each joined row — the very relation the
+# original aggregates saw).  Subqueries are allowed anywhere: they
+# evaluate in their OWN scope, so their call sites are excluded from
+# duplication classification.  Engine.query inlines FROM/JOIN-position
+# WITH-CTEs to the derived-table shape BEFORE the routes
+# (inline_route_ctes), so only recursive / renamed /
+# expression-referenced CTEs still reach the fold.  Trailing FILTER
+# clauses fold into every route's masks.  Shapes the routes cannot
+# restructure (set operations, windows, ROLLUP/CUBE) bail.
 # Non-deterministic calls (rand/uuid/shuffle/...) bail the
 # row-duplicating routes — the WHERE would re-evaluate per exploded
 # copy, silently turning per-row sampling into per-element sampling.
@@ -1758,12 +1754,6 @@ _MV_GATE_RE = re.compile(
     re.IGNORECASE,
 )
 
-_MV_STMT_TOPKW_RE = sqltext.keyword(
-    *"""FROM WHERE GROUP HAVING ORDER LIMIT JOIN UNION EXCEPT INTERSECT
-    MINUS LATERAL VALUES SELECT DISTRIBUTE CLUSTER SORT WINDOW QUALIFY
-    TABLESAMPLE PIVOT UNPIVOT OFFSET""".split()
-)
-
 _MV_ANYDEPTH_BAIL_RE = re.compile(
     r"\b(OVER|ROLLUP|CUBE|GROUPING)\b", re.IGNORECASE
 )
@@ -1795,29 +1785,40 @@ _MV_AGG_IN_ARG_RE = re.compile(
 
 
 def _parse_trailing_filter(sql: str, end: int):
-    """Parse an optional ``FILTER (WHERE pred)`` clause starting at
-    ``sql[end:]``.  Returns ``(pred, end_past_clause)`` when a valid,
-    mask-safe clause is present, ``(None, end)`` when there is no
+    """Parse an optional ``FILTER (WHERE pred)`` clause after the call
+    that ends at ``end``.  Returns ``(pred, end_past_clause)`` when a
+    valid, mask-safe clause is present, ``(None, end)`` when there is no
     FILTER clause at all, and ``None`` (caller bails) when a clause is
     present but cannot be folded into a row-level mask — empty pred, a
     subquery inside it (span re-bookkeeping), or an aggregate name
     (invalid SQL the fallback should reject loudly)."""
-    fm = re.match(r"\s*FILTER\s*\(", sql[end:], re.IGNORECASE)
-    if fm is None:
+    fm = sqltext.keyword("FILTER").match(sql, sqltext.skip_space(sql, end))
+    open_idx = fm and sqltext.skip_space(sql, fm.end())
+    if not fm or not sql.startswith("(", open_idx):
         return None, end
     try:
-        finner, fend = sqltext.balanced(sql, end + fm.end() - 1)
+        finner, fend = sqltext.balanced(sql, open_idx)
     except ValueError:
         return None
-    wm = re.match(r"\s*WHERE\b", finner, re.IGNORECASE)
+    wm = sqltext.keyword("WHERE").match(finner, sqltext.skip_space(finner))
     if wm is None:
         return None
-    pred = finner[wm.end():].strip()
-    if not pred or re.search(
-        r"\bSELECT\b", pred, re.IGNORECASE
-    ) or _MV_AGG_IN_ARG_RE.search(pred):
+    pred = sqltext.strip(finner[wm.end():])
+    if (
+        not pred
+        or sqltext.search("SELECT", pred)
+        or sqltext.search(_MV_AGG_IN_ARG_RE, pred)
+    ):
         return None
     return pred, fend
+
+
+def _args(inner: str) -> list[str]:
+    """The arguments inside a call's brackets, each without surrounding
+    whitespace and comments (none for an empty call)."""
+    if not sqltext.strip(inner):
+        return []
+    return [sqltext.strip(a) for a in sqltext.split(inner)]
 
 
 def apply_text_edits(sql: str, edits: list):
@@ -1869,31 +1870,6 @@ def _scan_call_sites(sql: str) -> list:
     ]
 
 
-def _top_level_keywords(sql: str) -> list:
-    """(KEYWORD_UPPER, start, end) for clause keywords at paren depth 0
-    outside literals and comments."""
-    return [
-        (m.group(0).upper(), m.start(), m.end())
-        for m in sqltext.finditer(_MV_STMT_TOPKW_RE, sql, top_level=True)
-    ]
-
-
-def _all_selects_inside(sql: str, start: int, spans: list) -> bool:
-    """True when every ``SELECT`` token at/after ``start`` (outside
-    literals and comments) lies inside one of ``spans``."""
-    return all(
-        any(s < m.start() < e for s, e in spans)
-        for m in sqltext.finditer("SELECT", sql, start)
-    )
-
-
-_ROUTE_BAD_TOPKWS = (
-    "UNION", "EXCEPT", "INTERSECT", "MINUS", "LATERAL", "VALUES",
-    "DISTRIBUTE", "CLUSTER", "WINDOW", "QUALIFY", "TABLESAMPLE",
-    "PIVOT", "UNPIVOT",
-)
-
-
 # clause keywords that can directly follow a table reference — used to
 # tell `FROM cte WHERE ...` (no alias) from `FROM cte w` (alias `w`)
 # when the inliner re-emits a single-use CTE as a derived table.  A
@@ -1920,10 +1896,11 @@ _CTE_FROM_END_KWS = frozenset(
 )
 
 
-# one bracket, or one word not preceded by an identifier character, '.'
-# or '$' (a qualified or '$'-prefixed word is never a keyword or a ref)
+# one bracket, one comma, or one word not preceded by an identifier
+# character, '.' or '$' (a qualified or '$'-prefixed word is never a
+# keyword or a ref)
 _CTE_TOKEN_RE = re.compile(
-    r"(?P<open>[(\[])|(?P<close>[)\]])|(?<![\w.$])[A-Za-z_]\w*"
+    r"(?P<open>[(\[])|(?P<close>[)\]])|,|(?<![\w.$])[A-Za-z_]\w*"
 )
 
 
@@ -1944,29 +1921,31 @@ def _cte_table_refs(text: str, name: str):
     name)``, ``overlay(... FROM name)`` — sits inside a function-call
     group whose first token is not SELECT, and splicing a derived table
     there rewrites a COLUMN into a scalar subquery that can ANALYZE
-    cleanly with different semantics (round-10, r9 ADVICE medium).
-    Those occurrences bail the whole inline.
+    cleanly with different semantics.  Those occurrences bail the whole
+    inline.
 
-    Round 11 (the comma-FROM admission's inliner leg): a reference
-    whose previous non-whitespace character is a COMMA is also a
-    relation when the scan is inside a FROM REGION — between a FROM and
-    the next clause keyword at the same paren depth, where a depth-0
-    comma can only separate relations.  LATERAL ends the region (a
-    comma after ``LATERAL VIEW ... AS a, b`` separates generator
-    aliases, not relations); a comma-preceded occurrence anywhere else
-    (select list, GROUP BY, ...) still bails the whole inline."""
+    A reference whose previous token is a COMMA is also a relation
+    when the scan is inside a FROM REGION — between a FROM and the next
+    clause keyword at the same paren depth, where a depth-0 comma can
+    only separate relations.  LATERAL ends the region (a comma after
+    ``LATERAL VIEW ... AS a, b`` separates generator aliases, not
+    relations); a comma-preceded occurrence anywhere else (select list,
+    GROUP BY, ...) still bails the whole inline."""
     refs = []
     # one flag per open bracket group: True = the group's first token is
     # SELECT (a subquery — relation position exists inside it)
     group_is_select = []
     # parallel FROM-region flags; entry 0 is the top level
     in_from = [False]
+    prev = None
     for m in sqltext.finditer(_CTE_TOKEN_RE, text):
+        before, prev = prev, m
         word, i, end = m.group().upper(), m.start(), m.end()
         if m.group("open"):
             group_is_select.append(
-                re.match(r"\s*SELECT\b", text[end:], re.IGNORECASE)
-                is not None
+                sqltext.keyword("SELECT").match(
+                    text, sqltext.skip_space(text, end)
+                ) is not None
             )
             in_from.append(False)
             continue
@@ -1984,33 +1963,28 @@ def _cte_table_refs(text: str, name: str):
             continue
         if text[end : end + 1] in (".", "("):
             continue
-        # the previous word must be FROM or JOIN — or the previous
-        # character a relation-separating comma inside a FROM region —
-        # for this to be a plain relation reference the derived-table
-        # shape can replace
-        k = i - 1
-        while k >= 0 and text[k] in " \t\r\n":
-            k -= 1
-        if k >= 0 and text[k] == ",":
-            if not in_from[-1]:
-                return None  # select-list / alias-list comma: bail
-        else:
-            wend = k + 1
-            while k >= 0 and (text[k].isalnum() or text[k] == "_"):
-                k -= 1
-            if k >= 0 and text[k] in ".$":
-                return None  # qualified word before the ref: not a kw
-            if text[k + 1 : wend].upper() not in ("FROM", "JOIN"):
-                return None
+        # the token right before the name (only whitespace and comments
+        # between) must be FROM or JOIN — or a relation-separating comma
+        # inside a FROM region — for this to be a plain relation
+        # reference the derived-table shape can replace
+        adjacent = before and sqltext.skip_space(text, before.end()) == i
+        kw = before.group().upper() if adjacent else ""
+        if kw == "," and not in_from[-1]:
+            return None  # select-list / alias-list comma: bail
+        if kw not in (",", "FROM", "JOIN"):
+            return None
         if group_is_select and not group_is_select[-1]:
             return None  # expression-level FROM: never a relation
-        am = re.match(
-            r"\s+(AS\s+)?([A-Za-z_]\w*)", text[end:], re.IGNORECASE
-        )
-        has_alias = bool(am) and (
-            bool(am.group(1))
-            or am.group(2).upper() not in _CTE_ALIAS_STOP_KWS
-        )
+        # an alias follows: `AS word`, or a word that is no clause keyword
+        j = sqltext.skip_space(text, end)
+        am = _PLAIN_IDENT_RE.match(text, j) if j > end else None
+        if am and am.group().upper() == "AS":
+            k = sqltext.skip_space(text, am.end())
+            has_alias = k > am.end() and bool(_PLAIN_IDENT_RE.match(text, k))
+        else:
+            has_alias = (
+                bool(am) and am.group().upper() not in _CTE_ALIAS_STOP_KWS
+            )
         refs.append((i, end, has_alias))
     return refs
 
@@ -2020,15 +1994,16 @@ def inline_route_ctes(sql: str):
     in ``FROM``/``JOIN`` position as derived tables ``FROM (SELECT ...)
     AS name`` — textually the relation shape the statement routes admit
     — and return the rewritten statement, or ``None`` when the
-    statement has no WITH clause or any definition is zero-referenced /
-    renamed (column list) / recursive / referenced outside FROM-JOIN
-    position (those keep the original statement and its fold/fallback
-    paths — the round-8 contract).
+    statement has no WITH head :func:`sqltext.ctes` reads (comments
+    before and inside it are not code) or any definition is
+    zero-referenced / renamed (column list) / recursive / referenced
+    outside FROM-JOIN position (those keep the original statement and
+    its fold/fallback paths).
 
     Multi-reference CTEs inline at EVERY site when their body contains
-    no non-deterministic call (round 10, VERDICT r9 task 3): Spark
-    re-plans the duplicated subtree and exchange reuse typically dedups
-    the scan, while the answer is identical by determinism.  A
+    no non-deterministic call: Spark re-plans the duplicated subtree
+    and exchange reuse typically dedups the scan, while the answer is
+    identical by determinism.  A
     multi-referenced CTE whose body IS non-deterministic keeps the fold
     — per-site re-evaluation would draw independent rows where the CTE
     draws once.  Single-use non-deterministic bodies still inline (one
@@ -2043,41 +2018,14 @@ def inline_route_ctes(sql: str):
     corner the conservative checks below miss — a garbled inline can
     only cost the bounded plan, never the answer (one verified corner,
     expression-level FROM, is additionally caught in _cte_table_refs
-    itself because it can analyze cleanly).  Round-9 session (VERDICT
-    r8 task 1): CTE-wrapped FUNNELCOUNT / MV-distinct / SUMARRAY
-    statements were the last wire shapes still landing on the
-    collection-state folds at high cardinality."""
-    head = re.match(r"\s*WITH\s+", sql, re.IGNORECASE)
-    if head is None or re.match(
-        r"\s*WITH\s+RECURSIVE\b", sql, re.IGNORECASE
-    ):
+    itself because it can analyze cleanly)."""
+    head = sqltext.ctes(sql)
+    if head is None or not head[0]:
         return None
-    pos = head.end()
-    ctes = []
-    while True:
-        nm = re.match(r"[A-Za-z_]\w*", sql[pos:])
-        if nm is None:
-            return None  # quoted/backtick CTE names keep the fold
-        name = nm.group(0)
-        pos += nm.end()
-        am = re.match(r"\s*AS\s*\(", sql[pos:], re.IGNORECASE)
-        if am is None:
-            return None  # `name (cols) AS (...)` renames: keep the fold
-        try:
-            body, after = sqltext.balanced(sql, pos + am.end() - 1)
-        except ValueError:
-            return None
-        if not re.match(r"\s*SELECT\b", body, re.IGNORECASE):
-            return None  # nested-WITH / VALUES bodies keep the fold
-        ctes.append((name, body.strip()))
-        cm = re.match(r"\s*,\s*", sql[after:])
-        if cm is None:
-            pos = after
-            break
-        pos = after + cm.end()
-    text = sql[pos:]
-    if not re.match(r"\s*SELECT\b", text, re.IGNORECASE):
+    text = sql[head[1]:]
+    if not sqltext.keyword("SELECT").match(text, sqltext.skip_space(text)):
         return None
+    ctes = [(name, sqltext.strip(sql[s:e])) for name, s, e in head[0]]
     names = [n.upper() for n, _ in ctes]
     if len(set(names)) != len(names):
         return None  # duplicate names: Spark's scoping, not ours
@@ -2100,285 +2048,33 @@ def inline_route_ctes(sql: str):
     return text
 
 
-class _StmtShape:
-    """Parsed shape of a routable single-SELECT statement (shared by the
-    MV-distinct and keyed statement routes — round-8 review: the two
-    preambles had drifted into ~50 duplicated lines)."""
-
-    __slots__ = ("kws", "names", "subq_spans", "from_i", "from_end",
-                 "next_start", "from_text", "insert_at", "rel_next")
-
-    def in_subquery(self, pos: int) -> bool:
-        return any(s < pos < e for s, e in self.subq_spans)
-
-
-# JOIN-chain admission fragments (round 11 grows the round-10 chain to
-# every Spark join flavor — the relation re-emits VERBATIM in every
-# route, so the flavor's semantics ride for free).  The alias lookahead
-# keeps a flavor word from being eaten as an operand alias; the
-# modifier tail is what a segment (or the FROM operand) may trail for
-# the NEXT join, and its `condless` capture marks the CROSS/NATURAL
-# flavors whose segment must carry NO `ON`/`USING`.
-_JOIN_ALIAS_NOT = (
-    r"(?!ON\b|USING\b|LEFT\b|RIGHT\b|FULL\b|INNER\b|OUTER\b|"
-    r"CROSS\b|NATURAL\b|SEMI\b|ANTI\b)"
-)
-_JOIN_MOD_TAIL = (
-    r"(?:\s+(?:(?P<condless>CROSS|NATURAL(?:\s+INNER|"
-    r"\s+(?:LEFT|RIGHT|FULL)(?:\s+OUTER)?)?)|"
-    r"(?:LEFT\s+)?(?:SEMI|ANTI)|"
-    r"(?:LEFT|RIGHT|FULL)(?:\s+OUTER)?|INNER))?"
-)
-
-
-def _chain_operand_end(
-    sql: str, start: int, bound: int, allow_subqueries: bool
-):
-    """Index past the JOIN-chain operand starting at ``sql[start:]`` — a
-    bare table name, or (round 11, VERDICT r10 task 1) a derived table
-    ``(SELECT ...)`` whose balanced group re-emits verbatim; ``None``
-    when neither shape parses.  The derived form requires
-    ``allow_subqueries`` so the nested SELECT is a recorded span (the
-    scope-exclusion invariant — same contract as the FROM-position
-    derived-table admission); the group's first token must be SELECT,
-    so ``(VALUES ...)`` / parenthesized-join relations bail.  ``bound``
-    caps the operand: the next top-level keyword starts there, and a
-    group closing at or past it means a mis-modeled statement."""
-    if re.match(r"\s*\(", sql[start:bound]):
-        if not allow_subqueries:
-            return None
-        m = re.match(r"\s*\(", sql[start:])
-        if not re.match(
-            r"\s*\(\s*SELECT\b", sql[start:], re.IGNORECASE
-        ):
-            return None
-        try:
-            _, after = sqltext.balanced(sql, start + m.end() - 1)
-        except ValueError:
-            return None
-        return after if after <= bound else None
-    tm = re.match(r"\s*[A-Za-z_][\w.]*", sql[start:bound])
-    return start + tm.end() if tm else None
-
-
-def _parse_routable_statement(
-    sql: str, guard: str, allow_subqueries: bool, allow_join: bool
-):
-    """Validate the statement-shape contract both routes share and parse
-    the FROM clause; ``None`` means unroutable.  ``guard`` is the route's
-    generated-alias prefix (a statement already containing it is either
-    re-entrant or adversarial — bail).  ``allow_subqueries`` admits
-    parenthesized (SELECT ...) groups and records their spans so the
-    caller can scope-exclude their call sites; ``allow_join`` admits a
-    CHAIN of ``[flavor] JOIN operand [alias] (ON cond | USING (cols) |
-    nothing-for-CROSS/NATURAL)`` segments (round 10 grew the one-JOIN
-    cap to chains, VERDICT r9 task 1; round 11 grew the ON-only grammar
-    to every Spark join flavor — CROSS, NATURAL, USING, SEMI/ANTI —
-    because every route re-emits the relation text VERBATIM inside its
-    derived table, so each flavor's row/column semantics ride for free)
-    and places ``insert_at`` after the last segment.  Since round 11 (VERDICT r10
-    task 1) a chain operand — the FROM-position relation or any JOIN
-    segment's — may also be a derived table ``(SELECT ...) [alias]``
-    (requires ``allow_subqueries``): joining the fact table to a
-    pre-aggregated/filtered subquery was the largest remaining path
-    onto the collection-state folds, and the balanced group re-emits
-    exactly as verbatim as a bare table."""
+def _route_shape(sql: str, guard: str):
+    """The :func:`sqltext.statement` shape of a statement the routes can
+    restructure, or None.  Admitted: one SELECT, not DISTINCT and with no
+    WITH head, over a relation the shape reads (a table, a JOIN chain of
+    any Spark flavor or a comma list, each operand a name or a derived
+    ``(SELECT ...)`` table); no window, ROLLUP, CUBE or GROUPING at any
+    depth; every nested SELECT inside a ``(SELECT ...)`` group.  Every
+    route re-emits the relation verbatim, so each join flavor's
+    semantics carry over; a subquery evaluates in its own scope, so the
+    routes leave its call sites alone.  ``guard`` is the route's
+    generated-name prefix: a statement that already holds it is
+    re-entrant or adversarial."""
     if guard in sql:
         return None
-    if not re.match(r"\s*SELECT\b", sql, re.IGNORECASE):
+    shape = sqltext.statement(sql)
+    if shape is None or shape.ctes or shape.relation is None:
         return None
-    if re.match(r"\s*SELECT\s+DISTINCT\b", sql, re.IGNORECASE):
-        return None
-    if sqltext.search(_MV_ANYDEPTH_BAIL_RE, sql):
-        return None
-    kws = _top_level_keywords(sql)
-    names = [k[0] for k in kws]
-    if names.count("SELECT") != 1:
-        return None
-    subq_spans = sqltext.subquery_spans(sql) if allow_subqueries else []
-    # every nested SELECT must sit inside an admitted subquery span; with
-    # allow_subqueries=False that means NO nested SELECT at all
-    if not _all_selects_inside(sql, kws[0][2], subq_spans):
-        return None
-    for bad in _ROUTE_BAD_TOPKWS:
-        if bad in names:
-            return None
-    if names.count("FROM") != 1:
-        return None
-    shape = _StmtShape()
-    shape.kws, shape.names, shape.subq_spans = kws, names, subq_spans
-    from_i = names.index("FROM")
-    shape.from_i = from_i
-    shape.from_end = kws[from_i][2]
-    shape.next_start = (
-        kws[from_i + 1][1] if from_i + 1 < len(kws) else len(sql)
-    )
-    shape.from_text = sql[shape.from_end : shape.next_start]
-    join_is = [i for i, nm in enumerate(names) if nm == "JOIN"]
-    if join_is:
-        # every JOIN keyword must form one consecutive chain directly
-        # after FROM — a JOIN anywhere else is a mis-modeled statement
-        if not allow_join or join_is != list(
-            range(from_i + 1, from_i + 1 + len(join_is))
-        ):
-            return None
-        # each chain OPERAND is a bare table name or (round 11, VERDICT
-        # r10 task 1) a derived table `(SELECT ...)` — the balanced
-        # group re-emits VERBATIM inside the route's derived table
-        # exactly like the FROM-position admission below, and its
-        # recorded subquery span scope-excludes its own call sites
-        op_end = _chain_operand_end(
-            sql, shape.from_end, kws[from_i + 1][1], allow_subqueries
+    select = shape.clauses["SELECT"].body_start
+    if (
+        sqltext.keyword("DISTINCT").match(sql, select)
+        or sqltext.search(_MV_ANYDEPTH_BAIL_RE, sql)
+        or any(
+            not shape.in_subquery(m.start())
+            for m in sqltext.finditer("SELECT", sql, select)
         )
-        fm = re.fullmatch(
-            r"(?:\s*(?:AS\s+)?" + _JOIN_ALIAS_NOT + r"[A-Za-z_]\w*)?"
-            + _JOIN_MOD_TAIL + r"\s*",
-            sql[op_end : kws[from_i + 1][1]],
-            re.IGNORECASE,
-        ) if op_end is not None else None
-        if fm is None or len(
-            sqltext.split(shape.from_text)
-        ) != 1:
-            return None
-        # cond-less CROSS/NATURAL flavors (round 11): the capture holds
-        # the NEXT join's type modifier — its segment carries no ON
-        condless = bool(fm.group("condless"))
-        for seg, join_i in enumerate(join_is):
-            join_end = kws[join_i][2]
-            join_next = (
-                kws[join_i + 1][1]
-                if join_i + 1 < len(kws)
-                else len(sql)
-            )
-            join_text = sql[join_end:join_next]
-            final = seg == len(join_is) - 1
-            # every segment is `tbl-or-(SELECT ...) [alias]` followed by
-            # `ON cond` / `USING (cols)` (round 11 — both re-emit
-            # verbatim, so the flavor's column-merging semantics ride
-            # for free) — or by NOTHING when the segment's own JOIN was
-            # CROSS/NATURAL-flavored; a NON-final segment may trail the
-            # NEXT join's type modifier.  An invalid pairing (CROSS
-            # with ON, NATURAL with USING, plain JOIN with neither)
-            # fails the fullmatch and the chain bails — the original
-            # then stands with its own loud parse error.
-            op_end = _chain_operand_end(
-                sql, join_end, join_next, allow_subqueries
-            )
-            sm = re.fullmatch(
-                r"(?:\s*(?:AS\s+)?" + _JOIN_ALIAS_NOT
-                + r"[A-Za-z_]\w*)?"
-                + (
-                    r""
-                    if condless
-                    else r"(?:\s*ON\s+.+?|\s*USING\s*\([^()]*\))"
-                )
-                + (r"\s*" if final else _JOIN_MOD_TAIL + r"\s*"),
-                sql[op_end:join_next],
-                re.IGNORECASE | re.DOTALL,
-            ) if op_end is not None else None
-            if sm is None or len(
-                sqltext.split(join_text)
-            ) != 1:
-                return None
-            condless = (not final) and bool(sm.group("condless"))
-            if final:
-                # insert BEFORE the trailing whitespace so the following
-                # clause keyword keeps its separator (the inserted text
-                # carries no trailing space, matching the single-table
-                # insertion point)
-                shape.insert_at = join_end + len(join_text.rstrip())
-                shape.rel_next = join_next  # ONE relation-end derivation
-    elif len(sqltext.split(shape.from_text)) > 1:
-        # a TOP-LEVEL COMMA LIST — the pre-ANSI implicit cross join
-        # `FROM a, b WHERE a.k = b.k` (round 11, VERDICT r10 item 6,
-        # upgraded from the documented boundary to an admission): every
-        # route re-emits the relation text VERBATIM inside its derived
-        # table (keyed/cascade/mode-avg copy `FROM <rel> WHERE ...`;
-        # the MV route appends its LATERAL VIEW after the LAST operand,
-        # which Spark attaches to the joined result), so the routed
-        # plan sees exactly the rows the original aggregates saw — the
-        # same argument as the JOIN-chain admission.  Each operand is a
-        # bare table `[AS] [alias]` or (with allow_subqueries, so the
-        # nested SELECT is a recorded span) a derived table
-        # `(SELECT ...) [AS] [alias]`; the splitter is quote- and
-        # paren-aware, so literal/derived-body commas never split.  A
-        # comma list MIXED with explicit JOIN keeps bailing in the
-        # chain branch above (`a, b JOIN c` nests the join under the
-        # cross product — a precedence subtlety not worth modeling).
-        pos = shape.from_end
-        for piece in sqltext.split(shape.from_text):
-            bound = pos + len(piece)
-            op_end = _chain_operand_end(
-                sql, pos, bound, allow_subqueries
-            )
-            if op_end is None or not re.fullmatch(
-                r"(?:\s*(?:AS\s+)?[A-Za-z_]\w*)?\s*",
-                sql[op_end:bound],
-                re.IGNORECASE,
-            ):
-                return None  # empty/trailing operand, VALUES, double alias
-            pos = bound + 1  # past this operand's comma
-        # insertion point: past the last operand's final token — the
-        # same position every single-operand branch derives
-        shape.insert_at = shape.from_end + len(
-            shape.from_text.rstrip()
-        )
-        shape.rel_next = shape.next_start
-    elif shape.from_text.lstrip().startswith("("):
-        # a DERIVED-TABLE relation `FROM (SELECT ...) [AS] alias`
-        # (round-8 session, requires allow_subqueries so the nested
-        # SELECT is a recorded span): it re-emits verbatim inside the
-        # route's derived table exactly like a bare table — its own
-        # call sites are scope-excluded as subquery sites, so the
-        # classification logic is untouched.  The comma check cannot
-        # apply to the group's CONTENT (select lists have commas); the
-        # balanced scan finds the group's end and the residue may only
-        # be an optional alias.  The group's first token must be SELECT
-        # — the shape sqltext.subquery_spans records — or the
-        # scope-exclusion invariant above would be FALSE for it
-        # ((VALUES ...) / parenthesized-join relations bail;
-        # post-review).
-        if not allow_subqueries:
-            return None
-        if not re.match(
-            r"\s*\(\s*SELECT\b", shape.from_text, re.IGNORECASE
-        ):
-            return None
-        open_idx = shape.from_end + (
-            len(shape.from_text) - len(shape.from_text.lstrip())
-        )
-        try:
-            _, after = sqltext.balanced(sql, open_idx)
-        except ValueError:
-            return None
-        am = re.fullmatch(
-            r"\s*(?:AS\s+)?([A-Za-z_]\w*)?\s*",
-            sql[after : shape.next_start],
-            re.IGNORECASE,
-        )
-        if am is None:
-            return None
-        # insertion point: after the alias token when present (the MV
-        # route's LATERAL VIEW must follow it), else right after ')'
-        shape.insert_at = after + (am.end(1) if am.group(1) else 0)
-        shape.rel_next = shape.next_start
-    else:
-        m = re.fullmatch(
-            r"\s*([A-Za-z_][\w.]*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?\s*",
-            shape.from_text,
-            re.IGNORECASE,
-        )
-        if m is None or "," in shape.from_text:
-            return None
-        shape.insert_at = shape.from_end + m.end(m.lastindex or 1)
-        shape.rel_next = shape.next_start
-    # NOTE: a seam check `sql[insert_at:rel_next].strip()` would be DEAD
-    # code — both positions derive from the same keyword-scan boundary,
-    # so a mis-model moves them together (second review).  The boundary
-    # itself is what must be right: _top_level_keywords rejects '.'
-    # predecessors so keyword-named qualified columns cannot truncate
-    # the relation, and every route's output still passes the engine's
-    # analyze-cleanly-or-fallback probe.
+    ):
+        return None
     return shape
 
 
@@ -2392,38 +2088,24 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
     name the three classification tables do NOT know that the predicate
     says IS an aggregate makes the route bail — future Spark aggregate
     additions and registered UDAFs fail SAFE to the fallback expression
-    instead of being silently evaluated over POSEXPLODE-duplicated rows
-    (round-7 ADVICE: approx_top_k/kll_sketch_agg were exactly that
-    silent-inflation class before they were classified)."""
+    instead of being silently evaluated over POSEXPLODE-duplicated
+    rows."""
     if not _MV_GATE_RE.search(sql):
         return None
     if sqltext.search(_NONDETERMINISTIC_FN_RE, sql):
         return None  # per-copy re-evaluation would skew sampling: fold
-    # subqueries are allowed IF every nested SELECT sits inside a
-    # parenthesized (SELECT ...) group (round 8 — scalar subqueries /
-    # IN / EXISTS): those groups evaluate in their OWN scope, so the
-    # explode neither duplicates their input nor affects their result;
-    # their call sites are excluded from classification below.  A
-    # JOIN ... ON chain is allowed (round 8 one join, round 10 chains):
-    # the LATERAL VIEW attaches AFTER the last join, exploding each
-    # JOINED row — exactly the relation the original aggregates saw, so
-    # the duplication logic is unchanged.
-    shape = _parse_routable_statement(
-        sql, "__mv", allow_subqueries=True, allow_join=True
-    )
+    shape = _route_shape(sql, "__mv")
     if shape is None:
         return None
-    insert_at = shape.insert_at
-    _in_subquery = shape.in_subquery
     sites = _scan_call_sites(sql)
     mv_sites, wrap_sites = [], []
     for s in sites:
         u = s[0].upper()
         if u in _MV_DISTINCT_BUILDERS or u in _MV_PERCENTILE_ROUTE:
-            if _in_subquery(s[1]):
+            if shape.in_subquery(s[1]):
                 return None  # an MV distinct in another scope: not ours
             mv_sites.append(s)
-        elif _in_subquery(s[1]):
+        elif shape.in_subquery(s[1]):
             # a subquery's aggregates run in their OWN scope over their
             # OWN input — the explode neither duplicates nor masks them
             continue
@@ -2451,24 +2133,20 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
     exprs: list = []
     mv_parsed = []
     for name, st, op, inner, end in mv_sites:
-        args = (
-            [a.strip() for a in sqltext.split(inner)]
-            if inner.strip()
-            else []
-        )
+        args = _args(inner)
         if not args:
             return None  # the fallback path raises the loud arity error
         if name.upper() in _MV_PERCENTILE_ROUTE and len(args) != 2:
             return None  # the fallback raises the loud arity error
         e = args[0]
-        if _MV_AGG_IN_ARG_RE.search(e) or "__mv" in e:
-            return None
-        if re.search(r"\bSELECT\b", e, re.IGNORECASE):
-            return None  # a subquery inside the exploded argument
+        if sqltext.search(_MV_AGG_IN_ARG_RE, e) or sqltext.search(
+            "SELECT", e
+        ):
+            return None  # a nested aggregate or a subquery to explode
         # a trailing FILTER (WHERE pred) on the TARGET folds into an
-        # element mask (round 10): the pred is row-level, so masking
-        # every exploded copy of a row keeps/drops its elements exactly
-        # like filter-then-explode; NULL elements are skipped by every
+        # element mask: the pred is row-level, so masking every exploded
+        # copy of a row keeps/drops its elements exactly like
+        # filter-then-explode; NULL elements are skipped by every
         # builder aggregate (count DISTINCT / hll / sum / percentile),
         # matching the builders' existing NULL-element semantics.  The
         # mask-form (not native FILTER attachment) serves the
@@ -2508,11 +2186,7 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
             repl = _MV_DISTINCT_BUILDERS[u](elem)
         edits.append((st, end, repl))
     for name, st, op, inner, end in wrap_sites:
-        args = (
-            [a.strip() for a in sqltext.split(inner)]
-            if inner.strip()
-            else []
-        )
+        args = _args(inner)
         u = name.upper()
         if args and re.match(r"DISTINCT\b", args[0], re.IGNORECASE):
             continue  # distinct-form aggregates are duplication-immune
@@ -2534,11 +2208,12 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
         f"AS __mv{i}_pos, __mv{i}_elem"
         for i, e in enumerate(exprs)
     )
-    # trailing separator: an unaliased derived table may abut the next
-    # clause keyword with NO whitespace — `FROM (SELECT ...)GROUP BY g`
-    # is legal SQL — and the splice must not glue the generator column
-    # onto it (post-review; conditional so the common whitespace-
-    # separated shapes keep their byte-exact routed text)
+    # the LATERAL VIEW follows the whole relation, so it explodes each
+    # joined row.  Trailing separator: an unaliased derived table may
+    # abut the next clause keyword with NO whitespace — `FROM (SELECT
+    # ...)GROUP BY g` is legal SQL — and the splice must not glue the
+    # generator column onto it
+    insert_at = shape.clauses["FROM"].body_end
     needs_sep = (
         insert_at < len(sql) and sql[insert_at] not in " \t\r\n"
     )
@@ -2594,21 +2269,20 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
 # Route contract (same as the MV route): bail -> the call-site fallback
 # serves it (FUNNELCOUNT: the exact fold; tuple values: a loud redirect),
 # and the caller requires the routed statement to ANALYZE cleanly or the
-# original stands.  Routable shape: one SELECT, a FROM of one table or
-# table + a `JOIN ... ON` chain (round 8 one join, round 10 chains:
-# the relation re-emits verbatim inside the derived table, joined or
-# not), no set-ops/windows
-# (subqueries ARE admitted, round 8: scalar
-# subqueries stay in the outer statement, WHERE subqueries move verbatim
-# into the inner query where the base table binds identically, and their
-# call sites are scope-excluded), GROUP BY plain identifiers only, all
-# route targets sharing ONE key expression, and co-occurring aggregates
-# only when DECOMPOSABLE (round 8: COUNT/SUM/MIN/MAX/AVG partials push
-# into the inner per-key level and recombine exactly in the outer level
-# — the dashboard staple `SELECT g, count(*), FUNNELCOUNT(...)` routes;
-# distinct/percentile/collect state does not decompose and keeps the
-# fallback, classified statically + the session-catalog is_aggregate
-# predicate for fail-safe, as in the MV route).
+# original stands.  Routable shape: the statement shape every route
+# reads (the relation re-emits verbatim inside the derived table, joined
+# or not; scalar subqueries stay in the outer statement, WHERE
+# subqueries move verbatim into the inner query where the base table
+# binds identically), all route targets sharing ONE key expression, and
+# co-occurring aggregates only when DECOMPOSABLE (COUNT/SUM/MIN/MAX/AVG
+# partials push into the inner per-key level and recombine exactly in
+# the outer level — the dashboard staple `SELECT g, count(*),
+# FUNNELCOUNT(...)` routes; distinct/percentile/collect state does not
+# decompose and keeps the fallback, classified statically + the
+# session-catalog is_aggregate predicate for fail-safe, as in the MV
+# route).  The keyed, ordered-funnel, SUMARRAY and MODE-AVG routes share
+# one preamble, _route: gate, shape, GROUP BY items, call sites, and the
+# targets with their trailing FILTER clauses.
 
 _KEYED_GATE_RE = re.compile(
     r"\b(FUNNELCOUNT|SUMVALUESINTEGERSUMTUPLESKETCH|"
@@ -2696,122 +2370,137 @@ def _theta_set_sql(ast, flag) -> str:
 _PLAIN_IDENT_RE = re.compile(r"[A-Za-z_]\w*")
 
 
-def _parse_route_clauses(sql: str, shape, guard: str = "__rg"):
-    """FROM/WHERE clause spans + GROUP BY columns + the full RELATION
-    text for the statement-restructuring routes; ``None`` = unroutable.
-    ``from_sp`` is ``(kw_start, kw_end, relation_end)`` where
-    relation_end is the position past the whole FROM relation — the
-    table, or table + the admitted ``JOIN ... ON ...`` chain (round-8
-    session, widened to chains in round 10: the restructuring routes
-    re-emit the relation verbatim inside their derived table, and a
-    joined relation re-emits just as verbatim as a bare table, so the
-    old single-table-only bail was pure conservatism).  ``where_sp``
-    is ``(kw_start, kw_end, next_clause_start)``.
+def _group_cols(sql: str, shape, guard: str):
+    """One ``(name, l1_item, l1_group, expr_site)`` tuple per GROUP BY
+    item of ``shape``, or ``None`` when an item keeps the fallback.
 
-    ``group_cols`` is one tuple per GROUP BY item:
-    ``(name, l1_item, l1_group, expr_site)``.  Plain unqualified
-    identifiers re-emit under their own name (``(g, g, g, None)``) so
-    every outer reference binds unchanged.  EXPRESSION items (round 10
-    — ``GROUP BY date_trunc('day', ts)``, the time-bucketed-dashboard
-    staple) get an inner alias: ``name`` = ``{guard}g{k}``, ``l1_item``
-    = ``(expr) AS name`` for the innermost level, ``l1_group`` =
-    ``(expr)`` for its GROUP BY, and ``expr_site`` = the item's
-    ``(abs_start, abs_end, text)`` so _bind_group_expr_edits can
+    Plain unqualified identifiers re-emit under their own name
+    (``(g, g, g, None)``) so every outer reference binds unchanged.
+    EXPRESSION items (``GROUP BY date_trunc('day', ts)``, the
+    time-bucketed-dashboard staple) get an inner alias: ``name`` =
+    ``{guard}g{k}``, ``l1_item`` = ``(expr) AS name`` for the innermost
+    level, ``l1_group`` = ``(expr)`` for its GROUP BY, and ``expr_site``
+    = ``(clause_span_or_None, expr_text)`` so _bind_group_expr_edits can
     rewrite the OUTER clauses to the alias (the derived-table routes
     project only their items, so the raw expression no longer binds
-    outside); ``expr_site`` is ``(clause_span_or_None, expr_text)`` —
-    None for ORDINAL items, which resolve through the select list and
-    keep their clause text verbatim (the routes edit in place, so
-    select positions are stable).  Subquery-bearing items,
+    outside).  The span is None for ORDINAL items, which resolve through
+    the select list and keep their clause text verbatim (the routes edit
+    in place, so select positions are stable).  Subquery-bearing items,
     aggregate-containing items (the original's own error), and items
-    starting with a quote (exact-text outer matching could begin at a
-    literal) keep the fallback."""
-    kws, names = shape.kws, shape.names
-    if names.count("WHERE") > 1 or names.count("GROUP") > 1:
-        return None
-
-    def clause_span(kw: str):
-        for i, (name, s, e) in enumerate(kws):
-            if name == kw:
-                nxt = kws[i + 1][1] if i + 1 < len(kws) else len(sql)
-                return (s, e, nxt)
-        return None
-
-    # _parse_routable_statement validated the relation layout (single
-    # table, or table + a JOIN ... ON chain with allow_join=True) and
-    # recorded its end ONCE as shape.rel_next (post-review: this
-    # function re-derived the boundary, a drift seam)
-    rel_next = shape.rel_next
-    from_sp = (kws[shape.from_i][1], shape.from_end, rel_next)
-    rel_text = sql[shape.from_end : shape.insert_at].strip()
-    where_sp = clause_span("WHERE")
-    if where_sp is not None and where_sp[0] != rel_next:
-        return None  # WHERE not right after the relation: mis-modeled
-    group_sp = clause_span("GROUP")
-    group_cols: list = []
-    if group_sp is not None:
-        gtext = sql[group_sp[1] : group_sp[2]]
-        gm = re.match(r"\s*BY\b", gtext, re.IGNORECASE)
-        if gm is None:
+    starting with a literal (exact-text outer matching could begin
+    inside it) keep the fallback."""
+    group = shape.clauses.get("GROUP BY")
+    if group is None:
+        return []
+    cols, sel_items, pos = [], None, group.body_start
+    for part in sqltext.split(sql[group.body_start : group.body_end]):
+        site = (pos + sqltext.skip_space(part), pos + sqltext.code_end(part))
+        pos += len(part) + 1  # past this item and its comma
+        t = sql[site[0] : site[1]]
+        if t and re.fullmatch(r"\d+", t):
+            # an `expr AS alias` select item strips its alias; a
+            # bare-alias item (`expr name`) is ambiguous with an
+            # expression ending in an identifier, so its whole text
+            # stays and the probe folds any mis-read
+            if sel_items is None:
+                c = shape.clauses["SELECT"]
+                sel_items = sqltext.split(sql[c.body_start : c.body_end])
+            if not 1 <= int(t) <= len(sel_items):
+                return None  # invalid ordinal: the original's error
+            t = sqltext.strip(sel_items[int(t) - 1])
+            am = re.search(r"\s+AS\s+[A-Za-z_]\w*\s*$", t, re.IGNORECASE)
+            if am:
+                t = t[: am.start()].strip()
+            site = None
+        if not t:
             return None
-        base = group_sp[1] + gm.end()
-        parts = sqltext.split(gtext[gm.end():])
-        sel_items = None  # lazily split for ordinal resolution
-        off = 0
-        k = 0
-        for part in parts:
-            t = part.strip()
-            abs_s = base + off + (len(part) - len(part.lstrip()))
-            off += len(part) + 1  # past this item and its comma
-            if not t:
-                return None
-            if _PLAIN_IDENT_RE.fullmatch(t):
-                group_cols.append((t, t, t, None))
-                continue
-            site = (abs_s, abs_s + len(t))
-            if re.fullmatch(r"\d+", t):
-                # ordinal (round 10): it denotes the t-th OUTER select
-                # item, and the routes' in-place edits preserve select
-                # positions, so the ordinal itself stays verbatim — only
-                # the RESOLVED expression needs the inner alias.  An
-                # `expr AS alias` item strips its alias; bare-alias
-                # items (`expr name`) are ambiguous with expressions
-                # ending in an identifier, so their whole text stays and
-                # the probe folds any mis-read.
-                if sel_items is None:
-                    sel_items = sqltext.split(
-                        sql[kws[0][2] : from_sp[0]]
-                    )
-                idx = int(t)
-                if not 1 <= idx <= len(sel_items):
-                    return None  # invalid ordinal: the original's error
-                t = sel_items[idx - 1].strip()
-                am = re.search(
-                    r"\s+AS\s+[A-Za-z_]\w*\s*$", t, re.IGNORECASE
-                )
-                if am:
-                    t = t[: am.start()].strip()
-                site = None  # the clause keeps the ordinal text
-                if not t:
-                    return None
-                if _PLAIN_IDENT_RE.fullmatch(t):
-                    group_cols.append((t, t, t, None))
-                    continue
-            if (
-                re.search(r"\bSELECT\b", t, re.IGNORECASE)
-                or _MV_AGG_IN_ARG_RE.search(t)  # group by aggregate:
-                or guard in t                   # the original's error
-                or sqltext.skip(t, 0) > 0  # a literal or comment
-            ):
-                return None
-            alias = f"{guard}g{k}"
-            k += 1
-            group_cols.append(
-                (alias, f"({t}) AS {alias}", f"({t})", (site, t))
-            )
-        if not group_cols:
+        if _PLAIN_IDENT_RE.fullmatch(t):
+            cols.append((t, t, t, None))
+            continue
+        if (
+            sqltext.search("SELECT", t)
+            or sqltext.search(_MV_AGG_IN_ARG_RE, t)
+            or sqltext.skip(t, 0) > 0
+        ):
             return None
-    return from_sp, where_sp, group_cols, rel_text
+        alias = f"{guard}g{sum(gc[3] is not None for gc in cols)}"
+        cols.append((alias, f"({t}) AS {alias}", f"({t})", (site, t)))
+    return cols
+
+
+class _Route(NamedTuple):
+    """A statement one of the restructuring routes rewrites: its shape,
+    its GROUP BY items (:func:`_group_cols`), its call sites
+    (:func:`_scan_call_sites`) and its route targets, each ``(name,
+    start, inner, end, filter_pred)`` with ``end`` past the admitted
+    FILTER clause."""
+
+    sql: str
+    shape: sqltext.Statement
+    group_cols: list
+    sites: list
+    targets: list
+
+    @property
+    def rel(self) -> str:
+        """The FROM relation, which the derived table re-emits
+        verbatim."""
+        f = self.shape.clauses["FROM"]
+        return self.sql[f.body_start : f.body_end]
+
+    @property
+    def where(self) -> str:
+        """`` WHERE cond``, or nothing."""
+        w = self.shape.clauses.get("WHERE")
+        return f" WHERE {self.sql[w.body_start : w.body_end]}" if w else ""
+
+    @property
+    def moved_end(self) -> int:
+        """The end of the ``FROM ... [WHERE ...]`` text the derived
+        table replaces."""
+        c = self.shape.clauses
+        return (c.get("WHERE") or c["FROM"]).end
+
+    def splice(self, edits: list, inner: str, alias: str):
+        """The statement with ``edits`` applied and its ``FROM ...
+        [WHERE ...]`` replaced by the derived table ``(inner) alias``;
+        None when two edits overlap — a shape the span logic did not
+        anticipate (e.g. a route target inside the WHERE clause) bails
+        to the call-site fallback."""
+        start = self.shape.clauses["FROM"].start
+        edits.append((start, self.moved_end, f"FROM ({inner}) {alias} "))
+        return apply_text_edits(self.sql, edits)
+
+
+def _route(sql: str, gate: re.Pattern, guard: str, is_target):
+    """The :class:`_Route` the keyed, ordered-funnel, SUMARRAY and
+    MODE-AVG routes rewrite, or None when the statement does not route:
+    no ``gate`` match, no :func:`_route_shape`, a GROUP BY item that
+    keeps the fallback, no target, a target inside a subquery or inside
+    another target, or a target FILTER clause no row mask can carry.
+    ``is_target(NAME, inner)`` picks the route's call sites."""
+    if not gate.search(sql):
+        return None
+    shape = _route_shape(sql, guard)
+    group_cols = None if shape is None else _group_cols(sql, shape, guard)
+    if group_cols is None:
+        return None
+    sites = _scan_call_sites(sql)
+    targets = []
+    for name, st, _, inner, end in sites:
+        if not is_target(name.upper(), inner):
+            continue
+        if shape.in_subquery(st):
+            return None  # a route target in another scope: not ours
+        parsed_f = _parse_trailing_filter(sql, end)
+        if parsed_f is None:
+            return None  # unfoldable FILTER clause: bail
+        pred, end = parsed_f
+        targets.append((name, st, inner, end, pred))
+    spans = [(t[1], t[3]) for t in targets]
+    if not spans or any(s < s2 < e for s, e in spans for s2, _ in spans):
+        return None  # no target; nested targets are invalid SQL
+    return _Route(sql, shape, group_cols, sites, targets)
 
 
 # word-spelled operators that can bind INTO an exact-byte match whose
@@ -2827,79 +2516,72 @@ _REBIND_WORD_OPS = frozenset(
 )
 
 
-def _bind_group_expr_edits(
-    sql: str, shape, from_sp, where_sp, group_cols, edits: list
-):
-    """Append the OUTER-clause rewrites for expression GROUP BY items
-    (round 10): the item text itself and every exact-text occurrence in
-    the outer regions (select list before FROM; everything after the
+def _bind_group_expr_edits(route: _Route, edits: list):
+    """Append the OUTER-clause rewrites for expression GROUP BY items:
+    the item text itself and every exact-text occurrence in the outer
+    regions (select list before FROM; everything after the
     relation+WHERE, i.e. GROUP BY/HAVING/ORDER BY) become the inner
     alias, because the derived-table routes project only their items
     and the raw expression no longer binds there.  Occurrences inside
     spans already being edited (route targets, co-aggregates — whose
     text moves to the INNER level where the base table binds), inside
-    other group items, and inside ADMITTED SUBQUERY SPANS (round-10
-    review: a subquery's own columns may spell the same text — its
-    inner-first resolution is identical either way, and an
-    outward-correlated raw reference simply fails the probe) are
-    skipped; literal content is opaque.
+    other group items, and inside subqueries (a subquery's own columns
+    may spell the same text — its inner-first resolution is identical
+    either way, and an outward-correlated raw reference simply fails
+    the probe) are skipped; literal and comment content is opaque.
 
     An occurrence only rewrites when it stands ALONE as a list item or
     parenthesized operand — both non-whitespace neighbors must be a
     delimiter (comma/paren/end) or an alphabetic keyword, never an
-    operator character or a WORD-SPELLED operator (round-10 review: an
-    exact-byte match need not be a parse subtree — ``y * x + 1`` with
-    ``GROUP BY x + 1`` matches the tail, and rewriting it would turn
-    the original's loud MISSING_AGGREGATION into silently-served
-    numbers; round-11 ADVICE: the same subtree hazard with WORD
-    operators — ``ORDER BY c AND a OR b`` parses ``(c AND a) OR b``,
-    so an ``a OR b`` item's byte match is not a subtree either, and
-    with ``c`` projected the regrouped rewrite ANALYZES CLEANLY —
-    hence every word operator joins the DIV exclusion, low-precedence
-    AND/OR/NOT that bind INTO the match and comparison keywords
-    IN/IS/LIKE/BETWEEN... whose left operand a boolean item's tail
-    could be mistaken for, e.g. ``a OR b IN (...)``).  Literal and
-    comment content is opaque (functions/sqltext.py).  Matching is
-    exact-byte with identifier-boundary checks
-    — any occurrence this skips or misses stays an unbound raw
+    operator character or a WORD-SPELLED operator: an exact-byte match
+    need not be a parse subtree.  ``y * x + 1`` with ``GROUP BY x + 1``
+    matches the tail, and rewriting it would turn the original's loud
+    MISSING_AGGREGATION into silently-served numbers; ``ORDER BY c AND
+    a OR b`` parses ``(c AND a) OR b``, so an ``a OR b`` item's byte
+    match is not a subtree either, and with ``c`` projected the
+    regrouped rewrite ANALYZES CLEANLY.  Hence every word operator is
+    excluded: low-precedence AND/OR/NOT that bind INTO the match, DIV,
+    and comparison keywords IN/IS/LIKE/BETWEEN... whose left operand a
+    boolean item's tail could be mistaken for, e.g. ``a OR b IN
+    (...)``.  Any occurrence this skips or misses stays an unbound raw
     reference and the analysis probe sends the statement to the
     fallback (the original's answer OR its loud error), never a silent
     wrong answer."""
-    expr_cols = [gc for gc in group_cols if gc[3] is not None]
+    sql, select = route.sql, route.shape.clauses["SELECT"]
+    expr_cols = [gc for gc in route.group_cols if gc[3] is not None]
     if not expr_cols:
         return
-    repl_end = where_sp[2] if where_sp is not None else from_sp[2]
-    regions = ((shape.kws[0][2], from_sp[0]), (repl_end, len(sql)))
-    # output-name preservation (round 11): a QUALIFIED bare column as a
-    # group item (`GROUP BY d.tier`, the implicit-join staple) would
-    # otherwise surface as the internal alias in the result schema —
-    # `SELECT d.tier` names its column `tier`, and the routed statement
-    # must too.  When a rewrite target is an ENTIRE unaliased
-    # select-list item and the item text is a qualified identifier, the
-    # edit becomes `<alias> AS <tail>`.  Only the exact-byte spelling
-    # gets this: an UNQUALIFIED re-spelling (`SELECT tier ... GROUP BY
-    # d.tier`) stays a raw reference the probe folds — rebinding it
-    # would serve an answer where an ambiguous original errors loudly.
-    sel_spans = []
-    pos = shape.kws[0][2]
-    for item in sqltext.split(sql[pos : from_sp[0]]):
-        sel_spans.append(
-            (
-                pos + (len(item) - len(item.lstrip())),
-                pos + len(item.rstrip()),
-            )
+    regions = (
+        (select.body_start, route.shape.clauses["FROM"].start),
+        (route.moved_end, len(sql)),
+    )
+    # output-name preservation: a QUALIFIED bare column as a group item
+    # (`GROUP BY d.tier`, the implicit-join staple) would otherwise
+    # surface as the internal alias in the result schema — `SELECT
+    # d.tier` names its column `tier`, and the routed statement must
+    # too.  When a rewrite target is an ENTIRE unaliased select-list
+    # item and the item text is a qualified identifier, the edit becomes
+    # `<alias> AS <tail>`.  Only the exact-byte spelling gets this: an
+    # UNQUALIFIED re-spelling (`SELECT tier ... GROUP BY d.tier`) stays
+    # a raw reference the probe folds — rebinding it would serve an
+    # answer where an ambiguous original errors loudly.
+    sel_spans, pos = set(), select.body_start
+    for item in sqltext.split(sql[select.body_start : select.body_end]):
+        sel_spans.add(
+            (pos + sqltext.skip_space(item), pos + sqltext.code_end(item))
         )
         pos += len(item) + 1
-    sel_spans = frozenset(sel_spans)
     skip = [(s, e) for s, e, _ in edits]
     skip += [site for _, _, _, (site, _) in expr_cols if site]
-    skip += list(shape.subq_spans)
+    skip += route.shape.subqueries
 
     def skipped(a: int, b: int) -> bool:
         return any(a < e2 and s2 < b for s2, e2 in skip)
 
+    code = sqltext.blank(sql)
+
     def standalone(pos: int, forward: bool) -> bool:
-        # the nearest non-whitespace neighbor: a delimiter or an
+        # the nearest neighbor in code: a delimiter or an
         # alphabetic keyword means the match is a complete list item /
         # parenthesized operand; an operator char — or a WORD operator
         # (_REBIND_WORD_OPS) — means the surrounding expression could
@@ -2907,18 +2589,18 @@ def _bind_group_expr_edits(
         # probe (fold), never a regrouped rewrite
         j = pos
         step = 1 if forward else -1
-        while 0 <= j < len(sql) and sql[j] in " \t\r\n":
+        while 0 <= j < len(code) and code[j] in " \t\r\n":
             j += step
-        if not 0 <= j < len(sql):
+        if not 0 <= j < len(code):
             return True  # statement boundary
-        ch = sql[j]
+        ch = code[j]
         if ch in "(),;":
             return True
         if ch.isalpha() or ch == "_":
             k = j
-            while 0 <= k < len(sql) and (sql[k].isalnum() or sql[k] == "_"):
+            while 0 <= k < len(code) and (code[k].isalnum() or code[k] == "_"):
                 k += step
-            word = sql[k + 1 : j + 1] if not forward else sql[j:k]
+            word = code[k + 1 : j + 1] if not forward else code[j:k]
             return word.upper() not in _REBIND_WORD_OPS
         return False
 
@@ -2966,58 +2648,50 @@ def _bind_group_expr_edits(
 
 
 def _collect_decomposable_co_sites(
-    sql: str,
-    sites: list,
-    target_names,
-    in_subquery,
-    inside_target,
-    is_aggregate,
-    count_multiarg_ok: bool,
+    route: _Route, is_aggregate, count_multiarg_ok: bool
 ):
-    """ONE definition of the co-aggregate classification the two-level
-    restructuring routes share (keyed + sumarray; post-review: the two
-    loops had drifted into ~30 duplicated lines — the same divergence
-    class the _StmtShape consolidation fixed for the route preambles).
-    Returns the decomposable co-site list ``[(AGGNAME, start, end,
-    inner_text, filter_pred_or_None)]`` or ``None`` (bail to the
-    route's fallback); ``end`` spans past the FILTER clause when one
-    was admitted, so the replacement edit swallows it.
+    """The co-aggregates a two-level restructuring route (keyed,
+    SUMARRAY, MODE-AVG) pushes through its levels: ``[(AGGNAME, start,
+    end, inner_text, filter_pred_or_None)]``, or ``None`` (bail to the
+    route's fallback); ``end`` spans past the FILTER clause when one was
+    admitted, so the replacement edit swallows it.  Call sites inside a
+    route target or a subquery are not co-aggregates.
 
-    Decomposable co-aggregates (round 8): partials push into the inner
-    level and recombine exactly in the outer — count -> sum of counts,
-    sum -> sum of sums, min/max -> extremes of extremes, avg -> sum of
-    sums / sum of counts.  A trailing ``FILTER (WHERE pred)`` is
-    admitted since round 10 by folding ``pred`` into the INNER partial's
-    mask (``count(x) FILTER (WHERE c)`` == ``count(if(c, x, null))`` —
-    the predicate is row-level and the inner level is where the
-    original rows live, the same binding move the routes already make
-    for the WHERE clause; preds containing a subquery bail
-    conservatively).  Shapes the decomposition cannot keep exact still
-    bail: count(DISTINCT x) does not decompose; min(a, b)
-    is invalid SQL but min((a, b)) is a VALID struct-min, so wrapping
-    would silently serve a loudly broken original; sum-of-sums widens
-    decimal precision twice (value-equal but dtype-drifted).
-    ``count_multiarg_ok``: the keyed route preserves rows 1:1 per key
-    so multi-argument COUNT pushes through; the sumarray route must
-    mask each argument to the first exploded copy and cannot mask a
-    multi-argument call as one expression.  Unclassified names: known
-    aggregates bail, our scalar rewrites pass, and anything the live
-    catalog says IS an aggregate fails safe to the fallback."""
+    Decomposable co-aggregates: partials push into the inner level and
+    recombine exactly in the outer — count -> sum of counts, sum -> sum
+    of sums, min/max -> extremes of extremes, avg -> sum of sums / sum
+    of counts.  A trailing ``FILTER (WHERE pred)`` folds ``pred`` into
+    the INNER partial's mask (``count(x) FILTER (WHERE c)`` ==
+    ``count(if(c, x, null))`` — the predicate is row-level and the inner
+    level is where the original rows live; preds containing a subquery
+    bail).  Shapes the decomposition cannot keep exact still bail:
+    count(DISTINCT x) does not decompose; min(a, b) is invalid SQL but
+    min((a, b)) is a VALID struct-min, so wrapping would silently serve
+    a loudly broken original; sum-of-sums widens decimal precision twice
+    (value-equal but dtype-drifted).  ``count_multiarg_ok``: the keyed
+    route preserves rows 1:1 per key so multi-argument COUNT pushes
+    through; the sumarray route must mask each argument to the first
+    exploded copy and cannot mask a multi-argument call as one
+    expression.  Unclassified names: known aggregates bail (another MODE
+    form beside MODE-AVG among them), our scalar rewrites pass, and
+    anything the live catalog says IS an aggregate fails safe to the
+    fallback."""
+    spans = [(t[1], t[3]) for t in route.targets]
     co_sites = []
-    for name, st, op, inner, end in sites:
+    for name, st, op, inner, end in route.sites:
         u = name.upper()
-        if u in target_names or inside_target(st):
-            continue
-        if in_subquery(st):
-            # a subquery's call sites run in their OWN scope over their
-            # OWN input — the restructure neither moves nor re-groups them
+        if any(s <= st < e for s, e in spans) or route.shape.in_subquery(st):
+            # a target, a call inside one, or a call in a subquery's own
+            # scope over its own input: the restructure leaves it alone
             continue
         if u in _KEYED_DECOMPOSABLE:
-            parsed_f = _parse_trailing_filter(sql, end)
+            parsed_f = _parse_trailing_filter(route.sql, end)
             if parsed_f is None:
                 return None  # unfoldable FILTER clause: bail
             pred, end = parsed_f  # end swallows the clause when present
-            if re.match(r"\s*DISTINCT\b", inner, re.IGNORECASE):
+            if sqltext.keyword("DISTINCT").match(
+                inner, sqltext.skip_space(inner)
+            ):
                 return None
             nargs = len(sqltext.split(inner))
             if u == "COUNT":
@@ -3110,103 +2784,28 @@ def _emit_decomposable_co_aggs(
         edits.append((st, end, repl))
 
 
-def _split_off_where(sql: str, from_sp, where_sp):
-    """The (where_clause_text, replacement_end) pair every
-    restructuring route splices when moving FROM+WHERE into its derived
-    table (post-review: pasted four times)."""
-    if where_sp is None:
-        return "", from_sp[2]
-    return f" WHERE {sql[where_sp[1]:where_sp[2]].strip()}", where_sp[2]
-
-
-def _has_nested_span(spans: list) -> bool:
-    """True when any recorded call-site span sits inside another —
-    nested route targets are invalid SQL anyway; the routes bail."""
-    return any(
-        s1 < s2 < e1 for s1, e1 in spans for s2, e2 in spans
-    )
-
-
 def rewrite_keyed_agg_statement(sql: str, is_aggregate=None):
     """Return the bounded two-level statement for a routable FUNNELCOUNT
     / tuple-value-aggregate statement, or ``None`` when the shape is
     unsupported (section comment above has the full contract)."""
-    if not _KEYED_GATE_RE.search(sql):
+    r = _route(sql, _KEYED_GATE_RE, "__fc", lambda u, _: u in _KEYED_TARGETS)
+    if r is None:
         return None
-    # subqueries are allowed (round 8, same contract as the MV route):
-    # every nested SELECT must sit inside a parenthesized (SELECT ...)
-    # group, which evaluates in its OWN scope — a scalar subquery in the
-    # SELECT list stays in the outer statement untouched, and a WHERE
-    # subquery (IN / EXISTS / comparison) moves verbatim into the inner
-    # query where the base table binds identically.  Subquery call sites
-    # are scope-excluded from classification; a route TARGET inside a
-    # subquery is another statement's aggregate — bail.  A `JOIN ...
-    # ON` chain is admitted (round 8 one join, round 10 chains): the
-    # joined relation re-emits VERBATIM inside the derived table, so
-    # the inner GROUP BY sees exactly the rows the original aggregates
-    # saw.
-    shape = _parse_routable_statement(
-        sql, "__fc", allow_subqueries=True, allow_join=True
-    )
-    if shape is None:
-        return None
-    _in_subquery = shape.in_subquery
-    clauses = _parse_route_clauses(sql, shape, "__fc")
-    if clauses is None:
-        return None
-    from_sp, where_sp, group_cols, rel_text = clauses
-    sites = _scan_call_sites(sql)
-    target_sites = []
-    for s in sites:
-        if s[0].upper() in _KEYED_TARGETS:
-            if _in_subquery(s[1]):
-                return None  # a route target in another scope: not ours
-            name, st, op, inner, end = s
-            # a trailing FILTER (WHERE pred) folds into THIS target's
-            # inner partials (round 11, completing the FILTER surface):
-            # per-key step/membership flags become pred-conjoined and
-            # value partials pred-masked, so a key whose every row
-            # fails the pred carries all-false flags / a NULL partial
-            # and contributes nothing — exactly the key the FILTER'd
-            # aggregate never saw.  The key expression itself is shared
-            # and stays unmasked (an all-masked key contributing zero
-            # equals its absence in every emitted recombination).
-            # Previously the dangling clause made the routed text AND
-            # the fold fail analysis; preds stay inside aggregates, so
-            # a window fn in one still errors loudly on both paths.
-            parsed_f = _parse_trailing_filter(sql, end)
-            if parsed_f is None:
-                return None  # unfoldable FILTER clause: bail
-            fpred, end = parsed_f
-            target_sites.append((name, st, op, inner, end, fpred))
-    if not target_sites:
-        return None
-    spans = [(st, end) for _, st, _, _, end, _ in target_sites]
-    if _has_nested_span(spans):  # nested route targets: invalid SQL
-        return None
-
-    def inside_target(pos: int) -> bool:
-        return any(s < pos < e for s, e in spans)
-
     co_sites = _collect_decomposable_co_sites(
-        sql,
-        sites,
-        _KEYED_TARGETS,
-        _in_subquery,
-        inside_target,
-        is_aggregate,
-        count_multiarg_ok=True,
+        r, is_aggregate, count_multiarg_ok=True
     )
     if co_sites is None:
         return None
     parsed = []  # (kind, start, end, key_expr, payload, filter_pred)
-    for name, st, op, inner, end, fpred in target_sites:
+    # a target's FILTER pred conjoins into its per-key step/membership
+    # flags or masks its value partial, so a key whose every row fails
+    # the pred carries all-false flags / a NULL partial and contributes
+    # nothing — exactly the key the FILTER'd aggregate never saw.  The
+    # shared key expression stays unmasked (an all-masked key
+    # contributing zero equals its absence in every recombination).
+    for name, st, inner, end, fpred in r.targets:
         u = name.upper()
-        args = (
-            [a.strip() for a in sqltext.split(inner)]
-            if inner.strip()
-            else []
-        )
+        args = _args(inner)
         if u == "FUNNELCOUNT":
             try:
                 steps, corr = _parse_funnelcount_clauses(args)
@@ -3214,7 +2813,7 @@ def rewrite_keyed_agg_statement(sql: str, is_aggregate=None):
                 return None  # the fold path raises the same loud error
             parsed.append(("FC", st, end, corr, steps, fpred))
         elif u in _THETA_SET_TARGETS:
-            # theta SET-EXPRESSION form (round 8): (col, 'params',
+            # theta SET-EXPRESSION form: (col, 'params',
             # 'pred1', ..., 'predN', 'SET_EXPR($1..$N)') **[P1.2]**.
             # 1-2 arg sites are plain/tuned distincts the call-site
             # rewrite already serves exactly in ONE aggregate level —
@@ -3246,7 +2845,7 @@ def rewrite_keyed_agg_statement(sql: str, is_aggregate=None):
     if len({p[3] for p in parsed}) != 1:
         return None  # all targets must share ONE key expression
     key = parsed[0][3]
-    inner_items = [gc[1] for gc in group_cols]
+    inner_items = [gc[1] for gc in r.group_cols]
     inner_items.append(f"({key}) AS __fc_k")
     edits = []
     for j, (kind, st, end, _key, payload, fpred) in enumerate(parsed):
@@ -3294,9 +2893,8 @@ def rewrite_keyed_agg_statement(sql: str, is_aggregate=None):
         else:
             inner_items.append(
                 # sum at the NATIVE value type — casting to double FIRST
-                # collapsed exact int64 sums above 2^53 (round-8 review:
-                # the same class as the MV-distinct native-type dedup
-                # fix); the double cast happens once, on the outer level.
+                # would collapse exact int64 sums above 2^53; the double
+                # cast happens once, on the outer level.
                 # DELIBERATE consequence: an integral per-key sum past
                 # int64 raises Spark's ANSI ARITHMETIC_OVERFLOW — a loud
                 # truthful failure where Pinot's long accumulator wraps
@@ -3316,18 +2914,14 @@ def rewrite_keyed_agg_statement(sql: str, is_aggregate=None):
             )
         edits.append((st, end, repl))
     _emit_decomposable_co_aggs(co_sites, "__fca", [inner_items], edits)
-    _bind_group_expr_edits(sql, shape, from_sp, where_sp, group_cols, edits)
-    where_clause, repl_end = _split_off_where(sql, from_sp, where_sp)
-    inner_group = ", ".join([gc[2] for gc in group_cols] + [f"({key})"])
-    inner_sql = (
-        f"SELECT {', '.join(inner_items)} FROM {rel_text}"
-        f"{where_clause} GROUP BY {inner_group}"
+    _bind_group_expr_edits(r, edits)
+    inner_group = ", ".join([gc[2] for gc in r.group_cols] + [f"({key})"])
+    return r.splice(
+        edits,
+        f"SELECT {', '.join(inner_items)} FROM {r.rel}{r.where} "
+        f"GROUP BY {inner_group}",
+        "__fc",
     )
-    edits.append((from_sp[0], repl_end, f"FROM ({inner_sql}) __fc "))
-    # apply_text_edits returns None on overlap — a shape the span logic
-    # did not anticipate (e.g. a route target inside WHERE) bails to the
-    # call-site fallback
-    return apply_text_edits(sql, edits)
 
 
 # ---------------------------------------------------------------------------
@@ -3442,57 +3036,21 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
     the shape is unsupported (section comment above has the full
     contract; STEPDURATIONSTATS reads the same greedy per-step
     timestamps the cascade already computes and summarizes their
-    consecutive differences per its durationFunctions SETTINGS literal —
-    round 9, VERDICT r8 task 3).  ``is_aggregate`` is accepted for
+    consecutive differences per its durationFunctions SETTINGS
+    literal).  ``is_aggregate`` is accepted for
     route-API uniformity but unused: the Window layers preserve rows
     1:1, so co-occurring aggregates are correct without
     classification."""
-    if not _ORDERED_GATE_RE.search(sql):
-        return None
-    shape = _parse_routable_statement(
-        sql, "__fn", allow_subqueries=True, allow_join=True
+    r = _route(
+        sql, _ORDERED_GATE_RE, "__fn",
+        lambda u, _: u in _ORDERED_FUNNEL_TARGETS,
     )
-    if shape is None:
-        return None
-    clauses = _parse_route_clauses(sql, shape, "__fn")
-    if clauses is None:
-        return None
-    from_sp, where_sp, group_cols, rel_text = clauses
-    sites = _scan_call_sites(sql)
-    targets = []
-    for name, st, op, inner, end in sites:
-        if name.upper() in _ORDERED_FUNNEL_TARGETS:
-            if shape.in_subquery(st):
-                return None  # a route target in another scope: not ours
-            # a trailing FILTER (WHERE pred) folds into the cascade
-            # (round 11, VERDICT r10 task 2): the pred is row-level, so
-            # masking every step predicate of THIS target's layer-0
-            # aliases with it makes the masked rows invisible to the
-            # cascade — they never set v1, never extend, and contribute
-            # only NULLs to the running mins — exactly the rows FILTER
-            # excludes.  A window function in the pred would be invalid
-            # SQL on the original but ANALYZES CLEANLY at layer 0, so
-            # it keeps the loud reject (the keyed route's preds sit
-            # inside aggregates where analysis catches this for free).
-            parsed_f = _parse_trailing_filter(sql, end)
-            if parsed_f is None:
-                return None  # unfoldable FILTER clause: keep the fold
-            pred, end = parsed_f
-            if pred is not None and re.search(
-                r"\bOVER\b", pred, re.IGNORECASE
-            ):
-                return None
-            targets.append((name, st, end, inner, pred))
-    if not targets:
+    if r is None:
         return None
     parsed = []
-    for name, st, end, inner, pred in targets:
+    for name, st, inner, end, pred in r.targets:
         kind = name.upper()[6:]  # MAXSTEP / MATCHSTEP / STEPDURATIONSTATS
-        args = (
-            [a.strip() for a in sqltext.split(inner)]
-            if inner.strip()
-            else []
-        )
+        args = _args(inner)
         try:
             if kind == "STEPDURATIONSTATS":
                 ts, window_ms, steps, cmp, fns = (
@@ -3512,10 +3070,8 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
             return None  # the fold path raises the same loud error
         if len(steps) > _ORDERED_MAX_STEPS:
             return None
-        if (
-            _MV_AGG_IN_ARG_RE.search(inner)
-            or "__fn" in inner
-            or re.search(r"\bSELECT\b", inner, re.IGNORECASE)
+        if sqltext.search(_MV_AGG_IN_ARG_RE, inner) or sqltext.search(
+            "SELECT", inner
         ):
             return None
         parsed.append((kind, st, end, ts, window_ms, steps, cmp, fns, pred))
@@ -3523,8 +3079,8 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
     # layer projects `SELECT *`, so the outer clauses' raw expressions
     # keep binding — the window simply partitions by the same expression
     part = (
-        f"PARTITION BY {', '.join(gc[2] for gc in group_cols)} "
-        if group_cols
+        f"PARTITION BY {', '.join(gc[2] for gc in r.group_cols)} "
+        if r.group_cols
         else ""
     )
     base_cols, orders = [], {}
@@ -3535,11 +3091,9 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
         # materialize the user's ts and EVERY step predicate as layer-0
         # aliases: layer 0 is the only SELECT where the ORIGINAL tables
         # bind, so table-qualified references (`fact.ts` — the normal
-        # disambiguation in the one-JOIN shape) resolve there and the
-        # upper window layers touch only the aliases (post-review: the
-        # upper layers re-emitted the raw expressions over derived
-        # tables, so any qualified argument failed analysis and the
-        # route silently never engaged on join statements)
+        # disambiguation in a JOIN) resolve there and the upper window
+        # layers touch only the aliases, over which a qualified
+        # expression would no longer bind
         base_cols.append(f"{tse} AS __fn{j}_ts")
         # an admitted FILTER pred masks THIS target's step predicates:
         # a row failing it matches no step, so it never starts or
@@ -3593,14 +3147,10 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
             sub_layers.append(titems)
         if vitems:
             sub_layers.append(vitems)
-    where_clause, repl_end = _split_off_where(sql, from_sp, where_sp)
-    inner_sql = (
-        f"SELECT *, {', '.join(base_cols)} FROM "
-        f"{rel_text}{where_clause}"
-    )
+    inner_sql = f"SELECT *, {', '.join(base_cols)} FROM {r.rel}{r.where}"
     for items in sub_layers:
         inner_sql = f"SELECT *, {', '.join(items)} FROM ({inner_sql})"
-    edits = [(from_sp[0], repl_end, f"FROM ({inner_sql}) __fn ")]
+    edits = []
     for j, (kind, st, end, ts, wms, steps, cmp, fns, pred) in enumerate(
         parsed
     ):
@@ -3618,9 +3168,7 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
                 else "array(" + ", ".join(flags) + ")"
             )
         edits.append((st, end, repl))
-    # apply_text_edits returns None on overlap (e.g. a target inside the
-    # WHERE clause) — bail to the call-site fold
-    return apply_text_edits(sql, edits)
+    return r.splice(edits, inner_sql, "__fn")
 
 
 # ---------------------------------------------------------------------------
@@ -3631,7 +3179,7 @@ def rewrite_ordered_funnel_statement(sql: str, is_aggregate=None):
 # accumulator array and add each row's elements into it — O(max array
 # length) state.  The single-expression call-site form cannot match that
 # bound (it would collect whole arrays per group), so the call site is a
-# loud reject; routable STATEMENTS restructure instead (round-8 session):
+# loud reject; routable STATEMENTS restructure instead:
 #
 #   SELECT g, SUMARRAYLONG(arr) FROM t WHERE ... GROUP BY g
 # ->
@@ -3681,55 +3229,13 @@ def rewrite_sumarray_statement(sql: str, is_aggregate=None):
     """Return the bounded positional two-level statement for a routable
     SUMARRAYLONG/SUMARRAYDOUBLE statement, or ``None`` when the shape is
     unsupported (section comment above has the full contract)."""
-    if not _SUMARRAY_GATE_RE.search(sql):
-        return None
-    if sqltext.search(_NONDETERMINISTIC_FN_RE, sql):
-        return None  # per-copy re-evaluation would skew sampling: fold
-    shape = _parse_routable_statement(
-        sql, "__sa", allow_subqueries=True, allow_join=True
+    r = _route(
+        sql, _SUMARRAY_GATE_RE, "__sa", lambda u, _: u in _SUMARRAY_TARGETS
     )
-    if shape is None:
-        return None
-    clauses = _parse_route_clauses(sql, shape, "__sa")
-    if clauses is None:
-        return None
-    from_sp, where_sp, group_cols, rel_text = clauses
-    sites = _scan_call_sites(sql)
-    target_sites = []
-    for s in sites:
-        if s[0].upper() in _SUMARRAY_TARGETS:
-            if shape.in_subquery(s[1]):
-                return None  # a route target in another scope: not ours
-            name, st, op, inner, end = s
-            # a trailing FILTER (WHERE pred) folds by masking the
-            # EXPLODED array (round 11): `CASE WHEN pred THEN arr END`
-            # turns a pred-failing row into a NULL array — under OUTER
-            # POSEXPLODE it keeps exactly one NULL-pos copy (the
-            # first-copy mask co-aggregates already rely on) and
-            # contributes no positions, so the positional sums and the
-            # output length see only pred-passing arrays, exactly the
-            # FILTER exclusion.  The single shared explode means every
-            # target must share ONE pred (checked with the array below).
-            parsed_f = _parse_trailing_filter(sql, end)
-            if parsed_f is None:
-                return None  # unfoldable FILTER clause: loud reject
-            fpred, end = parsed_f
-            target_sites.append((name, st, op, inner, end, fpred))
-    if not target_sites:
-        return None
-    spans = [(st, end) for _, st, _, _, end, _ in target_sites]
-    if _has_nested_span(spans):  # nested route targets: invalid SQL
-        return None
-
-    def inside_target(pos: int) -> bool:
-        return any(s < pos < e for s, e in spans)
-
+    if r is None or sqltext.search(_NONDETERMINISTIC_FN_RE, sql):
+        return None  # per-copy re-evaluation would skew sampling: fold
     co_sites = _collect_decomposable_co_sites(
-        sql,
-        sites,
-        _SUMARRAY_TARGETS,
-        shape.in_subquery,
-        inside_target,
+        r,
         is_aggregate,
         # every co-aggregate argument must be maskable to the first
         # exploded copy as ONE expression — multi-argument COUNT cannot
@@ -3737,22 +3243,24 @@ def rewrite_sumarray_statement(sql: str, is_aggregate=None):
     )
     if co_sites is None:
         return None
+    # a target's FILTER pred masks the EXPLODED array: `CASE WHEN pred
+    # THEN arr END` turns a pred-failing row into a NULL array — under
+    # OUTER POSEXPLODE it keeps exactly one NULL-pos copy (the
+    # first-copy mask co-aggregates already rely on) and contributes no
+    # positions, so the positional sums and the output length see only
+    # pred-passing arrays, exactly the FILTER exclusion.  The single
+    # shared explode means every target must share ONE array expression
+    # and ONE pred.
     arr = None
     arr_pred = None
     parsed = []  # (NAME, start, end)
-    for name, st, op, inner, end, fpred in target_sites:
-        args = (
-            [a.strip() for a in sqltext.split(inner)]
-            if inner.strip()
-            else []
-        )
+    for name, st, inner, end, fpred in r.targets:
+        args = _args(inner)
         if len(args) != 1:
             return None  # the call-site reject raises the loud error
         e = args[0]
-        if (
-            _MV_AGG_IN_ARG_RE.search(e)
-            or "__sa" in e
-            or re.search(r"\bSELECT\b", e, re.IGNORECASE)
+        if sqltext.search(_MV_AGG_IN_ARG_RE, e) or sqltext.search(
+            "SELECT", e
         ):
             return None
         if arr is None:
@@ -3760,8 +3268,7 @@ def rewrite_sumarray_statement(sql: str, is_aggregate=None):
         elif e != arr or fpred != arr_pred:
             return None  # all targets share ONE array expression+mask
         parsed.append((name.upper(), st, end))
-    first = "coalesce(__sa_pos, 0) = 0"
-    inner_items = [gc[1] for gc in group_cols]
+    inner_items = [gc[1] for gc in r.group_cols]
     inner_items.append("__sa_pos")
     inner_items.append("sum(__sa_elem) AS __sa_v")
     edits = []
@@ -3775,23 +3282,19 @@ def rewrite_sumarray_statement(sql: str, is_aggregate=None):
             f"x -> cast(x.__sa_v as {_SUMARRAY_CAST[u]}))",
         ))
     _emit_decomposable_co_aggs(
-        co_sites, "__saa", [inner_items], edits, first_copy=first
+        co_sites, "__saa", [inner_items], edits,
+        first_copy="coalesce(__sa_pos, 0) = 0",
     )
-    _bind_group_expr_edits(sql, shape, from_sp, where_sp, group_cols, edits)
-    where_clause, repl_end = _split_off_where(sql, from_sp, where_sp)
-    inner_group = ", ".join([gc[2] for gc in group_cols] + ["__sa_pos"])
-    inner_sql = (
-        f"SELECT {', '.join(inner_items)} FROM {rel_text}"
-        " LATERAL VIEW OUTER POSEXPLODE("
-        + (f"CASE WHEN ({arr_pred}) THEN ({arr}) END" if arr_pred else arr)
-        + ") __sa"
-        f" AS __sa_pos, __sa_elem"
-        f"{where_clause} GROUP BY {inner_group}"
+    _bind_group_expr_edits(r, edits)
+    inner_group = ", ".join([gc[2] for gc in r.group_cols] + ["__sa_pos"])
+    explode = f"CASE WHEN ({arr_pred}) THEN ({arr}) END" if arr_pred else arr
+    return r.splice(
+        edits,
+        f"SELECT {', '.join(inner_items)} FROM {r.rel}"
+        f" LATERAL VIEW OUTER POSEXPLODE({explode}) __sa"
+        f" AS __sa_pos, __sa_elem{r.where} GROUP BY {inner_group}",
+        "__sa",
     )
-    edits.append((from_sp[0], repl_end, f"FROM ({inner_sql}) __sa "))
-    # apply_text_edits returns None on overlap (e.g. a target inside the
-    # WHERE clause) — bail to the loud call-site reject
-    return apply_text_edits(sql, edits)
 
 
 # ---------------------------------------------------------------------------
@@ -3801,8 +3304,8 @@ def rewrite_sumarray_statement(sql: str, is_aggregate=None):
 # The MIN/MAX tie reducers are single aggregates (deterministic mode /
 # the negation identity), but AVG needs the full tied-mode SET — state no
 # single expression can bound, so the call site rejects loudly.  Routable
-# single-table statements restructure instead (round-8 session) to THREE
-# stacked hash aggregates, no windows, no collections:
+# statements restructure instead to THREE stacked hash aggregates, no
+# windows, no collections:
 #
 #   SELECT g, MODE(v, 'AVG') FROM t WHERE ... GROUP BY g
 # ->
@@ -3846,90 +3349,45 @@ def rewrite_mode_avg_statement(sql: str, is_aggregate=None):
     """Return the three-level statement for a routable MODE(col, 'AVG')
     statement, or ``None`` when the shape is unsupported (section
     comment above has the full contract)."""
-    if not _MODE_AVG_GATE_RE.search(sql):
-        return None
-    shape = _parse_routable_statement(
-        sql, "__md", allow_subqueries=True, allow_join=True
+    r = _route(
+        sql, _MODE_AVG_GATE_RE, "__md",
+        lambda u, inner: u == "MODE"
+        and _mode_avg_arg(_args(inner)) is not None,
     )
-    if shape is None:
+    if r is None:
         return None
-    clauses = _parse_route_clauses(sql, shape, "__md")
-    if clauses is None:
-        return None
-    from_sp, where_sp, group_cols, rel_text = clauses
-    sites = _scan_call_sites(sql)
-    target_sites = []
-    other_mode = False
-    for name, st, op, inner, end in sites:
-        if name.upper() != "MODE":
-            continue
-        args = (
-            [a.strip() for a in sqltext.split(inner)]
-            if inner.strip()
-            else []
-        )
-        e = _mode_avg_arg(args)
-        if e is None:
-            other_mode = other_mode or not shape.in_subquery(st)
-            continue
-        if shape.in_subquery(st):
-            return None  # a route target in another scope: not ours
-        # a trailing FILTER (WHERE pred) folds into the value mask
-        # (round 11, VERDICT r10 task 2): level 1 groups by the value
-        # and counts its non-NULL occurrences, so masking the value to
-        # NULL for pred-failing rows collapses them into the __md_c = 0
-        # bucket that loses to any real frequency — exactly the
-        # existing all-NULL handling, and exactly the rows FILTER
-        # excludes (a group with NO passing rows answers NULL through
-        # the NULL sum).
-        parsed_f = _parse_trailing_filter(sql, end)
-        if parsed_f is None:
-            return None  # unfoldable FILTER clause: loud reject
-        pred, end = parsed_f
-        if (
-            _MV_AGG_IN_ARG_RE.search(e)
-            or "__md" in e
-            or re.search(r"\bSELECT\b", e, re.IGNORECASE)
-        ):
-            return None
-        target_sites.append((st, end, e, pred))
-    if not target_sites:
-        return None
-    if other_mode:
-        # a MIN/MAX/bare MODE over the re-grouped rows would answer a
-        # different question — those call sites stay exact only on the
-        # original statement, so the AVG form keeps its loud reject
-        return None
-    spans = [(st, end) for st, end, _, _ in target_sites]
-    if _has_nested_span(spans):  # nested route targets: invalid SQL
-        return None
-
-    def inside_target(pos: int) -> bool:
-        return any(s < pos < e for s, e in spans)
-
-    # exclude MODE itself from the known-aggregate bail: the targets ARE
-    # the route's reason and every other MODE form bailed above
-    sites_sans_mode = [s for s in sites if s[0].upper() != "MODE"]
+    # another MODE form (MIN/MAX/bare) over the re-grouped rows would
+    # answer a different question: MODE is a known aggregate, so such a
+    # site bails the co-aggregate classification and the AVG form keeps
+    # its loud reject
     co_sites = _collect_decomposable_co_sites(
-        sql,
-        sites_sans_mode,
-        frozenset(),
-        shape.in_subquery,
-        inside_target,
-        is_aggregate,
-        count_multiarg_ok=True,
+        r, is_aggregate, count_multiarg_ok=True
     )
     if co_sites is None:
         return None
+    # a target's FILTER pred masks the value: level 1 groups by the
+    # value and counts its non-NULL occurrences, so masking the value to
+    # NULL for pred-failing rows collapses them into the __md_c = 0
+    # bucket that loses to any real frequency — the all-NULL handling,
+    # and exactly the rows FILTER excludes (a group with NO passing rows
+    # answers NULL through the NULL sum)
+    target_sites = []
+    for _, st, inner, end, pred in r.targets:
+        e = _mode_avg_arg(_args(inner))
+        if sqltext.search(_MV_AGG_IN_ARG_RE, e) or sqltext.search(
+            "SELECT", e
+        ):
+            return None
+        target_sites.append((st, end, e, pred))
     if len({(e, pr) for _, _, e, pr in target_sites}) != 1:
         return None  # all targets must share ONE value expression+mask
     val = target_sites[0][2]
     if target_sites[0][3]:  # the admitted FILTER pred masks the value
         val = f"if(({target_sites[0][3]}), ({val}), null)"
-    l1_items = [gc[1] for gc in group_cols]
+    l1_items = [gc[1] for gc in r.group_cols]
     l1_items.append(f"({val}) AS __md_v")
     l1_items.append(f"count(({val})) AS __md_c")
-    l2_items = [gc[0] for gc in group_cols]
+    l2_items = [gc[0] for gc in r.group_cols]
     l2_items.append("__md_c")
     l2_items.append("sum(__md_v) AS __md_sv")
     l2_items.append("count(*) AS __md_n")
@@ -3943,16 +3401,13 @@ def rewrite_mode_avg_statement(sql: str, is_aggregate=None):
     _emit_decomposable_co_aggs(
         co_sites, "__mda", [l1_items, l2_items], edits
     )
-    _bind_group_expr_edits(sql, shape, from_sp, where_sp, group_cols, edits)
-    where_clause, repl_end = _split_off_where(sql, from_sp, where_sp)
-    l1_group = ", ".join([gc[2] for gc in group_cols] + [f"({val})"])
-    l2_group = ", ".join([gc[0] for gc in group_cols] + ["__md_c"])
-    inner_sql = (
+    _bind_group_expr_edits(r, edits)
+    l1_group = ", ".join([gc[2] for gc in r.group_cols] + [f"({val})"])
+    l2_group = ", ".join([gc[0] for gc in r.group_cols] + ["__md_c"])
+    return r.splice(
+        edits,
         f"SELECT {', '.join(l2_items)} FROM ("
-        f"SELECT {', '.join(l1_items)} FROM {rel_text}"
-        f"{where_clause} GROUP BY {l1_group}"
-        f") __md1 GROUP BY {l2_group}"
+        f"SELECT {', '.join(l1_items)} FROM {r.rel}{r.where} "
+        f"GROUP BY {l1_group}) __md1 GROUP BY {l2_group}",
+        "__md",
     )
-    edits.append((from_sp[0], repl_end, f"FROM ({inner_sql}) __md "))
-    # apply_text_edits returns None on overlap — bail to the loud reject
-    return apply_text_edits(sql, edits)

@@ -4,10 +4,8 @@ Every text-level pass over a statement asks the same question before it
 reads a character: is this code, or is it inside a literal or a comment?
 The passes are the Pinot call-site rewrites and the statement routes
 (functions/aggsql.py), and the engine's option, LOOKUP, table-reference,
-virtual-column and group-by scans.  The engine's own SQL forms (the
-star-tree route, GAPFILL and the VECTOR_SIMILARITY / TEXT_MATCH /
-JSON_MATCH predicates) read their statement through :func:`clauses`.
-This module is the only place that answers the question.  The rules:
+virtual-column and group-by scans.  This module is the only place that
+answers the question.  The rules:
 
 - ``'...'`` and ``"..."`` are string literals.  This is Spark's default
   dialect, where a double quote delimits a string, not an identifier.  A
@@ -43,15 +41,30 @@ top-level separators, :func:`search`/:func:`finditer` find patterns that
 start in code (optionally at depth 0), :func:`calls` lists ``name(``
 call sites, :func:`subquery_spans` lists ``(SELECT ...)`` groups,
 :func:`skip_space`/:func:`code_end`/:func:`strip` trim leading and
-trailing comments, and :func:`clauses` splits a plain SELECT statement
-into its top-level clauses.
+trailing comments, and :func:`blank` turns each comment into spaces, so a
+character scan sees only code at unchanged positions.
+
+One statement shape, :func:`statement`, reads ``[WITH name AS (SELECT
+...), ...] SELECT ... FROM ... [WHERE] [GROUP BY] [HAVING] [ORDER BY |
+SORT BY] [LIMIT] [OFFSET]`` into a :class:`Statement`: the WITH
+definitions (:func:`ctes` reads that head alone), each clause's span
+with its body trimmed of comments, the FROM operands (a JOIN chain or a
+comma list of names and ``(SELECT ...)`` groups, with their aliases) and
+the subquery groups.  Its readers:
+
+- the five statement routes of functions/aggsql.py read the whole
+  shape, and its CTE inliner reads the WITH head;
+- the engine's own SQL forms (the star-tree route, GAPFILL and the
+  VECTOR_SIMILARITY / TEXT_MATCH / JSON_MATCH predicates) read the view
+  :func:`clauses`, which serves a plain statement without WITH, HAVING
+  or SORT BY as ``{keyword: text}``.
 """
 
 from __future__ import annotations
 
 import re
 from functools import lru_cache
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 _SQ = r"'(?:[^'\\]|\\.|'')*(?:'|\\?\Z)"
 _DQ = r'"(?:[^"\\]|\\.|"")*(?:"|\\?\Z)'
@@ -73,7 +86,7 @@ _SPACE_RE = re.compile(r"\s*")
 _STRING_RE = re.compile(r"'(?:[^'\\]|\\.|'')*'", re.DOTALL)
 _COMMA_RE = re.compile(",")
 _CALL_RE = re.compile(r"(?<!\w)([A-Za-z_][A-Za-z0-9_]*)[ \t\r\n]*\(")
-_SUBQUERY_RE = re.compile(r"\([ \t\r\n]*SELECT\b", re.IGNORECASE)
+_OPEN_RE = re.compile(r"\(")
 
 
 def _end(sql: str, m: re.Match) -> int:
@@ -241,24 +254,203 @@ def calls(sql: str) -> Iterator[tuple[str, int, int]]:
         yield m.group(1), m.start(), m.end() - 1
 
 
-def subquery_spans(sql: str) -> list[tuple[int, int]]:
-    """``(start, end)`` of every outermost bracket group whose first token
-    is SELECT."""
+def subquery_spans(sql: str, start: int = 0) -> list[tuple[int, int]]:
+    """``(start, end)`` of every outermost bracket group from ``start``
+    whose first token is SELECT."""
     out: list[tuple[int, int]] = []
-    for m in finditer(_SUBQUERY_RE, sql):
-        if not out or m.start() >= out[-1][1]:
+    for m in finditer(_OPEN_RE, sql, start):
+        if (not out or m.start() >= out[-1][1]) and keyword("SELECT").match(
+            sql, skip_space(sql, m.end())
+        ):
             out.append((m.start(), balanced(sql, m.start())[1]))
     return out
 
 
-# the clauses :func:`clauses` reads, in the order a statement holds them
-_CLAUSES = ("SELECT", "FROM", "WHERE", "GROUP BY", "ORDER BY", "LIMIT", "OFFSET")
+# the clauses of a statement, in the order it holds them
+_SHAPE = (
+    "SELECT", "FROM", "WHERE", "GROUP BY", "HAVING", "ORDER BY", "SORT BY",
+    "LIMIT", "OFFSET",
+)
 # ...the top-level keywords that make a statement some other shape, and
 # the operator ``IS [NOT] DISTINCT FROM``, whose FROM starts no clause
 _CLAUSE_RE = keyword(
-    *_CLAUSES, "HAVING", "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS",
-    "CLUSTER BY", "DISTRIBUTE BY", "SORT BY", "DISTINCT FROM",
+    *_SHAPE, "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS",
+    "CLUSTER BY", "DISTRIBUTE BY", "DISTINCT FROM",
 )
+# the clauses :func:`clauses` serves
+_PLAIN = frozenset(_SHAPE) - {"HAVING", "SORT BY"}
+_NAME_RE = re.compile(r"[A-Za-z_]\w*")
+_TABLE_RE = re.compile(r"[A-Za-z_][\w.]*")
+# a FROM operand's optional alias, which is never a join word; the join
+# condition; the flavor words a piece may trail for the next JOIN, where
+# ``condless`` marks the flavors whose segment takes no condition
+_JOIN_WORDS = "ON|USING|LEFT|RIGHT|FULL|INNER|OUTER|CROSS|NATURAL|SEMI|ANTI"
+_ALIAS = rf"(?P<alias>\s*(?:AS\s+)?(?!(?:{_JOIN_WORDS})\b)[A-Za-z_]\w*)?"
+_COND = r"(?:\s*ON\s+.+?|\s*USING\s*\([^()]*\))"
+_FLAVOR = (
+    r"(?:\s+(?:(?P<condless>CROSS|NATURAL(?:\s+INNER|"
+    r"\s+(?:LEFT|RIGHT|FULL)(?:\s+OUTER)?)?)|(?:LEFT\s+)?(?:SEMI|ANTI)|"
+    r"(?:LEFT|RIGHT|FULL)(?:\s+OUTER)?|INNER))?"
+)
+
+
+class Clause(NamedTuple):
+    """One top-level clause: where its keyword starts, its body without
+    the whitespace and comments around it, and where the next clause's
+    keyword (or the end of the statement) starts."""
+
+    start: int
+    body_start: int
+    body_end: int
+    end: int
+
+
+class Statement(NamedTuple):
+    """The shape :func:`statement` reads.
+
+    ``ctes`` holds ``(name, body_start, body_end)`` for each ``WITH``
+    definition; ``clauses`` maps each clause keyword, upper-cased with
+    single spaces, to its :class:`Clause`, in statement order;
+    ``relation`` holds the ``(start, end)`` of each FROM operand with
+    its alias, or None when the FROM is not a JOIN chain or a comma list
+    of names and ``(SELECT ...)`` groups; ``subqueries`` holds the
+    ``(start, end)`` of each outermost ``(SELECT ...)`` group."""
+
+    ctes: list
+    clauses: dict
+    relation: list | None
+    subqueries: list
+
+    def in_subquery(self, pos: int) -> bool:
+        return any(s < pos < e for s, e in self.subqueries)
+
+
+def blank(text: str) -> str:
+    """``text`` with each comment replaced by as many spaces."""
+    out, pos = [], 0
+    for m, e in _tokens(_OPAQUE_RE, text):
+        if m.group("comment") is not None:
+            out += [text[pos : m.start()], " " * (e - m.start())]
+            pos = e
+    return "".join(out) + text[pos:]
+
+
+@lru_cache(maxsize=8)
+def _piece(cond: bool, flavor: bool) -> re.Pattern:
+    """What follows a FROM operand up to the next JOIN or comma."""
+    tail = (_COND if cond else "") + (_FLAVOR if flavor else "")
+    return re.compile(_ALIAS + tail + r"\s*", re.IGNORECASE | re.DOTALL)
+
+
+def _relation(sql: str, start: int, end: int) -> list | None:
+    """``(start, end)`` of each operand of the FROM body ``sql[start:end]``
+    with its alias: ``op [JOIN op (ON cond | USING (cols))]...`` (no
+    condition after a CROSS or NATURAL join), or ``op, op, ...``, where
+    an operand is a table name or a ``(SELECT ...)`` group.  None for any
+    other relation."""
+    text = blank(sql[start:end])
+    joins = list(finditer("JOIN", text, top_level=True))
+    commas = list(finditer(_COMMA_RE, text, top_level=True))
+    if joins and commas:
+        return None
+    seps = joins or commas
+    out, condless = [], False
+    starts = [0] + [m.end() for m in seps]
+    ends = [m.start() for m in seps] + [len(text)]
+    for k, (s, e) in enumerate(zip(starts, ends)):
+        i = _SPACE_RE.match(text, s).end()
+        if text.startswith("(", i):
+            first = _SPACE_RE.match(text, i + 1).end()
+            if not keyword("SELECT").match(text, first):
+                return None
+            try:
+                op = balanced(text, i)[1]
+            except ValueError:
+                return None
+        elif m := _TABLE_RE.match(text, i):
+            op = m.end()
+        else:
+            return None
+        cond = bool(joins) and k > 0 and not condless
+        m = _piece(cond, k < len(joins)).fullmatch(text, op, e)
+        if m is None:
+            return None
+        condless = m.groupdict().get("condless") is not None
+        stop = m.end("alias") if m.group("alias") else op
+        out.append((start + i, start + stop))
+    return out
+
+
+def ctes(sql: str) -> tuple[list, int] | None:
+    """The ``WITH`` head of ``sql``: ``([(name, body_start, body_end),
+    ...], main)``, where each body is the text inside ``name AS (SELECT
+    ...)`` and ``main`` is the index past the head; ``([], 0)`` when the
+    statement has none.  None when the head holds another definition
+    (a column list, a quoted name, a body that is not a SELECT)."""
+    m = keyword("WITH").match(sql, skip_space(sql))
+    if m is None:
+        return [], 0
+    defs, i = [], m.end()
+    while True:
+        name = _NAME_RE.match(sql, skip_space(sql, i))
+        as_ = name and keyword("AS").match(sql, skip_space(sql, name.end()))
+        open_ = as_ and skip_space(sql, as_.end())
+        if not open_ or not sql.startswith("(", open_) or not keyword(
+            "SELECT"
+        ).match(sql, skip_space(sql, open_ + 1)):
+            return None
+        try:
+            i = balanced(sql, open_)[1]
+        except ValueError:
+            return None
+        defs.append((name.group(), open_ + 1, i - 1))
+        comma = skip_space(sql, i)
+        if not sql.startswith(",", comma):
+            return defs, i
+        i = comma + 1
+
+
+def statement(sql: str) -> Statement | None:
+    """The shape of ``[WITH ...] SELECT items FROM relation [WHERE cond]
+    [GROUP BY items] [HAVING cond] [ORDER BY ... | SORT BY ...] [LIMIT n]
+    [OFFSET n]``, read at depth 0 with comments and literals opaque.  A
+    trailing ``;`` ends the statement.  None for any other shape: a
+    statement that does not start with SELECT after its WITH head, no
+    FROM, a clause that is empty, repeated or out of order, or another
+    top-level clause (UNION, WINDOW, CLUSTER BY, ...)."""
+    head = ctes(sql)
+    if head is None:
+        return None
+    stop = code_end(sql)
+    end = stop - 1 if sql[stop - 1 : stop] == ";" else len(sql)
+    body = sql[:end]
+    start = skip_space(body, head[1])
+    marks = [
+        (name, m.start(), m.end())
+        for m in finditer(_CLAUSE_RE, body, start, top_level=True)
+        if (name := " ".join(m.group().upper().split())) != "DISTINCT FROM"
+    ]
+    ranks = [_SHAPE.index(n) if n in _SHAPE else -1 for n, _, _ in marks]
+    if (
+        ranks[:2] != [0, 1] or marks[0][1] != start
+        or ranks != sorted(set(ranks))
+    ):
+        return None
+    out = {}
+    for (name, s, e), nxt in zip(marks, [s for _, s, _ in marks[1:]] + [end]):
+        a = skip_space(body, e)
+        b = a + code_end(body[a:nxt])
+        if a == b:
+            return None
+        out[name] = Clause(s, a, b, nxt)
+    f = out["FROM"]
+    try:
+        subqueries = subquery_spans(body, start)
+    except ValueError:  # a group that never closes
+        return None
+    return Statement(
+        head[0], out, _relation(sql, f.body_start, f.body_end), subqueries
+    )
 
 
 def clauses(sql: str) -> dict[str, str] | None:
@@ -270,18 +462,7 @@ def clauses(sql: str) -> dict[str, str] | None:
     other shape: a statement that does not start with SELECT, no FROM,
     a clause that is empty, repeated or out of order, or another
     top-level clause (HAVING, UNION, ...)."""
-    body = sql[: code_end(sql)]
-    if body.endswith(";"):
-        body = body[: code_end(body[:-1])]
-    start = skip_space(body)
-    marks = [
-        (name, m.start(), m.end())
-        for m in finditer(_CLAUSE_RE, body, start, top_level=True)
-        if (name := " ".join(m.group().upper().split())) != "DISTINCT FROM"
-    ]
-    ranks = [_CLAUSES.index(n) if n in _CLAUSES else -1 for n, _, _ in marks]
-    if ranks[:2] != [0, 1] or marks[0][1] != start or ranks != sorted(set(ranks)):
+    s = statement(sql)
+    if s is None or s.ctes or not s.clauses.keys() <= _PLAIN:
         return None
-    ends = [s for _, s, _ in marks[1:]] + [len(body)]
-    out = {n: strip(body[e:end]) for (n, _, e), end in zip(marks, ends)}
-    return out if all(out.values()) else None
+    return {n: sql[c.body_start : c.body_end] for n, c in s.clauses.items()}

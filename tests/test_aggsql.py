@@ -770,6 +770,14 @@ def test_mv_route_single_join_text():
     )
     assert routed is not None
     assert "ON t.g = d.g LATERAL VIEW OUTER POSEXPLODE(t.tags)" in routed
+    # the LATERAL VIEW lands before a comment ending the relation, not
+    # inside it
+    assert RMV(
+        "/* dashboard */ SELECT d.name, DISTINCTCOUNTMV(t.tags) AS v, "
+        "COUNT(*) AS c FROM t JOIN d ON t.g = d.g -- on\nGROUP BY d.name"
+    ) == "/* dashboard */ " + routed.replace(
+        " GROUP BY d.name", " -- on\nGROUP BY d.name"
+    )
     # a JOIN CHAIN routes too (round 10): the LATERAL VIEW attaches
     # after the LAST join and the whole relation re-emits verbatim
     chained = RMV(
@@ -989,6 +997,18 @@ def test_keyed_route_text_funnelcount_group_by():
         "FROM t WHERE d > 1 GROUP BY g, (uid)) __fc "
         "GROUP BY g ORDER BY g LIMIT 5"
     )
+    # a leading comment stays where it was; a line comment ending the
+    # WHERE clause goes with the FROM ... WHERE text the route replaces
+    src = (
+        "SELECT g, FUNNELCOUNT(STEPS(ev = 'a', ev = 'b'), "
+        "CORRELATE_BY(uid)) AS fc FROM t WHERE d > 1 GROUP BY g "
+        "ORDER BY g LIMIT 5"
+    )
+    assert RKA("/* dashboard */ " + src) == "/* dashboard */ " + routed
+    assert RKA(src.replace(" GROUP BY g", " -- big\nGROUP BY g")) == routed
+    assert RKA(
+        src.replace("FROM t", "FROM t JOIN d ON t.k = d.k -- on\n")
+    ) == routed.replace("FROM t", "FROM t JOIN d ON t.k = d.k")
 
 
 def test_keyed_route_text_tuple_values_share_key():
@@ -1806,6 +1826,16 @@ def test_mv_route_and_fallback_agree_on_null_elements(spark, mv_engine):
         "SELECT DISTINCTCOUNTMV(tags) AS v FROM f"
     ).collect()[0]["v"]
     assert routed == fallback == 2
+
+
+def test_explain_head_behind_a_comment(mv_engine):
+    """A comment before ``EXPLAIN PLAN FOR`` is not part of the
+    statement: the explain route still reads the head."""
+    rows = mv_engine.query(
+        "/* console */ EXPLAIN PLAN FOR SELECT g, count(*) AS n "
+        "FROM mvsrc GROUP BY g"
+    ).collect()
+    assert rows and "Operator" in rows[0].asDict()
 
 
 def test_explain_shows_the_routed_mv_plan(mv_engine):
@@ -2881,6 +2911,26 @@ def test_sumarray_route_text_shape():
         "SELECT SUMARRAYDOUBLE(arr) FROM t"
     )
     assert "cast(x.__sa_v as double)" in routed_d
+    # commented spellings route to the same text, apart from the comment
+    src = "SELECT g, SUMARRAYLONG(arr) AS s FROM t WHERE g > 0 GROUP BY g"
+    assert rewrite_sumarray_statement("/* dashboard */ " + src) == (
+        "/* dashboard */ " + routed
+    )
+    assert rewrite_sumarray_statement(
+        src.replace(" GROUP BY", " -- big\nGROUP BY")
+    ) == routed
+    # a literal is not code: 'select' in a FILTER pred is no subquery
+    assert rewrite_sumarray_statement(
+        "SELECT g, SUMARRAYLONG(arr) FILTER (WHERE s <> 'select') AS s "
+        "FROM t GROUP BY g"
+    ) == (
+        "SELECT g, transform(array_sort(collect_list(CASE WHEN __sa_pos "
+        "IS NOT NULL THEN struct(__sa_pos, __sa_v) END)), x -> "
+        "cast(x.__sa_v as bigint)) AS s FROM (SELECT g, __sa_pos, "
+        "sum(__sa_elem) AS __sa_v FROM t LATERAL VIEW OUTER POSEXPLODE("
+        "CASE WHEN (s <> 'select') THEN (arr) END) __sa AS __sa_pos, "
+        "__sa_elem GROUP BY g, __sa_pos) __sa GROUP BY g"
+    )
 
 
 @pytest.mark.parametrize(
@@ -3136,6 +3186,25 @@ def test_mode_avg_route_text_shape():
     assert "GROUP BY g, __md_c" in routed
     assert "max_by(__md_sv, __md_c)" in routed
     assert "WHERE v > 0 GROUP BY" in routed  # WHERE moved inside
+    # commented spellings route to the same text, apart from the comment
+    src = "SELECT g, MODE(v, 'AVG') AS m FROM t WHERE v > 0 GROUP BY g"
+    assert rewrite_mode_avg_statement("/* dashboard */ " + src) == (
+        "/* dashboard */ " + routed
+    )
+    assert rewrite_mode_avg_statement(
+        src.replace(" GROUP BY", " -- big\nGROUP BY")
+    ) == routed
+    # a literal is not code: 'select' in a GROUP BY item is no subquery
+    assert rewrite_mode_avg_statement(
+        "SELECT MODE(v, 'AVG') AS m FROM t GROUP BY concat(g, 'select')"
+    ) == (
+        "SELECT try_divide(max_by(__md_sv, __md_c), max_by(__md_n, "
+        "__md_c)) AS m FROM (SELECT __mdg0, __md_c, sum(__md_v) AS "
+        "__md_sv, count(*) AS __md_n FROM (SELECT (concat(g, 'select')) "
+        "AS __mdg0, (v) AS __md_v, count((v)) AS __md_c FROM t GROUP BY "
+        "(concat(g, 'select')), (v)) __md1 GROUP BY __mdg0, __md_c) __md "
+        "GROUP BY __mdg0"
+    )
 
 
 @pytest.mark.parametrize(
@@ -3182,6 +3251,34 @@ def modeavg_engine(spark, tmp_path_factory):
         "mamode"
     )
     return Engine(spark, str(tmp_path_factory.mktemp("wh")))
+
+
+def test_commented_positional_and_mode_statements_are_served(
+    sumarray_engine, modeavg_engine
+):
+    """SUMARRAYLONG and MODE(v, 'AVG') have no call-site form, so a
+    statement the routes cannot read is rejected loudly: a leading
+    comment or a line comment ending the WHERE clause must not make
+    them unreadable, nor leak into the routed text."""
+    for engine, src in (
+        (
+            sumarray_engine,
+            "SELECT g, SUMARRAYLONG(arr) AS s FROM sasrc WHERE g > 1 "
+            "GROUP BY g ORDER BY g",
+        ),
+        (
+            modeavg_engine,
+            "SELECT g, MODE(v, 'AVG') AS m FROM mamode WHERE v > 5 "
+            "GROUP BY g ORDER BY g",
+        ),
+    ):
+        want = engine.query(src).collect()
+        assert want
+        for commented in (
+            "/* dashboard */ " + src,
+            src.replace(" GROUP BY", " -- big\nGROUP BY"),
+        ):
+            assert engine.query(commented).collect() == want
 
 
 def test_mode_avg_route_values(modeavg_engine):
@@ -4214,10 +4311,22 @@ from real_time_analytics_with_apache_pinot_on_aws_spark.functions.aggsql import 
             " SELECT * FROM a JOIN b ON a.k = b.k, "
             "(SELECT k FROM dim) AS f WHERE f.k = a.k",
         ),
+        # comments around a reference are not code: the keyword before
+        # it and the alias after it are still read
+        (
+            "WITH f AS (SELECT * FROM t) "
+            "SELECT g FROM /* c */ f -- it's\n x",
+            " SELECT g FROM /* c */ (SELECT * FROM t) -- it's\n x",
+        ),
     ],
 )
 def test_cte_inliner_rewrites(src, want):
     assert inline_route_ctes(src) == want
+    # the same head behind and between comments inlines to the same
+    # text: comments around a CTE body are not part of it
+    head = src.replace(" AS (SELECT", " -- c\nAS ( /* y */ SELECT", 1)
+    assert head != src
+    assert inline_route_ctes("/* x */ " + head) == want
 
 
 @pytest.mark.parametrize(
@@ -4881,6 +4990,10 @@ def test_keyed_route_group_by_expression(groupexpr_engine):
     routed_text = rewrite_keyed_agg_statement(stmt)
     assert routed_text is not None  # the route ENGAGED
     assert "ORDER BY __fcg0" in routed_text  # outer occurrences rebound
+    # a comment beside an outer occurrence is no operator next to it
+    assert rewrite_keyed_agg_statement(
+        stmt.replace(" AS day", " /* bucket */ AS day")
+    ) == routed_text.replace(" AS day", " /* bucket */ AS day")
     groupexpr_engine.spark.sql(routed_text)  # analyzes cleanly
     df = groupexpr_engine.query(stmt)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -5191,6 +5304,92 @@ def test_engine_has_no_whole_statement_regex():
         and anchored.search(node.args[0].value)
     ]
     assert found == []
+
+
+def test_aggsql_has_no_statement_head_regex():
+    """The statement routes read a statement's head through
+    ``sqltext`` (comments opaque), never with a regex anchored on a
+    leading ``SELECT``, ``WITH`` or ``(SELECT``, which reads a comment
+    before it as code."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import real_time_analytics_with_apache_pinot_on_aws_spark as pkg
+
+    path = Path(pkg.__file__).parent / "functions" / "aggsql.py"
+    head = re.compile(
+        r"^\^?\\s\*(?:SELECT|WITH|\\\(\\s\*SELECT)", re.IGNORECASE
+    )
+    assert head.search(r"\s*\(\s*SELECT\b") and head.search(r"^\s*WITH")
+    found = [
+        ast.unparse(node)
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and ast.unparse(node.func) in ("re.match", "re.compile")
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and isinstance(node.args[0].value, str)
+        and head.search(node.args[0].value)
+    ]
+    assert found == []
+
+
+def test_sqltext_statement_shape():
+    """The one statement shape: an optional WITH head, the clauses of
+    one SELECT with their bodies trimmed of comments, the FROM
+    operands with their aliases, and the subquery groups."""
+    sql = (
+        "/* a */ SELECT g, count(*) AS n FROM t x -- fact\n"
+        "JOIN (SELECT k FROM d) dd ON x.k = dd.k LEFT JOIN e USING (k) "
+        "WHERE v IN (/* c */ SELECT v FROM w) GROUP BY g HAVING n > 1 "
+        "ORDER BY g LIMIT 3;"
+    )
+    s = sqltext.statement(sql)
+    assert {n: sql[c.body_start : c.body_end] for n, c in s.clauses.items()} == {
+        "SELECT": "g, count(*) AS n",
+        "FROM": "t x -- fact\nJOIN (SELECT k FROM d) dd ON x.k = dd.k "
+        "LEFT JOIN e USING (k)",
+        "WHERE": "v IN (/* c */ SELECT v FROM w)",
+        "GROUP BY": "g",
+        "HAVING": "n > 1",
+        "ORDER BY": "g",
+        "LIMIT": "3",
+    }
+    assert [sql[a:b] for a, b in s.relation] == ["t x", "(SELECT k FROM d) dd", "e"]
+    assert [sql[a:b] for a, b in s.subqueries] == [
+        "(SELECT k FROM d)", "(/* c */ SELECT v FROM w)"
+    ]
+    assert s.clauses["LIMIT"].end == sql.index(";")
+    assert sqltext.clauses(sql) is None  # HAVING: not a plain statement
+    for rel, ops in (
+        ("t, (SELECT 1) AS u", ["t", "(SELECT 1) AS u"]),
+        ("t CROSS JOIN u", ["t", "u"]),
+        ("t NATURAL LEFT JOIN u v", ["t", "u v"]),
+    ):
+        q = f"SELECT a FROM {rel}"
+        assert [q[a:b] for a, b in sqltext.statement(q).relation] == ops
+    for other in (
+        "t CROSS JOIN u ON t.k = u.k",  # a CROSS join takes no condition
+        "t JOIN u",  # ...a plain one needs one
+        "t, u JOIN w ON u.k = w.k",  # commas mixed with JOIN
+        "t LATERAL VIEW explode(a) e AS x",
+        "VALUES (1) AS v(a)",
+        "(VALUES (1)) v",
+    ):
+        shape = sqltext.statement(f"SELECT a FROM {other}")
+        assert shape is not None and shape.relation is None, other
+    w = "/* h */ WITH a AS (SELECT 1), b -- n\nAS (SELECT 2) SELECT * FROM a, b"
+    s = sqltext.statement(w)
+    assert [(n, w[x:y]) for n, x, y in s.ctes] == [("a", "SELECT 1"), ("b", "SELECT 2")]
+    assert w[sqltext.ctes(w)[1]:] == " SELECT * FROM a, b"
+    for bad in (
+        "WITH a (x) AS (SELECT 1) SELECT * FROM a",
+        "WITH a AS (VALUES 1) SELECT * FROM a",
+        "SELECT a FROM t UNION SELECT a FROM u",
+        "SELECT a FROM t WHERE x IN (SELECT 1",
+    ):
+        assert sqltext.statement(bad) is None, bad
 
 
 def test_sqltext_clauses():
