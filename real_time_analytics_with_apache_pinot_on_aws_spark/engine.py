@@ -2030,18 +2030,13 @@ class Engine:
             | {n for n, c in self.configs.items() if c.is_dim_table}
         )
         views: dict[str, str] = {}
-        # comma-continued FROM lists included (round-6 ADVICE: heads-only
-        # matching left "FROM a, b"'s second engine table unresolved)
-        edits = []
-        for start, end, head, tname, alias_text, aname in (
-            self._iter_table_refs(sql)
-        ):
-            if tname not in known:
-                continue
-            v = views.setdefault(
-                tname, f"__virt_{tname}_{_uuid.uuid4().hex[:10]}"
-            )
-            edits.append((start, end, f"{head}{v}{alias_text or ''}"))
+        edits = [
+            (r.start, r.end, views.setdefault(
+                r.name, f"__virt_{r.name}_{_uuid.uuid4().hex[:10]}"
+            ))
+            for r in sqltext.relations(sql)
+            if r.name in known
+        ]
         # the $x tokens in code are backquoted for the Spark parser
         edits += [
             (m.start(), m.end(), f"`{m.group()}`")
@@ -2880,13 +2875,10 @@ class Engine:
         (Pinot's standard way to audit what upsert resolution hides).
 
         FROM/JOIN-position references to a pure-realtime upsert/dedup table
-        rewrite to its ``<name>_raw`` view; the rewrite skips literals and
-        comments, is gated to SELECT/WITH statements, and must analyze
-        cleanly or the original SQL stands (same fallback contract as the
-        TIMESTAMP index rewrite).  Hybrid tables are deliberately NOT
-        rewritten: their view is the offline/realtime boundary merge, and
-        skipping resolution there would require a raw-side merge no Pinot
-        option defines.
+        rewrite to its ``<name>_raw`` view (:meth:`_rewrite_table_refs`).
+        Hybrid tables are deliberately NOT rewritten: their view is the
+        offline/realtime boundary merge, and skipping resolution there
+        would require a raw-side merge no Pinot option defines.
         """
         targets = {
             n.lower(): f"{n}_raw"
@@ -2905,170 +2897,53 @@ class Engine:
         "ALTER",
     )
 
-    # keywords that can follow a FROM/JOIN table reference and must never be
-    # mistaken for its alias by the table-ref rewrite
-    # 'as' is in the list so 'FROM t AS sort' cannot backtrack into
-    # capturing the AS keyword itself as the alias (round-7 review) — the
-    # alias group fails entirely and ' AS sort' survives verbatim after
-    # the rewritten table token
-    _NON_ALIAS_KEYWORDS = frozenset(
-        """where group order limit having union except intersect minus
-        join left right full inner outer cross natural semi anti lateral
-        on using window qualify offset tablesample pivot unpivot distribute
-        sort cluster values select from and or not when then else end
-        set as""".split()
-    )
-
-    # these refuse alias-hood only as clause HEADS (round-7 shape fuzz:
-    # 'FROM t sort' is a legitimate alias named sort — Spark's parser
-    # accepts non-reserved keywords there — and only 'SORT BY' is a
-    # clause; hard-refusing it made the inline-subselect rewrite emit a
-    # double alias and silently fall back to the un-optioned original)
-    _SOFT_ALIAS_KEYWORDS = ("cluster", "distribute", "group", "order", "sort")
-
-    # the alias group REFUSES clause keywords via lookahead (round-7
-    # review: a greedy alias swallowed the JOIN of "FROM a JOIN b", so
-    # "JOIN b" was never visited and options applied to one table only)
-    # Two alias branches (round-7 reviews): after an EXPLICIT ``AS``,
-    # anything but a second ``AS`` is the alias — Spark's parser accepts
-    # non-reserved keywords there (``FROM t AS limit``), and hard-refusing
-    # them made callable-target rewrites emit a double alias and silently
-    # fall back to the un-optioned statement.  A BARE word is an alias
-    # only when it is not a clause keyword (soft keywords refuse only as
-    # ``X BY`` clause heads).  Python regex forbids duplicate group names,
-    # so the branches carry ``aname``/``aname_bare`` and readers coalesce.
-    _ALIAS_PART = (
-        r"(?P<alias>\s+(?:AS\s+(?P<aname>(?!AS\b)[A-Za-z_]\w*)"
-        r"|(?P<aname_bare>(?!(?:"
-        + "|".join(sorted(_NON_ALIAS_KEYWORDS - set(_SOFT_ALIAS_KEYWORDS)))
-        + r")\b)(?!(?:"
-        + "|".join(_SOFT_ALIAS_KEYWORDS)
-        + r")\s+BY\b)[A-Za-z_]\w*)))?"
-    )
-
-    _TABLE_REF_RE = re.compile(
-        r"\b(FROM|JOIN)(\s+)(?P<t>\w+)" + _ALIAS_PART,
-        re.IGNORECASE,
-    )
-
-    # comma-continued reference inside a FROM list: ``FROM a, b c, d``
-    # (round-6 ADVICE: heads-only matching left the 2nd+ tables of a
-    # comma list unrewritten, so options partially applied)
-    _TABLE_REF_CONT_RE = re.compile(
-        r"(\s*,\s*)(?P<t>\w+)" + _ALIAS_PART,
-        re.IGNORECASE,
-    )
-
-    def _iter_table_refs(self, sql: str) -> list:
-        """Every FROM/JOIN table reference AND the comma-continued
-        references of FROM lists, as ``(start, end, head, tname,
-        alias_text, aname)`` tuples in statement order.  ``head`` is the
-        verbatim text before the table token (``FROM ``/``JOIN ``/
-        ``, ``).  The alias group's keyword lookahead guarantees a
-        clause keyword is never consumed as an alias, so ``FROM a JOIN
-        b`` yields both refs and a FROM list's continuation scan stops
-        at the first non-comma token.  References inside literals or
-        comments are skipped."""
-        refs = []
-        for m in sqltext.finditer(self._TABLE_REF_RE, sql):
-            refs.append(
-                (
-                    m.start(),
-                    m.end(),
-                    f"{m.group(1)}{m.group(2)}",
-                    m.group("t"),
-                    m.group("alias"),
-                    m.group("aname") or m.group("aname_bare"),
-                )
-            )
-            if m.group(1).upper() != "FROM":
-                continue  # JOIN never heads a comma list
-            pos = m.end()
-            while True:
-                # a match starting in code is words and spaces only, so
-                # it ends in code too: the continuation starts in code
-                cm = self._TABLE_REF_CONT_RE.match(sql, pos)
-                if cm is None:
-                    break
-                refs.append(
-                    (
-                        cm.start(),
-                        cm.end(),
-                        cm.group(1),
-                        cm.group("t"),
-                        cm.group("alias"),
-                        cm.group("aname") or cm.group("aname_bare"),
-                    )
-                )
-                pos = cm.end()
-        return refs
-
-    def _rewrite_table_refs(self, sql: str, targets: dict) -> str:
-        """Shared guarded FROM/JOIN table-reference rewriter (round-6
-        review: this logic existed as near-copies in the skipUpsert and
-        null-semantics rewrites, and the copies had already drifted).
-
-        ``targets`` maps lower-cased table names to either a replacement
-        NAME (plain string) or a callable ``alias -> sql_fragment`` for
-        replacements that must carry the alias themselves (inline
-        subselects).  Contract, identical for every user: gated to
-        SELECT/WITH statements; a command keyword anywhere outside a
-        literal or comment aborts (a WITH-prefixed INSERT must never ride
-        through the analysis probe); references inside literals or
-        comments never rewrite; a user alias after the table name is
-        preserved (``FROM t x`` — the alias regex refuses clause keywords
-        so ``FROM t WHERE`` cannot misparse); and the rewritten statement
-        must ANALYZE cleanly or the original stands.
-        """
-        if not targets:
+    def _guarded_rewrite(self, sql: str, edits) -> str:
+        """``sql`` with the ``(start, end, text)`` edits that ``edits(sql)``
+        lists spliced in, or ``sql`` itself unless the statement is a
+        SELECT or WITH with no command keyword in code (the analysis probe
+        would EXECUTE a command) and the rewritten text analyzes cleanly.
+        Literals and comments are the caller's to skip."""
+        if not sqltext.keyword("SELECT", "WITH").match(
+            sql, sqltext.skip_space(sql)
+        ) or sqltext.search(self._COMMAND_RE, sql):
             return sql
-        if not re.match(r"\s*(SELECT|WITH)\b", sql, re.IGNORECASE):
+        rewritten = aggsql.apply_text_edits(sql, edits(sql))
+        if rewritten is None or rewritten == sql:
             return sql
-        low = sql.lower()
-        targets = {k: v for k, v in targets.items() if k in low}
-        if not targets:
-            return sql
-        if sqltext.search(self._COMMAND_RE, sql):
-            return sql
-
-        def ref_repl(
-            head: str, tname: str, alias_text: str, aname: str
-        ) -> str | None:
-            sub = targets.get(tname.lower())
-            if sub is None:
-                return None
-            # text after the table token that was NOT a real alias (e.g.
-            # " WHERE") must be preserved verbatim; a real alias is
-            # re-emitted in normalized "AS name" form
-            trailer = "" if aname is not None else (alias_text or "")
-            if callable(sub):
-                # inline subselect: always aliased — to the user's alias if
-                # one exists, else to the table's own name so qualified
-                # column references keep resolving
-                return f"{head}{sub()} AS {aname or tname}{trailer}"
-            if aname is not None:
-                return f"{head}{sub} AS {aname}"
-            return f"{head}{sub}{trailer}"
-
-        edits = []
-        for start, end, head, tname, alias_text, aname in (
-            self._iter_table_refs(sql)
-        ):
-            r = ref_repl(head, tname, alias_text, aname)
-            if r is not None:
-                edits.append((start, end, r))
-        if not edits:
-            return sql
-        from .functions.aggsql import apply_text_edits
-
-        rewritten = apply_text_edits(sql, edits)
-        if rewritten is None:
-            return sql  # overlapping spans: serve the original untouched
         try:
             self.spark.sql(rewritten)  # SELECT/WITH only: analysis, no exec
             return rewritten
         except Exception:
             return sql
+
+    def _rewrite_table_refs(self, sql: str, targets: dict) -> str:
+        """Replace each relation reference (:func:`sqltext.relations`) to
+        a table ``targets`` names, through :meth:`_guarded_rewrite`.
+
+        ``targets`` maps lower-cased table names to a replacement NAME, or
+        to a callable returning a ``(SELECT ...)`` text.  Only the name is
+        replaced, so a user alias stays as written; a subselect without
+        one is aliased to the name, so qualified columns keep resolving.
+        """
+        low = sql.lower()
+        targets = {k: v for k, v in targets.items() if k in low}
+        if not targets:
+            return sql
+
+        def edits(sql: str) -> list:
+            out = []
+            for r in sqltext.relations(sql):
+                sub = targets.get(r.name.lower())
+                if callable(sub):
+                    sub = sub() + (
+                        "" if r.alias is not None
+                        else f" AS {sql[r.start : r.end]}"
+                    )
+                if sub is not None:
+                    out.append((r.start, r.end, sub))
+            return out
+
+        return self._guarded_rewrite(sql, edits)
 
     @staticmethod
     def _null_default_sql(spec) -> str:
@@ -3109,9 +2984,8 @@ class Engine:
         views, which serve the same storage — rewrite to an inline
         subselect aliased to the reference (user aliases preserved); no
         temp views, so nothing leaks and concurrent broker threads never
-        race a view name.  Guards (literals and comments, command keywords,
-        analyze-or-fall-back) live in :meth:`_rewrite_table_refs`, shared
-        with the skipUpsert rewrite.  Engine default is null-native
+        race a view name (:meth:`_rewrite_table_refs`, shared with the
+        skipUpsert rewrite).  Engine default is null-native
         (inverse of Pinot's option default, documented in the config
         field) — the option is the path BACK to Pinot's sentinel view.
         Subselect construction is LAZY (a callable per view name): the
@@ -3238,42 +3112,30 @@ class Engine:
         declared column with its materialized ``<col>__<gran>`` derived
         column, so the truncation is READ (and range-filters prune via
         parquet min/max stats) instead of computed per row — exactly what
-        Pinot's rewrite to ``$col$GRAN`` + range index buys.  SELECT/WITH
-        statements only (the analysis probe would EXECUTE a command), and
-        the rewrite must analyze cleanly (the statement may bind a
-        same-named column of an undeclared table); otherwise the original
-        SQL stands — the routing contract everywhere on this surface.
+        Pinot's rewrite to ``$col$GRAN`` + range index buys.  Guarded by
+        :meth:`_guarded_rewrite`: the statement may bind a same-named
+        column of an undeclared table, so the rewrite must analyze
+        cleanly.
         """
         if "trunc" not in sql.lower():
-            return sql
-        if not re.match(r"\s*(SELECT|WITH)\b", sql, re.IGNORECASE):
             return sql
         mapping = self._timestamp_index_rewrites()
         if not mapping:
             return sql
-        if sqltext.search(self._COMMAND_RE, sql):
-            return sql
-        pieces: list[str] = []
-        last = 0
-        # the granularity literal inside the call is expected; what must
-        # not match is a call-shaped substring inside an outer literal or
-        # a comment, i.e. a match that STARTS there
-        for m in sqltext.finditer(self._DATETRUNC_RE, sql):
-            derived = mapping.get((m.group(2).lower(), m.group(1).upper()))
-            if derived is None:
-                continue
-            pieces.append(sql[last:m.start()])
-            pieces.append(derived)
-            last = m.end()
-        if not pieces:
-            return sql
-        pieces.append(sql[last:])
-        rewritten = "".join(pieces)
-        try:
-            self.spark.sql(rewritten)  # SELECT/WITH only: analysis, no exec
-            return rewritten
-        except Exception:
-            return sql
+
+        def edits(sql: str) -> list:
+            # the granularity literal inside the call is expected; what
+            # must not match is a call-shaped substring inside an outer
+            # literal or a comment, i.e. a match that STARTS there
+            return [
+                (m.start(), m.end(), derived)
+                for m in sqltext.finditer(self._DATETRUNC_RE, sql)
+                if (derived := mapping.get(
+                    (m.group(2).lower(), m.group(1).upper())
+                ))
+            ]
+
+        return self._guarded_rewrite(sql, edits)
 
     def explain_plan(self, sql: str, logical: bool = False) -> DataFrame:
         """Pinot ``EXPLAIN [IMPLEMENTATION] PLAN [WITHOUT IMPLEMENTATION]

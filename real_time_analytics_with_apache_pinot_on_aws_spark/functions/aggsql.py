@@ -267,7 +267,9 @@ def _in_subquery(name: str):
                 f"{name}: ID_SET needs a column argument, got ID_SET()"
             )
         rest = inner[i:].strip()
-        if not re.match(r"(?is)^FROM\b", rest):
+        if not sqltext.keyword("FROM").match(
+            inner, sqltext.skip_space(inner, i)
+        ):
             raise ValueError(
                 f"{name} subquery must be SELECT ID_SET(col) FROM ... "
                 f"— found {rest[:40]!r} after ID_SET()"
@@ -1493,14 +1495,13 @@ def _is_cte_definition(sql: str, open_idx: int) -> bool:
     that follows the balanced group: a function CALL is never followed
     by ``AS (`` (an alias is ``AS identifier``; generator column aliases
     apply only to generators, none of which share a rewrite-table name).
-    Without this, a CTE named like a Pinot spelling (``WITH
-    funnel_count (step, cnt) AS ...``) was treated as a call site
-    (round-8 review — pre-existing in the old matcher too)."""
+    Comments may sit before ``AS`` and ``(``."""
     try:
         _, after = sqltext.balanced(sql, open_idx)
     except ValueError:
         return False
-    return re.match(r"\s*AS\s*\(", sql[after:], re.IGNORECASE) is not None
+    as_ = sqltext.keyword("AS").match(sql, sqltext.skip_space(sql, after))
+    return bool(as_) and sql.startswith("(", sqltext.skip_space(sql, as_.end()))
 
 
 def canonicalize_pinot_spellings(sql: str, keep_native=None) -> str:
@@ -1634,13 +1635,14 @@ def _rewrite_pinot_aggregates_inner(sql: str, keep_native) -> str:
 # to ANALYZE cleanly or the original stands — the same contract as
 # every other statement rewrite.
 
-def _hll_elem_builder(e: str) -> str:
-    # coalesce to 0: an empty input (or all-NULL elements) has ZERO
-    # distinct values — Pinot answers 0 and the normalized-set fallback
-    # answers size([]) = 0, but a NULL hll sketch estimates to NULL
-    # (round-9 fuzz: the route diverged from the fold on an
-    # empty-after-WHERE global aggregate)
-    return f"coalesce(hll_sketch_estimate(hll_sketch_agg({e})), 0)"
+def _hll_elem_builder(e: str, to_zero: str = "coalesce") -> str:
+    # to 0: an empty input (or all-NULL elements) has ZERO distinct
+    # values — Pinot answers 0 and the normalized-set fallback answers
+    # size([]) = 0, but a NULL hll sketch estimates to NULL.  Beside two
+    # DISTINCT argument sets Spark reads the sketch through first() over
+    # an Expand, NULL on an empty input, after its optimizer has dropped
+    # a coalesce of the estimate (typed never NULL); greatest stays.
+    return f"{to_zero}(hll_sketch_estimate(hll_sketch_agg({e})), 0)"
 
 
 _MV_DISTINCT_BUILDERS = {
@@ -1870,123 +1872,21 @@ def _scan_call_sites(sql: str) -> list:
     ]
 
 
-# clause keywords that can directly follow a table reference — used to
-# tell `FROM cte WHERE ...` (no alias) from `FROM cte w` (alias `w`)
-# when the inliner re-emits a single-use CTE as a derived table.  A
-# genuine alias SPELLED like one of these is mis-read as a keyword; the
-# inliner then emits `(body) AS name <alias>`, which fails the engine's
-# analysis probe and falls back to the original statement — safe, never
-# silent.
-_CTE_ALIAS_STOP_KWS = frozenset(
-    """ON WHERE GROUP ORDER HAVING LIMIT JOIN LEFT RIGHT INNER FULL
-    CROSS OUTER NATURAL UNION EXCEPT INTERSECT MINUS USING SEMI ANTI
-    LATERAL WINDOW QUALIFY OFFSET SORT DISTRIBUTE CLUSTER TABLESAMPLE
-    PIVOT UNPIVOT SELECT AS""".split()
-)
-
-
-# clause keywords that END a FROM region in _cte_table_refs' scan —
-# every tracked clause keyword except FROM (starts one) and JOIN (a
-# chain continues the relation list); LATERAL is here because a comma
-# after `LATERAL VIEW ... AS a, b` separates generator aliases
-_CTE_FROM_END_KWS = frozenset(
-    """WHERE GROUP HAVING ORDER LIMIT OFFSET UNION EXCEPT INTERSECT
-    MINUS WINDOW QUALIFY DISTRIBUTE CLUSTER SORT LATERAL SELECT VALUES
-    TABLESAMPLE PIVOT UNPIVOT""".split()
-)
-
-
-# one bracket, one comma, or one word not preceded by an identifier
-# character, '.' or '$' (a qualified or '$'-prefixed word is never a
-# keyword or a ref)
-_CTE_TOKEN_RE = re.compile(
-    r"(?P<open>[(\[])|(?P<close>[)\]])|,|(?<![\w.$])[A-Za-z_]\w*"
-)
-
-
 def _cte_table_refs(text: str, name: str):
-    """Scan ``text`` (literal and comment content opaque) for
-    whole-word, unquoted occurrences of CTE ``name``.  Returns ``None``
-    when any occurrence is NOT a plain ``FROM``/``JOIN`` table reference
-    (inlining could change its meaning — bail), else a list of
-    ``(start, end, has_alias)`` reference sites.  Qualifier uses
-    (``name.col``) and call sites (``name(``) are neither references
-    nor blockers: the inlined derived table keeps ``name`` as its
-    alias, so qualifiers still bind, and a CTE never shadows a function.
-
-    A ``FROM`` that precedes the name is only a RELATION keyword when
-    the innermost enclosing paren group is a ``(SELECT ...)`` subquery
-    (or there is none): expression-level FROM — ``substring(s FROM name
-    FOR 3)``, ``trim(LEADING 'x' FROM name)``, ``extract(DAY FROM
-    name)``, ``overlay(... FROM name)`` — sits inside a function-call
-    group whose first token is not SELECT, and splicing a derived table
-    there rewrites a COLUMN into a scalar subquery that can ANALYZE
-    cleanly with different semantics.  Those occurrences bail the whole
-    inline.
-
-    A reference whose previous token is a COMMA is also a relation
-    when the scan is inside a FROM REGION — between a FROM and the next
-    clause keyword at the same paren depth, where a depth-0 comma can
-    only separate relations.  LATERAL ends the region (a comma after
-    ``LATERAL VIEW ... AS a, b`` separates generator aliases, not
-    relations); a comma-preceded occurrence anywhere else (select list,
-    GROUP BY, ...) still bails the whole inline."""
-    refs = []
-    # one flag per open bracket group: True = the group's first token is
-    # SELECT (a subquery — relation position exists inside it)
-    group_is_select = []
-    # parallel FROM-region flags; entry 0 is the top level
-    in_from = [False]
-    prev = None
-    for m in sqltext.finditer(_CTE_TOKEN_RE, text):
-        before, prev = prev, m
-        word, i, end = m.group().upper(), m.start(), m.end()
-        if m.group("open"):
-            group_is_select.append(
-                sqltext.keyword("SELECT").match(
-                    text, sqltext.skip_space(text, end)
-                ) is not None
-            )
-            in_from.append(False)
-            continue
-        if m.group("close"):
-            if group_is_select:
-                group_is_select.pop()
-            if len(in_from) > 1:
-                in_from.pop()
-            continue
-        if word != name.upper():
-            if word == "FROM":
-                in_from[-1] = True
-            elif word in _CTE_FROM_END_KWS:
-                in_from[-1] = False
-            continue
-        if text[end : end + 1] in (".", "("):
-            continue
-        # the token right before the name (only whitespace and comments
-        # between) must be FROM or JOIN — or a relation-separating comma
-        # inside a FROM region — for this to be a plain relation
-        # reference the derived-table shape can replace
-        adjacent = before and sqltext.skip_space(text, before.end()) == i
-        kw = before.group().upper() if adjacent else ""
-        if kw == "," and not in_from[-1]:
-            return None  # select-list / alias-list comma: bail
-        if kw not in (",", "FROM", "JOIN"):
-            return None
-        if group_is_select and not group_is_select[-1]:
-            return None  # expression-level FROM: never a relation
-        # an alias follows: `AS word`, or a word that is no clause keyword
-        j = sqltext.skip_space(text, end)
-        am = _PLAIN_IDENT_RE.match(text, j) if j > end else None
-        if am and am.group().upper() == "AS":
-            k = sqltext.skip_space(text, am.end())
-            has_alias = k > am.end() and bool(_PLAIN_IDENT_RE.match(text, k))
-        else:
-            has_alias = (
-                bool(am) and am.group().upper() not in _CTE_ALIAS_STOP_KWS
-            )
-        refs.append((i, end, has_alias))
-    return refs
+    """The :func:`sqltext.relations` references to CTE ``name`` in
+    ``text``, or None when the name also occurs in code anywhere else,
+    where inlining could change what it means (a column, an
+    expression-level ``FROM name``).  Qualifier uses (``name.col``) and
+    calls (``name(``) are neither: the inlined derived table keeps
+    ``name`` as its alias, so qualifiers still bind, and a CTE never
+    shadows a function."""
+    refs = [
+        r for r in sqltext.relations(text) if r.name.upper() == name.upper()
+    ]
+    uses = re.compile(
+        rf"(?<![\w.$]){re.escape(name)}(?![\w$.])(?!\s*\()", re.IGNORECASE
+    )
+    return refs if len(refs) == len(list(sqltext.finditer(uses, text))) else None
 
 
 def inline_route_ctes(sql: str):
@@ -2016,9 +1916,8 @@ def inline_route_ctes(sql: str):
     bails, or the routed text fails the analysis probe, the ORIGINAL
     statement stands.  That probe is the safety net for any valid-SQL
     corner the conservative checks below miss — a garbled inline can
-    only cost the bounded plan, never the answer (one verified corner,
-    expression-level FROM, is additionally caught in _cte_table_refs
-    itself because it can analyze cleanly)."""
+    only cost the bounded plan, never the answer (expression-level FROM,
+    which can analyze cleanly, is caught in _cte_table_refs itself)."""
     head = sqltext.ctes(sql)
     if head is None or not head[0]:
         return None
@@ -2040,9 +1939,9 @@ def inline_route_ctes(sql: str):
             _NONDETERMINISTIC_FN_RE, body
         ):
             return None  # per-site re-evaluation would draw twice: fold
-        for start, end, has_alias in reversed(refs):
-            repl = f"({body})" if has_alias else f"({body}) AS {name}"
-            text = text[:start] + repl + text[end:]
+        for r in reversed(refs):
+            repl = f"({body})" + ("" if r.alias is not None else f" AS {name}")
+            text = text[: r.start] + repl + text[r.end :]
         if len(text) > 262_144:
             return None  # chained-duplication blowup guard: keep fold
     return text
@@ -2161,6 +2060,12 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
     cond = " AND ".join(
         f"coalesce(__mv{i}_pos, 0) = 0" for i in range(len(exprs))
     )
+    # a DISTINCT aggregate beside an HLL estimate (see _hll_elem_builder)
+    distinct = sqltext.search("DISTINCT", sql) is not None or any(
+        _MV_DISTINCT_BUILDERS.get(p[0].upper(), _hll_elem_builder)
+        is not _hll_elem_builder
+        for p in mv_parsed
+    )
     edits = []
     for name, st, end, e, margs, pred in mv_parsed:
         u = name.upper()
@@ -2183,7 +2088,10 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
         else:
             if pred:
                 elem = f"if(({pred}), {elem}, null)"
-            repl = _MV_DISTINCT_BUILDERS[u](elem)
+            build = _MV_DISTINCT_BUILDERS[u]
+            repl = build(elem, "greatest") if (
+                distinct and build is _hll_elem_builder
+            ) else build(elem)
         edits.append((st, end, repl))
     for name, st, op, inner, end in wrap_sites:
         args = _args(inner)

@@ -58,6 +58,14 @@ the subquery groups.  Its readers:
   VECTOR_SIMILARITY / TEXT_MATCH / JSON_MATCH predicates) read the view
   :func:`clauses`, which serves a plain statement without WITH, HAVING
   or SORT BY as ``{keyword: text}``.
+
+One relation reader, :func:`relations`, lists every name a statement
+reads a relation from, at every depth, with its alias.  Its readers are
+the engine's skipUpsert and ``enableNullHandling=false`` rewrites
+(``Engine._rewrite_table_refs``), its virtual-column resolution and the
+CTE inliner of functions/aggsql.py.  The FROM operands of
+:func:`statement` read their names and aliases by the same rules, so
+one list of words is never an alias.
 """
 
 from __future__ import annotations
@@ -155,6 +163,18 @@ def strip(text: str) -> str:
     return text[skip_space(text) : code_end(text)]
 
 
+def blank(text: str) -> str:
+    """``text`` with each comment replaced by as many spaces."""
+    if "--" not in text and "/*" not in text:
+        return text
+    out, pos = [], 0
+    for m, e in _tokens(_OPAQUE_RE, text):
+        if m.group("comment") is not None:
+            out += [text[pos : m.start()], " " * (e - m.start())]
+            pos = e
+    return "".join(out) + text[pos:]
+
+
 def string_value(text: str) -> str | None:
     """The value of ``text`` when it is exactly one single-quoted literal
     (surrounding whitespace allowed, doubled quotes unescaped), else
@@ -198,9 +218,10 @@ def _code_runs(sql: str, start: int, top_level: bool):
 @lru_cache(maxsize=64)
 def keyword(*words: str) -> re.Pattern:
     """Case-insensitive pattern matching any of ``words`` as a whole word;
-    a word may be a phrase (``"GROUP BY"``, any whitespace between).  A
-    word right after ``.`` is a qualified name part (``d.limit``), never
-    a keyword."""
+    a word may be a phrase (``"GROUP BY"``, any whitespace between, and
+    comments too where :func:`finditer` or :func:`blank` text reads it).
+    A word right after ``.`` is a qualified name part (``d.limit``),
+    never a keyword."""
     alts = "|".join(r"\s+".join(map(re.escape, w.split())) for w in words)
     return re.compile(rf"(?<![\w.])(?:{alts})(?!\w)", re.IGNORECASE)
 
@@ -211,14 +232,16 @@ def finditer(
 ) -> Iterator[re.Match]:
     """Every match of ``pattern`` that starts in code at or after
     ``start`` (at depth 0 with ``top_level``), left to right and not
-    overlapping.  A str pattern is a :func:`keyword`."""
+    overlapping.  The pattern reads the :func:`blank` copy of ``sql``, so
+    a match may run across a comment, as a phrase's words may.  A str
+    pattern is a :func:`keyword`."""
     if isinstance(pattern, str):
         pattern = keyword(pattern)
-    pos = start
+    code, pos = blank(sql), start
     for s, e in _code_runs(sql, start, top_level):
         pos = max(pos, s)
         while pos < e:
-            m = pattern.search(sql, pos)
+            m = pattern.search(code, pos)
             if m is None:
                 return
             if m.start() >= e:
@@ -271,21 +294,45 @@ _SHAPE = (
     "SELECT", "FROM", "WHERE", "GROUP BY", "HAVING", "ORDER BY", "SORT BY",
     "LIMIT", "OFFSET",
 )
-# ...the top-level keywords that make a statement some other shape, and
-# the operator ``IS [NOT] DISTINCT FROM``, whose FROM starts no clause
-_CLAUSE_RE = keyword(
-    *_SHAPE, "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS",
-    "CLUSTER BY", "DISTRIBUTE BY", "DISTINCT FROM",
+# ...and the top-level keywords that make a statement some other shape
+_CLAUSES = (
+    *_SHAPE, "WINDOW", "UNION", "INTERSECT", "EXCEPT", "MINUS", "CLUSTER BY",
+    "DISTRIBUTE BY",
 )
+# the operator ``IS [NOT] DISTINCT FROM``, whose FROM starts no clause
+_CLAUSE_RE = keyword(*_CLAUSES, "DISTINCT FROM")
 # the clauses :func:`clauses` serves
 _PLAIN = frozenset(_SHAPE) - {"HAVING", "SORT BY"}
 _NAME_RE = re.compile(r"[A-Za-z_]\w*")
-_TABLE_RE = re.compile(r"[A-Za-z_][\w.]*")
-# a FROM operand's optional alias, which is never a join word; the join
-# condition; the flavor words a piece may trail for the next JOIN, where
-# ``condless`` marks the flavors whose segment takes no condition
-_JOIN_WORDS = "ON|USING|LEFT|RIGHT|FULL|INNER|OUTER|CROSS|NATURAL|SEMI|ANTI"
-_ALIAS = rf"(?P<alias>\s*(?:AS\s+)?(?!(?:{_JOIN_WORDS})\b)[A-Za-z_]\w*)?"
+# a relation name: identifiers or quoted identifiers joined by dots
+_PART = rf"[A-Za-z_]\w*|{_BQ}"
+_PART_RE = re.compile(_PART)
+_RELATION_RE = re.compile(rf"(?:{_PART})(?:\.(?:{_PART}))*")
+# the words after which the commas of a FROM list separate no more
+# relations: the clauses that can follow it, and LATERAL VIEW, whose
+# commas separate generator aliases.  With the join words and AS they
+# are the words that are never an alias; GROUP, ORDER, SORT, CLUSTER and
+# DISTRIBUTE count only as the head of their ``X BY`` clause, so ``FROM t
+# sort`` names the alias ``sort``.
+_FROM_END = (
+    *(c for c in _CLAUSES if c != "FROM"), "QUALIFY", "LATERAL", "VALUES",
+    "TABLESAMPLE", "PIVOT", "UNPIVOT",
+)
+_FROM_END_RE = keyword(*_FROM_END)
+_NOT_ALIAS_RE = keyword(
+    *_FROM_END, "AS", "JOIN", "ON", "USING", "LEFT", "RIGHT", "FULL", "INNER",
+    "OUTER", "CROSS", "NATURAL", "SEMI", "ANTI",
+)
+_QUERY_RE = keyword("SELECT", "WITH")
+# one token of :func:`relations`' scan (comments are blanked by then)
+_RELATION_TOKEN_RE = re.compile(
+    rf"{_SQ}|{_DQ}|(?P<name>{_RELATION_RE.pattern})|(?P<open>[(\[])"
+    r"|(?P<close>[)\]])|(?P<comma>,)",
+    re.DOTALL,
+)
+# the join condition; the flavor words a FROM operand may trail for the
+# next JOIN, where ``condless`` marks the flavors whose segment takes no
+# condition
 _COND = r"(?:\s*ON\s+.+?|\s*USING\s*\([^()]*\))"
 _FLAVOR = (
     r"(?:\s+(?:(?P<condless>CROSS|NATURAL(?:\s+INNER|"
@@ -325,21 +372,80 @@ class Statement(NamedTuple):
         return any(s < pos < e for s, e in self.subqueries)
 
 
-def blank(text: str) -> str:
-    """``text`` with each comment replaced by as many spaces."""
-    out, pos = [], 0
-    for m, e in _tokens(_OPAQUE_RE, text):
-        if m.group("comment") is not None:
-            out += [text[pos : m.start()], " " * (e - m.start())]
-            pos = e
-    return "".join(out) + text[pos:]
+class Relation(NamedTuple):
+    """One relation reference: the span of its name, the name with its
+    quotes removed and its alias (None when it has none)."""
+
+    start: int
+    end: int
+    name: str
+    alias: str | None
+
+
+def _unquote(name: str) -> str:
+    return ".".join(
+        p[1:-1].replace("``", "`") if p[0] == "`" else p
+        for p in _PART_RE.findall(name)
+    )
+
+
+def _alias(text: str, i: int) -> tuple[str, int] | None:
+    """The alias after the FROM operand that ends at ``text[i]`` (comments
+    blanked): ``(name, index past it)``, or None.  After AS any name is
+    the alias; a bare name is one unless :data:`_NOT_ALIAS_RE` reads a
+    clause, join or set-operator word there."""
+    j = _SPACE_RE.match(text, i).end()
+    if m := keyword("AS").match(text, j):
+        j = _SPACE_RE.match(text, m.end()).end()
+    elif j == i or _NOT_ALIAS_RE.match(text, j):
+        return None
+    m = _PART_RE.match(text, j)
+    return (_unquote(m.group()), m.end()) if m else None
+
+
+def relations(sql: str) -> Iterator[Relation]:
+    """Every relation reference of ``sql`` at every depth, left to right:
+    the name after FROM, after JOIN, or after a comma of a FROM list (up
+    to the next :data:`_FROM_END_RE` word at its depth), with its alias.
+    A FROM counts at the top level and directly inside a ``(SELECT
+    ...)`` or ``(WITH ...)`` group, so the FROM of ``substring(s FROM
+    2)`` or of ``IS DISTINCT FROM`` names no relation.  A name followed
+    by ``(`` is a call (``FROM range(3)``), not a reference.  Comments
+    may sit between any two tokens."""
+    text = blank(sql)
+    # per open group, the top level first: [a FROM counts there, the scan
+    # is inside its FROM list]
+    groups = [[True, False]]
+    operand, prev, last, skip = False, "", 0, 0
+    for m in _RELATION_TOKEN_RE.finditer(text):
+        if m.start() < skip:
+            continue
+        word = (m.group("name") or "").upper()
+        after = _SPACE_RE.match(text, m.end()).end()
+        from_ = word == "FROM" and groups[-1][0] and not (
+            prev == "DISTINCT" and text[last : m.start()].isspace()
+        )
+        if operand and word and not text.startswith("(", after):
+            alias, skip = _alias(text, m.end()) or (None, m.end())
+            yield Relation(m.start(), m.end(), _unquote(m.group()), alias)
+        elif m.group("open"):
+            groups.append([bool(_QUERY_RE.match(text, after)), False])
+        elif m.group("close") and len(groups) > 1:
+            groups.pop()
+        elif from_ or ("." not in word and _FROM_END_RE.match(text, m.start())):
+            groups[-1][1] = from_
+        operand = from_ or word == "JOIN" or (
+            m.group("comma") is not None and groups[-1][1]
+        )
+        prev, last = word, m.end()
 
 
 @lru_cache(maxsize=8)
-def _piece(cond: bool, flavor: bool) -> re.Pattern:
-    """What follows a FROM operand up to the next JOIN or comma."""
+def _tail(cond: bool, flavor: bool) -> re.Pattern:
+    """What follows a FROM operand and its alias up to the next JOIN or
+    comma."""
     tail = (_COND if cond else "") + (_FLAVOR if flavor else "")
-    return re.compile(_ALIAS + tail + r"\s*", re.IGNORECASE | re.DOTALL)
+    return re.compile(tail + r"\s*", re.IGNORECASE | re.DOTALL)
 
 
 def _relation(sql: str, start: int, end: int) -> list | None:
@@ -367,16 +473,16 @@ def _relation(sql: str, start: int, end: int) -> list | None:
                 op = balanced(text, i)[1]
             except ValueError:
                 return None
-        elif m := _TABLE_RE.match(text, i):
+        elif m := _RELATION_RE.match(text, i):
             op = m.end()
         else:
             return None
+        stop = (_alias(text, op) or (None, op))[1]
         cond = bool(joins) and k > 0 and not condless
-        m = _piece(cond, k < len(joins)).fullmatch(text, op, e)
+        m = _tail(cond, k < len(joins)).fullmatch(text, stop, e)
         if m is None:
             return None
         condless = m.groupdict().get("condless") is not None
-        stop = m.end("alias") if m.group("alias") else op
         out.append((start + i, start + stop))
     return out
 

@@ -2297,6 +2297,12 @@ def test_in_subquery_rewrite_text():
         "WHERE DISTINCTCOUNT(x) > 1') = 1"
     )
     assert "IN (SELECT u FROM s WHERE count(DISTINCT x) > 1)" in got2
+    # a comment before the inner FROM is not code
+    got3 = R(
+        "SELECT id FROM t WHERE IN_SUBQUERY(k, "
+        "'SELECT ID_SET(k) /* ids */ FROM d') = 1"
+    )
+    assert "IN (SELECT k /* ids */ FROM d)" in got3
 
 
 @pytest.mark.parametrize(
@@ -2712,6 +2718,11 @@ def test_cte_named_like_a_spelling_is_not_a_call_site(agg_engine):
         "SELECT step, cnt FROM funnel_count"
     ).collect()
     assert rows[0]["step"] == 1 and rows[0]["cnt"] == 2
+    commented = (
+        "WITH funnel_count (step, cnt) /* c */ AS (SELECT 1, 2) "
+        "SELECT * FROM funnel_count"
+    )
+    assert R(commented) == commented
     rows2 = agg_engine.query(
         "WITH DISTINCTCOUNT (x) AS (SELECT 9) SELECT x FROM DISTINCTCOUNT"
     ).collect()
@@ -5306,6 +5317,38 @@ def test_engine_has_no_whole_statement_regex():
     assert found == []
 
 
+def test_no_table_reference_regex():
+    """The engine and the statement routes find the relations a
+    statement names through ``sqltext.relations`` (comments opaque),
+    never with a regex pattern holding ``FROM`` or ``JOIN``, which
+    misses a reference behind a comment."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import real_time_analytics_with_apache_pinot_on_aws_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    word = re.compile(r"\b(?:FROM|JOIN)\b", re.IGNORECASE)
+    found = [
+        (rel, ast.unparse(node))
+        for rel in ("engine.py", "functions/aggsql.py")
+        for node in ast.walk(ast.parse((root / rel).read_text()))
+        if isinstance(node, ast.Call)
+        and ast.unparse(node.func) in (
+            "re.compile", "re.match", "re.search", "re.fullmatch"
+        )
+        and node.args
+        and any(
+            isinstance(c, ast.Constant)
+            and isinstance(c.value, str)
+            and word.search(c.value)
+            for c in ast.walk(node.args[0])
+        )
+    ]
+    assert found == []
+
+
 def test_aggsql_has_no_statement_head_regex():
     """The statement routes read a statement's head through
     ``sqltext`` (comments opaque), never with a regex anchored on a
@@ -5411,6 +5454,13 @@ def test_sqltext_clauses():
     assert sqltext.clauses("SELECT a FROM t WHERE a IS NOT DISTINCT FROM b") == {
         "SELECT": "a", "FROM": "t", "WHERE": "a IS NOT DISTINCT FROM b"
     }
+    # a phrase's words may have a comment between them
+    assert sqltext.clauses("SELECT a FROM t GROUP /* c */ BY a") == {
+        "SELECT": "a", "FROM": "t", "GROUP BY": "a"
+    }
+    assert sqltext.clauses("SELECT a FROM t WHERE a IS DISTINCT -- c\nFROM b") == {
+        "SELECT": "a", "FROM": "t", "WHERE": "a IS DISTINCT -- c\nFROM b"
+    }
     for other in (
         "SELECT a FROM t GROUP BY a HAVING count(*) > 1",
         "SELECT a FROM t UNION SELECT a FROM u",
@@ -5420,6 +5470,42 @@ def test_sqltext_clauses():
         "SELECT 1",
     ):
         assert sqltext.clauses(other) is None, other
+
+
+def test_sqltext_relations():
+    """The one relation reader: every FROM / JOIN / FROM-list reference at
+    every depth with its alias, comments anywhere between the tokens, and
+    no reference read from an expression-level FROM."""
+
+    def refs(sql):
+        return [(r.name, r.alias) for r in sqltext.relations(sql)]
+
+    sql = (
+        "/* h */ SELECT a FROM /* c */ t x, -- n\n u AS sort "
+        "JOIN /* j */ w ON x.k = w.k WHERE k IN (SELECT k FROM v AS limit) "
+        "GROUP /* g */ BY a"
+    )
+    assert refs(sql) == [
+        ("t", "x"), ("u", "sort"), ("w", None), ("v", "limit"),
+    ]
+    assert [sql[r.start : r.end] for r in sqltext.relations(sql)] == [
+        "t", "u", "w", "v",
+    ]
+    for q, want in (
+        ("SELECT * FROM db.t sort", [("db.t", "sort")]),
+        ("SELECT * FROM `my t` AS `q`", [("my t", "q")]),
+        ("SELECT * FROM t GROUP BY a", [("t", None)]),
+        ("SELECT DISTINCT * FROM t", [("t", None)]),
+        ("SELECT substring(s FROM 2 FOR 3) FROM t", [("t", None)]),
+        ("SELECT extract(DAY FROM ts), trim(LEADING 'x' FROM s) FROM t",
+         [("t", None)]),
+        ("SELECT a FROM t WHERE a IS DISTINCT /* c */ FROM b", [("t", None)]),
+        ("SELECT * FROM t LATERAL VIEW explode(x) e AS a, b", [("t", None)]),
+        ("SELECT * FROM range(3), (WITH q AS (SELECT 1) SELECT * FROM q) z",
+         [("q", None)]),
+        ("SELECT 'FROM x' FROM t -- FROM y", [("t", None)]),
+    ):
+        assert refs(q) == want, q
 
 
 def test_sqltext_backticks_and_nested_comments_are_opaque():

@@ -1011,6 +1011,17 @@ _mv_items_st = st.lists(
         "g IN (SELECT g FROM mvfuzz WHERE x > 0)",
     ]),
 )
+# an HLL estimate beside two DISTINCT argument sets over an empty input
+@example(
+    rows=[(0, 0, None)],
+    items=[
+        "DISTINCTCOUNTMV(tags) AS dmv",
+        "DISTINCTCOUNTHLLMV(tags) AS hmv",
+        "count(DISTINCT g) AS dg",
+    ],
+    grouped=None,
+    where="x > 0",
+)
 @settings(**SETTINGS)
 def test_mv_route_matches_fallback_reference(spark, rows, items, grouped, where):
     import math
@@ -1434,12 +1445,21 @@ _REF_BASE = {"ups1": 2, "ups2": 3, "plain1": 5}
 _REF_RAW = {"ups1": 7, "ups2": 11}
 
 
+# where a comment sits: nowhere, between FROM/JOIN and the name, before
+# or after a comma, between a name and its alias
+_ref_comment_st = st.tuples(
+    st.sampled_from([None, "head", "before_comma", "after_comma", "alias"]),
+    st.sampled_from(["/* c */", "-- c\n"]),
+)
+
+
 @given(
     from_refs=st.lists(_ref_st, min_size=1, max_size=3),
     join_ref=st.one_of(st.none(), _ref_st),
+    comment=_ref_comment_st,
 )
 @settings(**SETTINGS)
-def test_table_ref_rewrite_shape_space(spark, from_refs, join_ref):
+def test_table_ref_rewrite_shape_space(spark, from_refs, join_ref, comment):
     import tempfile
 
     from real_time_analytics_with_apache_pinot_on_aws_spark.engine import Engine
@@ -1457,6 +1477,11 @@ def test_table_ref_rewrite_shape_space(spark, from_refs, join_ref):
         "ups2": lambda: "(SELECT * FROM ups2_raw)",  # inline subselect
     }
 
+    place, text = comment
+
+    def at(where: str) -> str:
+        return f" {text}" if place == where else ""
+
     def ref_sql(t, alias):
         ref_sql.i += 1
         if alias is None:
@@ -1471,16 +1496,17 @@ def test_table_ref_rewrite_shape_space(spark, from_refs, join_ref):
             a = word
         else:
             a = word + str(ref_sql.i)  # unique or analysis fails
-        return f"{t} {'AS ' if alias.startswith('AS') else ''}{a}"
+        return f"{t}{at('alias')} {'AS ' if alias.startswith('AS') else ''}{a}"
 
     ref_sql.i = 0
     ref_sql.used = set()
-    clause = ", ".join(ref_sql(t, a) for t, a in from_refs)
+    sep = f"{at('before_comma')},{at('after_comma')} "
+    clause = sep.join(ref_sql(t, a) for t, a in from_refs)
     refs = list(from_refs)
     if join_ref is not None:
-        clause += f" JOIN {ref_sql(*join_ref)} ON 1 = 1"
+        clause += f" JOIN{at('head')} {ref_sql(*join_ref)} ON 1 = 1"
         refs.append(join_ref)
-    sql = f"SELECT count(*) AS n FROM {clause}"
+    sql = f"SELECT count(*) AS n FROM{at('head')} {clause}"
     rewritten = eng._rewrite_table_refs(sql, targets)
     want = 1
     for t, _ in refs:

@@ -413,6 +413,20 @@ def test_skip_upsert_option_and_table_type_suffix(spark, tmp_path):
     assert engine.query(
         "SET skipUpsert=true; SELECT count(*) AS n -- it's raw\nFROM skipDemo"
     ).collect()[0]["n"] == 3
+    # comments before the statement and between FROM/JOIN and the name
+    for q in (
+        "/* audit */ SELECT count(*) AS n FROM skipDemo",
+        "SELECT count(*) AS n FROM /* c */ skipDemo",
+        "SELECT count(*) AS n FROM\n-- c\nskipDemo",
+    ):
+        assert engine.query(f"SET skipUpsert=true; {q}").collect()[0]["n"] == 3, q
+    assert engine.query(
+        "SET skipUpsert=true; SELECT count(*) AS n FROM skipDemo a "
+        "JOIN /* c */ skipDemo b ON a.userID = b.userID"
+    ).collect()[0]["n"] == 5
+    assert len(engine.query(
+        "SELECT $docId, userID FROM /* c */ skipDemo"
+    ).collect()) == 2
 
     # Pinot-cased suffix addressing binds — and to the RESOLVED view
     assert engine.query(
@@ -3576,6 +3590,15 @@ def test_enable_null_handling_false_query_option(spark, tmp_path):
             ).collect()[0]["n"]
             == 1
         )
+        for q in (
+            "SELECT count(*) AS n FROM /* c */ nullfillTable "
+            "WHERE region IS NULL",
+            "-- c\nSELECT count(*) AS n FROM nullfillTable "
+            "WHERE region IS NULL",
+        ):
+            assert engine.query(
+                f"SET enableNullHandling=false; {q}"
+            ).collect()[0]["n"] == 0, q
         # the engine's own table-type suffix views serve the same storage
         # and must honor the option too (round-6 review)
         assert (

@@ -55,6 +55,10 @@ def test_virtual_columns_identify_physical_rows(spark, tmp_path):
         by_segment.setdefault(r["$segmentName"], []).append(r["$docId"])
     for seg, ids in by_segment.items():
         assert sorted(ids) == list(range(len(ids))), seg
+    # a comment between FROM and the table name hides no reference
+    assert len(engine.query(
+        "SELECT $docId, userID FROM /* c */ kinesisTable"
+    ).collect()) == 40
 
 
 def test_virtual_column_predicate_and_aggregate(spark, tmp_path):
