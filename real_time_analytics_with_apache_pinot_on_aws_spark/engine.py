@@ -16,6 +16,11 @@ Reference surface (SURVEY §2.A):
 Table config parsing follows the reference's REALTIME config shape
 (resources/pinot/resources/kinesisTableConfigFile.json): time column +
 retention (``segmentsConfig``), flush thresholds (``streamConfigs``).
+
+Both sides of a table store the same ``ingest_date=<day>`` layout; the
+stored columns, reads, listing, retention, deletion and compaction of that
+layout live in ``segments.py``.  This module decides which roots a side has
+(:meth:`Engine._day_roots`) and when an operation may touch them.
 """
 
 from __future__ import annotations
@@ -32,15 +37,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs as _fs
+from . import segments
 from .functions import aggsql, sqlfns, sqltext
-from .schema import TableSchema, parse_schema
+from .schema import TableSchema, decoded_frame, parse_schema
 from .streaming.ingest import IngestPipeline, RawRecordSource
+from .streaming.rollup import AggRequest, RollupRouter, RollupSpec, rollup_batch
 from .operators.dedup import cache_scope, lifecycle_cache
-from .operators.clp import (
-    clp_column_names as _clp_column_names,
-    clp_encode as _clp_encode,
-)
-from .streaming.ingest import timestamp_index_column as _ts_index_column
+from .operators.clp import clp_column_names as _clp_column_names
+from .segments import timestamp_index_column as _ts_index_column
 
 
 class TableAlreadyExistsError(ValueError):
@@ -369,15 +373,11 @@ class Engine:
         # config (self.configs, consuming pipeline) and an OFFLINE config
         # here (batch segments via upload_segment).
         self.offline_configs: dict[str, TableConfig] = {}
-        # compiled schemas for OFFLINE tables: lets a just-added table with
-        # no uploaded segments serve an EMPTY typed frame (Pinot answers
-        # queries right after AddTable) instead of failing parquet schema
-        # inference on an empty directory
+        # the schema an OFFLINE side with no upload yet reads as (Pinot
+        # answers queries right after AddTable): _refresh_offline_struct
         self.offline_structs: dict[str, "object"] = {}
         # memoized _offline_rollup_complete verdicts keyed (table, spec
-        # index) — the manifest read is metadata-sized but still a Spark
-        # job, and query_agg sits on the hot path; invalidated by
-        # upload_segment / rebuild_offline_rollup (the only writers)
+        # index): the manifest read is a Spark job on query_agg's path
         self._rollup_complete_cache: dict[tuple[str, int], bool] = {}
         # controller-registered schemas (POST /schemas **[P1.2]**), keyed by
         # schemaName — AddTable-over-HTTP resolves the table's schema here,
@@ -601,8 +601,6 @@ class Engine:
             # starTreeIndexConfigs **[P1.2]**: every declared pre-agg becomes
             # an ingest-maintained rollup, served automatically by query_agg
             # (Pinot allows several star-trees per table).
-            from .streaming.rollup import RollupSpec
-
             rollup_spec = RollupSpec(
                 dims=config.star_trees[0][0], metrics=dict(config.star_trees[0][1])
             )
@@ -615,21 +613,6 @@ class Engine:
                     )
                 )
         self.table_schemas[config.name] = schema
-        # hybrid CLP coherence (round-6 review, symmetric with
-        # add_offline_table): the stream encodes the UNION of both sides'
-        # CLP declarations, and an already-registered OFFLINE side's struct
-        # is refreshed to the same union so hybrid reads serve one shape
-        off_cfg = self.offline_configs.get(config.name)
-        clp_merged = tuple(
-            dict.fromkeys(
-                config.clp_columns
-                + (off_cfg.clp_columns if off_cfg is not None else ())
-            )
-        )
-        if off_cfg is not None and config.clp_columns:
-            self.offline_structs[config.name] = self._build_offline_struct(
-                schema, off_cfg, clp_merged
-            )
         pipeline = IngestPipeline(
             self.spark,
             schema,
@@ -646,10 +629,13 @@ class Engine:
             sorted_column=config.sorted_column,
             bloom_filter_columns=config.bloom_filter_columns,
             timestamp_index=config.timestamp_index_columns,
-            clp_columns=clp_merged,
+            # the stream encodes every CLP column either side declares
+            clp_columns=self._stored_declarations(config.name)[1],
             null_handling_enabled=config.null_handling_enabled,
         )
         self.pipelines[config.name] = pipeline
+        if config.name in self.offline_configs:
+            self._refresh_offline_struct(config.name)
         if start:
             trigger = f"{config.flush_threshold_seconds} seconds"
             pipeline.start(trigger=trigger, available_now=available_now)
@@ -771,79 +757,69 @@ class Engine:
                 "may share one, forming a hybrid table)"
             )
         self.table_schemas[config.name] = schema
-        # hybrid CLP coherence (round-6 review): upload_segment encodes the
-        # UNION of both sides' declared CLP columns, so the offline struct
-        # must reflect the same union or the empty-offline schema flips
-        # after the first upload (Pinot's fieldsForClpEncoding is ingest-
-        # side config — declaring it realtime-only is the normal spelling)
-        rt_cfg = self.configs.get(config.name)
-        clp_all = tuple(
-            dict.fromkeys(
-                config.clp_columns
-                + (rt_cfg.clp_columns if rt_cfg is not None else ())
-            )
-        )
-        self.offline_structs[config.name] = self._build_offline_struct(
-            schema, config, clp_all
-        )
         self.offline_configs[config.name] = config
+        self._refresh_offline_struct(config.name)
         # create the segments root so a just-added table is immediately
         # readable (as empty) — Pinot's AddTable behavior
         Path(self._offline_path(config.name)).mkdir(parents=True, exist_ok=True)
         return {"table": config.name, "type": "OFFLINE", "path": self._offline_path(config.name)}
 
-    @staticmethod
-    def _build_offline_struct(schema: TableSchema, config: "TableConfig",
-                              clp_columns: tuple) -> "T.StructType":
-        """The physical schema of an OFFLINE side: declared fields minus
-        CLP logical columns, plus the derived ``__ts``/``ingest_date``/
-        timestamp-index columns and the CLP physical triples (appended at
-        the end, mirroring upload_segment's encode projection — the
-        logical column itself never reaches storage)."""
-        from pyspark.sql import types as T
+    def _stored_declarations(self, name: str) -> tuple[tuple, tuple]:
+        """(TIMESTAMP-index, CLP) declarations of both configs of ``name``,
+        OFFLINE first — what every upload stores and the stream CLP-encodes.
+        Pinot's fieldConfigList is ingest-side config, so declaring it on
+        the REALTIME side alone is the normal spelling, and a hybrid table
+        must store one shape on both sides."""
+        configs = [
+            c
+            for c in (self.offline_configs.get(name), self.configs.get(name))
+            if c is not None
+        ]
+        ts_index: dict = {}
+        for c in configs:
+            for col, grans in c.timestamp_index_columns:
+                ts_index.setdefault(col, grans)
+        clp = dict.fromkeys(col for c in configs for col in c.clp_columns)
+        return tuple(ts_index.items()), tuple(clp)
 
-        struct = T.StructType(
-            [f for f in schema.struct.fields if f.name not in clp_columns]
+    def _offline_stored(self, name: str, frame: DataFrame) -> DataFrame:
+        """``frame`` as the OFFLINE side stores it: the time column's typed
+        ``__ts`` twin when the frame lacks one (the realtime decode's
+        column, so a hybrid union serves one schema), then the derived
+        columns of :func:`segments.derive`."""
+        tc = self.offline_configs[name].time_column
+        if f"{tc}__ts" not in frame.columns:
+            frame = frame.withColumn(f"{tc}__ts", F.col(tc).cast("timestamp"))
+        return segments.derive(frame, tc, *self._stored_declarations(name))
+
+    def _refresh_offline_struct(self, name: str) -> None:
+        """The OFFLINE side's schema before its first upload: an empty
+        decoded frame in its stored form, so the empty side already has
+        every column the first upload stores."""
+        empty = decoded_frame(
+            self.spark.createDataFrame([], "value string"),
+            self.table_schemas[name],
+            null_handling_enabled=self.offline_configs[name].null_handling_enabled,
         )
-        tc_ts = f"{config.time_column}__ts"
-        if tc_ts not in struct.fieldNames():
-            struct = struct.add(tc_ts, T.TimestampType())
-        struct = struct.add("ingest_date", T.DateType())
-        for col, grans in config.timestamp_index_columns:
-            for gran in grans:
-                struct = struct.add(_ts_index_column(col, gran), T.TimestampType())
-        for col in clp_columns:
-            if col in schema.struct.fieldNames():
-                lt, dv, ev = _clp_column_names(col)
-                struct = (
-                    struct.add(lt, T.StringType())
-                    .add(dv, T.ArrayType(T.StringType()))
-                    .add(ev, T.ArrayType(T.LongType()))
-                )
-        return struct
+        self.offline_structs[name] = self._offline_stored(name, empty).schema
 
     def realtime_to_offline(self, name: str, cutoff_day=None) -> dict:
         """Pinot ``RealtimeToOfflineSegmentsTask`` analog **[P1.2]**: move
         sealed realtime days at or before ``cutoff_day`` into the OFFLINE
         side of a hybrid table, then drop them (data + star-tree cells)
-        from the realtime store — the minion task that keeps a production
-        hybrid table's realtime side small while the OFFLINE side accretes
-        history.  Defaults to every day strictly BEFORE the newest realtime
-        day (the consuming day is never moved — Pinot's bufferTimePeriod).
+        from the realtime store.  Defaults to every day strictly BEFORE the
+        newest realtime day (the consuming day is never moved — Pinot's
+        bufferTimePeriod).
 
         Consistency: the time boundary advances to the moved days, so the
         hybrid read serves them from OFFLINE; late rows arriving for a
         moved day land in realtime but sit behind the boundary — hidden,
         exactly Pinot's documented hybrid semantics.  Days already at or
         before the current boundary are not moved (they would double-count
-        on the OFFLINE side).  Requires the consuming query stopped or
-        drained, same rule as :meth:`compact` — both rewrite sealed
-        partitions.
+        on the OFFLINE side).  The stream must be stopped or drained.
         """
         from datetime import date as _date
         from datetime import timedelta
-
-        from pyspark.sql import functions as F
 
         if name not in self.offline_configs:
             raise ValueError(
@@ -861,22 +837,8 @@ class Engine:
                 "would move superseded row versions into the unresolved "
                 "OFFLINE store (Pinot refuses this too)"
             )
-        pipeline = self._pipeline(name)
-        q = pipeline._query
-        if q is not None and q.isActive:
-            raise RuntimeError(
-                f"table {name!r} has an active streaming query; "
-                "stop() or drain it before realtime_to_offline()"
-            )
-
-        def _days(root: str) -> list[str]:
-            return sorted(
-                _fs.basename(p["path"]).split("=", 1)[1]
-                for p in _fs.glob_status(self.spark, f"{root}/ingest_date=*")
-                if p["is_dir"]
-            )
-
-        rt_days = _days(pipeline.table_path)
+        pipeline = self._sealed_pipeline(name, "realtime_to_offline")
+        rt_days = segments.days(self.spark, pipeline.table_path)
         if not rt_days:
             return {"table": name, "moved_days": [], "rows_moved": 0}
         if cutoff_day is None:
@@ -904,19 +866,7 @@ class Engine:
             )
             n = rows.count()
             self.upload_segment(name, rows.drop("ingest_date"))
-        roots = [pipeline.table_path] + [
-            path for spec, path in pipeline._rollups if "ingest_date" in spec.dims
-        ]
-        for root in roots:
-            for d in move:
-                part = f"{root}/ingest_date={d}"
-                if _fs.exists(self.spark, part) and not _fs.delete(
-                    self.spark, part, recursive=True
-                ):
-                    raise RuntimeError(
-                        f"realtime_to_offline: delete of moved partition "
-                        f"{part} returned false — data now DOUBLE-served"
-                    )
+        segments.drop(self.spark, self._day_roots(name, "REALTIME").values(), move)
         return {"table": name, "moved_days": move, "rows_moved": n}
 
     def upsert_compact(self, name: str) -> dict:
@@ -948,13 +898,7 @@ class Engine:
                 f"{name!r} is not an upsert/dedup table — nothing to compact "
                 "(use compact() for small-file merging)"
             )
-        pipeline = self._pipeline(name)
-        q = pipeline._query
-        if q is not None and q.isActive:
-            raise RuntimeError(
-                f"table {name!r} has an active streaming query; "
-                "stop() or drain it before upsert_compact()"
-            )
+        pipeline = self._sealed_pipeline(name, "upsert_compact")
         raw = pipeline.table()
         n_before = raw.count()
         resolved = self._realtime_resolved(name)
@@ -984,10 +928,7 @@ class Engine:
         data = pipeline.table_path
         tmp = str(self.warehouse / name / "data_upsert_tmp")
         old = str(self.warehouse / name / "data_upsert_old")
-        writer = resolved.write.mode("overwrite")
-        if "ingest_date" in resolved.columns:
-            writer = writer.partitionBy("ingest_date")
-        writer.parquet(tmp)
+        segments.write(resolved, tmp, "overwrite")
         n_after = self.spark.read.parquet(tmp).count()
         if not _fs.rename(self.spark, data, old):
             raise RuntimeError(
@@ -1012,8 +953,6 @@ class Engine:
         the same ``ingest_date=<day>`` layout the realtime side seals, so
         retention, compaction, and table_detail treat both sides alike.
         """
-        from pyspark.sql import functions as F
-
         config = self.offline_configs.get(name)
         if config is None:
             raise ValueError(f"{name!r} has no OFFLINE table config")
@@ -1022,67 +961,21 @@ class Engine:
             raise ValueError(
                 f"upload_segment({name!r}): frame lacks time column {tc!r}"
             )
-        out = frame
-        ts_col = f"{tc}__ts"
-        if ts_col not in out.columns:
-            # align with the realtime decode's parsed-timestamp column so a
-            # hybrid union serves one consistent schema to queries
-            out = out.withColumn(ts_col, F.col(tc).cast("timestamp"))
-        out = out.withColumn("ingest_date", F.to_date(F.col(ts_col)))
-        # TIMESTAMP-index derived columns (offline side of the hybrid):
-        # declared on either config; both sides must store the same derived
-        # schema or the boundary union and the query rewrite would diverge
-        declared = dict(config.timestamp_index_columns)
-        rt_cfg = self.configs.get(name)
-        if rt_cfg is not None:
-            for col, grans in rt_cfg.timestamp_index_columns:
-                declared.setdefault(col, grans)
-        for col, grans in declared.items():
-            src = f"{col}__ts" if f"{col}__ts" in out.columns else col
-            if src not in out.columns:
-                continue
-            for gran in grans:
-                out = out.withColumn(
-                    _ts_index_column(col, gran), F.date_trunc(gran, F.col(src))
-                )
-        # CLP columns (offline side): encode with the same scheme the
-        # realtime decode applies, so hybrid unions serve one physical shape
-        clp_declared = tuple(
-            dict.fromkeys(
-                config.clp_columns
-                + (rt_cfg.clp_columns if rt_cfg is not None else ())
-            )
-        )
-        for col in clp_declared:
-            if col in out.columns:
-                out = _clp_encode(out, col)
-        out.write.mode("append").partitionBy("ingest_date").parquet(
-            self._offline_path(name)
-        )
-        # Pinot builds star-trees on OFFLINE segments too **[P1.2]**: when
-        # the hybrid's REALTIME config declares star-trees, each upload
-        # appends its partial cells so query_agg can route hybrid
-        # aggregates to cells instead of rescanning raw segments.  Only
-        # day-partitioned specs participate (the boundary filter and
-        # retention both key on ingest_date).
-        manifest_rows: list[tuple[str, int, bool]] = []
+        out = self._offline_stored(name, frame)
+        segments.write(out, self._offline_path(name))
+        # Pinot builds star-trees on OFFLINE segments too **[P1.2]**: each
+        # upload appends its cells for every day-partitioned REALTIME spec
+        # (the boundary filter and retention both key on the day)
         import uuid
 
         upload_id = uuid.uuid4().hex
-        manifest_rows.append((upload_id, -1, True))  # the upload itself
+        manifest_rows = [(upload_id, -1, True)]  # the upload itself
         for i, spec in self._hybrid_rollup_specs(name):
-            metric_cols = {col for (_fn, col) in spec.metrics.values()}
-            covered = set(spec.dims) <= set(out.columns) and metric_cols <= set(
-                out.columns
-            )
+            needed = {*spec.dims, *(col for (_fn, col) in spec.metrics.values())}
+            covered = needed <= set(out.columns)
             manifest_rows.append((upload_id, i, covered))
-            if not covered:
-                continue
-            from .streaming.rollup import rollup_batch
-
-            rollup_batch(out, spec).write.mode("append").partitionBy(
-                "ingest_date"
-            ).parquet(self._offline_rollup_path(name, i))
+            if covered:
+                segments.write(rollup_batch(out, spec), self._offline_rollup_path(name, i))
         # Per-upload cell-coverage manifest: day-set comparison cannot see a
         # day holding BOTH a covered and an uncovered upload (routing over
         # such a day silently drops the uncovered segment's rows), so
@@ -1092,14 +985,11 @@ class Engine:
         ).coalesce(1).write.mode("append").parquet(
             self._offline_manifest_path(name)
         )
-        self._rollup_complete_cache = {
-            k: v for k, v in self._rollup_complete_cache.items() if k[0] != name
-        }
-        parts = _fs.glob_status(self.spark, f"{self._offline_path(name)}/ingest_date=*")
+        self._forget_rollup_verdicts(name)
         return {
             "table": name,
-            "segments_partitions": sorted(
-                _fs.basename(p["path"]) for p in parts if p["is_dir"]
+            "segments_partitions": segments.partitions(
+                self.spark, self._offline_path(name)
             ),
         }
 
@@ -1114,8 +1004,6 @@ class Engine:
         hybrid sides always share one typed schema.
         """
         import json as _json
-
-        from .schema import decoded_frame
 
         if name not in self.offline_configs:
             raise ValueError(f"{name!r} has no OFFLINE table config")
@@ -1152,8 +1040,6 @@ class Engine:
         config = self.configs.get(name)
         if config is None or not config.star_trees:
             return []
-        from .streaming.rollup import RollupSpec
-
         out = []
         for i, (dims_i, metrics_i) in enumerate(config.star_trees):
             if "ingest_date" in dims_i:
@@ -1167,26 +1053,16 @@ class Engine:
         """True iff EVERY upload contributed cells to spec ``index`` —
         uploads made before the REALTIME config existed (or whose frame
         lacked a spec column) have no cells, and routing over an incomplete
-        log would silently drop their rows from every aggregate.
-
-        Adjudicated from the per-upload coverage manifest, not by comparing
-        partition day-sets: a day holding both a covered and an uncovered
-        upload has cells for the day yet NOT for all its rows, which a
-        day-set comparison cannot see.  Offline data with no manifest
-        (unknown provenance) is conservatively incomplete — run
-        :meth:`rebuild_offline_rollup` to recompute cells and reset the
-        manifest.  Result memoized until the next upload/rebuild.
+        log would silently drop their rows from every aggregate.  Read from
+        the per-upload coverage manifest (a day can hold a covered and an
+        uncovered upload); offline data with no manifest is incomplete
+        until :meth:`rebuild_offline_rollup`.  Memoized until the next
+        upload/rebuild.
         """
         key = (name, index)
         if key in self._rollup_complete_cache:
             return self._rollup_complete_cache[key]
-        has_data = any(
-            p["is_dir"]
-            for p in _fs.glob_status(
-                self.spark, f"{self._offline_path(name)}/ingest_date=*"
-            )
-        )
-        if not has_data:
+        if not segments.partitions(self.spark, self._offline_path(name)):
             # no offline rows to drop — the (empty) cell log is trivially
             # consistent with the (empty) segment store
             verdict = True
@@ -1216,8 +1092,6 @@ class Engine:
         minion task that (re)builds star-trees inside existing segments
         **[P1.2]**.  One scan of the offline segments per spec.
         """
-        from .streaming.rollup import rollup_batch
-
         rebuilt: dict[str, int] = {}
         specs = self._hybrid_rollup_specs(name)
         frame = self._offline_frame(name)
@@ -1234,9 +1108,7 @@ class Engine:
             )
         for i, spec in specs:
             cells = rollup_batch(frame, spec)
-            cells.write.mode("overwrite").partitionBy("ingest_date").parquet(
-                self._offline_rollup_path(name, i)
-            )
+            segments.write(cells, self._offline_rollup_path(name, i), "overwrite")
             rebuilt[f"offline_startree{i}"] = cells.count()
         # reset the manifest: one synthetic fully-covered upload replaces
         # the history (subsequent uploads append normally)
@@ -1247,22 +1119,18 @@ class Engine:
         ).coalesce(1).write.mode("overwrite").parquet(
             self._offline_manifest_path(name)
         )
-        self._rollup_complete_cache = {
-            k: v for k, v in self._rollup_complete_cache.items() if k[0] != name
-        }
+        self._forget_rollup_verdicts(name)
         return {"table": name, "rebuilt_cells": rebuilt}
 
     def _offline_frame(self, name: str, with_virtual: bool = False) -> DataFrame:
         """The OFFLINE segments as a frame; a table with no uploads yet is
         an EMPTY typed frame (compiled schema), not a path error."""
-        from .streaming.ingest import augment_virtual_columns, null_virtual_columns
-
-        root = self._offline_path(name)
-        if not _fs.glob_status(self.spark, f"{root}/ingest_date=*"):
-            empty = self.spark.createDataFrame([], self.offline_structs[name])
-            return null_virtual_columns(empty) if with_virtual else empty
-        df = self.spark.read.parquet(root)
-        return augment_virtual_columns(df) if with_virtual else df
+        return segments.read(
+            self.spark,
+            self._offline_path(name),
+            lambda: self.offline_structs[name],
+            with_virtual=with_virtual,
+        )
 
     def hybrid_time_boundary(self, name: str):
         """Pinot's broker time boundary **[P1.2]**: the max time covered by
@@ -1271,8 +1139,6 @@ class Engine:
         both sides while the realtime->offline handoff runs) is never
         double-counted.  One-row aggregate, same driver-side scalar class
         as retention's cutoff."""
-        from pyspark.sql import functions as F
-
         row = self._offline_frame(name).agg(
             F.max("ingest_date").alias("b")
         ).collect()[0]
@@ -1335,13 +1201,11 @@ class Engine:
         virtual columns **[P1.2]** at the SCAN level (so upsert resolution
         serves the winning physical row's segment identity, and both hybrid
         sides carry them into the union) — see
-        :func:`streaming.ingest.augment_virtual_columns`.
+        :func:`segments.augment_virtual_columns`.
         """
         if self._is_dim(name):
-            from .streaming.ingest import augment_virtual_columns
-
             df = self.spark.read.parquet(str(self.warehouse / name / "dim"))
-            return augment_virtual_columns(df) if with_virtual else df
+            return segments.augment_virtual_columns(df) if with_virtual else df
         offline = self.offline_configs.get(name)
         if offline is not None:
             if name not in self.pipelines:
@@ -1350,8 +1214,6 @@ class Engine:
             # everything at or before the time boundary (max offline day),
             # REALTIME only what lies after it, so handoff-window days
             # present on both sides are never double-counted.
-            from pyspark.sql import functions as F
-
             off = self._offline_frame(name, with_virtual=with_virtual)
             boundary = off.agg(F.max("ingest_date").alias("b")).collect()[0]["b"]
             rt = self._realtime_resolved(name, with_virtual=with_virtual)
@@ -1407,9 +1269,7 @@ class Engine:
         every segment of the given side(s) but KEEP the table — schema,
         config, stream, and SQL view all stay registered and the table
         answers (empty) immediately, which is exactly what Pinot's
-        delete-all-segments endpoint does.  Partition-dir removal through
-        the FS layer, like retention — O(partitions), no rewrite, identical
-        over ``file:`` and ``s3a://``.
+        delete-all-segments endpoint does (:func:`segments.drop`).
 
         Realtime: the exactly-once checkpoint is deliberately NOT touched,
         so deleted data is never re-consumed (the stream continues from its
@@ -1425,34 +1285,16 @@ class Engine:
         self._reject_dim(name)
         if name not in self.pipelines and name not in self.offline_configs:
             raise KeyError(name)
-        deleted: list[str] = []
-
-        def _drop_partitions(root: str) -> None:
-            for part in _fs.glob_status(self.spark, f"{root}/ingest_date=*"):
-                if not _fs.delete(self.spark, part["path"], recursive=True):
-                    raise RuntimeError(
-                        f"delete_segments: delete of {part['path']} returned"
-                        " false — data NOT dropped"
-                    )
-
-        if t in (None, "REALTIME") and name in self.pipelines:
-            pipe = self.pipelines[name]
-            _drop_partitions(pipe.table_path)
-            for _spec, path in pipe._rollups:
+        deleted = self._sides(name, t)
+        for side in deleted:
+            segments.drop(self.spark, self._day_roots(name, side).values())
+            for path in self._cell_logs(name, side):
                 _fs.delete(self.spark, path, recursive=True)
-            deleted.append("REALTIME")
-        if t in (None, "OFFLINE") and name in self.offline_configs:
-            _drop_partitions(self._offline_path(name))
-            _fs.delete(self.spark, self._offline_manifest_path(name), recursive=True)
-            n_trees = len(self._hybrid_rollup_specs(name))
-            for i in range(max(n_trees, 8)):
-                _fs.delete(self.spark, self._offline_rollup_path(name, i), recursive=True)
-            deleted.append("OFFLINE")
+            if side == "OFFLINE":
+                _fs.delete(self.spark, self._offline_manifest_path(name), recursive=True)
         if not deleted:
             raise KeyError(f"{name} has no {t} table")
-        self._rollup_complete_cache = {
-            k: v for k, v in self._rollup_complete_cache.items() if k[0] != name
-        }
+        self._forget_rollup_verdicts(name)
         self.register_view(name)
         return {"table": name, "deleted": deleted}
 
@@ -1479,41 +1321,26 @@ class Engine:
         else:
             if name not in self.pipelines and name not in self.offline_configs:
                 raise KeyError(name)
-            if t in (None, "REALTIME") and name in self.pipelines:
-                pipe = self.pipelines.pop(name)
-                self._paused.discard(name)
-                pipe.stop()
-                self.configs.pop(name, None)
-                for sub in ("data", "_checkpoint"):
-                    _fs.delete(
-                        self.spark, str(self.warehouse / name / sub), recursive=True
-                    )
-                for _spec, path in pipe._rollups:
+            for side in self._sides(name, t):
+                paths = self._cell_logs(name, side)
+                if side == "REALTIME":
+                    self.pipelines.pop(name).stop()
+                    self._paused.discard(name)
+                    self.configs.pop(name, None)
+                    subs = ("data", "_checkpoint")
+                else:
+                    self.offline_configs.pop(name)
+                    self.offline_structs.pop(name, None)
+                    subs = ("offline_segments", "offline_manifest")
+                for path in [str(self.warehouse / name / sub) for sub in subs] + paths:
                     _fs.delete(self.spark, path, recursive=True)
-                dropped.append("REALTIME")
-            if t in (None, "OFFLINE") and name in self.offline_configs:
-                n_trees = len(self._hybrid_rollup_specs(name))
-                self.offline_configs.pop(name)
-                self.offline_structs.pop(name, None)
-                for sub in ("offline_segments", "offline_manifest"):
-                    _fs.delete(
-                        self.spark, str(self.warehouse / name / sub), recursive=True
-                    )
-                for i in range(max(n_trees, 8)):
-                    # cell logs may outlive their specs (config edits); sweep
-                    # a fixed superset of indexes rather than trusting state
-                    _fs.delete(
-                        self.spark, self._offline_rollup_path(name, i), recursive=True
-                    )
-                dropped.append("OFFLINE")
+                dropped.append(side)
         if not dropped:
             # a specific type was requested but the table has no such side
             # (e.g. ?type=OFFLINE on a realtime-only table) — Pinot 404s;
             # a 200 with dropped=[] would read as success to automation
             raise KeyError(f"{name} has no {t} table")
-        self._rollup_complete_cache = {
-            k: v for k, v in self._rollup_complete_cache.items() if k[0] != name
-        }
+        self._forget_rollup_verdicts(name)
         gone = name not in self.pipelines and name not in self.offline_configs
         for view in (name, f"{name}_raw", f"{name}_offline", f"{name}_realtime"):
             # captured view plans still union the deleted side's files; drop
@@ -1550,13 +1377,64 @@ class Engine:
             )
         return self.pipelines[name]
 
-    def table_detail(self, name: str) -> dict:
-        """Segment/server map analog (stack ts:445-462): file-level layout.
+    def _sealed_pipeline(self, name: str, op: str) -> IngestPipeline:
+        """The consuming pipeline, refused while its streaming query runs:
+        ``op`` rewrites sealed partitions, and a micro-batch committing
+        mid-rewrite would be duplicated or lost.  Pinot's merge tasks
+        likewise run on sealed segments only."""
+        pipeline = self._pipeline(name)
+        q = pipeline._query
+        if q is not None and q.isActive:
+            raise RuntimeError(
+                f"table {name!r} has an active streaming query; "
+                f"stop() or drain it before {op}()"
+            )
+        return pipeline
 
-        Hadoop FS API throughout — works identically over ``file:`` and the
-        ``s3a://`` deep store (pinot-controller.conf:34-40).
-        Dimension tables report their batch-loaded parquet instead of
-        day partitions.
+    def _sides(self, name: str, table_type: str | None = None) -> list[str]:
+        """The sides ``name`` has (REALTIME first), or only ``table_type``."""
+        return [
+            side
+            for side, present in (
+                ("REALTIME", name in self.pipelines),
+                ("OFFLINE", name in self.offline_configs),
+            )
+            if present and table_type in (None, side)
+        ]
+
+    def _day_roots(self, name: str, side: str) -> dict[str, str]:
+        """label -> root of every day-partitioned root of one side: its
+        segments first, then each star-tree cell log whose dims hold the
+        day.  Retention, compaction, RealtimeToOffline and segment deletion
+        all act on exactly these roots; the labels prefix compaction's
+        report keys."""
+        if side == "REALTIME":
+            return self.pipelines[name].day_roots()
+        roots = {"offline": self._offline_path(name)}
+        for i, _spec in self._hybrid_rollup_specs(name):
+            roots[f"offline_rollup{i}"] = self._offline_rollup_path(name, i)
+        return roots
+
+    def _cell_logs(self, name: str, side: str) -> list[str]:
+        """Every star-tree cell log of one side, day-partitioned or not.
+        OFFLINE logs are found by name, so one outliving its spec (a config
+        edit) is still found."""
+        if side == "REALTIME":
+            return [path for _spec, path in self.pipelines[name]._rollups]
+        pattern = str(self.warehouse / name / "offline_startree*")
+        return [p["path"] for p in _fs.glob_status(self.spark, pattern)]
+
+    def _forget_rollup_verdicts(self, name: str) -> None:
+        """Drop the memoized cell-coverage verdicts of ``name`` (after any
+        write to its OFFLINE segments or cell logs)."""
+        self._rollup_complete_cache = {
+            k: v for k, v in self._rollup_complete_cache.items() if k[0] != name
+        }
+
+    def table_detail(self, name: str) -> dict:
+        """Segment/server map analog (stack ts:445-462): the day partitions
+        and parquet files of each side (:mod:`segments`, ``file:`` and
+        ``s3a://`` alike); dimension tables report their parquet files.
         """
         if self._is_dim(name):
             root = str(self.warehouse / name / "dim")
@@ -1567,29 +1445,20 @@ class Engine:
                 "num_files": len(files),
                 "total_bytes": sum(f["size"] for f in files),
             }
-        def _layout(root: str) -> tuple[list[str], list[dict]]:
-            parts = _fs.glob_status(self.spark, f"{root}/ingest_date=*")
-            files = [
-                f
-                for p in parts
-                if p["is_dir"]
-                for f in _fs.list_files(self.spark, p["path"], suffix=".parquet")
-            ]
-            return [_fs.basename(p["path"]) for p in parts if p["is_dir"]], files
-
         detail: dict = {"table": name}
         partitions: list[str] = []
         files: list[dict] = []
         if name in self.pipelines:
-            partitions, files = _layout(self.pipelines[name].table_path)
+            root = self.pipelines[name].table_path
+            partitions = segments.partitions(self.spark, root)
+            files = segments.files(self.spark, root)
         if name in self.offline_configs:
-            off_parts, off_files = _layout(self._offline_path(name))
-            detail["offline_partitions"] = off_parts
+            root = self._offline_path(name)
+            detail["offline_partitions"] = segments.partitions(self.spark, root)
             detail["type"] = "HYBRID" if name in self.pipelines else "OFFLINE"
             if name not in self.pipelines:
-                partitions, files = off_parts, off_files
-            else:
-                files = files + off_files
+                partitions = detail["offline_partitions"]
+            files = files + segments.files(self.spark, root)
         detail.update(
             partitions=partitions,
             num_files=len(files),
@@ -1630,8 +1499,6 @@ class Engine:
         to full Spark SQL (route ``'sql'``), so routing can only change the
         scan, never correctness or the supported surface.
         """
-        from .streaming.rollup import AggRequest
-
         # Strip options for SHAPE DETECTION only; every fallback delegates
         # the ORIGINAL statement so query() sees (and applies) the full
         # option set — the old stripped-SQL delegation silently dropped
@@ -1743,8 +1610,6 @@ class Engine:
         automatic index-use decision Pinot's servers make per query.
         Returns (result, route) with route 'rollup:startree' or 'scan'.
         """
-        from .streaming.rollup import RollupRouter
-
         pipeline = self.pipelines.get(name)  # dims have no pipeline (and no star-trees)
         # scan fallback MUST see the resolved view on upsert/dedup tables
         # (and the boundary-merged union on hybrid tables)
@@ -1764,25 +1629,11 @@ class Engine:
                     continue
 
                 def _hybrid_cells(i=i, spec=spec):
-                    from pyspark.sql import functions as F
-
-                    from .streaming.rollup import rollup_batch
-
-                    off_root = self._offline_rollup_path(name, i)
-                    off = (
-                        self.spark.read.parquet(off_root)
-                        if _fs.glob_status(self.spark, f"{off_root}/ingest_date=*")
-                        else None
-                    )
+                    off = segments.read(self.spark, self._offline_rollup_path(name, i))
                     # the realtime cell log materializes with the first
                     # committed micro-batch; before that the stream holds no
                     # rows, so "no path" means "no cells", not an error
-                    rt_root = pipeline._rollups[i][1]
-                    rt = (
-                        self.spark.read.parquet(rt_root)
-                        if _fs.glob_status(self.spark, f"{rt_root}/ingest_date=*")
-                        else None
-                    )
+                    rt = segments.read(self.spark, pipeline._rollups[i][1])
                     if rt is not None:
                         boundary = self.hybrid_time_boundary(name)
                         if boundary is not None:
@@ -1803,8 +1654,6 @@ class Engine:
                 router.register(f"hybrid_startree{i}", _hybrid_cells, spec)
             return router.answer(request)
         if config is not None and config.star_trees:
-            from .streaming.rollup import RollupSpec
-
             for i, (dims_i, metrics_i) in enumerate(config.star_trees):
                 if config.retention_days is not None and "ingest_date" not in dims_i:
                     # a rollup whose dims omit the day column aggregates
@@ -3430,149 +3279,40 @@ class Engine:
             dropped += self.pipelines[name].run_retention()
         off = self.offline_configs.get(name)
         if off is not None and off.retention_days is not None:
-            from datetime import date, timedelta
+            from datetime import timedelta
 
-            from pyspark.sql import functions as F
-
-            row = self._offline_frame(name).agg(
-                F.max("ingest_date").alias("m")
-            ).collect()[0]
-            if row["m"] is not None:
-                cutoff = row["m"] - timedelta(days=off.retention_days)
-                # expire offline star-tree cells WITH their day, same rule
-                # as the realtime pipeline's rollup expiry — stale cells
-                # would resurrect deleted data through query_agg routing
-                roots = [self._offline_path(name)] + [
-                    self._offline_rollup_path(name, i)
-                    for i, _spec in self._hybrid_rollup_specs(name)
-                ]
-                for root in roots:
-                    for part in _fs.glob_status(self.spark, f"{root}/ingest_date=*"):
-                        if not part["is_dir"]:
-                            continue
-                        value = _fs.basename(part["path"]).split("=", 1)[1]
-                        try:
-                            expired = date.fromisoformat(value) < cutoff
-                        except ValueError:
-                            continue
-                        if expired:
-                            if not _fs.delete(self.spark, part["path"], recursive=True):
-                                raise RuntimeError(
-                                    f"retention: delete of expired OFFLINE "
-                                    f"partition {part['path']} returned false — "
-                                    "data NOT dropped"
-                                )
-                            if root == self._offline_path(name):
-                                dropped.append(value)
+            newest = self.hybrid_time_boundary(name)
+            if newest is not None:
+                # cells expire WITH their day, as on the realtime side
+                dropped += segments.expire(
+                    self.spark,
+                    self._day_roots(name, "OFFLINE").values(),
+                    newest - timedelta(days=off.retention_days),
+                )
         return dropped
 
     def compact(self, name: str, max_files_per_partition: int = 1) -> dict:
-        """Segment-merge task analog (Pinot minion MergeRollupTask **[P1.2]**).
-
-        Streaming ingest leaves one file per micro-batch per partition; at a
-        2-minute flush cadence that is ~720 small files/day.  Compaction
-        rewrites any day partition holding more files than the target down to
-        ``max_files_per_partition`` — read, coalesce, swap — restoring scan
-        efficiency without touching query code.  Run it like the reference
-        runs minion tasks: scheduled, per partition, off the ingest path.
-
-        Every file operation goes through the Hadoop FS API (fs.py), so the
-        same code compacts a local warehouse and an ``s3a://`` deep store —
-        the reference's S3 segment home (pinot-controller.conf:34-40).
-        OFFLINE segments compact too (each upload_segment leaves one file
-        per day), including their star-tree cell logs; an OFFLINE-only
-        table has no stream to drain and compacts directly.
+        """Segment-merge task analog (Pinot minion MergeRollupTask **[P1.2]**):
+        rewrite every day partition of every day-partitioned root of both
+        sides (:meth:`_day_roots`) that holds more than
+        ``max_files_per_partition`` files down to that many
+        (:func:`segments.compact`).  Streaming ingest leaves one file per
+        micro-batch per day and each upload one per day.  The stream must
+        be stopped or drained first; an OFFLINE-only table compacts
+        directly.
         """
         self._reject_dim(name)
-        compacted: dict[str, int] = {}
-        pipeline = self.pipelines.get(name)
-        if pipeline is None and name not in self.offline_configs:
+        if name not in self.pipelines and name not in self.offline_configs:
             raise KeyError(name)
-        if pipeline is not None:
-            q = pipeline._query
-            if q is not None and q.isActive:
-                # A micro-batch committing between our file snapshot and the
-                # rewrite would be folded in but never unlinked (duplicates),
-                # and concurrent readers could hit files we just removed.
-                # Same rule as Pinot: merge tasks run on sealed segments, not
-                # the consuming one — stop or drain the stream first.
-                raise RuntimeError(
-                    f"table {name!r} has an active streaming query; "
-                    "stop() or drain it before compact()"
-                )
-            self._compact_root(name, pipeline.table_path, max_files_per_partition,
-                               compacted, key_prefix="")
-            for i, (spec_i, path_i) in enumerate(pipeline._rollups):
-                # every star-tree cell log accretes one file per micro-batch
-                # too; compact day-partitioned ones with the same swap
-                # protocol (keys prefixed 'rollup:' / 'rollup{i}:')
-                if "ingest_date" in spec_i.dims:
-                    prefix = "rollup:" if i == 0 else f"rollup{i}:"
-                    self._compact_root(name, path_i, max_files_per_partition,
-                                       compacted, key_prefix=prefix)
-        if name in self.offline_configs:
-            self._compact_root(name, self._offline_path(name),
-                               max_files_per_partition, compacted,
-                               key_prefix="offline:")
-            for i, _spec in self._hybrid_rollup_specs(name):
-                self._compact_root(name, self._offline_rollup_path(name, i),
-                                   max_files_per_partition, compacted,
-                                   key_prefix=f"offline_rollup{i}:")
+        compacted: dict[str, int] = {}
+        for side in self._sides(name):
+            if side == "REALTIME":
+                self._sealed_pipeline(name, "compact")
+            for label, root in self._day_roots(name, side).items():
+                done = segments.compact(self.spark, root, max_files_per_partition, name)
+                for part, n in done.items():
+                    compacted[f"{label}:{part}" if label else part] = n
         return {"table": name, "compacted_partitions": compacted}
-
-    def _compact_root(
-        self,
-        name: str,
-        root: str,
-        max_files_per_partition: int,
-        compacted: dict,
-        key_prefix: str = "",
-    ) -> None:
-        for part in _fs.glob_status(self.spark, f"{root}/ingest_date=*"):
-            if not part["is_dir"]:
-                continue
-            part_dir = part["path"]
-            part_name = _fs.basename(part_dir)
-            files = [
-                f["path"] for f in _fs.list_files(self.spark, part_dir, suffix=".parquet")
-            ]
-            if len(files) <= max_files_per_partition:
-                continue
-            # read the EXACT snapshotted file list (not the directory), so a
-            # file that appears after the snapshot is neither duplicated into
-            # the rewrite nor unlinked
-            df = self.spark.read.parquet(*files)
-            # '=' must not appear in the temp dir name: partition discovery
-            # would read `_compact_ingest_date=...` as a partition column and
-            # fail the whole table scan if a crash leaves the dir behind
-            # (underscore-prefixed names without '=' are ignored as hidden)
-            tmp = f"{root}/_compact_{part_name.replace('=', '_')}"
-            df.coalesce(max_files_per_partition).write.mode("overwrite").parquet(tmp)
-            # Hadoop FileSystem signals most failures (existing destination,
-            # missing parent, S3A copy failure) by RETURNING FALSE, not
-            # raising — every return below is checked.  Order matters for
-            # durability: rename the compacted files IN first, only then
-            # unlink the originals.  A failure therefore leaves extra data
-            # (originals + compacted copies, at worst transiently double-
-            # counted) instead of losing the partition, and the _compact_
-            # temp dir is kept for operator inspection on any failure.
-            for f in _fs.list_files(self.spark, tmp, suffix=".parquet"):
-                dst = f"{part_dir}/{_fs.basename(f['path'])}"
-                if not _fs.rename(self.spark, f["path"], dst):
-                    raise RuntimeError(
-                        f"compact({name!r}): rename {f['path']} -> {dst} failed; "
-                        f"originals untouched, compacted output kept in {tmp}"
-                    )
-            for f in files:
-                if not _fs.delete(self.spark, f):
-                    raise RuntimeError(
-                        f"compact({name!r}): delete of original {f} failed after "
-                        f"the compacted files were installed — partition "
-                        f"{part_name} temporarily holds duplicates; remove the "
-                        f"listed original manually"
-                    )
-            _fs.delete(self.spark, tmp, recursive=True)
-            compacted[key_prefix + part_name] = len(files)
 
     def optimize_layout(self, name: str) -> dict:
         """RealtimeToOfflineSegmentsTask analog **[P1.2]** honoring
@@ -3592,13 +3332,7 @@ class Engine:
             raise ValueError(
                 f"table {name!r} has no segmentPartitionConfig; nothing to optimize"
             )
-        pipeline = self._pipeline(name)
-        q = pipeline._query
-        if q is not None and q.isActive:
-            raise RuntimeError(
-                f"table {name!r} has an active streaming query; "
-                "stop() or drain it before optimize_layout()"
-            )
+        pipeline = self._sealed_pipeline(name, "optimize_layout")
         offline_path = str(self.warehouse / name / "offline")
         offline_table = f"{name}_offline"
         df = self.spark.read.parquet(pipeline.table_path)

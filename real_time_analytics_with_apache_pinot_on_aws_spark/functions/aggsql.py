@@ -296,6 +296,17 @@ def _bytes_sketch_unsupported(name: str):
     )
 
 
+def _hll_estimate(a: list) -> str:
+    # The one HLL estimate form (every DISTINCTCOUNT*HLL / ULL / FASTHLL
+    # spelling, scalar and MV).  An empty input (or all-NULL values) has
+    # ZERO distinct values, but a NULL sketch estimates to NULL.  greatest,
+    # not coalesce: beside two DISTINCT argument sets Spark reads the
+    # sketch through first() over an Expand, NULL on an empty input, after
+    # its optimizer has dropped a coalesce of the estimate (typed never
+    # NULL); greatest stays, and on a non-empty input equals the estimate.
+    return f"greatest(hll_sketch_estimate(hll_sketch_agg({a[0]})), 0)"
+
+
 _UNIT_MS = {
     "MILLISECONDS": 1,
     "SECONDS": 1000,
@@ -1219,20 +1230,12 @@ _REWRITES: dict = {
     # ULL (UltraLogLog, Pinot 1.2): the HLL estimator family — the same
     # DataSketches-backed estimate the star-tree HLL cells and
     # DISTINCTCOUNTHLL return, so every estimator-named spelling agrees
-    "DISTINCTCOUNTULL": lambda a: (
-        f"coalesce(hll_sketch_estimate(hll_sketch_agg({a[0]})), 0)"
-    ),
-    "DISTINCTCOUNTRAWULL": lambda a: (
-        f"coalesce(hll_sketch_estimate(hll_sketch_agg({a[0]})), 0)"
-    ),
+    "DISTINCTCOUNTULL": _hll_estimate,
+    "DISTINCTCOUNTRAWULL": _hll_estimate,
     # HLL++ (Pinot 1.2 distinctCountHLLPlus; optional p/sp tuning literals
     # accepted and ignored like DISTINCTCOUNTHLL's log2m)
-    "DISTINCTCOUNTHLLPLUS": lambda a: (
-        f"coalesce(hll_sketch_estimate(hll_sketch_agg({a[0]})), 0)"
-    ),
-    "DISTINCTCOUNTRAWHLLPLUS": lambda a: (
-        f"coalesce(hll_sketch_estimate(hll_sketch_agg({a[0]})), 0)"
-    ),
+    "DISTINCTCOUNTHLLPLUS": _hll_estimate,
+    "DISTINCTCOUNTRAWHLLPLUS": _hll_estimate,
     # Integer-Sum Tuple VALUE aggregates operate on serialized sketch
     # COLUMNS (bytes) — a shape this engine stores via operators/sketch
     # relations, not packed binaries; point the caller at the real API
@@ -1257,15 +1260,11 @@ _REWRITES: dict = {
     # the useStarTree=false cross-check, and any unroutable shape all
     # return the SAME estimate (round-6 review: two estimator families
     # made the cross-check disagree with the routed answer)
-    "DISTINCTCOUNTHLL": lambda a: (
-        f"coalesce(hll_sketch_estimate(hll_sketch_agg({a[0]})), 0)"
-    ),
-    "DISTINCTCOUNTRAWHLL": lambda a: (
-        f"coalesce(hll_sketch_estimate(hll_sketch_agg({a[0]})), 0)"
-    ),
+    "DISTINCTCOUNTHLL": _hll_estimate,
+    "DISTINCTCOUNTRAWHLL": _hll_estimate,
     # Pinot's deprecated-but-still-resolving FASTHLL (pre-DataSketches
     # serialized HLL): same single-estimator-family service
-    "FASTHLL": lambda a: f"coalesce(hll_sketch_estimate(hll_sketch_agg({a[0]})), 0)",
+    "FASTHLL": _hll_estimate,
     # *MV distinct FALLBACK expressions — the statement-level route
     # (rewrite_mv_distinct_statement, applied first by Engine.query)
     # serves the bounded exploded plan; these call-site forms only fire
@@ -1635,14 +1634,8 @@ def _rewrite_pinot_aggregates_inner(sql: str, keep_native) -> str:
 # to ANALYZE cleanly or the original stands — the same contract as
 # every other statement rewrite.
 
-def _hll_elem_builder(e: str, to_zero: str = "coalesce") -> str:
-    # to 0: an empty input (or all-NULL elements) has ZERO distinct
-    # values — Pinot answers 0 and the normalized-set fallback answers
-    # size([]) = 0, but a NULL hll sketch estimates to NULL.  Beside two
-    # DISTINCT argument sets Spark reads the sketch through first() over
-    # an Expand, NULL on an empty input, after its optimizer has dropped
-    # a coalesce of the estimate (typed never NULL); greatest stays.
-    return f"{to_zero}(hll_sketch_estimate(hll_sketch_agg({e})), 0)"
+def _hll_elem_builder(e: str) -> str:
+    return _hll_estimate([e])
 
 
 _MV_DISTINCT_BUILDERS = {
@@ -2060,12 +2053,6 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
     cond = " AND ".join(
         f"coalesce(__mv{i}_pos, 0) = 0" for i in range(len(exprs))
     )
-    # a DISTINCT aggregate beside an HLL estimate (see _hll_elem_builder)
-    distinct = sqltext.search("DISTINCT", sql) is not None or any(
-        _MV_DISTINCT_BUILDERS.get(p[0].upper(), _hll_elem_builder)
-        is not _hll_elem_builder
-        for p in mv_parsed
-    )
     edits = []
     for name, st, end, e, margs, pred in mv_parsed:
         u = name.upper()
@@ -2088,10 +2075,7 @@ def rewrite_mv_distinct_statement(sql: str, is_aggregate=None):
         else:
             if pred:
                 elem = f"if(({pred}), {elem}, null)"
-            build = _MV_DISTINCT_BUILDERS[u]
-            repl = build(elem, "greatest") if (
-                distinct and build is _hll_elem_builder
-            ) else build(elem)
+            repl = _MV_DISTINCT_BUILDERS[u](elem)
         edits.append((st, end, repl))
     for name, st, op, inner, end in wrap_sites:
         args = _args(inner)

@@ -651,7 +651,12 @@ def register_calls(spark: SparkSession, sql: str) -> None:
 
 def register_all(spark: SparkSession) -> list[str]:
     """Register every Pinot-named SQL UDF; returns the names skipped because
-    Spark already ships a builtin of that name (identical semantics by our
-    audit)."""
+    Spark refuses to replace its builtin of that name.  Two of them differ
+    from Pinot and answer with Spark's meaning: ``DIV`` (Spark's ``div``
+    divides integers; Pinot's divides doubles) and ``SUBSTR`` (Spark's
+    start is 1-based; Pinot's is 0-based).  Neither is rewritten: the
+    ``b53_array_scalar_fns`` query feeds ``substr(event_type, 1, 2)``
+    through ``rewrite_pinot_aggregates`` meaning Spark's substr, and the
+    DuckDB oracle statement it is checked against stays as it is."""
     register(spark, *_BY_NAME)
     return [n for n, ok in spark._pinot_fns.items() if not ok]

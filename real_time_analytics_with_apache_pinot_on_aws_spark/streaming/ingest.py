@@ -12,6 +12,11 @@ Maps the reference's Pinot realtime-table lifecycle onto Structured Streaming:
 | S3 deep store (README:20)                              | the table directory itself |
 | 7-day retention (json:5-9)                             | ``run_retention`` partition drop on the derived date col |
 | no watermark on raw table (B59)                        | append mode, no ``withWatermark`` — disorder retained |
+
+The stored layout (``ingest_date=<day>`` partitions, derived columns, the
+read/expire protocol) is shared with the OFFLINE side and lives in
+``segments.py``; this module owns the stream: decode, micro-batch commit
+and the consuming lifecycle.
 """
 
 from __future__ import annotations
@@ -23,64 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .. import fs as _fs
+from .. import segments
 from ..functions import sqlfns
 from ..operators.dedup import cache_scope, lifecycle_cache
-from ..schema import TableSchema, decoded_frame, time_parse_expr
+from ..schema import TableSchema, decoded_frame
 from .rollup import rollup_batch
-
-
-#: Pinot's built-in virtual columns **[P1.2]** — present on every table
-#: without being declared in the schema: ``$docId`` (row position within
-#: its segment), ``$segmentName`` (the segment the row lives in),
-#: ``$hostName`` (the server serving it).
-VIRTUAL_COLUMNS = ("$docId", "$segmentName", "$hostName")
-
-
-def augment_virtual_columns(df: DataFrame) -> DataFrame:
-    """Append Pinot's virtual columns to a frame read DIRECTLY from parquet.
-
-    The mapping is exact, not simulated: a sealed parquet file IS the
-    segment here, so the scan's hidden ``_metadata`` column gives
-    ``$docId`` = ``row_index`` (position within the file — Pinot's
-    position-within-segment) and ``$segmentName`` = the file name.  Both
-    come from the vectorized reader for free (constant per file / counter
-    per batch, no shuffle, and ``row_index`` predicates still push down to
-    the scan).  ``$hostName`` is this process's host: the engine is the
-    single "server" — on a real cluster the serving executor is dynamic
-    per stage, so the stable Pinot-analog identity is the session host.
-    """
-    import socket
-
-    return df.select(
-        "*",
-        F.col("_metadata.row_index").alias("$docId"),
-        F.regexp_replace(F.col("_metadata.file_name"), r"\.parquet$", "").alias(
-            "$segmentName"
-        ),
-        F.lit(socket.gethostname()).alias("$hostName"),
-    )
-
-
-def null_virtual_columns(df: DataFrame) -> DataFrame:
-    """The virtual columns on a table with NO segments yet (empty typed
-    frame — no file scan, so no ``_metadata``): typed NULLs, keeping the
-    schema identical to the file-backed shape so hybrid unions line up."""
-    import socket
-
-    return df.select(
-        "*",
-        F.lit(None).cast("bigint").alias("$docId"),
-        F.lit(None).cast("string").alias("$segmentName"),
-        F.lit(socket.gethostname()).alias("$hostName"),
-    )
-
-
-def timestamp_index_column(column: str, granularity: str) -> str:
-    """Derived-column name for a TIMESTAMP-index granularity — the analog of
-    Pinot's ``$col$DAY`` (``$`` is hostile to SQL identifiers; double
-    underscore matches the engine's ``__ts`` convention)."""
-    return f"{column}__{granularity.lower()}"
 
 
 @dataclass
@@ -184,18 +136,11 @@ class IngestPipeline:
         # parquet bloom filters for point-lookup row-group skipping.
         self.sorted_column = sorted_column
         self.bloom_filter_columns = tuple(bloom_filter_columns)
-        # Pinot TIMESTAMP index analog (engine.TableConfig): ((column,
-        # (GRAN, ...)), ...) — each granularity materializes a stored
-        # ``<col>__<gran>`` truncated column at decode time, so range
-        # filters on it prune via parquet min/max stats (Pinot's range
-        # index on $col$GRAN derived columns).
+        # Pinot TIMESTAMP index ((column, (GRAN, ...)), ...) and CLP log
+        # columns **[P1.2]**: the derived columns segments.derive stores
+        # (``<col>__<gran>`` truncations whose parquet min/max stats prune
+        # range filters; the CLPLogRecordExtractor triples)
         self.timestamp_index = tuple(timestamp_index)
-        # Pinot CLP log columns **[P1.2]** (engine.TableConfig): each named
-        # string column is replaced at decode time by its three physical
-        # columns <col>_logtype / <col>_dictionaryVars / <col>_encodedVars
-        # (operators/clp.py) — the CLPLogRecordExtractor analog.  One
-        # map-side projection; the logtype column dictionary-encodes in
-        # parquet to near-zero (template cardinality, not line count).
         self.clp_columns = tuple(clp_columns)
         # Pinot nullHandlingEnabled=false **[P1.2]**: undeclared-default
         # fields fill with the silent type-default matrix at decode
@@ -206,11 +151,9 @@ class IngestPipeline:
     # -- decode ----------------------------------------------------------
 
     def decoded(self) -> DataFrame:
-        """Raw value column -> typed rows + derived time/partition columns.
-
-        Adds ``<time>__ts`` (typed event time) and ``ingest_date`` (the
-        partition column — day granularity per kinesisTable.json:30).
-        """
+        """Raw value column -> typed rows (``<time>__ts`` typed event time)
+        in their stored form (:func:`segments.derive`: ``ingest_date``, day
+        granularity per kinesisTable.json:30, and the derived columns)."""
         out = decoded_frame(
             self.source.load(self.spark),
             self.schema,
@@ -229,27 +172,12 @@ class IngestPipeline:
             # Pinot filterConfig semantics: matching rows are DROPPED
             out = out.filter(~F.expr(self.filter_function))
         tc = self.schema.time_column()
-        if tc is not None:
-            ts_col = f"{tc.name}__ts" if f"{tc.name}__ts" in out.columns else tc.name
-            out = out.withColumn("ingest_date", F.to_date(F.col(ts_col)))
-        for col, grans in self.timestamp_index:
-            # TIMESTAMP index derived columns: truncate the TYPED form of
-            # the declared column (the ``__ts`` decode output when present)
-            src = f"{col}__ts" if f"{col}__ts" in out.columns else col
-            if src not in out.columns:
-                continue
-            for gran in grans:
-                out = out.withColumn(
-                    timestamp_index_column(col, gran),
-                    F.date_trunc(gran, F.col(src)),
-                )
-        if self.clp_columns:
-            from ..operators.clp import clp_encode
-
-            for col in self.clp_columns:
-                if col in out.columns:
-                    out = clp_encode(out, col)
-        return out
+        return segments.derive(
+            out,
+            tc.name if tc is not None else None,
+            self.timestamp_index,
+            self.clp_columns,
+        )
 
     # -- lifecycle -------------------------------------------------------
 
@@ -382,37 +310,18 @@ class IngestPipeline:
 
     def table(self, with_virtual: bool = False) -> DataFrame:
         """The queryable table (consuming-segment analog: rows appear after
-        each micro-batch commit).  ``with_virtual`` appends Pinot's
-        ``$docId/$segmentName/$hostName`` virtual columns **[P1.2]** from
-        the scan's ``_metadata`` (see :func:`augment_virtual_columns`).
-
-        ``mergeSchema`` makes Pinot-style schema EVOLUTION work **[P1.2]**:
-        a column added to the schema (then a pipeline restart) appears only
-        in newer files; merging footers surfaces it table-wide with NULLs
-        for pre-evolution rows — Pinot's add-column + segment-reload
-        behavior (Pinot fills type defaults; we keep real nulls unless the
-        field declares ``defaultNullValue``, schema.py).  At 100 TB the
-        footer-merge cost is bounded: Spark samples/parallelizes footer
-        reads, and compaction keeps file counts low; pin the schema with
-        ``spark.read.schema(...)`` instead if a table is known-frozen.
-
-        A table whose stream has committed no micro-batch yet has no files;
-        Pinot answers queries right after AddTable, so serve an EMPTY typed
-        frame (the decode schema) instead of failing parquet inference —
-        same posture as Engine._offline_frame on a segment-less table.
+        each micro-batch commit), read by :func:`segments.read`: footers
+        merged so schema evolution surfaces new columns table-wide, and an
+        EMPTY frame of the decode schema before the first commit.
+        ``with_virtual`` appends Pinot's ``$docId/$segmentName/$hostName``
+        virtual columns **[P1.2]**.
         """
-        # emptiness = no day partitions and no root parquet files — stray
-        # files (the _SUCCESS markers tables written before the batch commit
-        # dropped them still hold) survive a full partition drop (e.g. after
-        # RealtimeToOffline moved every sealed day) and must not trick the
-        # reader into schema inference over zero parquet footers
-        if not _fs.glob_status(
-            self.spark, f"{self.table_path}/ingest_date=*"
-        ) and not _fs.glob_status(self.spark, f"{self.table_path}/*.parquet"):
-            empty = self.spark.createDataFrame([], self.decoded().schema)
-            return null_virtual_columns(empty) if with_virtual else empty
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.table_path)
-        return augment_virtual_columns(df) if with_virtual else df
+        return segments.read(
+            self.spark,
+            self.table_path,
+            lambda: self.decoded().schema,
+            with_virtual=with_virtual,
+        )
 
     def rollup_table(self, index: int = 0) -> DataFrame:
         """The pre-aggregated cell log (star-tree analog); merge with
@@ -425,17 +334,10 @@ class IngestPipeline:
     # -- retention (A7) --------------------------------------------------
 
     def run_retention(self, now=None) -> list[str]:
-        """Drop ``ingest_date`` partitions older than ``retention_days``.
-
-        Partition-drop (directory removal) — O(partitions), no data rewrite,
-        which is how a 100 TB table must expire data.  Returns dropped values.
-
-        All listing and removal go through the Hadoop FS layer (fs.py), the
-        same API the read/write paths use — so the 7-day expiry the reference
-        configures (kinesisTableConfigFile.json:8-9) works identically on the
-        local warehouse and on the ``s3a://`` deep store the deployment uses
-        (pinot-controller.conf:34-40).  A failed delete raises instead of
-        silently retaining expired data.
+        """Drop the day partitions older than ``retention_days`` before the
+        newest day (kinesisTableConfigFile.json:8-9), star-tree cells with
+        their day: :func:`segments.expire` over :meth:`day_roots`, a
+        directory removal per day with no rewrite.  Returns dropped days.
         """
         if self.retention_days is None:
             return []
@@ -444,34 +346,21 @@ class IngestPipeline:
             now = row["m"]
         if now is None:
             return []
-        from datetime import date
+        return segments.expire(
+            self.spark,
+            self.day_roots().values(),
+            now - timedelta(days=self.retention_days),
+        )
 
-        cutoff = now - timedelta(days=self.retention_days)
-        dropped: list[str] = []
-        roots = [self.table_path]
-        for spec_i, path_i in self._rollups:
-            # expire star-tree cells with their day, keeping query_agg's
-            # rollup route consistent with the raw table (a rollup whose
-            # dims omit the day column aggregates across days and cannot be
-            # expired per day — Engine.query_agg refuses to route to such a
-            # rollup when retention is configured, see engine.py)
+    def day_roots(self) -> dict[str, str]:
+        """label -> root of every day-partitioned root this side writes:
+        the table (label ``""``), then each star-tree cell log whose dims
+        hold the day (``rollup``, ``rollup<i>``), which expires, moves and
+        compacts with its day.  A rollup whose dims omit the day
+        aggregates across days and cannot be expired per day —
+        Engine.query_agg refuses to route to one under retention."""
+        roots = {"": self.table_path}
+        for i, (spec_i, path_i) in enumerate(self._rollups):
             if "ingest_date" in spec_i.dims:
-                roots.append(path_i)
-        for root in roots:
-            for part in _fs.glob_status(self.spark, f"{root}/ingest_date=*"):
-                if not part["is_dir"]:
-                    continue
-                value = _fs.basename(part["path"]).split("=", 1)[1]
-                try:
-                    expired = date.fromisoformat(value) < cutoff
-                except ValueError:
-                    continue
-                if expired:
-                    if not _fs.delete(self.spark, part["path"], recursive=True):
-                        raise RuntimeError(
-                            f"retention: delete of expired partition "
-                            f"{part['path']} returned false — data NOT dropped"
-                        )
-                    if value not in dropped:
-                        dropped.append(value)
-        return dropped
+                roots["rollup" if i == 0 else f"rollup{i}"] = path_i
+        return roots

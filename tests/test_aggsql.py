@@ -19,7 +19,7 @@ from real_time_analytics_with_apache_pinot_on_aws_spark.functions.aggsql import 
     [
         ("SELECT DISTINCTCOUNT(u) FROM t", "SELECT count(DISTINCT u) FROM t"),
         ("SELECT distinctcounthll(u, 12) FROM t",
-         "SELECT coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0) FROM t"),
+         "SELECT greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0) FROM t"),
         ("SELECT PERCENTILE(v, 90) FROM t", "SELECT percentile(v, 0.9) FROM t"),
         # Spark-style fractional percentile is NOT re-scaled
         ("SELECT percentile(v, 0.5) FROM t", "SELECT percentile(v, 0.5) FROM t"),
@@ -73,8 +73,8 @@ def agg_engine(spark, tmp_path_factory):
     [
         ("DISTINCTCOUNT(u)", "count(DISTINCT u)"),
         ("DISTINCTCOUNTBITMAP(u)", "count(DISTINCT u)"),
-        ("DISTINCTCOUNTHLL(u)", "coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
-        ("DISTINCTCOUNTRAWHLL(u)", "coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
+        ("DISTINCTCOUNTHLL(u)", "greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
+        ("DISTINCTCOUNTRAWHLL(u)", "greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
         ("DISTINCTSUM(u)", "sum(DISTINCT u)"),
         ("DISTINCTAVG(u)", "avg(DISTINCT u)"),
         ("MINMAXRANGE(v)", "max(v) - min(v)"),
@@ -376,7 +376,7 @@ from real_time_analytics_with_apache_pinot_on_aws_spark.functions.aggsql import 
     [
         (
             "SELECT g, DISTINCTCOUNTHLLMV(tags) AS u FROM t GROUP BY g",
-            "SELECT g, coalesce(hll_sketch_estimate(hll_sketch_agg(__mv0_elem)), 0) AS u "
+            "SELECT g, greatest(hll_sketch_estimate(hll_sketch_agg(__mv0_elem)), 0) AS u "
             "FROM t LATERAL VIEW OUTER POSEXPLODE(tags) __mv0 "
             "AS __mv0_pos, __mv0_elem GROUP BY g",
         ),
@@ -1884,13 +1884,13 @@ def test_rounddecimal_extreme_scales(agg_engine, expr, want):
         ("DISTINCTCOUNTCPCSKETCH(u)", "count(DISTINCT u)"),
         ("DISTINCTCOUNTTUPLESKETCH(u)", "count(DISTINCT u)"),
         ("DISTINCTCOUNTULL(u)",
-         "coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
+         "greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
         ("DISTINCTCOUNTRAWULL(u)",
-         "coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
+         "greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
         ("DISTINCTCOUNTHLLPLUS(u, 14)",
-         "coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
+         "greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
         ("DISTINCTCOUNTRAWHLLPLUS(u)",
-         "coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
+         "greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0)"),
     ],
 )
 def test_datasketches_distinct_spellings(pinot, want):
@@ -2573,7 +2573,7 @@ def test_catalog_predicate_sees_a_function_created_after_a_miss(
         ("SELECT ARRAY_AGG(v, 'LONG') FROM t",
          "SELECT cast(collect_list(v) as array<bigint>) FROM t"),
         ("SELECT FASTHLL(u) FROM t",
-         "SELECT coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0) FROM t"),
+         "SELECT greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0) FROM t"),
         ("SELECT DISTINCTCOUNTRAWCPCSKETCH(u) FROM t",
          "SELECT count(DISTINCT u) FROM t"),
         ("SELECT DISTINCTCOUNTRAWINTEGERSUMTUPLESKETCH(u) FROM t",
@@ -2603,7 +2603,7 @@ def test_underscore_stripping_serves_the_whole_table():
         "SELECT sum(cast(v as decimal(38,18))) FROM t"
     )
     assert R("SELECT FAST_HLL(u) FROM t") == (
-        "SELECT coalesce(hll_sketch_estimate(hll_sketch_agg(u)), 0) FROM t"
+        "SELECT greatest(hll_sketch_estimate(hll_sketch_agg(u)), 0) FROM t"
     )
 
 
@@ -4681,6 +4681,26 @@ def test_hll_family_empty_input_answers_zero(mv_engine):
     assert fold["h"] == 0
 
 
+def test_hll_beside_two_distinct_sets_empty_input_answers_zero(spark, mv_engine):
+    """Beside two DISTINCT argument sets Spark reads the HLL sketch
+    through first() over an Expand, NULL on an empty input; the scalar
+    estimate must still answer 0 there, as the MV route does."""
+    spark.sql(
+        "SELECT * FROM VALUES ('p', 'g1', 1), ('q', 'g1', 2), ('p', 'g2', 3),"
+        " ('r', 'g2', 4) AS t(e, g, x)"
+    ).createOrReplaceTempView("hll_two_distinct")
+    row = mv_engine.query(
+        "SELECT DISTINCTCOUNTHLL(e) AS h, DISTINCTCOUNT(e) AS a, "
+        "DISTINCTCOUNT(g) AS dg FROM hll_two_distinct WHERE x > 10"
+    ).collect()[0]
+    assert tuple(row) == (0, 0, 0)
+    row = mv_engine.query(
+        "SELECT DISTINCTCOUNTHLL(e) AS h, DISTINCTCOUNT(e) AS a, "
+        "DISTINCTCOUNT(g) AS dg FROM hll_two_distinct"
+    ).collect()[0]
+    assert tuple(row) == (3, 3, 2)
+
+
 def test_funnel_step_duration_stats_operator_matches_route(spark, ordered_engine):
     """The operator-level twin (operators/funnel.funnel_step_duration_stats
     over funnel_state) agrees with the routed SQL spelling for matching
@@ -5346,6 +5366,40 @@ def test_no_table_reference_regex():
             for c in ast.walk(node.args[0])
         )
     ]
+    assert found == []
+
+
+def test_no_partition_path_outside_segments():
+    """Only ``segments.py`` knows the ``ingest_date=<day>`` layout: no
+    string or f-string outside docstrings in the engine or the ingest
+    pipeline spells a partition path."""
+    import ast
+    from pathlib import Path
+
+    import real_time_analytics_with_apache_pinot_on_aws_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    found = []
+    for rel in ("engine.py", "streaming/ingest.py"):
+        tree = ast.parse((root / rel).read_text())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+        }
+        found += [
+            (rel, node.lineno)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docstrings
+            and "ingest_date=" in node.value
+        ]
     assert found == []
 
 

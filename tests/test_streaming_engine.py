@@ -3144,6 +3144,62 @@ def test_timestamp_index_materializes_and_rewrites(spark, tmp_path):
     pipe.stop()
 
 
+@pytest.mark.parametrize("realtime_first", [True, False])
+def test_empty_offline_side_has_every_stored_column(spark, tmp_path, realtime_first):
+    """Before its first upload the OFFLINE side already has every column
+    that upload stores, in either AddTable order: a TIMESTAMP index and a
+    CLP column declared on the REALTIME config alone reach both sides."""
+    cfg = json.loads(json.dumps(TABLE_CONFIG))
+    cfg["fieldConfigList"] = [
+        {
+            "name": "creationTimestamp",
+            "indexTypes": ["TIMESTAMP"],
+            "timestampConfig": {"granularities": ["DAY"]},
+        },
+        {"name": "campaign", "encodingType": "RAW", "compressionCodec": "CLP"},
+    ]
+    src_dir = tmp_path / "stream_in"
+    src_dir.mkdir()
+    engine = Engine(spark, str(tmp_path / "warehouse"))
+    steps = [
+        lambda: engine.add_table(
+            CLICKSTREAM_SCHEMA, cfg,
+            RawRecordSource(kind="files", path=str(src_dir)), start=False,
+        ),
+        lambda: engine.add_offline_table(CLICKSTREAM_SCHEMA, OFFLINE_CONFIG),
+    ]
+    for step in steps if realtime_first else steps[::-1]:
+        step()
+    empty = set(engine._offline_frame("kinesisTable").columns)
+    engine.upload_segment("kinesisTable", spark.createDataFrame(
+        [("u1", "X", 30, "2024-06-01 09:00:00")],
+        "userID string, campaign string, price int, creationTimestamp string",
+    ))
+    stored = set(engine._offline_frame("kinesisTable").columns)
+    assert {
+        "creationTimestamp__day",
+        "campaign_logtype",
+        "campaign_dictionaryVars",
+        "campaign_encodedVars",
+    } <= stored
+    assert stored <= empty
+    assert "campaign" not in empty
+
+
+def test_offline_cell_logs_at_any_index_go_with_the_side(spark, tmp_path):
+    """delete_segments and drop_table remove every OFFLINE star-tree cell
+    log whatever its index: one can outlive its spec after a config edit."""
+    engine = Engine(spark, str(tmp_path / "warehouse"))
+    stray = Path(engine._offline_rollup_path("kinesisTable", 9))
+    engine.add_offline_table(CLICKSTREAM_SCHEMA, OFFLINE_CONFIG)
+    spark.range(1).write.parquet(str(stray))
+    assert engine.delete_segments("kinesisTable", "OFFLINE")["deleted"] == ["OFFLINE"]
+    assert not stray.exists()
+    spark.range(1).write.parquet(str(stray))
+    assert engine.drop_table("kinesisTable")["dropped"] == ["OFFLINE"]
+    assert not stray.exists()
+
+
 def test_timestamp_index_hybrid_upload_parity(spark, tmp_path):
     """Hybrid: upload_segment stores the same derived columns the realtime
     decode writes, so the boundary union serves one schema and the rewrite
