@@ -2134,8 +2134,12 @@ class Engine:
                 break
             opts[m.group("key")] = m.group("val").strip("'\"")
             sql = rest[m.end():]
-        m = sqltext.search(self._OPTION_SUFFIX_RE, sql) or sqltext.search(
-            self._OPTION_SUFFIX_RE, sql[: sqltext.code_end(sql)]
+        m = (
+            sqltext.search(self._OPTION_SUFFIX_RE, sql)
+            or sqltext.search(self._OPTION_SUFFIX_RE, sql, raw=True)
+            or sqltext.search(
+                self._OPTION_SUFFIX_RE, sql[: sqltext.code_end(sql)]
+            )
         )
         if m:
             for pair in m.group("body").split(","):

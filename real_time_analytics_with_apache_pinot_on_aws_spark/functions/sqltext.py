@@ -228,16 +228,18 @@ def keyword(*words: str) -> re.Pattern:
 
 def finditer(
     pattern: "re.Pattern | str", sql: str, start: int = 0,
-    top_level: bool = False,
+    top_level: bool = False, raw: bool = False,
 ) -> Iterator[re.Match]:
     """Every match of ``pattern`` that starts in code at or after
     ``start`` (at depth 0 with ``top_level``), left to right and not
     overlapping.  The pattern reads the :func:`blank` copy of ``sql``, so
-    a match may run across a comment, as a phrase's words may.  A str
+    a match may run across a comment, as a phrase's words may; with
+    ``raw`` it reads ``sql`` itself, so text after a match's start that
+    would open a comment (``a=--``) is matched as written.  A str
     pattern is a :func:`keyword`."""
     if isinstance(pattern, str):
         pattern = keyword(pattern)
-    code, pos = blank(sql), start
+    code, pos = (sql if raw else blank(sql)), start
     for s, e in _code_runs(sql, start, top_level):
         pos = max(pos, s)
         while pos < e:
@@ -252,10 +254,10 @@ def finditer(
 
 def search(
     pattern: "re.Pattern | str", sql: str, start: int = 0,
-    top_level: bool = False,
+    top_level: bool = False, raw: bool = False,
 ) -> re.Match | None:
     """The first match :func:`finditer` yields, or None."""
-    return next(finditer(pattern, sql, start, top_level), None)
+    return next(finditer(pattern, sql, start, top_level, raw), None)
 
 
 def split(sql: str, sep: str = ",") -> list[str]:

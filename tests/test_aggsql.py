@@ -5584,6 +5584,20 @@ def test_sqltext_backticks_and_nested_comments_are_opaque():
     assert sqltext.balanced("(a /* ) /* ( */ ) */)", 0)[1] == 21
     assert sqltext.spans("SELECT /* a /* b */") == [(7, 19)]  # unterminated
 
+
+def test_sqltext_raw_search_reads_text_as_written():
+    """A search reads comments as blanks, so a phrase runs across one; a
+    ``raw`` search reads the text as written past the match's start,
+    while the match must still start in code."""
+    import re
+
+    opt = re.compile(r"OPTION\((\w+)=([\w\-]+)\)$")
+    sql = "SELECT 1 OPTION(a=--)"
+    assert sqltext.search(opt, sql) is None
+    assert sqltext.search(opt, sql, raw=True).group(2) == "--"
+    assert sqltext.search(opt, "SELECT 1 /* OPTION(a=1)", raw=True) is None
+    assert sqltext.search("GROUP BY", "GROUP /* c */ BY g")
+
 def test_quote_in_comment_does_not_hide_pinot_calls(agg_engine):
     """An apostrophe inside a comment is comment text, not the start of a
     literal: the Pinot calls after it are still rewritten, and the

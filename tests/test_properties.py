@@ -682,6 +682,8 @@ option_kv_st = st.tuples(
          "SELECT count(*) AS n FROM t WHERE note = 'x, OPTION(y=2) z'"]
     ),
 )
+# an option value that reads as a line-comment opener
+@example(sets=[], suffix=[("A", "--")], body="SELECT 1 AS x")
 @settings(max_examples=200, deadline=None)
 def test_strip_query_options_extracts_exactly_the_real_options(sets, suffix, body):
     """SET prefixes and the trailing OPTION(...) suffix strip cleanly; the
